@@ -36,10 +36,25 @@ object Pipeline {
   /** W5: XCom — stage return values addressable by stage name. */
   final class Context(val config: RunConfig) {
     private val store = mutable.Map[String, Any]()
+    private val teardowns = mutable.ArrayBuffer[() => Unit]()
     def xcomPush(key: String, value: Any): Unit = store(key) = value
     def xcomPull[T](key: String): T = store(key).asInstanceOf[T]
     def param[T](name: String, default: T): T =
       config.params.getOrElse(name, default).asInstanceOf[T]
+
+    /** Airflow's teardown task: `release` runs once when the run ends,
+      * whatever the stages' outcomes — the place to free what a stage
+      * pinned for its consumers (a checkpointed XCom value). */
+    def onTeardown(release: => Unit): Unit = teardowns += (() => release)
+
+    /** Runs every registered release, newest first; each runs even if an
+      * earlier one throws, and the first failure is rethrown after. */
+    private[flow] def teardown(): Unit = {
+      val failures = teardowns.reverseIterator
+        .flatMap(f => Try(f()).failed.toOption).toList
+      teardowns.clear()
+      failures.headOption.foreach(e => throw e)
+    }
   }
 
   final case class Stage(
@@ -101,7 +116,7 @@ final class Pipeline(val name: String, stages: Seq[Pipeline.Stage]) {
     // W2: stages a branch decided against. A selected stage is released
     // only by the branch that gated it; non-branched stages run per deps.
     val unselected = mutable.Set[String]()
-    topoOrder.foreach { s =>
+    try topoOrder.foreach { s =>
       val depOutcomes = s.deps.map(outcomes)
       val anyFailed = depOutcomes.exists(_.isInstanceOf[Failed])
       val ready = s.trigger match {
@@ -141,7 +156,7 @@ final class Pipeline(val name: String, stages: Seq[Pipeline.Stage]) {
             outcomes(s.name) = Failed(e)
         }
       }
-    }
+    } finally ctx.teardown()
     RunResult(outcomes.toMap, ctx)
   }
 }

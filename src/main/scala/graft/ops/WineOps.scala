@@ -32,10 +32,13 @@ object WineOps {
     * preserves file order as a sort key, row_number makes it contiguous.
     * The single-partition window is acceptable at reference scale (4,898
     * rows); at 100 TB contiguous ids are an anti-pattern — use
-    * content-derived keys (TextOps.fingerprint) instead. */
+    * content-derived keys (TextOps.fingerprint) instead. The input is
+    * coalesced to that one partition up front, in partition order (the
+    * order monotonically_increasing_id encodes), so the window needs no
+    * shuffle and the ids come out the same without its extra job. */
   def assignRowIds(df: DataFrame): DataFrame = {
     val w = Window.orderBy("mono_ord")
-    df.withColumn("mono_ord", monotonically_increasing_id())
+    df.coalesce(1).withColumn("mono_ord", monotonically_increasing_id())
       .withColumn("id", row_number().over(w))
       .drop("mono_ord")
       .select(("id" +: df.columns.toSeq).map(col): _*)
@@ -58,10 +61,12 @@ object WineOps {
       .filter(col("quality") >= threshold)
 
   /** A1+O1 (etl_elt_wine.py:423-428): the flagship per-quality alcohol
-    * stats report, sorted by quality desc. */
+    * stats report, sorted by quality desc. One row per quality class, so
+    * the sort runs in one partition: a global orderBy would add a
+    * range-sampling job and a shuffle to order a handful of rows. */
   def flagshipReport(df: DataFrame): DataFrame =
     RelOps.groupStats("quality", "alcohol")(df)
-      .orderBy(desc("quality"))
+      .coalesce(1).sortWithinPartitions(desc("quality"))
 
   /** ELT in-store transform (etl_elt_wine.py:268-272): narrow projection +
     * constant filter. On parquet/JDBC Catalyst pushes both into the scan. */

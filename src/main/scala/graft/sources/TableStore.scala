@@ -15,6 +15,11 @@ import graft.ops.RelOps
   * the incoming batch; a MERGE-capable format would subsume this). The
   * read-dedup-write sequence is not transactional — single-writer
   * semantics, matching the reference's concurrency=1 (W11).
+  *
+  * Reads launch no Spark job: `read` takes the schema Spark wrote into a
+  * data file's parquet footer (one driver-side footer read), not Spark's
+  * per-read schema-inference job. Nothing is memoized, so writes need no
+  * invalidation.
   */
 final class TableStore(spark: SparkSession, root: String) {
 
@@ -38,11 +43,70 @@ final class TableStore(spark: SparkSession, root: String) {
         .write.mode(SaveMode.Overwrite).parquet(path(name))
     }
 
-  /** S9 (utils.py:51-67): table read. The store root is glob-escaped:
-    * Spark glob-expands every read path, so an UNescaped root containing
-    * [ ] { } * ? would resolve to the wrong directory (or nothing) on
-    * every read — writes are unaffected (save() does not glob). */
-  def read(name: String): DataFrame = spark.read.parquet(escapeGlob(path(name)))
+  /** S9 (utils.py:51-67): table read. Launches no Spark job: the data
+    * schema comes from one data file's parquet footer, read on the
+    * driver (see footerSchema), and is handed to the reader, so Spark
+    * skips its one-task schema-inference job. Partition columns still
+    * come from directory discovery, exactly as an inferred read finds
+    * them. A table whose footer lacks the Spark schema (or has no data
+    * file) takes Spark's own inference, as before.
+    *
+    * The store root is glob-escaped: Spark glob-expands every read
+    * path, so an UNescaped root containing [ ] { } * ? would resolve to
+    * the wrong directory (or nothing) on every read — writes are
+    * unaffected (save() does not glob). */
+  def read(name: String): DataFrame = {
+    val dir = escapeGlob(path(name))
+    footerSchema(name).fold(spark.read.parquet(dir))(
+      spark.read.schema(_).parquet(dir))
+  }
+
+  /** The Spark schema stored in the footer of the table's first data file
+    * (name order, depth first, hidden `_`/`.` entries skipped, as Spark's
+    * file index skips them) — the schema Spark's non-merging inference
+    * would pick, without the job it launches to read it. Spark writes it
+    * under this key on every parquet write; files from other writers lack
+    * it and get None. Every file of a table shares one schema (the
+    * same assumption Spark's inference makes unless mergeSchema is on). */
+  private def footerSchema(name: String): Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path(name))
+    val fs = FileSystem.get(root.toUri, conf)
+    def visible(st: FileStatus) = {
+      val n = st.getPath.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+    }
+    def firstFile(dir: Path): Option[FileStatus] = {
+      val (dirs, files) = fs.listStatus(dir).filter(visible)
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.headOption.orElse(dirs.iterator.flatMap(d => firstFile(d.getPath))
+        .nextOption())
+    }
+    // anything unreadable here (a missing table, a corrupt or non-parquet
+    // file, a legacy schema string) falls back to Spark's inference, which
+    // then fails, or copes, exactly as an inferred read always did
+    if (spark.conf.get("spark.sql.parquet.mergeSchema") == "true") None
+    else scala.util.Try {
+      firstFile(root).flatMap { st =>
+        // the footer alone: opening a ParquetFileReader costs ~15x more
+        val file = HadoopInputFile.fromStatus(st, conf)
+        val options = HadoopReadOptions.builder(conf, st.getPath)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+        val in = file.newStream()
+        val json = try ParquetFileReader.readFooter(file, options, in)
+          .getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata")
+        finally in.close()
+        Option(json).map(j =>
+          org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
+      }
+    }.toOption.flatten
+  }
 
   /** S6 (etl_elt_wine.py:214-217): idempotent keyed append — INSERT OR
     * IGNORE BY NAME semantics; keeps existing rows on key conflict.
@@ -54,9 +118,17 @@ final class TableStore(spark: SparkSession, root: String) {
     // directory the anti-join's lineage lists, so a lost cache block that
     // triggered recomputation mid-write could re-list the directory being
     // appended. Checkpointing severs the lineage entirely.
-    val fresh = RelOps.newRowsOnly(existing, key)(incoming).localCheckpoint()
+    // The row count rides the checkpoint's own pass, observed at the root
+    // of its plan: a separate count() would run the new rows again. (AQE
+    // may prune an empty subtree below an observation, dropping its
+    // metrics; nothing sits above the root one.)
+    val added = org.apache.spark.sql.Observation()
+    val fresh = RelOps.newRowsOnly(existing, key)(incoming)
+      .observe(added, org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("n"))
+      .localCheckpoint()
     try {
-      val n = fresh.count()
+      val n = added.get("n").asInstanceOf[Long]
       if (n > 0) fresh.write.mode(SaveMode.Append).parquet(path(name))
       n
     } finally RelOps.releaseCheckpoint(fresh)
