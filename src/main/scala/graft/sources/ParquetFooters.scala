@@ -1,0 +1,69 @@
+package graft.sources
+
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, StructType}
+
+/** The Spark schema Spark's parquet writer stores in every file's footer,
+  * read on the driver. A reader handed this schema skips Spark's schema
+  * inference, which otherwise starts a one-task job on every
+  * `spark.read.parquet` without `.schema(...)`. Nothing is memoized. */
+object ParquetFooters {
+
+  /** The footer key Spark's writer stores the written frame's schema
+    * (JSON) under, and its reader takes the schema from. */
+  val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The data schema Spark's non-merging inference gives a scan of `paths`
+    * (absolute local files or directories), without its job: the Spark
+    * schema in the footer of the first of all their data files in path
+    * order — the file inference reads (a directory contributes every file
+    * below it that Spark's file index lists: `_`/`.` names and
+    * `._COPYING_` files skipped). None, so the caller infers as before,
+    * when the session merges schemas (inference then reads every footer),
+    * a directory holds a parquet summary file (inference would read it
+    * first), there is no data file, or that footer has no Spark schema. */
+  def inferredSchema(spark: SparkSession, paths: Seq[Path]): Option[StructType] = {
+    def name(p: Path) = p.getFileName.toString
+    def summary(p: Path) =
+      name(p).startsWith("_metadata") || name(p).startsWith("_common_metadata")
+    def listed(p: Path) = !name(p).startsWith(".") &&
+      !(name(p).startsWith("_") && !name(p).contains("=")) &&
+      !name(p).endsWith("._COPYING_")
+    def files(p: Path): Seq[Path] =
+      if (!Files.isDirectory(p)) Seq(p)
+      else {
+        val s = Files.list(p)
+        try s.toArray(new Array[Path](_)).toSeq finally s.close()
+      }.filter(c => listed(c) || summary(c)).flatMap(files)
+    if (spark.conf.get("spark.sql.parquet.mergeSchema") == "true") None
+    else scala.util.Try(paths.flatMap(files)).toOption
+      .filterNot(_.exists(summary)).flatMap(_.minByOption(_.toString))
+      .flatMap(f => sparkSchema(spark, new org.apache.hadoop.fs.Path(f.toUri)))
+  }
+
+  /** The Spark schema in `file`'s footer, reading the footer alone
+    * (`SKIP_ROW_GROUPS`: opening a ParquetFileReader costs ~15x more).
+    * None when the footer lacks the key (a file from another writer), or
+    * the file is missing, corrupt or not parquet, or holds a legacy schema
+    * string: the caller then takes Spark's inference, which fails, or
+    * copes, exactly as an inferred read always did. */
+  def sparkSchema(spark: SparkSession, file: org.apache.hadoop.fs.Path)
+      : Option[StructType] = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    scala.util.Try {
+      val in = HadoopInputFile.fromPath(file, conf)
+      val options = HadoopReadOptions.builder(conf, file)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+      val stream = in.newStream()
+      val json = try ParquetFileReader.readFooter(in, options, stream)
+        .getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+      finally stream.close()
+      Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+    }.toOption.flatten
+  }
+}

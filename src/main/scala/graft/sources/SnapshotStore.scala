@@ -84,6 +84,15 @@ final case class VacuumPlan(orphanDirs: Seq[String],
   *     orphan dirs, dead `.parquet` neighbors inside partially-live dirs
   *     (CoW churn), stale zone stats, crashed claims/manifests. The only
   *     operation that deletes anything; [[vacuumDryRun]] lists first.
+  *
+  * Metadata reads launch no Spark job, so an op starts only the jobs that
+  * read or write table rows: every scan takes its schema from one data
+  * file's footer (the file Spark's own inference would read; inference
+  * stays the fallback when `spark.sql.parquet.mergeSchema` is on or the
+  * footer lacks Spark's schema), a call reads each zone/bloom sidecar at
+  * most once, on the driver, and bloom probe hashes are evaluated on the
+  * driver. Nothing is memoized, so commits, vacuum and rollback need no
+  * invalidation.
   */
 final class SnapshotStore(private[sources] val spark: SparkSession,
     root: String) {
@@ -987,25 +996,85 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * readVersionWhere and the CoW merge's base all route here). When a
     * `schema` is pinned (an evolved table's version schema), files that
     * predate a column read it as null — the parquet reader's standard
-    * missing-column fill, no mergeSchema footer sweep needed. */
+    * missing-column fill, no mergeSchema footer sweep needed. Otherwise
+    * the schema comes from one footer ([[parquetRead]]): building the
+    * scan launches no Spark job. */
   private def readEntries(name: String, entries: Seq[String],
                           schemaOf: => DataFrame,
                           schema: Option[org.apache.spark.sql.types.StructType]
                             = None): DataFrame =
     if (entries.isEmpty)
       schemaOf.filter(org.apache.spark.sql.functions.lit(false))
-    else {
-      val r = schema.fold(spark.read)(s => spark.read.schema(s))
+    else
       // normalize SYNTACTICALLY (Path.normalize, no filesystem access):
       // a cross-table reference (`../../t/data/v1`, X141x) resolved
       // through a clone's data dir must not require that dir to exist —
       // POSIX walks `..` component-by-component at the syscall level,
       // so the unnormalized form would ENOENT on a zero-copy clone
       // that never wrote local data
-      r.parquet(entries.sorted
-        .map(e => escapeGlob(
-          dataDir(name).resolve(e).normalize().toString)): _*)
+      parquetRead(entries.sorted.map(dataDir(name).resolve(_).normalize()),
+        schema)
+
+  /** `spark.read.parquet` of `paths` (absolute, normalized) without
+    * Spark's schema-inference job: the schema is `schema` when pinned,
+    * else the one inference would pick, from a footer
+    * ([[ParquetFooters.inferredSchema]]), else — no footer schema —
+    * Spark's inference. */
+  private def parquetRead(paths: Seq[Path],
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame =
+    schema.orElse(ParquetFooters.inferredSchema(spark, paths))
+      .fold(spark.read)(spark.read.schema(_))
+      .parquet(paths.map(p => escapeGlob(p.toString)): _*)
+
+  /** The rows of `sidecar` — a [[parquetRead]] of a small sidecar (zone
+    * rows) — `cols` only, read on the driver by Spark's own parquet
+    * reader: the values a collect() returns, without its job. Each row
+    * passes through `f` as it is read (the reader reuses its row
+    * objects, so `f` must copy what it keeps). */
+  private def readOnDriver[T](sidecar: DataFrame, cols: Seq[String])(
+      f: org.apache.spark.sql.catalyst.InternalRow => T): Seq[T] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FileFormat,
+      PartitionedFile}
+    val read = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().buildReaderWithPartitionValues(spark,
+        sidecar.schema, new org.apache.spark.sql.types.StructType(),
+        org.apache.spark.sql.types.StructType(cols.map(sidecar.schema(_))),
+        Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    sidecar.inputFiles.toSeq.flatMap { uri =>
+      val p = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)
+      read(PartitionedFile(InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromFileStatus(st), 0L,
+          st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
+        .map(f).toVector
     }
+  }
+
+  /** [[readOnDriver]] as a local relation: filters, projections and
+    * collects over it evaluate on the driver too (the optimizer folds
+    * them into the relation); a join with a Spark-side frame still runs
+    * as a job. */
+  private def onDriver(sidecar: DataFrame, cols: Seq[String]): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType(cols.map(sidecar.schema(_)))
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    spark.createDataFrame(readOnDriver(sidecar, cols)(r =>
+      toRow(r).asInstanceOf[org.apache.spark.sql.Row]).asJava, schema)
+  }
+
+  /** The files of driver-side zone rows `z` whose row satisfies `cond`
+    * (a NULL result, as from a NULL lo/hi, does not choose) and every
+    * file with a row: (chosen, known), from one local query. */
+  private def chosenKnown(z: DataFrame,
+      cond: org.apache.spark.sql.Column): (Set[String], Set[String]) = {
+    val r = z.select(z("f"), cond).collect()
+    (r.filter(x => !x.isNullAt(1) && x.getBoolean(1)).map(_.getString(0)).toSet,
+      r.map(_.getString(0)).toSet)
+  }
 
   // --- tiny-sub driver-side fast path (r19 optimization round) ----------
   //
@@ -1050,7 +1119,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
 
   /** Write `rows` as ONE parquet file in `dir` (fresh dir — Overwrite
     * semantics), byte-compatible with what Spark's writer produces for
-    * the same frame: same column order, same values, snappy codec;
+    * the same frame: same column order, same values, snappy codec, and
+    * the frame's Spark schema under the footer key Spark's writer uses
+    * (so reads take it from the footer, as from any Spark-written file);
     * 0 rows still write a schema-bearing file (Spark's empty-write
     * behavior readEntries depends on). Driver-side, no Spark job. */
   private def writeLocalParquet(dir: Path,
@@ -1084,6 +1155,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       .withType(msg)
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .withExtraMetaData(
+        java.util.Map.of(ParquetFooters.SparkSchemaKey, schema.json))
       .build()
     try {
       val fac = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
@@ -1156,8 +1229,15 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       val hf = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(new org.apache.hadoop.fs.Path(f.toString), conf)
       val msg = {
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(hf)
-        try rd.getFooter.getFileMetaData.getSchema finally rd.close()
+        // the footer alone, as ParquetFooters reads it
+        val stream = hf.newStream()
+        try org.apache.parquet.hadoop.ParquetFileReader.readFooter(hf,
+          org.apache.parquet.HadoopReadOptions.builder(conf,
+              new org.apache.hadoop.fs.Path(f.toString))
+            .withMetadataFilter(org.apache.parquet.format.converter
+              .ParquetMetadataConverter.SKIP_ROW_GROUPS).build(), stream)
+          .getFileMetaData.getSchema
+        finally stream.close()
       }
       val fields = msg.getFields.asScala.toSeq
       val dts = fields.map(sparkType)
@@ -1408,11 +1488,11 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     tableDir(name).resolve("dels").resolve(s"v$v")
 
   /** The ACCUMULATED delete-key frame of version `v` (one column, named
-    * after the key), None when the version has no active vector. */
+    * after the key), None when the version has no active vector. Its
+    * schema comes from the sidecar's footer: no Spark job. */
   def deleteKeysAt(name: String, v: Long): Option[DataFrame] = {
     val d = delsDir(name, v)
-    if (Files.exists(d)) Some(spark.read.parquet(escapeGlob(d.toString)))
-    else None
+    if (Files.exists(d)) Some(parquetRead(Seq(d))) else None
   }
 
   /** `base` minus rows whose `keys.columns(0)` value appears in `keys`,
@@ -1559,12 +1639,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       if (singleKey) ("lo", "hi") else (s"lo__$key", s"hi__$key")
     val entries = readManifest(name, cur)
     guardPlannedFiles(name, "compactDeleteKeys", entries.size)
-    val touched = zones.as("z")
+    val ranges = zoneRanges(zones)
+    val touched = ranges.as("z")
       .join(dels.as("t"),
         col(s"t.$key") >= col(s"z.$loC") && col(s"t.$key") <= col(s"z.$hiC"),
         "left_semi")
       .select("f").collect().map(_.getString(0)).toSet
-    val statless = entries.toSet -- zoneFiles(zones).toSet
+    val statless = entries.toSet -- zoneFiles(ranges).toSet
     val rewrite = (touched ++ statless).filter(entries.contains)
     val reused = entries.filterNot(rewrite)
     val v = cur + 1
@@ -2049,11 +2130,12 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         val expanded = prior.flatMap(expandEntry(name, _))
         val (loC, hiC) =
           if (zKey.isDefined) ("lo", "hi") else (s"lo__$key", s"hi__$key")
-        val hit = zones.as("z").join(d.as("t"),
+        val ranges = zoneRanges(zones)
+        val hit = ranges.as("z").join(d.as("t"),
             col(s"t.$key") >= col(s"z.$loC") &&
               col(s"t.$key") <= col(s"z.$hiC"), "left_semi")
           .select("f").collect().map(_.getString(0)).toSet
-        val known = zoneFiles(zones).toSet
+        val known = zoneFiles(ranges).toSet
         val rw = expanded.filter(f => hit(f) || !known(f))
         (rw, expanded.filterNot(rw.toSet))
     }
@@ -3015,12 +3097,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         s"bucketed entries for '$sub' of '$owner' but no bucket spec — " +
           "meta/_bucket__ file missing"))
     if (!spark.catalog.tableExists(catalogTableName(owner, sub))) {
-      // infer from ONE file of the NEWEST partition, not a glob over the
-      // whole bucket dir: the glob lists every partition's files driver-
-      // side just to read one footer (r19 optimization round — repeated
-      // re-registrations after dropCatalogTables/clone reads paid it per
-      // sub), and schema-merge is off either way so the glob picked one
-      // footer too; the newest partition's footer is the current layout
+      // the schema of ONE file of the NEWEST partition, not a glob over
+      // the whole bucket dir: the glob lists every partition's files
+      // driver-side just to read one footer (r19 optimization round —
+      // repeated re-registrations after dropCatalogTables/clone reads paid
+      // it per sub), and schema-merge is off either way so the glob picked
+      // one footer too; the newest partition's footer is the current
+      // layout, read on the driver (no inference job)
       val newest = listNames(bucketDir(owner, sub))
         .filter(_.startsWith("commit_v="))
         .sortBy(d => d.stripPrefix("commit_v=").toLong).lastOption
@@ -3029,7 +3112,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
           .map(f => bucketDir(owner, sub).resolve(d).resolve(f)))
       val inferred = newest.fold(
         spark.read.parquet(escapeGlob(bucketDir(owner, sub).toString))
-          .schema)(f => spark.read.parquet(escapeGlob(f.toString)).schema)
+          .schema)(f => parquetRead(Seq(f)).schema)
       ensureCatalog(owner, sub, spec,
         org.apache.spark.sql.types.StructType(
           inferred.filterNot(_.name == "commit_v")))
@@ -3124,9 +3207,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
 
   /** The zone rows computed for a just-staged data dir, plus the dir's
     * relative file list (what the file-granular manifest restage
-    * needs). `df` is a LOCAL RELATION on the footer path and a
-    * localCheckpointed aggregation on the scan fallback —
-    * [[writeSidecar]] releases the checkpoint after the single write. */
+    * needs). `df` is a LOCAL RELATION on the footer path and the
+    * readback aggregation on the scan fallback, which the sidecar write
+    * ([[writeSidecar]]) runs once. */
   private case class StagedZones(df: DataFrame, files: Seq[String])
 
   /** Spec seams for the footer-stats path (ZoneStatsSpec): force the
@@ -3171,8 +3254,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
               org.apache.spark.sql.Encoders.scalaLong)(xxhash64(col(c)))
               .as("bloom")
           }
-        val full = spark.read.parquet(escapeGlob(
-            dataDir(name).resolve(dir).toString))
+        val full = parquetRead(Seq(dataDir(name).resolve(dir)))
           .groupBy(input_file_name().as("f"))
           .agg(aggs.head, aggs.tail: _*)
           // Column ops, not an interpolated expr: the path must never be
@@ -3180,29 +3262,27 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
           // characters would URI-encode inside input_file_name)
           .withColumn("f", col("f").substr(
             locate(prefix, col("f")) + lit(prefix.length), lit(1 << 30)))
-          // ONE materialization serves both the sidecar write and the
-          // file list (pre-r18 the sidecar was written, read back,
-          // checkpointed and rewritten with the carried rows — two
-          // write jobs plus a readback per commit)
-          .localCheckpoint()
-        StagedZones(full, zoneFiles(full))
+        // the file list from the footers' row counts — exactly the files
+        // the aggregation gives a row — so the sidecar write is the
+        // aggregation's one consumer and runs it once
+        val files = stagedFooters(name, dir).map(_.collect {
+          case (p, footer) if footer.getBlocks.asScala.exists(_.getRowCount > 0) =>
+            s"$dir/${p.getFileName}"
+        }.sorted).getOrElse(zoneFiles(full))
+        StagedZones(full, files)
     }
   }
 
   /** Write version `v`'s zone sidecar in ONE job: the fresh rows ∪ the
     * optional carried rows (allowMissingColumns: a bloom sidecar
     * declared mid-history null-fills on whichever side lacks it, which
-    * pruning treats conservatively). Releases the scan fallback's
-    * checkpoint afterwards (a no-op for the footer path's local
-    * relation). */
+    * pruning treats conservatively). */
   private def writeSidecar(name: String, v: Long, nz: StagedZones,
-      carried: Option[DataFrame]): Unit = {
+      carried: Option[DataFrame]): Unit =
     carried.fold(nz.df)(c =>
         nz.df.unionByName(c, allowMissingColumns = true))
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(zonesDir(name, v).toString)
-    graft.ops.RelOps.releaseCheckpoint(nz.df)
-  }
 
   /** Exact per-file (lo, hi, n) from parquet footers, or None when any
     * file/column cannot be served exactly (the caller then pays the
@@ -3215,22 +3295,11 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
                 org.apache.spark.sql.types.StructType, Seq[String])] = {
     import org.apache.spark.sql.types._
     if (bloomSpecOf(name).isDefined) return None // the bitset needs data
-    val base = dataDir(name).resolve(dir)
-    if (!Files.exists(base)) return None
-    val listing = Files.list(base)
-    val parts = try listing.iterator().asScala.filter { p =>
-      val fn = p.getFileName.toString
-      Files.isRegularFile(p) && !fn.startsWith("_") && !fn.startsWith(".")
-    }.toSeq.sortBy(_.getFileName.toString) finally listing.close()
-    if (parts.isEmpty) return None
-    val conf = spark.sessionState.newHadoopConf()
+    val (parts, footers) = stagedFooters(name, dir) match {
+      case Some(pf) => pf.unzip
+      case None => return None
+    }
     try {
-      val footers = parts.map { p =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toUri), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter finally r.close()
-      }
       val msg = footers.head.getFileMetaData.getSchema
       val zcs = cols.map(c => zoneColOf(msg, c) match {
         case Some(zc) => zc
@@ -3283,6 +3352,32 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
           StructField("n", LongType, nullable = false))
       Some((outRows.toSeq, schema, outFiles.toSeq.sorted))
     } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** The data files just written under `data/<dir>` (name order, hidden
+    * `_`/`.` names skipped) with their full footers, read on the driver;
+    * None when the dir holds no file or a footer cannot be read. */
+  private def stagedFooters(name: String, dir: String)
+      : Option[Seq[(Path, org.apache.parquet.hadoop.metadata.ParquetMetadata)]] = {
+    val base = dataDir(name).resolve(dir)
+    if (!Files.exists(base)) return None
+    val listing = Files.list(base)
+    val parts = try listing.iterator().asScala.filter { p =>
+      val fn = p.getFileName.toString
+      Files.isRegularFile(p) && !fn.startsWith("_") && !fn.startsWith(".")
+    }.toSeq.sortBy(_.getFileName.toString) finally listing.close()
+    if (parts.isEmpty) return None
+    val conf = spark.sessionState.newHadoopConf()
+    // the footer alone (row groups and their stats included): opening a
+    // ParquetFileReader for it costs ~40x more
+    scala.util.Try(parts.map { p =>
+      val hp = new org.apache.hadoop.fs.Path(p.toUri)
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf)
+      val stream = in.newStream()
+      try p -> org.apache.parquet.hadoop.ParquetFileReader.readFooter(in,
+        org.apache.parquet.HadoopReadOptions.builder(conf, hp).build(), stream)
+      finally stream.close()
+    }).toOption
   }
 
   /** One supported zone-stat column: its Spark type plus the exact
@@ -3429,11 +3524,21 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   private def zoneFiles(zones: DataFrame): Seq[String] =
     zones.select("f").collect().map(_.getString(0)).toSeq.sorted
 
-  private def readZones(name: String, v: Long): Option[DataFrame] = {
+  /** Version `v`'s zone sidecar as a scan (schema from its footer: no
+    * job) — what commits carry rows from and what [[zoneRanges]] and the
+    * bloom probe read on the driver. Spec seam for the footer schema. */
+  private[graft] def readZones(name: String, v: Long): Option[DataFrame] = {
     val z = zonesDir(name, v)
-    if (Files.exists(z)) Some(spark.read.parquet(escapeGlob(z.toString)))
-    else None
+    if (Files.exists(z)) Some(parquetRead(Seq(z))) else None
   }
+
+  /** The zone rows of `zones` without the bloom bitsets — file, ranges,
+    * row count — read ONCE on the driver ([[onDriver]]). Every pruning
+    * and touch-set decision of a call derives from these rows: chosen
+    * files by filtering them, known files from their `f`, NULL lo/hi
+    * never chosen (the comparison is NULL). */
+  private def zoneRanges(zones: DataFrame): DataFrame =
+    onDriver(zones, zones.columns.filterNot(_ == "bloom").toSeq)
 
   /** Full-replace commit range-clustered on `key` with per-file zone
     * stats — the layout [[commitMergeCow]] prunes against. `numFiles`
@@ -3473,17 +3578,18 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
 
   /** Files of version `v` that can hold a key in [from, to], per the zone
     * stats, split (chosen, skipped). Manifest entries without zone rows
-    * are conservatively chosen. Spec seam for the skipping claim. */
+    * are conservatively chosen. A metadata read: the sidecar is read once,
+    * on the driver ([[zoneRanges]]), and launches no Spark job. Spec seam
+    * for the skipping claim. */
   private[graft] def pruneFiles(name: String, v: Long, key: String,
       from: Any, to: Any): (Seq[String], Seq[String]) = {
     import org.apache.spark.sql.functions._
     val entries = readManifest(name, v)
-    readZones(name, v) match {
+    readZones(name, v).map(zoneRanges) match {
       case None => (entries, Nil)
       case Some(z) =>
-        val inRange = z.filter(col("hi") >= lit(from) && col("lo") <= lit(to))
-        val chosen = zoneFiles(inRange).toSet
-        val known = zoneFiles(z).toSet
+        val (chosen, known) =
+          chosenKnown(z, col("hi") >= lit(from) && col("lo") <= lit(to))
         val pick = entries.filter(e => chosen(e) || !known(e))
         (pick, entries.filterNot(pick.toSet))
     }
@@ -3508,10 +3614,12 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * sidecar was declared after this version committed) choose
     * everything. Probe hashes are computed by the SAME Spark expression
     * that built the bitsets — `xxhash64` over the value cast to the
-    * column's real type — via one LocalTableScan collect, so build and
-    * probe can never disagree on a type's hash layout. Driver-side work
-    * is O(files × values), bounded by the layout. Spec seam for the
-    * skipping claim. */
+    * column's real type — evaluated on the driver ([[probeHashes]]), so
+    * build and probe can never disagree on a type's hash layout. A
+    * metadata read: the column type comes from one footer,
+    * the (f, bloom) rows are read once on the driver, and no Spark job
+    * starts. Driver-side work is O(files × values), bounded by the
+    * layout. Spec seam for the skipping claim. */
   private[graft] def pruneFilesBloom(name: String, v: Long, colName: String,
       values: Seq[Any]): (Seq[String], Seq[String]) =
     pruneFilesBloomIn(name, v, colName, values, readManifest(name, v),
@@ -3542,25 +3650,37 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       // just unskipped; see [[plannedFilesCap]])
       case Some(z) if z.columns.contains("bloom") &&
           entries.size <= plannedFilesCap =>
-        val dt = dtype // bind the by-name ONCE (lazy via the delegate)
-        val hs = spark.range(1)
-          .select(array(values.map(x =>
-            xxhash64(lit(x).cast(dt))): _*).as("h"))
-          .head().getSeq[Long](0)
-        val chosen = z.select("f", "bloom").collect().filter { r =>
-          // a null bitset (file carried from a pre-declaration version)
-          // is conservatively chosen — only a PRESENT bloom may skip
-          r.isNullAt(1) || {
-            val w = r.getSeq[Long](1).toArray
+        val hs = probeHashes(values, dtype)
+        // (file, might hold a probe value) per zone row, decided as each
+        // row is read: a null bitset (file carried from a pre-declaration
+        // version) is conservatively chosen — only a PRESENT bloom may skip
+        val blooms = readOnDriver(z, Seq("f", "bloom")) { r =>
+          (r.getUTF8String(0).toString, r.isNullAt(1) || {
+            val w = r.getArray(1).toLongArray()
             hs.exists(h =>
               graft.functions.BloomAgg.mightContain(w, h, bits, k))
-          }
-        }.map(_.getString(0)).toSet
-        val known = zoneFiles(z).toSet
+          })
+        }
+        val chosen = blooms.collect { case (f, true) => f }.toSet
+        val known = blooms.map(_._1).toSet
         val pick = entries.filter(e => chosen(e) || !known(e))
         (pick, entries.filterNot(pick.toSet))
       case _ => (entries, Nil)
     }
+  }
+
+  /** `xxhash64(lit(x).cast(dt))` of each probe value — the bloom build's
+    * own expression — evaluated on the driver, as constant folding
+    * evaluates it (session time zone and ANSI mode included), so build
+    * and probe can never disagree on a type's hash layout. Spec seam. */
+  private[graft] def probeHashes(values: Seq[Any],
+      dt: org.apache.spark.sql.types.DataType): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode,
+      Literal, XxHash64}
+    val conf = spark.sessionState.conf
+    values.map(x => new XxHash64(Seq(Cast(Literal(x), dt,
+      Some(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf))))
+      .eval().asInstanceOf[Long])
   }
 
   /** Z-ORDER clustered versioned commit — the multi-column layout
@@ -3609,11 +3729,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     import org.apache.spark.sql.functions._
     val entries = readManifest(name, v)
     readZones(name, v) match {
-      case Some(z) if z.columns.contains(s"lo__$colName") =>
-        val inRange = z.filter(col(s"hi__$colName") >= lit(from) &&
-          col(s"lo__$colName") <= lit(to))
-        val chosen = zoneFiles(inRange).toSet
-        val known = zoneFiles(z).toSet
+      case Some(zs) if zs.columns.contains(s"lo__$colName") =>
+        val (chosen, known) = chosenKnown(zoneRanges(zs),
+          col(s"hi__$colName") >= lit(from) && col(s"lo__$colName") <= lit(to))
         val pick = entries.filter(e => chosen(e) || !known(e))
         (pick, entries.filterNot(pick.toSet))
       case _ => (entries, Nil)
@@ -3792,21 +3910,24 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * keeps correctness independent of the pruning. Spec seam for the
     * skipping claim. */
   private[graft] def pruneFilesForPredicate(name: String, v: Long,
-      predicate: String): (Seq[String], Seq[String]) =
+      predicate: String): (Seq[String], Seq[String]) = {
+    val zones = readZones(name, v)
     pruneFilesForPredicateIn(name, v, predicate,
       readManifest(name, v).flatMap(expandEntry(name, _)),
-      readZones(name, v))
+      zones, zones.map(zoneRanges))
+  }
 
-  /** [[pruneFilesForPredicate]] with the manifest expansion and zone
-    * sidecar passed IN — so [[predicateCow]] (which already holds
-    * both) never re-lists or re-reads them (r18 review fix: the
-    * mutation paid the O(files) listing and the sidecar scan twice
-    * per call). */
+  /** [[pruneFilesForPredicate]] with the manifest expansion, the zone
+    * sidecar and its driver-side [[zoneRanges]] passed IN — so
+    * [[predicateCow]] (which already holds them) never re-lists or
+    * re-reads them (r18 review fix: the mutation paid the O(files)
+    * listing and the sidecar scan twice per call). */
   private def pruneFilesForPredicateIn(name: String, v: Long,
       predicate: String, entries: Seq[String],
-      zonesOpt: Option[DataFrame]): (Seq[String], Seq[String]) = {
+      zonesOpt: Option[DataFrame], rangesOpt: Option[DataFrame])
+      : (Seq[String], Seq[String]) = {
     import org.apache.spark.sql.functions.expr
-    val zonePick: Seq[String] = zonesOpt match {
+    val zonePick: Seq[String] = rangesOpt match {
       case Some(z) =>
         val zk = zoneKeyOf(name, v)
         def range(c: String): Option[(String, String,
@@ -3818,8 +3939,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
               z.schema(lc).dataType))
         zoneSkipCondition(predicate, range) match {
           case Some(cond) =>
-            val chosen = zoneFiles(z.filter(expr(cond))).toSet
-            val known = zoneFiles(z).toSet
+            val (chosen, known) = chosenKnown(z, expr(cond))
             entries.filter(e => chosen(e) || !known(e))
           case None => entries
         }
@@ -3948,13 +4068,15 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * contract, upgraded — its stale-manifest require disappears).
     * Refuses loudly when the version has entries without zone rows (a
     * plain append's dir — stats would silently undercount; compact
-    * first) or zone rows without row counts (a pre-counts layout). */
+    * first) or zone rows without row counts (a pre-counts layout). The
+    * sidecar is read once, on the driver: the checks start no Spark job,
+    * and the returned aggregate runs over those rows. */
   def statsFromZones(name: String, v: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     requireNoDeletes(name, v, "statsFromZones",
       "zone row counts include vector-deleted rows — metadata-only " +
         "stats would overcount")
-    val z = readZones(name, v).getOrElse(throw
+    val z = readZones(name, v).map(zoneRanges).getOrElse(throw
       new IllegalArgumentException(
         s"version $v of '$name' has no zone stats — commit through the " +
           "keyed or z-ordered layout"))
@@ -4132,7 +4254,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // zone bounds — range-less like statless debt, and the sweep's
     // Comparable compare would NPE on it; drop such rows here (the
     // recluster treats the same files as always-rewrite debt)
-    val ivs = zs.select("lo", "hi").na.drop().collect()
+    val ivs = onDriver(zs, Seq("lo", "hi")).na.drop().collect()
       .map(r => (r.get(0), r.get(1))).toSeq
     if (ivs.isEmpty) return 0
     def cmp(a: Any, b: Any): Int =
@@ -4193,7 +4315,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // treated as always-rewrite debt — the sound choice (its rows gain
     // real zone rows on the way through) and the one that keeps the
     // Comparable sweep NPE-free
-    val ranged = zones.select("f", "lo", "hi").collect()
+    val ranged = onDriver(zones, Seq("f", "lo", "hi")).collect()
       .map(r => (r.getString(0), r.get(1), r.get(2)))
       .filter(t => entries.contains(t._1) && t._2 != null && t._3 != null)
     def cmp(a: Any, b: Any): Int =
@@ -4328,14 +4450,15 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       // reused-by-reference file can hold a vector-deleted row
       val touchedKeys = dels.fold(d.select(col(key)))(dl =>
         d.select(col(key)).unionByName(dl.select(col(key)))).distinct()
-      val touchedFiles = zones.as("z")
+      val ranges = zoneRanges(zones)
+      val touchedFiles = ranges.as("z")
         .join(touchedKeys.as("t"),
           col(s"t.$key") >= col(s"z.$loC") && col(s"t.$key") <= col(s"z.$hiC"),
           "left_semi")
         .select("f").collect().map(_.getString(0)).toSet
       // entries without zone rows (a plain commitAppend's dir, say) are
       // conservatively always-rewritten — pruning needs stats to be sound
-      val statless = entries.toSet -- zoneFiles(zones).toSet
+      val statless = entries.toSet -- zoneFiles(ranges).toSet
       val rewrite = (touchedFiles ++ statless).filter(entries.contains)
       val reused = entries.filterNot(rewrite)
       val v = cur + 1
@@ -4564,8 +4687,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // vector-deleted row as a touch only widens the rewrite set the
     // fold needs anyway. URI-decoded back to manifest-entry names (the
     // constructor guard keeps roots free of ambiguous characters).
+    val ranges = zones.map(zoneRanges)
     val (cand, _) =
-      pruneFilesForPredicateIn(name, cur, predicate, expanded, zones)
+      pruneFilesForPredicateIn(name, cur, predicate, expanded, zones, ranges)
     val touchedAbs =
       if (cand.isEmpty) Set.empty[String] // pruned to nothing: no scan
       else readEntries(name, cand, df, pinned)
@@ -4586,7 +4710,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // rewrites too, plus statless entries (conservatively — no ranges
     // to prove them clean), so no reused-by-reference file can hold a
     // vector-deleted row once the sidecar is gone
-    val vecTouched: Set[String] = (dels, zones) match {
+    val vecTouched: Set[String] = (dels, ranges) match {
       case (Some(d), Some(z)) =>
         val key = d.columns(0)
         val (loC, hiC) =

@@ -61,52 +61,13 @@ final class TableStore(spark: SparkSession, root: String) {
       spark.read.schema(_).parquet(dir))
   }
 
-  /** The Spark schema stored in the footer of the table's first data file
-    * (name order, depth first, hidden `_`/`.` entries skipped, as Spark's
-    * file index skips them) — the schema Spark's non-merging inference
-    * would pick, without the job it launches to read it. Spark writes it
-    * under this key on every parquet write; files from other writers lack
-    * it and get None. Every file of a table shares one schema (the
-    * same assumption Spark's inference makes unless mergeSchema is on). */
-  private def footerSchema(name: String): Option[StructType] = {
-    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-    import org.apache.parquet.HadoopReadOptions
-    import org.apache.parquet.format.converter.ParquetMetadataConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path(name))
-    val fs = FileSystem.get(root.toUri, conf)
-    def visible(st: FileStatus) = {
-      val n = st.getPath.getName
-      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
-    }
-    def firstFile(dir: Path): Option[FileStatus] = {
-      val (dirs, files) = fs.listStatus(dir).filter(visible)
-        .sortBy(_.getPath.getName).partition(_.isDirectory)
-      files.headOption.orElse(dirs.iterator.flatMap(d => firstFile(d.getPath))
-        .nextOption())
-    }
-    // anything unreadable here (a missing table, a corrupt or non-parquet
-    // file, a legacy schema string) falls back to Spark's inference, which
-    // then fails, or copes, exactly as an inferred read always did
-    if (spark.conf.get("spark.sql.parquet.mergeSchema") == "true") None
-    else scala.util.Try {
-      firstFile(root).flatMap { st =>
-        // the footer alone: opening a ParquetFileReader costs ~15x more
-        val file = HadoopInputFile.fromStatus(st, conf)
-        val options = HadoopReadOptions.builder(conf, st.getPath)
-          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
-        val in = file.newStream()
-        val json = try ParquetFileReader.readFooter(file, options, in)
-          .getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")
-        finally in.close()
-        Option(json).map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
-      }
-    }.toOption.flatten
-  }
+  /** The schema Spark's non-merging inference would give the table,
+    * without the job it launches to read it
+    * ([[ParquetFooters.inferredSchema]]). Every file of a table shares one
+    * schema (the same assumption Spark's inference makes unless
+    * mergeSchema is on). */
+  private def footerSchema(name: String): Option[StructType] =
+    ParquetFooters.inferredSchema(spark, Seq(Paths.get(path(name))))
 
   /** S6 (etl_elt_wine.py:214-217): idempotent keyed append — INSERT OR
     * IGNORE BY NAME semantics; keeps existing rows on key conflict.

@@ -136,4 +136,35 @@ class TinySubSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(rows === Set(("delete", 1L), ("insert", 2L)))
   }
+
+  test("TS7: a fast-path file carries the schema key Spark's writer " +
+      "stamps for the same frame, so its read starts no inference job") {
+    val dir = tmp()
+    val ss = new SnapshotStore(spark, dir)
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(
+      StructField("l", LongType, nullable = false), StructField("s", StringType)))
+    val df = spark.createDataFrame(Seq(Row(1L, "x"), Row(2L, null)).asJava, schema)
+    ss.commitTables("t", overwrites = Map(
+      "data" -> spark.range(3).toDF, "tiny" -> df))
+    def parquetFiles(d: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = java.nio.file.Files.list(d)
+      try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+      finally s.close()
+    }
+    def footer(f: java.nio.file.Path) = graft.sources.ParquetFooters
+      .sparkSchema(spark, new org.apache.hadoop.fs.Path(f.toUri))
+    val entry = ss.readManifest("t", 1L).find(_.startsWith("tiny:")).get
+    val Seq(fast) = parquetFiles(java.nio.file.Paths.get(dir, "t", "data",
+      entry.stripPrefix("tiny:")))
+    val sparkDir = java.nio.file.Paths.get(tmp(), "spark_written")
+    df.coalesce(1).write.parquet(sparkDir.toString)
+    val Seq(written) = parquetFiles(sparkDir)
+    assert(footer(fast).isDefined)
+    assert(footer(fast) === footer(written))
+    val (read, jobs) = JobCounter(spark.sparkContext)(ss.readTable("t", "tiny"))
+    assert(jobs.isEmpty, s"read started jobs $jobs")
+    assert(read.schema === spark.read.parquet(fast.toString).schema)
+    assert(read.collect().toSet === Set(Row(1L, "x"), Row(2L, null)))
+  }
 }
