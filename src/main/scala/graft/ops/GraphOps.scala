@@ -48,9 +48,9 @@ object GraphOps {
       .filter(col("weight") >= minWeight)
 
   /** The self-join formulation of [[coOccurrenceEdges]] — identical
-    * semantics (incidence-row pair counts), kept as the measured contrast
-    * case for the ScaleProbe graph mode and for engines/data where
-    * ReuseExchange + codegen joins beat array generation. */
+    * semantics (incidence-row pair counts), kept as the contrast case
+    * measured in round 6 and for engines/data where ReuseExchange +
+    * codegen joins beat array generation. */
   def coOccurrenceEdgesBySelfJoin(incidence: DataFrame, groupCol: String,
       itemCol: String, minWeight: Long = 1L): DataFrame = {
     val l = incidence.select(col(groupCol).as("g"), col(itemCol).as("a"))

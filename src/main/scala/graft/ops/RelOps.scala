@@ -199,10 +199,10 @@ object RelOps {
   /** A one-row all-LONG frame as a LocalRelation — the watermark/meta
     * row every view refresh commits. Built via createDataFrame (not
     * range(1).select(lit…), whose optimized plan stays a Range) so the
-    * staging side can recognize it as driver-known rows and write the
-    * parquet WITHOUT a Spark job (SnapshotStore's tiny-sub fast path,
-    * r19 optimization round — a 1-row metadata write was paying a full
-    * job launch + commit protocol per view commit). */
+    * staging side can recognize it as driver-held rows and write the
+    * parquet WITHOUT a Spark job (SnapshotStore's driver-side staging —
+    * a 1-row metadata write was paying a full job launch + commit
+    * protocol per view commit). */
   def localLongRow(spark: org.apache.spark.sql.SparkSession,
       cols: (String, Long)*): DataFrame = {
     import scala.jdk.CollectionConverters._

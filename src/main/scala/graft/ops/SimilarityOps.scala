@@ -1266,8 +1266,8 @@ object SimilarityOps {
     * smaller rows; stale rows lose the min automatically. A scattered
     * point-update through a rewrite path (upsert / partitioned apply)
     * costs O(table) or O(touched partitions each rewritten whole) —
-    * measured 2× corpus-growth bleed-through in the components
-    * ScaleProbe — while this append writes exactly the changed rows.
+    * measured 2× corpus-growth bleed-through in round 12 — while this
+    * append writes exactly the changed rows.
     * [[compactComponentsState]] folds the deltas back to one row per id
     * when read amplification warrants. Returns nodes labeled. */
   def buildComponentsState(store: graft.sources.TableStore, name: String,
@@ -1350,7 +1350,7 @@ object SimilarityOps {
     * labels), so the common small-batch ingest otherwise pays the
     * distributed min-label loop's fixed scheduling floor — each
     * iteration a full Spark job over a few hundred rows (~3-4 s of pure
-    * overhead per append, measured by ScaleProbe components). Same
+    * overhead per append, measured in round 13). Same
     * judgment BpeOps makes per merge round: the vocabulary-sized side
     * goes driver-side. Labels are IDENTICAL by construction: union-find
     * always attaches the larger root under the smaller, so every root is

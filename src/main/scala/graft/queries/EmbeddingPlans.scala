@@ -6,9 +6,9 @@ import graft.ops.{RelOps, SimilarityOps}
 import graft.functions.VecCosine
 
 /** Shared plan builders for the embedding kNN-join queries — the SAME
-  * formulations the shipped driver queries (x72/x73) and ScaleProbe's
-  * `embed` mode measure, so the scale numbers in ROUND_NOTES.md are of the
-  * shipped plans, not probe-local variants (TpchPlans discipline).
+  * formulations the shipped driver queries (x72/x73) run, so the scale
+  * numbers in ROUND_NOTES.md are of the shipped plans, not probe-local
+  * variants (TpchPlans discipline).
   *
   * Input contract: `vecs` = (vec_id: long, label: int, v: array<double>).
   */

@@ -21,8 +21,8 @@ object FuzzyQueries {
     // quadratic in block size, 10,000× the pairs at 100× rows, parallelism
     // capped at 25 keys). Lexicographic adjacency is the right recall
     // surface for JW, which weights shared prefixes. The rank join is an
-    // equi-join on a long; the sort is a range shuffle. ScaleProbe entry
-    // in ROUND_NOTES.md shows near-linear wall-clock at 10×/30× rows.
+    // equi-join on a long; the sort is a range shuffle. Round 5 measured
+    // near-linear wall-clock at 10×/30× rows (ROUND_NOTES.md).
     // Threshold compares the ROUNDED score on both engines so a last-ulp
     // association difference cannot flip a boundary row in or out; 0.84
     // stays inside the >= 0.8 DuckDB-parity band (JaroWinkler scaladoc).

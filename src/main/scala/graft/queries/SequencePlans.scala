@@ -4,11 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The x113-x115 plan builders, parameterized on the events frame so the
-  * driver queries and ScaleProbe measure the SAME shipped formulations
-  * (the TpchPlans/TrainPrepPlans discipline). Scale posture for all
-  * three: ONE shuffle on user_id (every window and the closing aggregate
-  * share it), per-user state bounded by events-per-user.
+/** The x113-x115 plan builders, parameterized on the events frame, so
+  * any scale measurement runs the SAME shipped formulations as the
+  * driver queries (the TpchPlans/TrainPrepPlans discipline). Scale
+  * posture for all three: ONE shuffle on user_id (every window and the
+  * closing aggregate share it), per-user state bounded by
+  * events-per-user.
   */
 object SequencePlans {
 

@@ -18,9 +18,9 @@ import org.apache.spark.sql.functions._
   * summation-order ulps can't flip the driver's hash (SURVEY §5.2).
   */
 /** Plan builders parameterized on their input frames, shared by the
-  * driver queries below AND graft.ScaleProbe — the probe measures the
-  * SHIPPED formulations, so an edit here moves both the correctness
-  * gate and the scale numbers together. */
+  * driver queries below and any scale measurement of them — scale runs
+  * measure the SHIPPED formulations, so an edit here moves both the
+  * correctness gate and the scale numbers together. */
 object TpchPlans {
   import org.apache.spark.sql.DataFrame
 
@@ -75,7 +75,7 @@ object TpchPlans {
   /** Q13: pre-aggregate the fact side BEFORE the outer join —
     * count(o_orderkey) per customer ≡ per-custkey order count (0 for no
     * match), but the join moves one row per customer instead of one per
-    * order: 4.3 s → 1.9 s at 30× facts on warm runs (ScaleProbe),
+    * order: 4.3 s → 1.9 s at 30× facts on warm runs (round 2),
     * identical oracle result. */
   def customerDistribution(ord: DataFrame, cust: DataFrame): DataFrame = {
     val perCust = ord.filter(col("o_orderpriority") =!= "1-URGENT")

@@ -7,10 +7,10 @@ import graft.ops.{RelOps, SimilarityOps, TextOps}
 
 /** Shared plan builders for the train-prep shapes, parameterized on the
   * input frame — the same pattern TpchPlans uses for the TPC-H shapes:
-  * the driver queries (TrainPrepQueries / FuzzyQueries) and the
-  * ScaleProbe `trainprep` mode both build plans HERE, so the scale
-  * evidence in ROUND_NOTES.md is measured on the shipped formulations
-  * and cannot silently drift from them.
+  * the driver queries (TrainPrepQueries / FuzzyQueries) build plans
+  * HERE, so the scale evidence in ROUND_NOTES.md (round 5) was measured
+  * on the shipped formulations and any re-measurement cannot silently
+  * drift from them.
   */
 object TrainPrepPlans {
 

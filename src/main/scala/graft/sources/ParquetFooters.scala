@@ -1,13 +1,20 @@
 package graft.sources
 
 import java.nio.file.{Files, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** The Spark schema Spark's parquet writer stores in every file's footer,
-  * read on the driver. A reader handed this schema skips Spark's schema
-  * inference, which otherwise starts a one-task job on every
-  * `spark.read.parquet` without `.schema(...)`. Nothing is memoized. */
+/** Parquet footers read on the driver, and the Spark schema Spark's
+  * parquet writer stores in every file's footer. A reader handed this
+  * schema skips Spark's schema inference, which otherwise starts a
+  * one-task job on every `spark.read.parquet` without `.schema(...)`.
+  * Nothing is memoized. */
 object ParquetFooters {
 
   /** The footer key Spark's writer stores the written frame's schema
@@ -43,27 +50,30 @@ object ParquetFooters {
   }
 
   /** The Spark schema in `file`'s footer, reading the footer alone
-    * (`SKIP_ROW_GROUPS`: opening a ParquetFileReader costs ~15x more).
+    * without its row groups (opening a ParquetFileReader costs ~15x more).
     * None when the footer lacks the key (a file from another writer), or
     * the file is missing, corrupt or not parquet, or holds a legacy schema
     * string: the caller then takes Spark's inference, which fails, or
     * copes, exactly as an inferred read always did. */
   def sparkSchema(spark: SparkSession, file: org.apache.hadoop.fs.Path)
-      : Option[StructType] = {
-    import org.apache.parquet.HadoopReadOptions
-    import org.apache.parquet.format.converter.ParquetMetadataConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
+      : Option[StructType] =
     scala.util.Try {
-      val in = HadoopInputFile.fromPath(file, conf)
-      val options = HadoopReadOptions.builder(conf, file)
-        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
-      val stream = in.newStream()
-      val json = try ParquetFileReader.readFooter(in, options, stream)
-        .getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-      finally stream.close()
-      Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+      Option(footer(spark.sparkContext.hadoopConfiguration, file,
+          skipRowGroups = true)
+        .getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
     }.toOption.flatten
+
+  /** `file`'s footer, read alone, on the driver; `skipRowGroups` leaves
+    * out the row groups' metadata (`SKIP_ROW_GROUPS`), which a schema
+    * read does not need. */
+  def footer(conf: Configuration, file: org.apache.hadoop.fs.Path,
+      skipRowGroups: Boolean): ParquetMetadata = {
+    val options = HadoopReadOptions.builder(conf, file)
+    if (skipRowGroups) options.withMetadataFilter(SKIP_ROW_GROUPS)
+    val in = HadoopInputFile.fromPath(file, conf)
+    val stream = in.newStream()
+    try ParquetFileReader.readFooter(in, options.build(), stream)
+    finally stream.close()
   }
 }

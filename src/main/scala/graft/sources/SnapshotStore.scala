@@ -1034,23 +1034,32 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * objects, so `f` must copy what it keeps). */
   private def readOnDriver[T](sidecar: DataFrame, cols: Seq[String])(
       f: org.apache.spark.sql.catalyst.InternalRow => T): Seq[T] = {
+    val read = driverReader(sidecar, cols)
+    sidecar.inputFiles.toSeq.flatMap(read(_).map(f).toVector)
+  }
+
+  /** Spark's own parquet reader of `frame`'s `cols`, called on the
+    * driver: it opens one file (a URI) and returns its rows as read. The
+    * reader reuses its row objects, and closes a file once its rows are
+    * exhausted. */
+  private def driverReader(frame: DataFrame, cols: Seq[String])
+      : String => Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.{FileFormat,
       PartitionedFile}
     val read = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetFileFormat().buildReaderWithPartitionValues(spark,
-        sidecar.schema, new org.apache.spark.sql.types.StructType(),
-        org.apache.spark.sql.types.StructType(cols.map(sidecar.schema(_))),
+        frame.schema, new org.apache.spark.sql.types.StructType(),
+        org.apache.spark.sql.types.StructType(cols.map(frame.schema(_))),
         Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConf())
-    sidecar.inputFiles.toSeq.flatMap { uri =>
+    uri => {
       val p = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
       val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getFileStatus(p)
       read(PartitionedFile(InternalRow.empty,
           org.apache.spark.paths.SparkPath.fromFileStatus(st), 0L,
           st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
-        .map(f).toVector
     }
   }
 
@@ -1076,224 +1085,82 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       r.map(_.getString(0)).toSet)
   }
 
-  // --- tiny-sub driver-side fast path (r19 optimization round) ----------
+  // --- driver-side staging of driver-held rows ----------------------------
   //
   // Every view refresh commits a 1-row watermark ("meta") sub, and many
-  // lifecycle queries commit literal driver-built frames — each paying a
-  // full Spark job (launch + FileFormatWriter + commit protocol) to move
-  // a handful of driver-known bytes, plus another job to read them back.
-  // Guide §5: the driver should do no DATA work — but METADATA is driver
-  // work; Delta writes its commit log driver-side for exactly this
-  // reason. When a staged frame's optimized plan is a LocalRelation of
-  // driver-known rows over exactly-representable primitive types, write
-  // the parquet directly (parquet-mr example API, no job); when a tiny
-  // plain sub is read back for a watermark, read its files directly the
-  // same way. Anything outside the exactness envelope falls back to the
-  // Spark path — both paths produce/see identical parquet semantics
-  // (TinySubSpec pins write≡Spark-write and read≡Spark-read).
+  // lifecycle queries commit literal frames. A Spark job (launch, file
+  // writer, commit protocol) to move a handful of rows the driver already
+  // holds, and another to read them back, is waste: the driver does no
+  // DATA work, but METADATA is driver work, which is why Delta writes its
+  // commit log on the driver. Such rows are written on the driver by
+  // Spark's own parquet writer ([[writeOnDriver]]), and a plain sub's
+  // watermark row is read back by Spark's own reader ([[tinySubHead]]),
+  // so the files and rows are those a Spark job would write and read.
 
-  /** Types the fast path serves EXACTLY (no logical-type or timezone
-    * subtleties): long, int, double, boolean, string. */
-  private def tinyTypeOk(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case org.apache.spark.sql.types.LongType
-         | org.apache.spark.sql.types.IntegerType
-         | org.apache.spark.sql.types.DoubleType
-         | org.apache.spark.sql.types.BooleanType
-         | org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
-
-  /** Driver-known rows of `df`, when its optimized plan is a
-    * LocalRelation within the fast path's envelope. */
+  /** `df`'s optimized plan when it is a LocalRelation: at most 10,000
+    * rows the driver holds. */
   private def localRows(df: DataFrame)
-      : Option[(org.apache.spark.sql.types.StructType,
-                Seq[org.apache.spark.sql.catalyst.InternalRow])] =
+      : Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] =
     df.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if l.data.lengthCompare(10000) <= 0 &&
-            l.schema.fields.forall(f => tinyTypeOk(f.dataType)) =>
-        Some((l.schema, l.data))
+          if l.data.lengthCompare(10000) <= 0 => Some(l)
       case _ => None
     }
 
-  /** Write `rows` as ONE parquet file in `dir` (fresh dir — Overwrite
-    * semantics), byte-compatible with what Spark's writer produces for
-    * the same frame: same column order, same values, snappy codec, and
-    * the frame's Spark schema under the footer key Spark's writer uses
-    * (so reads take it from the footer, as from any Spark-written file);
-    * 0 rows still write a schema-bearing file (Spark's empty-write
-    * behavior readEntries depends on). Driver-side, no Spark job. */
-  private def writeLocalParquet(dir: Path,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Unit = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types => PT}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.spark.sql.types._
+  /** Write `local`'s rows as ONE parquet file in `dir` (a fresh dir:
+    * Overwrite semantics) through the writer a Spark write task uses,
+    * called on the driver: codec, file extension, footer keys and type
+    * mapping are those of `write.parquet` under the session's settings, a
+    * frame Spark's writer refuses fails with Spark's error, and 0 rows
+    * still write a schema-bearing file (Spark's empty-write behaviour,
+    * which readEntries depends on). No Spark job. */
+  private def writeOnDriver(dir: Path,
+      local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation)
+      : Unit = {
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+    import org.apache.spark.sql.execution.datasources.{DataSource,
+      DataSourceUtils}
+    val schema = local.schema
+    val format = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat()
+    DataSource.validateSchema("Parquet", schema, spark.sessionState.conf)
+    DataSourceUtils.verifySchema(format, schema)
     if (Files.exists(dir))
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     Files.createDirectories(dir)
-    val pFields: Seq[org.apache.parquet.schema.Type] =
-      schema.fields.toIndexedSeq.map { f =>
-        f.dataType match {
-          case LongType => PT.optional(INT64).named(f.name)
-          case IntegerType => PT.optional(INT32).named(f.name)
-          case DoubleType => PT.optional(DOUBLE).named(f.name)
-          case BooleanType => PT.optional(BOOLEAN).named(f.name)
-          case StringType => PT.optional(BINARY)
-            .as(LogicalTypeAnnotation.stringType()).named(f.name)
-          case dt => throw new IllegalStateException(s"unreachable: $dt")
-        }
-      }
-    val msg = new org.apache.parquet.schema.MessageType(
-      "spark_schema", pFields.asJava)
-    val file = dir.resolve(
-      s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file.toString))
-      .withConf(spark.sessionState.newHadoopConf())
-      .withType(msg)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .withExtraMetaData(
-        java.util.Map.of(ParquetFooters.SparkSchemaKey, schema.json))
-      .build()
-    try {
-      val fac = new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
-      rows.foreach { r =>
-        val g = fac.newGroup()
-        schema.fields.zipWithIndex.foreach { case (f, i) =>
-          if (!r.isNullAt(i)) f.dataType match {
-            case LongType => g.add(f.name, r.getLong(i))
-            case IntegerType => g.add(f.name, r.getInt(i))
-            case DoubleType => g.add(f.name, r.getDouble(i))
-            case BooleanType => g.add(f.name, r.getBoolean(i))
-            case StringType => g.add(f.name, r.getUTF8String(i).toString)
-            case dt => throw new IllegalStateException(s"unreachable: $dt")
-          }
-        }
-        w.write(g)
-      }
-    } finally w.close()
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = format.prepareWrite(spark, job, Map.empty, schema)
+    val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, new TaskAttemptID("", 0, TaskType.MAP, 0, 0))
+    val w = factory.newInstance(dir.resolve(s"part-00000-" +
+        s"${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(task)}")
+      .toString, schema, task)
+    try local.data.foreach(w.write) finally w.close()
   }
 
-  /** Driver-side read of a PLAIN tiny sub — the watermark-read mirror of
-    * [[writeLocalParquet]]: when version `v`'s `sub` entries are all
-    * plain parquet files, each small, with fast-path-exact primitive
-    * schemas, return (schema, rows) without a Spark job; None falls back
-    * to [[readTableVersion]]. Semantics mirror the plain branch of
-    * readTableVersion exactly (group subs never carry delete vectors or
-    * evolution markers — both are single-table features, and bucketed
-    * entries bail here). */
-  def readTinySubRows(name: String, v: Long, sub: String)
-      : Option[(org.apache.spark.sql.types.StructType,
-                Seq[org.apache.spark.sql.Row])] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.spark.sql.types._
-    val entries = readManifest(name, v).filter(subOf(_).contains(sub))
-    if (entries.isEmpty) return None
-    val paths = entries.map(pathOf)
-    if (paths.exists(p => p.startsWith("bkt__") || p.contains("/bkt__")))
-      return None
-    val files = paths.flatMap(expandEntry(name, _))
-      .map(e => dataDir(name).resolve(e).normalize())
-      .filter(_.toString.endsWith(".parquet"))
-    if (files.isEmpty || files.exists(f =>
-        !Files.isRegularFile(f) || Files.size(f) > 262144))
-      return None
-    val conf = spark.sessionState.newHadoopConf()
-    def sparkType(t: org.apache.parquet.schema.Type): Option[DataType] = {
-      if (!t.isPrimitive) return None
-      val p = t.asPrimitiveType()
-      val logical = Option(p.getLogicalTypeAnnotation)
-      p.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT64 if logical.isEmpty => Some(LongType)
-        case PrimitiveTypeName.INT32 if logical.isEmpty ||
-            logical.exists {
-              case i: org.apache.parquet.schema.LogicalTypeAnnotation
-                  .IntLogicalTypeAnnotation =>
-                i.getBitWidth == 32 && i.isSigned
-              case _ => false
-            } => Some(IntegerType)
-        case PrimitiveTypeName.DOUBLE if logical.isEmpty => Some(DoubleType)
-        case PrimitiveTypeName.BOOLEAN if logical.isEmpty => Some(BooleanType)
-        case PrimitiveTypeName.BINARY if logical.exists(
-            _.isInstanceOf[org.apache.parquet.schema.LogicalTypeAnnotation
-              .StringLogicalTypeAnnotation]) => Some(StringType)
-        case _ => None
-      }
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    var schema: Option[StructType] = None
-    files.sortBy(_.toString).foreach { f =>
-      val hf = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f.toString), conf)
-      val msg = {
-        // the footer alone, as ParquetFooters reads it
-        val stream = hf.newStream()
-        try org.apache.parquet.hadoop.ParquetFileReader.readFooter(hf,
-          org.apache.parquet.HadoopReadOptions.builder(conf,
-              new org.apache.hadoop.fs.Path(f.toString))
-            .withMetadataFilter(org.apache.parquet.format.converter
-              .ParquetMetadataConverter.SKIP_ROW_GROUPS).build(), stream)
-          .getFileMetaData.getSchema
-        finally stream.close()
-      }
-      val fields = msg.getFields.asScala.toSeq
-      val dts = fields.map(sparkType)
-      if (dts.exists(_.isEmpty)) return None
-      val st = StructType(fields.zip(dts).map { case (t, dt) =>
-        StructField(t.getName, dt.get,
-          nullable = t.getRepetition !=
-            org.apache.parquet.schema.Type.Repetition.REQUIRED)
-      })
-      schema match {
-        // multi-file subs must agree exactly — else Spark would
-        // schema-merge; fall back rather than replicate that
-        case Some(s0) if s0.map(f => (f.name, f.dataType)) !=
-          st.map(f => (f.name, f.dataType)) => return None
-        case _ => schema = Some(st)
-      }
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(f.toString))
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val vals = fields.zipWithIndex.map { case (t, i) =>
-            if (g.getFieldRepetitionCount(i) == 0) null
-            else st.fields(i).dataType match {
-              case LongType => g.getLong(i, 0)
-              case IntegerType => g.getInteger(i, 0)
-              case DoubleType => g.getDouble(i, 0)
-              case BooleanType => g.getBoolean(i, 0)
-              case StringType => g.getString(i, 0)
-              case dt => throw new IllegalStateException(s"unreachable: $dt")
-            }
-          }
-          out += vals
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    schema.map { s0 =>
-      // parquet files read back nullable, exactly as Spark reads them
-      val s = StructType(s0.fields.map(_.copy(nullable = true)))
-      (s, out.toSeq.map(vals =>
-        new org.apache.spark.sql.catalyst.expressions
-          .GenericRowWithSchema(vals.toArray, s)
-        : org.apache.spark.sql.Row))
-    }
-  }
-
-  /** head() of a tiny plain sub — driver-side when the fast path serves
-    * it (the common watermark read: 1-row meta subs), else through the
-    * Spark reader. Empty subs throw head()'s standard error either way. */
+  /** head() of sub `sub` at version `v`. A plain sub's first row is read
+    * on the driver by Spark's own reader, its files in path order, and
+    * no further file is opened once a row is found (a watermark read:
+    * 1-row meta subs). A bucketed sub, or an empty one, goes through
+    * [[readTableVersion]]'s head(), so an empty sub throws head()'s
+    * standard error. */
   def tinySubHead(name: String, v: Long,
-      sub: String): org.apache.spark.sql.Row =
-    readTinySubRows(name, v, sub).flatMap(_._2.headOption)
-      .getOrElse(readTableVersion(name, v, sub).head())
+      sub: String): org.apache.spark.sql.Row = {
+    val df = readTableVersion(name, v, sub)
+    val first = df.queryExecution.analyzed match {
+      case _: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        val read = driverReader(df, df.columns.toSeq)
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(df.schema)
+        df.inputFiles.sorted.iterator.map(read).find(_.hasNext).map { rows =>
+          val row = toRow(rows.next()).asInstanceOf[org.apache.spark.sql.Row]
+          rows.foreach(_ => ()) // the reader closes the file once drained
+          row
+        }
+      case _ => None
+    }
+    first.getOrElse(df.head())
+  }
 
   private def schemaMarkerPath(name: String, v: Long): Path =
     metaDir(name).resolve(s"v$v.schema")
@@ -1720,22 +1587,18 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
                            dirs: Seq[String]): Long = {
     Files.createDirectories(metaDir(name))
     val n = df.fold(0L) { d =>
-      import org.apache.spark.sql.functions.{coalesce, count, count_if,
-        expr, lit, not}
       // CHECK validation piggybacks the staging write (X141y): one
       // violation-count aggregate per declared check rides the SAME
       // Observation pass as the row count — zero additional scans.
       // SQL CHECK semantics: a NULL predicate passes.
       val cks = checks(name).toSeq.sortBy(_._1)
-      // driver-known rows with no declared CHECKs: stage without a Spark
-      // job (the tiny-sub fast path; a table WITH checks keeps the
+      // driver-held rows with no declared CHECKs: stage without a Spark
+      // job ([[writeOnDriver]]; a table WITH checks keeps the
       // Observation pass — check semantics must not fork)
-      val fast = if (cks.isEmpty) localRows(d) else None
-      fast match {
-        case Some((schema, rows)) =>
-          writeLocalParquet(dataDir(name).resolve(s"v$v"), schema, rows)
-          rows.length.toLong
-        case None => stageObserved(name, v, d, cks)
+      val local = if (cks.isEmpty) localRows(d) else None
+      local.fold(stageObserved(name, v, d, cks)) { l =>
+        writeOnDriver(dataDir(name).resolve(s"v$v"), l)
+        l.data.length.toLong
       }
     }
     Files.write(manifestPath(name, v),
@@ -2778,10 +2641,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
           // stays readable
           val dir = s"v${v}__$sub"
           localRows(df) match {
-            // driver-known rows (the watermark metaRow, literal frames):
-            // write the parquet without a Spark job (fast path above)
-            case Some((schema, rows)) =>
-              writeLocalParquet(dataDir(name).resolve(dir), schema, rows)
+            // driver-held rows (the watermark metaRow, literal frames):
+            // written without a Spark job ([[writeOnDriver]])
+            case Some(l) => writeOnDriver(dataDir(name).resolve(dir), l)
             case None =>
               // rebalance: file sizing for the layout-free sub write
               // (caller-declared layouts win - see [[rebalanced]])
@@ -3368,16 +3230,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     }.toSeq.sortBy(_.getFileName.toString) finally listing.close()
     if (parts.isEmpty) return None
     val conf = spark.sessionState.newHadoopConf()
-    // the footer alone (row groups and their stats included): opening a
+    // the footer alone, row groups and their stats included: opening a
     // ParquetFileReader for it costs ~40x more
-    scala.util.Try(parts.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p.toUri)
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf)
-      val stream = in.newStream()
-      try p -> org.apache.parquet.hadoop.ParquetFileReader.readFooter(in,
-        org.apache.parquet.HadoopReadOptions.builder(conf, hp).build(), stream)
-      finally stream.close()
-    }).toOption
+    scala.util.Try(parts.map(p => p -> ParquetFooters.footer(conf,
+      new org.apache.hadoop.fs.Path(p.toUri), skipRowGroups = false))).toOption
   }
 
   /** One supported zone-stat column: its Spark type plus the exact

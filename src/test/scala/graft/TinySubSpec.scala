@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** r19 optimization round: driver-known (LocalRelation) staged frames
-  * write their parquet WITHOUT a Spark job, and tiny plain subs read
-  * back driver-side (the watermark pattern every view refresh pays per
-  * commit). These specs pin the load-bearing claim: the fast path and
-  * the Spark path see THE SAME table — identical schema and rows
-  * through spark.read — and everything outside the exactness envelope
-  * falls back. */
+/** Driver-held (LocalRelation) staged frames are written by Spark's own
+  * parquet writer called on the driver, without a Spark job, and a plain
+  * sub's watermark row is read back on the driver by Spark's own reader
+  * (the watermark pattern every view refresh pays per commit). These
+  * specs pin the load-bearing claim: those files and rows are the ones a
+  * Spark job writes and reads — identical schema, rows, codec and footer
+  * keys, for any type — and bucketed subs keep the Spark read. */
 class TinySubSpec extends SparkSpec {
 
   import spark.implicits._
@@ -38,8 +38,8 @@ class TinySubSpec extends SparkSpec {
     assert(fa.head().getLong(0) === 7L)
   }
 
-  test("TS2: all supported types round-trip the fast path exactly, " +
-      "nulls included, and readTinySubRows ≡ the Spark read") {
+  test("TS2: primitive types and nulls round-trip the driver write, " +
+      "and tinySubHead ≡ the Spark read") {
     val dir = tmp()
     val ss = new SnapshotStore(spark, dir)
     val schema = StructType(Seq(
@@ -58,12 +58,13 @@ class TinySubSpec extends SparkSpec {
     assert(viaSpark.schema.map(f => (f.name, f.dataType)) ===
       schema.map(f => (f.name, f.dataType)))
     assert(viaSpark.collect().toSet === rows.toSet)
-    val Some((s2, r2)) = ss.readTinySubRows("t", 1L, "tiny")
-    assert(s2.map(f => (f.name, f.dataType)) ===
-      viaSpark.schema.map(f => (f.name, f.dataType)))
-    assert(r2.map(_.toSeq).toSet === viaSpark.collect().map(_.toSeq).toSet)
+    val (head, jobs) = JobCounter(spark.sparkContext)(
+      ss.tinySubHead("t", 1L, "tiny"))
+    assert(jobs.isEmpty, s"tinySubHead started jobs $jobs")
+    assert(head === viaSpark.head())
+    assert(head.schema === viaSpark.schema)
     // schema-qualified access works (the getAs[.](name) watermark read)
-    assert(ss.tinySubHead("t", 1L, "tiny").getAs[Long]("l") === 1L)
+    assert(head.getAs[Long]("l") === 1L)
   }
 
   test("TS3: an EMPTY LocalRelation sub still writes a schema-bearing " +
@@ -78,26 +79,56 @@ class TinySubSpec extends SparkSpec {
     assert(back.schema.map(f => (f.name, f.dataType)) ===
       Seq(("k", LongType), ("s", StringType)))
     assert(back.count() === 0L)
-    assert(ss.readTinySubRows("t", 1L, "e").exists(_._2.isEmpty))
+    // an empty sub: head()'s standard error, as from the Spark read
+    intercept[NoSuchElementException](ss.tinySubHead("t", 1L, "e"))
   }
 
-  test("TS4: unsupported types and bucketed subs fall back on both " +
-      "sides") {
+  test("TS4: every type stages and reads back on the driver with 0 jobs; " +
+      "bucketed subs fall back") {
     val dir = tmp()
     val ss = new SnapshotStore(spark, dir)
-    val dec = Seq((1L, BigDecimal("1.50"))).toDF("k", "p")
-      .select(col("k"), col("p").cast("decimal(18,4)").as("p"))
-    ss.commitTables("t", overwrites = Map("data" -> dec,
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(
+      StructField("k", LongType),
+      StructField("p", DecimalType(18, 4)), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("a", ArrayType(LongType)),
+      StructField("st", StructType(Seq(StructField("x", LongType),
+        StructField("y", StringType)))),
+      StructField("bin", BinaryType)))
+    val rows = Seq(
+      Row(1L, new java.math.BigDecimal("1.5000"),
+        java.sql.Date.valueOf("2024-02-29"),
+        java.sql.Timestamp.valueOf("2024-02-29 12:34:56.123456"),
+        Seq(1L, null, 3L), Row(7L, "s"), Array[Byte](1, 2, 3)),
+      Row(2L, null, null, null, null, null, null))
+    val df = spark.createDataFrame(rows.asJava, schema)
+    val (_, stageJobs) = JobCounter(spark.sparkContext)(
+      ss.commitTables("t", overwrites = Map("lit" -> df)))
+    assert(stageJobs.isEmpty, s"staging started jobs $stageJobs")
+    val sparkDir = java.nio.file.Paths.get(tmp(), "spark_written").toString
+    df.coalesce(1).write.parquet(sparkDir)
+    val written = spark.read.parquet(sparkDir)
+    val back = ss.readTable("t", "lit")
+    assert(back.schema === written.schema)
+    assert(back.orderBy("k").collect().toSeq ===
+      written.orderBy("k").collect().toSeq)
+    val entry = ss.readManifest("t", 1L).find(_.startsWith("lit:")).get
+    def footerSchema(d: String) = graft.sources.ParquetFooters.inferredSchema(
+      spark, Seq(java.nio.file.Paths.get(d)))
+    assert(footerSchema(s"$dir/t/data/${entry.stripPrefix("lit:")}").isDefined)
+    assert(footerSchema(s"$dir/t/data/${entry.stripPrefix("lit:")}") ===
+      footerSchema(sparkDir))
+    val (head, headJobs) = JobCounter(spark.sparkContext)(
+      ss.tinySubHead("t", 1L, "lit"))
+    assert(headJobs.isEmpty, s"tinySubHead started jobs $headJobs")
+    assert(head === back.head())
+    // bucketed sub: tinySubHead takes the catalog read
+    ss.commitTables("b", overwrites = Map(
       "bkt" -> Seq((1L, 2L)).toDF("k", "v")),
       buckets = Map("bkt" -> graft.sources.SubBucket("k", 4)))
-    // decimal sub (plain) read back fine through Spark; tiny read bails
-    assert(ss.readTinySubRows("t", 1L, "data").isEmpty)
-    assert(ss.readTable("t", "data").head().getAs[java.math.BigDecimal]("p")
-      .compareTo(new java.math.BigDecimal("1.5000")) === 0)
-    // bucketed sub: tiny read bails, catalog read serves
-    assert(ss.readTinySubRows("t", 1L, "bkt").isEmpty)
-    assert(ss.readTable("t", "bkt").count() === 1L)
-    ss.dropCatalogTables("t")
+    assert(ss.tinySubHead("b", 1L, "bkt") === Row(1L, 2L))
+    assert(ss.readTable("b", "bkt").count() === 1L)
+    ss.dropCatalogTables("b")
   }
 
   test("TS5: single-table LocalRelation commits take the fast path " +
@@ -166,5 +197,40 @@ class TinySubSpec extends SparkSpec {
     assert(jobs.isEmpty, s"read started jobs $jobs")
     assert(read.schema === spark.read.parquet(fast.toString).schema)
     assert(read.collect().toSet === Set(Row(1L, "x"), Row(2L, null)))
+  }
+
+  test("TS8: a driver-written sub follows the session's parquet codec " +
+      "and carries the footer keys of a Spark write") {
+    withSQLConf("spark.sql.parquet.compression.codec" -> "zstd") {
+      val dir = tmp()
+      val ss = new SnapshotStore(spark, dir)
+      val df = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
+      ss.commitTables("t", overwrites = Map("lit" -> df))
+      val sparkDir = java.nio.file.Paths.get(tmp(), "spark_written")
+      df.coalesce(1).write.parquet(sparkDir.toString)
+      import scala.jdk.CollectionConverters._
+      def onlyFile(d: java.nio.file.Path) = {
+        val s = java.nio.file.Files.list(d)
+        val Seq(f) = try s.iterator().asScala
+          .filter(_.toString.endsWith(".parquet")).toSeq finally s.close()
+        f
+      }
+      def footer(f: java.nio.file.Path) = graft.sources.ParquetFooters
+        .footer(spark.sessionState.newHadoopConf(),
+          new org.apache.hadoop.fs.Path(f.toUri), skipRowGroups = false)
+      def codecs(f: java.nio.file.Path) = footer(f).getBlocks.asScala
+        .flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      def keys(f: java.nio.file.Path) =
+        footer(f).getFileMetaData.getKeyValueMetaData.keySet.asScala.toSet
+      val entry = ss.readManifest("t", 1L).find(_.startsWith("lit:")).get
+      val local = onlyFile(java.nio.file.Paths.get(dir, "t", "data",
+        entry.stripPrefix("lit:")))
+      val written = onlyFile(sparkDir)
+      assert(codecs(local) === Set("ZSTD"))
+      assert(codecs(local) === codecs(written))
+      assert(keys(local) === keys(written))
+      assert(keys(local).contains("org.apache.spark.version"))
+      assert(local.getFileName.toString.endsWith(".zstd.parquet"))
+    }
   }
 }
