@@ -572,7 +572,7 @@ object CdcQueries {
           require(st.inputFiles.forall(!_.contains("/data/")),
             "metadata-only stats must never open a data file")
           st.select(lit(label).as("version"), col("n_rows"),
-            col("lo").as("min_k"), col("hi").as("max_k"))
+            col("lo__k").as("min_k"), col("hi__k").as("max_k"))
         }
         stats("v1_keyed", 1L).unionByName(stats("v2_cow_merge", 2L))
           .orderBy("version")
@@ -597,11 +597,11 @@ object CdcQueries {
           col("o_custkey").as("c"), priceDec("o_totalprice").as("p"))
         ss.commitOverwriteZordered("t", Seq("k", "c"), src,
           numFiles = 16, bits = 4)
-        val (pick, skip) = ss.pruneFilesAny("t", 1L, "c", 10L, 25L)
+        val (pick, skip) = ss.pruneFiles("t", 1L, "c", 10L, 25L)
         require(skip.nonEmpty,
           s"the second z-column must prune (picked ${pick.size} of " +
             s"${pick.size + skip.size})")
-        ss.readVersionWhereAny("t", 1L, "c", 10L, 25L)
+        ss.readVersionWhere("t", 1L, "c", 10L, 25L)
           .agg(count(lit(1)).as("n"),
             countDistinct(col("k")).as("n_orders"),
             sum(col("p")).cast("double").as("total"))
@@ -967,7 +967,7 @@ object CdcQueries {
             s"z-files reused by reference, got $reused")
         require(ss.deleteKeysAt("t", 3L).isEmpty,
           "the merge must absorb the vector on the z-ordered layout")
-        require(ss.pruneFilesAny("t", 3L, "cust", 10L, 25L)._2.nonEmpty,
+        require(ss.pruneFiles("t", 3L, "cust", 10L, 25L)._2.nonEmpty,
           "the merged version must STAY z-ordered — the second " +
             "z-column must still prune")
         val ch = ss.changesBetween("t", 2L, 3L).localCheckpoint()
@@ -1040,8 +1040,8 @@ object CdcQueries {
           == nSrc + 3,
           "the packed debt must gain zone rows — metadata-only stats " +
             "cover the whole table again")
-        require(ss.pruneFilesAny("t", 5L, "k", 0L, 10L)._2.nonEmpty &&
-          ss.pruneFilesAny("t", 5L, "cust", -2L, -1L)._2.nonEmpty,
+        require(ss.pruneFiles("t", 5L, "k", 0L, 10L)._2.nonEmpty &&
+          ss.pruneFiles("t", 5L, "cust", -2L, -1L)._2.nonEmpty,
           "both z-columns must still prune after the pack")
         shapedBucketsLabeled("v4_debt",
             ss.readVersion("t", 4L).select("k", "cust", "p"))

@@ -40,6 +40,79 @@ final case class VacuumPlan(orphanDirs: Seq[String],
     staleManifests.isEmpty && staleDelDirs.isEmpty
 }
 
+/** The layout a zone sidecar records, read from its stat columns: one
+  * `lo__<c>` column is range clustering on c, two or more are z-order
+  * on those columns in sidecar order. The only code that tells the
+  * two layouts apart — range lookups, the re-clustering of a
+  * rewritten slice, touch sets and the refusal of an unprunable key
+  * all go through it. */
+private[sources] final case class Clustering(cols: Seq[String]) {
+  private def isZ: Boolean = cols.size > 1
+
+  /** The clustering column of a range layout; None for z-order. */
+  def rangeKey: Option[String] = if (isZ) None else cols.headOption
+
+  /** The sidecar's (lo, hi) columns for data column `c`, when it
+    * carries a range for it (matched case-insensitively, as Spark
+    * resolves column names). */
+  def range(c: String): Option[(String, String)] =
+    cols.find(_.equalsIgnoreCase(c)).map(k => (s"lo__$k", s"hi__$k"))
+
+  /** Refuses, naming the layout and then `why`, unless the sidecar
+    * carries a range for `key`: pruning by another column's ranges
+    * would skip files that hold `key`'s values. */
+  def requireRange(name: String, v: Long, key: String, why: String): Unit =
+    require(range(key).isDefined, s"'$name' v$v " +
+      (if (isZ) s"is z-ordered on (${cols.mkString(", ")})"
+       else s"clusters on '${cols.head}'") + s" but $why")
+
+  /** The files of zone rows `ranges` whose range on `key` holds a
+    * value of `keys`' column `key` — one semi join. */
+  def touched(ranges: DataFrame, keys: DataFrame, key: String): Set[String] = {
+    import org.apache.spark.sql.functions.col
+    val (lo, hi) = range(key).get
+    ranges.as("z").join(keys.as("t"),
+        col(s"t.$key") >= col(s"z.$lo") && col(s"t.$key") <= col(s"z.$hi"),
+        "left_semi")
+      .select("f").collect().map(_.getString(0)).toSet
+  }
+
+  /** `df` re-clustered into `n` range partitions in this layout and
+    * handed to `write`: range layout → `repartitionByRange` on the
+    * column; z-order → the z-value sort of
+    * [[SnapshotStore.commitOverwriteZordered]] (bit depth only shapes
+    * clustering quality, never pruning
+    * soundness — the sidecar re-derives exact per-file ranges from the
+    * written files). The z-value's quantile pass and the write both
+    * consume `df`, so the z branch pins it once (O(rewritten slice))
+    * and releases it after `write`. */
+  def recluster[T](df: DataFrame, n: Int)(write: DataFrame => T): T =
+    if (!isZ) {
+      import org.apache.spark.sql.functions.col
+      write(df.repartitionByRange(n, col(cols.head)))
+    } else {
+      val pinned = df.localCheckpoint()
+      try write(Clustering.zSorted(pinned, cols, n, 6))
+      finally graft.ops.RelOps.releaseCheckpoint(pinned)
+    }
+}
+
+private[sources] object Clustering {
+  def of(zones: DataFrame): Clustering = Clustering(zones.columns
+    .filter(_.startsWith("lo__")).map(_.stripPrefix("lo__")).toSeq)
+
+  /** `df` range-partitioned into `n` files on its z-value over `zCols`
+    * ([[graft.ops.RelOps.zValueColumn]]) and sorted on it within each. */
+  def zSorted(df: DataFrame, zCols: Seq[String], n: Int,
+      bits: Int): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.withColumn("__z", graft.ops.RelOps.zValueColumn(df, zCols, bits))
+      .repartitionByRange(n, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
+  }
+}
+
 /** X141: versioned snapshot tables — the ACID-ish commit layer the
   * in-place [[TableStore]] (and the CDC family that rewrites through it,
   * x105–x109) deliberately lacks. The public Iceberg/Delta idea in its
@@ -51,10 +124,19 @@ final case class VacuumPlan(orphanDirs: Seq[String],
   *                                  relative path/line — keyed commits
   *                                  list files so CoW merges can reuse
   *                                  them individually)
-  *   `<root>/<table>/zones/v<N>/`   per-file key ranges of a KEYED
-  *                                  version ([[commitOverwriteKeyed]]) —
-  *                                  what [[commitMergeCow]] prunes with
+  *   `<root>/<table>/zones/v<N>/`   per-file zone stats of a clustered
+  *                                  version: `f`, `lo__<c>`/`hi__<c>`
+  *                                  for each clustered column c, the
+  *                                  row count `n` and an optional
+  *                                  `bloom` — what range reads and
+  *                                  copy-on-write rewrites prune with
   *   `<root>/<table>/meta/_current` pointer: the committed version number
+  *
+  * The sidecar names the columns it describes, so it also records the
+  * layout: one stat column is range clustering on that column
+  * ([[commitOverwriteKeyed]]), two or more are z-order on those columns
+  * in sidecar order ([[commitOverwriteZordered]]). Rewrites re-cluster
+  * in the layout the sidecar records.
   *
   * A commit is: CLAIM the version (atomic CREATE_NEW of a claim marker —
   * the optimistic-concurrency CAS: of two racing committers that both
@@ -345,7 +427,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   // reference copied between manifests never re-bases; a clone of a
   // clone copies third-table references verbatim). Only the tiny
   // sidecars copy (zone stats with rewritten file ids, the accumulated
-  // delete vector, schema/zonekey markers, the bloom spec): O(metadata),
+  // delete vector, the schema marker, the bloom spec): O(metadata),
   // no data file read or written — require-pinned in the driver query.
   // The clone then evolves under EVERY existing operator — appends, CoW
   // merges, delete vectors, optimize, retention — reused cross-
@@ -820,7 +902,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       zs.coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(zonesDir(name, v).toString)
     }
-    zoneKeyOf(srcTable, sv).foreach(stampZoneKey(name, v, _))
     swapTo(name, v)
     v
   }
@@ -1446,7 +1527,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     if (Files.exists(z))
       org.apache.commons.io.FileUtils
         .copyDirectory(z.toFile, zonesDir(name, v).toFile)
-    zoneKeyOf(name, cur).foreach(stampZoneKey(name, v, _))
     swapTo(name, v)
     v
   }
@@ -1457,20 +1537,18 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * carries by reference; the new version has NO vector. Logical
     * content is IDENTICAL by construction (readers already served the
     * deletes), so the version is stamped content-preserving and the
-    * changelog skips it — the [[compactKeyed]] discipline. Works on
-    * BOTH prunable layouts (r16): keyed requires the vector key to BE
-    * the clustering key ([[zoneKeyOf]]); z-ordered requires it to be a
-    * z-COLUMN (pruning the rewrite set with a mismatched column's
-    * ranges would reuse files that still hold deleted rows, silently
-    * resurrecting them at fold) and re-clusters the rewritten slice on
-    * the same z-value. A statless table or a vector on an unclustered
+    * changelog skips it — the [[compactKeyed]] discipline. The vector
+    * key must be a clustered column of the sidecar (pruning the rewrite
+    * set with another column's ranges would reuse files that still hold
+    * deleted rows, silently resurrecting them at fold), and the
+    * rewritten slice re-clusters in the version's own layout
+    * ([[Clustering]]). A statless table or a vector on an unclustered
     * column folds through the full-rewrite path instead
     * (`commitOverwrite(readCurrent)` /
     * `commitOverwriteKeyed(key, readCurrent)` — readers already serve
     * the deletes, so the rewrite IS the fold). Returns (new version,
     * files reused untouched). */
   def compactDeleteKeys(name: String): (Long, Int) = {
-    import org.apache.spark.sql.functions._
     val cur = currentVersion(name)
     val dels = deleteKeysAt(name, cur).getOrElse(throw
       new IllegalArgumentException(
@@ -1480,38 +1558,15 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       new IllegalArgumentException(
         s"'$name' v$cur has no zone stats — fold a statless table with " +
           "commitOverwrite(readCurrent) instead"))
-    // both prunable dialects fold (r16, the commitMergeCow pattern):
-    // keyed prunes on [lo, hi] with the clustering-key match proven by
-    // zoneKeyOf; z-ordered prunes on the VECTOR key's own
-    // [lo__key, hi__key] when it is a z-column, and the rewritten
-    // slice re-clusters on the same z-value
-    val singleKey = zones.columns.contains("lo")
-    val zCols: Seq[String] =
-      if (singleKey) Nil
-      else zones.columns.filter(_.startsWith("lo__"))
-        .map(_.stripPrefix("lo__")).toSeq
-    if (singleKey)
-      require(zoneKeyOf(name, cur).contains(key),
-        s"'$name' v$cur clusters on " +
-          s"'${zoneKeyOf(name, cur).getOrElse("<unknown>")}' but the " +
-          s"vector deletes by '$key' — zone pruning would be unsound; " +
-          s"fold with the full rewrite commitOverwriteKeyed(clusterKey, " +
-          "readCurrent) instead")
-    else require(zCols.contains(key),
-      s"'$name' v$cur is z-ordered on (${zCols.mkString(", ")}) but the " +
-        s"vector deletes by '$key' — pruning by a non-clustered " +
-        "column's ranges is unsound; fold with " +
-        "commitOverwriteZordered(zCols, readCurrent) instead")
-    val (loC, hiC) =
-      if (singleKey) ("lo", "hi") else (s"lo__$key", s"hi__$key")
+    val layout = Clustering.of(zones)
+    layout.requireRange(name, cur, key, s"the vector deletes by '$key' " +
+      "— pruning by a non-clustered column's ranges is unsound; fold " +
+      "with the full rewrite (commitOverwriteKeyed or " +
+      "commitOverwriteZordered over readCurrent) instead")
     val entries = readManifest(name, cur)
     guardPlannedFiles(name, "compactDeleteKeys", entries.size)
     val ranges = zoneRanges(zones)
-    val touched = ranges.as("z")
-      .join(dels.as("t"),
-        col(s"t.$key") >= col(s"z.$loC") && col(s"t.$key") <= col(s"z.$hiC"),
-        "left_semi")
-      .select("f").collect().map(_.getString(0)).toSet
+    val touched = layout.touched(ranges, dels, key)
     val statless = entries.toSet -- zoneFiles(ranges).toSet
     val rewrite = (touched ++ statless).filter(entries.contains)
     val reused = entries.filterNot(rewrite)
@@ -1522,17 +1577,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // their siblings just because of which column the vector keyed on
     val folded = antiByKey(
       readEntries(name, rewrite.toSeq, readVersion(name, cur)), dels)
-    val clustered =
-      if (singleKey) folded.repartitionByRange(
-        math.max(1, rewrite.size), col(key))
-      else folded
-        .withColumn("__z", graft.ops.RelOps.zValueColumn(folded, zCols, 6))
-        .repartitionByRange(math.max(1, rewrite.size), col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    stage(name, v, Some(clustered), Seq(s"v$v"))
-    if (singleKey) restageWithCarriedZones(name, v, key, zones, reused)
-    else restageWithCarriedZonesMulti(name, v, zCols, zones, reused)
+    layout.recluster(folded, math.max(1, rewrite.size))(c =>
+      stage(name, v, Some(c), Seq(s"v$v")))
+    restageWithCarriedZones(name, v, layout, zones, reused)
     swapTo(name, v)
     // content-preserving (post-swap stamp: a crash loses only the
     // changelog optimization, never correctness — see compactKeyed)
@@ -1542,8 +1589,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   }
 
   /** The zone-carry + re-stage protocol shared by the file-granular
-    * rewrites ([[compactDeleteKeys]], [[optimizeSmallFiles]]): fresh
-    * zone rows for the just-written `v$v` dir, the reused files' rows
+    * rewrites ([[compactDeleteKeys]], [[optimizeSmallFiles]] and the
+    * other zoned rewrites): fresh zone rows on `layout`'s columns for
+    * the just-written `v$v` dir, the reused files' rows
     * carried untouched (blooms ride along; allowMissingColumns covers a
     * bloom sidecar declared mid-history — the missing side null-fills,
     * which pruning treats conservatively), then the FILE-granular
@@ -1551,26 +1599,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * Guarded: an all-empty rewrite (no reused files, zero rows packed)
     * keeps the schema-bearing empty `v$v` dir entry — an EMPTY manifest
     * would publish a version [[readVersion]] permanently refuses. */
-  private def restageWithCarriedZones(name: String, v: Long, key: String,
-      zones: DataFrame, reused: Seq[String]): Unit = {
-    restageCarryTail(name, v, Seq(key), single = true, zones, reused)
-    stampZoneKey(name, v, key)
-  }
-
-  /** [[restageWithCarriedZones]] for the z-ordered dialect (r16): fresh
-    * MULTI-COLUMN zone rows for the rewritten dir (no zonekey stamp —
-    * the z dialect has none), the same carry + file-granular restage. */
-  private def restageWithCarriedZonesMulti(name: String, v: Long,
-      zCols: Seq[String], zones: DataFrame, reused: Seq[String]): Unit =
-    restageCarryTail(name, v, zCols, single = false, zones, reused)
-
-  private def restageCarryTail(name: String, v: Long, cols: Seq[String],
-      single: Boolean, zones: DataFrame, reused: Seq[String]): Unit = {
+  private def restageWithCarriedZones(name: String, v: Long,
+      layout: Clustering, zones: DataFrame, reused: Seq[String]): Unit = {
     import org.apache.spark.sql.functions._
     // r18 optimization: stats come from the staged files' footers when
     // exact (no readback scan), and the sidecar writes ONCE — fresh ∪
     // carried — instead of write + readback + checkpoint + rewrite
-    val nz = stagedZoneStats(name, s"v$v", cols, single)
+    val nz = stagedZoneStats(name, s"v$v", layout.cols)
     writeSidecar(name, v, nz,
       Some(zones.filter(col("f").isin(reused: _*))))
     val entriesOut =
@@ -1633,14 +1668,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
           // releaseDeadClaims hazard, same cleanup set)
           org.apache.commons.io.FileUtils.deleteDirectory(
             dataDir(name).resolve(s"v$v").toFile)
-          Files.deleteIfExists(schemaMarkerPath(name, v))
-          Files.deleteIfExists(zoneKeyPath(name, v))
-          val zd = zonesDir(name, v)
-          if (Files.exists(zd))
-            org.apache.commons.io.FileUtils.deleteDirectory(zd.toFile)
-          val dl = delsDir(name, v)
-          if (Files.exists(dl))
-            org.apache.commons.io.FileUtils.deleteDirectory(dl.toFile)
+          deleteVersionSidecars(name, v)
           releaseOwnClaim(name, v)
           throw new IllegalArgumentException(
             s"commit to '$name' violates CHECK '$cn' ($p): $bad row(s) " +
@@ -1722,19 +1750,20 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       // dead commitDeleteKeys leaves one; the fresh commit's
       // requireNoDeletes checks only the CURRENT version, and once the
       // ghost's version goes live nothing ever sweeps it).
-      dirVersion(c).foreach { v =>
-        Files.deleteIfExists(schemaMarkerPath(name, v))
-        Files.deleteIfExists(zoneKeyPath(name, v))
-        val z = zonesDir(name, v)
-        if (Files.exists(z))
-          org.apache.commons.io.FileUtils.deleteDirectory(z.toFile)
-        val dl = delsDir(name, v)
-        if (Files.exists(dl))
-          org.apache.commons.io.FileUtils.deleteDirectory(dl.toFile)
-      }
+      dirVersion(c).foreach(deleteVersionSidecars(name, _))
       Files.deleteIfExists(claimsDir(name).resolve(c))
     }
     dead
+  }
+
+  /** Remove version `v`'s own per-version sidecars — its schema marker,
+    * zone stats and delete vector — so that the next claimant of a
+    * released version number inherits none of them. Callers delete the
+    * version's data, manifest and claim themselves. */
+  private def deleteVersionSidecars(name: String, v: Long): Unit = {
+    Files.deleteIfExists(schemaMarkerPath(name, v))
+    Seq(zonesDir(name, v), delsDir(name, v)).filter(Files.exists(_))
+      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
   }
 
   /** The swap half: make `v` the committed version. Atomic rename — a
@@ -1916,22 +1945,20 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       readManifest(name, cur) :+ s"v$v")
     // a keyed table's zone stats survive the append (the new dir simply
     // has no rows in them, so CoW merges rewrite it conservatively —
-    // the statless branch in commitMergeCow); the clustering-key marker
-    // travels with them
+    // the statless branch in commitMergeCow)
     val z = zonesDir(name, cur)
     if (Files.exists(z))
       org.apache.commons.io.FileUtils
         .copyDirectory(z.toFile, zonesDir(name, v).toFile)
-    zoneKeyOf(name, cur).foreach(stampZoneKey(name, v, _))
     v
   }
 
   /** Append BORN PRUNABLE (r17, X141ac): [[commitAppend]] for tables
     * in a prunable layout (keyed or z-ordered) — the batch writes
-    * range-clustered in the version's OWN dialect AND gains its
+    * clustered in the version's OWN layout AND gains its
     * per-file zone rows in the SAME commit (Delta's stats-on-every-add
     * behavior). The appended files prune immediately
-    * ([[readVersionWhere]] / [[readVersionWhereAny]]), CoW merges
+    * ([[readVersionWhere]]), CoW merges
     * treat them file-granularly instead of conservatively-always-
     * rewritten, and [[statsFromZones]] keeps serving metadata-only
     * aggregates — streaming ingest stops accumulating always-read
@@ -1964,11 +1991,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         s"'$name' v$cur has no zone stats — commitAppend is the " +
           "unzoned append; commit through the keyed or z-ordered " +
           "layout first to make appends prunable"))
-    val zKey = zoneKeyOf(name, cur)
-    val zCols: Seq[String] =
-      if (zKey.isDefined) Nil
-      else zones.columns.filter(_.startsWith("lo__"))
-        .map(_.stripPrefix("lo__")).toSeq
+    val layout = Clustering.of(zones)
     val prior = readManifest(name, cur)
     // r18 (ADVICE): this path restages the full prior manifest + zone
     // sidecar driver-side like every other O(files) commit — bound it
@@ -1980,24 +2003,17 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val dels = deleteKeysAt(name, cur)
     dels.foreach { d =>
       val key = d.columns(0)
-      require(zKey.contains(key) || zones.columns.contains(s"lo__$key"),
-        s"'$name' v$cur carries an active delete vector on '$key' this " +
-          "layout cannot prune — an appended row re-using a deleted " +
-          "key would be silently suppressed; fold it first with " +
-          "compactDeleteKeys")
+      layout.requireRange(name, cur, key, s"its active delete vector on " +
+        s"'$key' cannot be pruned — an appended row re-using a deleted " +
+        "key would be silently suppressed; fold it first with " +
+        "compactDeleteKeys")
     }
     val (foldRewrite, carried) = dels match {
       case None => (Nil, prior)
       case Some(d) =>
-        val key = d.columns(0)
         val expanded = prior.flatMap(expandEntry(name, _))
-        val (loC, hiC) =
-          if (zKey.isDefined) ("lo", "hi") else (s"lo__$key", s"hi__$key")
         val ranges = zoneRanges(zones)
-        val hit = ranges.as("z").join(d.as("t"),
-            col(s"t.$key") >= col(s"z.$loC") &&
-              col(s"t.$key") <= col(s"z.$hiC"), "left_semi")
-          .select("f").collect().map(_.getString(0)).toSet
+        val hit = layout.touched(ranges, d, d.columns(0))
         val known = zoneFiles(ranges).toSet
         val rw = expanded.filter(f => hit(f) || !known(f))
         (rw, expanded.filterNot(rw.toSet))
@@ -2012,26 +2028,14 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         folded.unionByName(
           df.select(folded.columns.map(col).toIndexedSeq: _*))
     }
-    val nOut = numFiles + foldRewrite.size
-    val clustered = zKey match {
-      case Some(k) => batch.repartitionByRange(nOut, col(k))
-      case None => batch
-        .withColumn("__z", graft.ops.RelOps.zValueColumn(batch, zCols, 6))
-        .repartitionByRange(nOut, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    }
-    stage(name, v, Some(clustered), Seq(s"v$v"))
+    layout.recluster(batch, numFiles + foldRewrite.size)(c =>
+      stage(name, v, Some(c), Seq(s"v$v")))
     // every non-rewritten prior entry carries; the shared carry-tail
     // unions the new files' fresh zone rows with the carried sidecar
     // and restages the manifest file-granular for the new dir. With no
     // vector, `carried` IS the prior manifest verbatim — zero plan
     // change for the existing append path.
-    zKey match {
-      case Some(k) => restageWithCarriedZones(name, v, k, zones, carried)
-      case None =>
-        restageWithCarriedZonesMulti(name, v, zCols, zones, carried)
-    }
+    restageWithCarriedZones(name, v, layout, zones, carried)
     swapTo(name, v)
     v
   }
@@ -2158,15 +2162,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     listNames(dd).filter(dn => dirVersion(dn).contains(v)).foreach(dn =>
       org.apache.commons.io.FileUtils
         .deleteDirectory(dd.resolve(dn).toFile))
-    val z = zonesDir(name, v)
-    if (Files.exists(z))
-      org.apache.commons.io.FileUtils.deleteDirectory(z.toFile)
-    val dl = delsDir(name, v)
-    if (Files.exists(dl))
-      org.apache.commons.io.FileUtils.deleteDirectory(dl.toFile)
+    deleteVersionSidecars(name, v)
     Files.deleteIfExists(manifestPath(name, v))
-    Files.deleteIfExists(schemaMarkerPath(name, v))
-    Files.deleteIfExists(zoneKeyPath(name, v))
     Files.deleteIfExists(cf): Unit
   }
 
@@ -2241,8 +2238,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         abort(s"rollback target v$v of '$name' lost its zone stats to " +
           "a concurrent retention run — pick a live version and retry")
       }
-    // the clustering-key marker travels with the zone stats it describes
-    zoneKeyOf(name, v).foreach(stampZoneKey(name, nv, _))
     // a delete-vector sidecar travels with its version the same way: a
     // rollback to a vector-bearing version restores its deletes, and a
     // rollback PAST a delete commit resurrects the rows (the changelog's
@@ -2462,11 +2457,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
                 // keys contribute nothing), resurrected keys (a rollback
                 // past a delete) from the current. The payload read is
                 // ZONE-PRUNED to the key delta's [min, max] when the
-                // vector key IS the clustering key (zoneKeyOf proves the
-                // match — pruning on a mismatched column would skip
-                // files holding matching rows), so a scattered-but-
-                // local delete's feed step reads only its files, never
-                // the whole version.
+                // sidecar carries a range for the vector key (another
+                // column's ranges would skip files holding matching
+                // rows), so a scattered-but-local delete's feed step
+                // reads only its files, never the whole version.
                 val keyCol = dCurr.orElse(dPrev).get.columns(0)
                 def keysOf(d: Option[DataFrame]): DataFrame =
                   d.getOrElse(dCurr.orElse(dPrev).get.filter(lit(false)))
@@ -2474,17 +2468,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
                 def payload(files: Set[String], dels: Option[DataFrame],
                     zv: Long, keys: DataFrame): DataFrame = {
                   import org.apache.spark.sql.functions.{col, max, min}
-                  val b = keys.agg(min(col(keyCol)).as("lo"),
-                    max(col(keyCol)).as("hi")).head()
-                  val base =
-                    if (b.isNullAt(0)) // empty delta: read nothing
-                      readEntries(name, Nil, schemaOf, pinnedSchema)
-                    else if (zoneKeyOf(name, zv).contains(keyCol)) {
-                      val (pick, _) =
-                        pruneFiles(name, zv, keyCol, b.get(0), b.get(1))
-                      readEntries(name, pick, schemaOf, pinnedSchema)
-                    } else readEntries(name, files.toSeq.sorted, schemaOf,
-                      pinnedSchema)
+                  val b = keys.agg(min(col(keyCol)), max(col(keyCol))).head()
+                  val pick =
+                    if (b.isNullAt(0)) Nil // empty delta: read nothing
+                    else rangeFilter(name, zv, keyCol, b.get(0), b.get(1))
+                      .fold(files.toSeq)(files.toSeq.filter)
+                  val base = readEntries(name, pick.sorted, schemaOf,
+                    pinnedSchema)
                   // the USING semi join also moves its key to the front;
                   // re-select the read order so every step's payload
                   // unions (and the whole-range union) stay aligned
@@ -3033,40 +3023,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       Some((l(0), l(1).trim.toInt, l(2).trim.toInt))
     }
 
-  /** Per-file (f, lo, hi) key ranges of the files just written under
-    * `data/<dir>` — ONE readback scan at commit time (the zone-map
-    * refresh cost TableStore pays too), stored as a tiny spark-written
-    * parquet so lo/hi keep the key's real type. Only files that HOLD
-    * rows appear (empty range-buckets never enter the manifest). When a
-    * bloom sidecar is declared, the SAME readback pass also folds each
-    * file's `xxhash64(bloomCol)` values into a per-file bitset (one
-    * extra aggregate — no second scan), stored as a `bloom` column on
-    * the zone rows so every zones consumer (CoW union, retention,
-    * vacuum) carries it untouched. */
-  private def zoneKeyPath(name: String, v: Long): Path =
-    metaDir(name).resolve(s"v$v.zonekey")
-
-  /** The CLUSTERING key of version `v`'s single-key zone stats (the
-    * column its per-file [lo, hi] ranges describe), None for z-ordered
-    * or un-zoned versions. Stamped by every single-key zone write —
-    * what lets [[compactDeleteKeys]] and the changelog's delete-step
-    * pruning prove the vector key matches the ranges before pruning
-    * with them (pruning on a MISMATCHED column would silently skip
-    * files that hold matching rows). */
-  def zoneKeyOf(name: String, v: Long): Option[String] = {
-    val p = zoneKeyPath(name, v)
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p),
-      StandardCharsets.UTF_8).trim)
-  }
-
-  private def stampZoneKey(name: String, v: Long, key: String): Unit = {
-    val tmp = metaDir(name).resolve(s"v$v.zonekey.tmp")
-    Files.write(tmp, s"$key\n".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, zoneKeyPath(name, v), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** The zone rows computed for a just-staged data dir, plus the dir's
     * relative file list (what the file-granular manifest restage
     * needs). `df` is a LOCAL RELATION on the footer path and the
@@ -3081,7 +3037,12 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   private[graft] var zoneStatsForceScan: Boolean = false
   private[graft] var lastZoneStatsFromFooters: Boolean = false
 
-  /** Zone stats for the files just written under `data/<dir>` — from
+  /** Zone stats for the files just written under `data/<dir>`: one row
+    * per file that holds rows, with `lo__<c>`/`hi__<c>` for each of
+    * `cols` (in the data's real types), the row count `n`, and — when a
+    * bloom sidecar is declared — each file's `xxhash64(bloomCol)` values
+    * folded into a `bloom` bitset, so every zones consumer (CoW union,
+    * retention, vacuum) carries it untouched. From
     * parquet FOOTERS when they can serve EXACT stats (r18 optimization
     * round: no Spark job and no second O(batch) data scan per commit —
     * the Delta stats-from-file-metadata posture; at 100 TB the readback
@@ -3096,11 +3057,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * [[statsFromZones]] cannot tell the paths apart; ZoneStatsSpec
     * pins the equivalence. */
   private def stagedZoneStats(name: String, dir: String,
-      cols: Seq[String], single: Boolean): StagedZones = {
-    val loN = (c: String) => if (single) "lo" else s"lo__$c"
-    val hiN = (c: String) => if (single) "hi" else s"hi__$c"
+      cols: Seq[String]): StagedZones = {
     (if (zoneStatsForceScan) None
-     else footerZoneStats(name, dir, cols, loN, hiN)) match {
+     else footerZoneStats(name, dir, cols)) match {
       case Some((rows, schema, files)) =>
         lastZoneStatsFromFooters = true
         StagedZones(spark.createDataFrame(rows.asJava, schema), files)
@@ -3108,7 +3067,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         lastZoneStatsFromFooters = false
         import org.apache.spark.sql.functions._
         val statAggs = cols.flatMap(c =>
-          Seq(min(col(c)).as(loN(c)), max(col(c)).as(hiN(c))))
+          Seq(min(col(c)).as(s"lo__$c"), max(col(c)).as(s"hi__$c")))
         val prefix = dataDir(name).toString + "/"
         val aggs = statAggs ++ Seq(count(lit(1)).as("n")) ++
           bloomSpecOf(name).map { case (c, bits, k) =>
@@ -3149,10 +3108,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   /** Exact per-file (lo, hi, n) from parquet footers, or None when any
     * file/column cannot be served exactly (the caller then pays the
     * readback scan). Returns rows in the SCAN path's column order
-    * (f, lo.., hi.., n), the matching schema, and the sorted relative
-    * file list. */
-  private def footerZoneStats(name: String, dir: String,
-      cols: Seq[String], loN: String => String, hiN: String => String)
+    * (f, lo__c, hi__c per column, n), the matching schema, and the
+    * sorted relative file list. */
+  private def footerZoneStats(name: String, dir: String, cols: Seq[String])
       : Option[(Seq[org.apache.spark.sql.Row],
                 org.apache.spark.sql.types.StructType, Seq[String])] = {
     import org.apache.spark.sql.types._
@@ -3209,8 +3167,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       val schema = StructType(
         StructField("f", StringType, nullable = false) +:
           cols.zip(zcs).flatMap { case (c, zc) => Seq(
-            StructField(loN(c), zc.spark, nullable = true),
-            StructField(hiN(c), zc.spark, nullable = true)) } :+
+            StructField(s"lo__$c", zc.spark, nullable = true),
+            StructField(s"hi__$c", zc.spark, nullable = true)) } :+
           StructField("n", LongType, nullable = false))
       Some((outRows.toSeq, schema, outFiles.toSeq.sorted))
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -3341,16 +3299,15 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   }
 
   /** True when a CoW merge keyed on `key` can prune the CURRENT
-    * version's layout soundly: keyed ON `key` (zoneKeyOf proves the
-    * match), or z-ordered with `key` one of the z-columns. The
-    * dispatch gate [[mergeFromTable]] and the streaming merge sink use
-    * to pick [[commitMergeCow]] over the full-rewrite
+    * version's layout soundly: its zone sidecar carries a range for
+    * `key` (range-clustered on it, or z-ordered with it one of the
+    * z-columns). The dispatch gate [[mergeFromTable]] and the streaming
+    * merge sink use to pick [[commitMergeCow]] over the full-rewrite
     * [[commitMerge]]. */
   def mergeCowApplicable(name: String, key: String): Boolean = {
     val cur = currentVersion(name)
-    cur >= 1 && readZones(name, cur).exists(z =>
-      (z.columns.contains("lo") && zoneKeyOf(name, cur).contains(key)) ||
-        z.columns.contains(s"lo__$key"))
+    cur >= 1 &&
+      readZones(name, cur).exists(Clustering.of(_).range(key).isDefined)
   }
 
   /** r17: the driver-side planning bound. Maintenance/merge planning —
@@ -3420,9 +3377,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     if (schemaAt(name, expectedCurrent).isDefined) stampSchema(name, v, df.schema)
     stage(name, v, Some(df.repartitionByRange(numFiles, col(key))),
       Seq(s"v$v"))
-    val nz = stagedZoneStats(name, s"v$v", Seq(key), single = true)
+    val nz = stagedZoneStats(name, s"v$v", Seq(key))
     writeSidecar(name, v, nz, carried = None)
-    stampZoneKey(name, v, key)
     // re-stage the manifest at FILE granularity now the file set is known
     // (the pointer hasn't swapped; nothing was visible in between). An
     // EMPTY commit has no zone rows — keep the dir entry (Spark's empty
@@ -3432,30 +3388,44 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     v
   }
 
-  /** Files of version `v` that can hold a key in [from, to], per the zone
-    * stats, split (chosen, skipped). Manifest entries without zone rows
-    * are conservatively chosen. A metadata read: the sidecar is read once,
-    * on the driver ([[zoneRanges]]), and launches no Spark job. Spec seam
-    * for the skipping claim. */
-  private[graft] def pruneFiles(name: String, v: Long, key: String,
-      from: Any, to: Any): (Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.functions._
-    val entries = readManifest(name, v)
-    readZones(name, v).map(zoneRanges) match {
-      case None => (entries, Nil)
-      case Some(z) =>
-        val (chosen, known) =
-          chosenKnown(z, col("hi") >= lit(from) && col("lo") <= lit(to))
-        val pick = entries.filter(e => chosen(e) || !known(e))
-        (pick, entries.filterNot(pick.toSet))
-    }
+  /** Which entries of version `v` can hold a `key` value in [from, to],
+    * per the zone sidecar's range for `key`: entries without zone rows
+    * are conservatively chosen, and a file whose range is NULL (all its
+    * `key` values are NULL) is not. None when `v` has no sidecar or the
+    * sidecar carries no range for `key` — then any entry can. A metadata
+    * read: the sidecar is read once, on the driver ([[zoneRanges]]), and
+    * launches no Spark job. */
+  private def rangeFilter(name: String, v: Long, key: String, from: Any,
+      to: Any): Option[String => Boolean] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    readZones(name, v).flatMap(zones =>
+      Clustering.of(zones).range(key).map { case (lo, hi) =>
+        val (chosen, known) = chosenKnown(zoneRanges(zones),
+          col(hi) >= lit(from) && col(lo) <= lit(to))
+        (e: String) => chosen(e) || !known(e)
+      })
   }
 
-  /** Zone-pruned range read of a keyed snapshot — TableStore.skippingRead
-    * for versioned tables: only files whose key range intersects
-    * [from, to] are OPENED (the rest are never listed into the scan);
-    * the residual filter still applies, so the result is exact. Falls
-    * back to a filtered full read when `v` has no zone stats. */
+  /** Files of version `v` that can hold a `key` value in [from, to], per
+    * the zone stats ([[rangeFilter]]), split (chosen, skipped). Any
+    * clustered column prunes — the range column, or any z-column; a
+    * column without a range chooses everything. Spec seam for the
+    * skipping claim. */
+  private[graft] def pruneFiles(name: String, v: Long, key: String,
+      from: Any, to: Any): (Seq[String], Seq[String]) = {
+    val entries = readManifest(name, v)
+    val pick = rangeFilter(name, v, key, from, to)
+      .fold(entries)(entries.filter)
+    (pick, entries.filterNot(pick.toSet))
+  }
+
+  /** Zone-pruned range read of a clustered snapshot —
+    * TableStore.skippingRead for versioned tables: only files whose
+    * range on `key` intersects [from, to] are OPENED (the rest are never
+    * listed into the scan); the residual filter still applies, so the
+    * result is exact. With n files z-ordered over 2 columns, a range on
+    * either touches ~sqrt(n) files. Falls back to a filtered full read
+    * when `v` has no zone range for `key`. */
   def readVersionWhere(name: String, v: Long, key: String,
                        from: Any, to: Any): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -3545,7 +3515,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * space-filling z-value ([[graft.ops.RelOps.zValueColumn]] — the SAME
     * definition TableStore's in-place variant uses), so files own small
     * HYPERCUBES of the value space and a zone read filtering on ANY
-    * clustered column ([[readVersionWhereAny]]) skips most files — with
+    * clustered column ([[readVersionWhere]]) skips most files — with
     * n files over 2 columns a single-column range touches ~sqrt(n)
     * files where a linear clustering on the other column touches all n.
     * The sidecar carries per-file [lo, hi] for EVERY z-column plus row
@@ -3553,57 +3523,27 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * manifest lists files, so retention/vacuum reclaim at file
     * granularity; [[commitMergeCow]] prunes on any z-column's per-file
     * ranges when its merge key is one of `zCols` (r16 — a merge keyed
-    * outside the z-set still refuses with a pointer). */
+    * outside the z-set still refuses with a pointer). Needs two or more
+    * distinct columns: one column is the range layout of
+    * [[commitOverwriteKeyed]]. */
   def commitOverwriteZordered(name: String, zCols: Seq[String],
       df: DataFrame, numFiles: Int = 16, bits: Int = 6): Long = {
-    import org.apache.spark.sql.functions.col
+    require(zCols.size >= 2 && zCols.distinct == zCols,
+      s"z-order needs two or more distinct columns, got " +
+        s"(${zCols.mkString(", ")}) — one column is the range layout: " +
+        "use commitOverwriteKeyed")
     requireSingleTable(name, "commitOverwriteZordered")
     val cur = currentVersion(name)
     val v = cur + 1
     claim(name, v)
     if (schemaAt(name, cur).isDefined) stampSchema(name, v, df.schema)
-    val clustered = df
-      .withColumn("__z", graft.ops.RelOps.zValueColumn(df, zCols, bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-    stage(name, v, Some(clustered), Seq(s"v$v"))
-    val nz = stagedZoneStats(name, s"v$v", zCols, single = false)
+    stage(name, v, Some(Clustering.zSorted(df, zCols, numFiles, bits)),
+      Seq(s"v$v"))
+    val nz = stagedZoneStats(name, s"v$v", zCols)
     writeSidecar(name, v, nz, carried = None)
     stage(name, v, None, if (nz.files.isEmpty) Seq(s"v$v") else nz.files)
     swapTo(name, v)
     v
-  }
-
-  /** Files of version `v` whose multi-column zone for `colName`
-    * intersects [from, to], split (chosen, skipped) — works for ANY
-    * z-column of a [[commitOverwriteZordered]] version. Entries without
-    * zone rows are conservatively chosen; versions without a
-    * `lo__colName` stat choose everything. Spec seam. */
-  private[graft] def pruneFilesAny(name: String, v: Long, colName: String,
-      from: Any, to: Any): (Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.functions._
-    val entries = readManifest(name, v)
-    readZones(name, v) match {
-      case Some(zs) if zs.columns.contains(s"lo__$colName") =>
-        val (chosen, known) = chosenKnown(zoneRanges(zs),
-          col(s"hi__$colName") >= lit(from) && col(s"lo__$colName") <= lit(to))
-        val pick = entries.filter(e => chosen(e) || !known(e))
-        (pick, entries.filterNot(pick.toSet))
-      case _ => (entries, Nil)
-    }
-  }
-
-  /** Zone-pruned range read on ANY z-column of a Z-ordered version —
-    * [[readVersionWhere]]'s multi-column sibling: only files whose
-    * [lo__col, hi__col] intersects the range are OPENED; the residual
-    * filter keeps the result exact. */
-  def readVersionWhereAny(name: String, v: Long, colName: String,
-                          from: Any, to: Any): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val (pick, _) = pruneFilesAny(name, v, colName, from, to)
-    applyDeletes(name, v, readEntries(name, pick, readVersion(name, v))
-      .filter(col(colName) >= lit(from) && col(colName) <= lit(to)))
   }
 
   /** Translate a SQL predicate into a zone-sidecar SKIP condition
@@ -3785,14 +3725,11 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     import org.apache.spark.sql.functions.expr
     val zonePick: Seq[String] = rangesOpt match {
       case Some(z) =>
-        val zk = zoneKeyOf(name, v)
+        val layout = Clustering.of(z)
         def range(c: String): Option[(String, String,
             org.apache.spark.sql.types.DataType)] =
-          if (z.columns.contains("lo") && zk.exists(_.equalsIgnoreCase(c)))
-            Some(("lo", "hi", z.schema("lo").dataType))
-          else z.columns.find(_.equalsIgnoreCase(s"lo__$c"))
-            .map(lc => (lc, "hi__" + lc.stripPrefix("lo__"),
-              z.schema(lc).dataType))
+          layout.range(c).map { case (lo, hi) =>
+            (lo, hi, z.schema(lo).dataType) }
         zoneSkipCondition(predicate, range) match {
           case Some(cond) =>
             val (chosen, known) = chosenKnown(z, expr(cond))
@@ -3900,8 +3837,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   }
 
   /** Zone- AND bloom-pruned read of version `v` under an ARBITRARY SQL
-    * predicate (r18 second wave) — [[readVersionWhere]] /
-    * [[readVersionWhereAny]] generalized: [[pruneFilesForPredicate]]
+    * predicate (r18 second wave) — [[readVersionWhere]]
+    * generalized: [[pruneFilesForPredicate]]
     * names the candidate files (range comparisons through the zone
     * sidecar, provable point sets through the bloom sidecar, sound
     * degradations everywhere else), only those are OPENED, the exact
@@ -3947,9 +3884,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       s"'$name' v$v carries zone rows without row counts (written " +
         "before counts existed) — recommit or compact")
     val stats = z.columns.filter(c =>
-      c == "lo" || c == "hi" || c.startsWith("lo__") || c.startsWith("hi__"))
+      c.startsWith("lo__") || c.startsWith("hi__"))
     val aggs = stats.map(c =>
-      if (c.startsWith("lo")) min(col(c)).as(c) else max(col(c)).as(c))
+      if (c.startsWith("lo__")) min(col(c)).as(c) else max(col(c)).as(c))
       .toSeq :+ sum(col("n")).as("n_rows")
     z.filter(col("f").isin(entries: _*))
       .agg(aggs.head, aggs.tail: _*)
@@ -4010,9 +3947,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * always-read, come out prunable — the optimize IMPROVES skipping);
     * reused files keep their zone rows (blooms included) untouched.
     * Z-ORDERED tables pack too (r17 lifts the refusal): the debt
-    * re-clusters on the SAME z-value (the [[commitMergeCow]] rewrite
-    * dialect — bit depth shapes clustering quality, never pruning
-    * soundness) and gains fresh multi-column zone rows, so a z-table
+    * re-clusters on the SAME z-value ([[Clustering]] — bit depth
+    * shapes clustering quality, never pruning soundness) and gains fresh multi-column zone rows, so a z-table
     * taking streaming appends finally has an O(debt) maintenance
     * answer instead of the O(table) re-z-order, and EVERY z-column
     * still prunes afterwards. An active delete
@@ -4025,7 +3961,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * returns (current, 0, 0). */
   def optimizeSmallFiles(name: String, targetBytes: Long = 128L << 20,
                          smallBelowBytes: Long = 0L): (Long, Int, Int) = {
-    import org.apache.spark.sql.functions._
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val smallBar =
       if (smallBelowBytes > 0L) smallBelowBytes else targetBytes / 2
@@ -4036,15 +3971,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       "rewritten files would drop vector-deleted rows while reused " +
         "files still hold them")
     val zones = readZones(name, cur)
-    val zKey = zoneKeyOf(name, cur)
-    // zoned but no single-key marker ⇒ the z-ordered dialect: its
-    // z-columns come from the sidecar's lo__/hi__ pairs
-    val zCols: Seq[String] = zones match {
-      case Some(z) if zKey.isEmpty =>
-        z.columns.filter(_.startsWith("lo__"))
-          .map(_.stripPrefix("lo__")).toSeq
-      case _ => Nil
-    }
     val expanded = readManifest(name, cur).flatMap(expandEntry(name, _))
     guardPlannedFiles(name, "optimizeSmallFiles", expanded.size)
     val sized = expanded.map(f =>
@@ -4058,31 +3984,22 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       math.ceil(small.map(sized).sum.toDouble / targetBytes).toInt)
     val debt = readEntries(name, small, readVersion(name, cur),
       schemaAt(name, cur))
-    val packed = zKey match {
-      case Some(k) => debt.repartitionByRange(nOut, col(k))
-      case None if zCols.nonEmpty =>
-        // the z-ordered dialect: debt re-clusters on the SAME z-value,
-        // so the packed files own hypercubes and every z-column keeps
-        // pruning (fresh zone rows written below)
-        debt.withColumn("__z",
-            graft.ops.RelOps.zValueColumn(debt, zCols, 6))
-          .repartitionByRange(nOut, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
+    zones match {
+      case Some(z) =>
+        // the debt re-clusters in the table's own layout, so the packed
+        // files keep every clustered column pruning (fresh zone rows)
+        val layout = Clustering.of(z)
+        layout.recluster(debt, nOut)(c => stage(name, v, Some(c), Seq(s"v$v")))
+        restageWithCarriedZones(name, v, layout, z, reused)
       case None =>
         // coalesce (no shuffle) merges many→few; when the requested
         // target wants MORE files than the scan's partitioning gives
         // (small targetBytes), coalesce cannot split — repartition then,
         // so targetBytes is honored in both directions
-        if (nOut > debt.rdd.getNumPartitions) debt.repartition(nOut)
-        else debt.coalesce(nOut)
-    }
-    stage(name, v, Some(packed), Seq(s"v$v"))
-    zKey match {
-      case Some(k) => restageWithCarriedZones(name, v, k, zones.get, reused)
-      case None if zCols.nonEmpty =>
-        restageWithCarriedZonesMulti(name, v, zCols, zones.get, reused)
-      case None => stage(name, v, None, reused :+ s"v$v")
+        stage(name, v, Some(
+          if (nOut > debt.rdd.getNumPartitions) debt.repartition(nOut)
+          else debt.coalesce(nOut)), Seq(s"v$v"))
+        stage(name, v, None, reused :+ s"v$v")
     }
     swapTo(name, v)
     Files.write(sameMarkerPath(name, v),
@@ -4102,15 +4019,16 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * Driver-side O(files log files) endpoint sweep — a layout
     * property, never row counts. 0 for un-zoned/z-ordered versions. */
   def clusteringDepth(name: String, v: Long): Int = {
-    val zs = readZones(name, v) match {
-      case Some(z) if z.columns.contains("lo") => z
-      case _ => return 0
+    val (zs, key) = readZones(name, v)
+      .flatMap(z => Clustering.of(z).rangeKey.map((z, _))) match {
+      case Some(zk) => zk
+      case None => return 0
     }
     // a file whose clustering-key values are ALL NULL has NULL lo/hi
     // zone bounds — range-less like statless debt, and the sweep's
     // Comparable compare would NPE on it; drop such rows here (the
     // recluster treats the same files as always-rewrite debt)
-    val ivs = onDriver(zs, Seq("lo", "hi")).na.drop().collect()
+    val ivs = onDriver(zs, Seq(s"lo__$key", s"hi__$key")).na.drop().collect()
       .map(r => (r.get(0), r.get(1))).toSeq
     if (ivs.isEmpty) return 0
     def cmp(a: Any, b: Any): Int =
@@ -4146,7 +4064,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * NO-OP that commits nothing. Returns (version, files rewritten,
     * files reused); no-op returns (current, 0, 0). */
   def optimizeClustering(name: String): (Long, Int, Int) = {
-    import org.apache.spark.sql.functions._
     val cur = currentVersion(name)
     require(cur >= 1, s"'$name' has no committed version to recluster")
     requireSingleTable(name, "optimizeClustering")
@@ -4158,12 +4075,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         s"'$name' v$cur has no zone stats — reclustering needs the " +
           "keyed layout (commitOverwriteKeyed first); plain tables " +
           "pack with optimizeSmallFiles"))
-    require(zones.columns.contains("lo"),
+    val layout = Clustering.of(zones)
+    val key = layout.rangeKey.getOrElse(throw new IllegalArgumentException(
       s"'$name' v$cur is z-ordered — re-z-ordering " +
-        "(commitOverwriteZordered) IS the recluster for that layout")
-    val key = zoneKeyOf(name, cur).getOrElse(throw
-      new IllegalStateException(
-        s"'$name' v$cur has single-key zones but no zonekey marker"))
+        "(commitOverwriteZordered) IS the recluster for that layout"))
     val entries = readManifest(name, cur)
     guardPlannedFiles(name, "optimizeClustering", entries.size)
     // NULL lo/hi (a file whose key values are all NULL) is range-less:
@@ -4171,7 +4086,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // treated as always-rewrite debt — the sound choice (its rows gain
     // real zone rows on the way through) and the one that keeps the
     // Comparable sweep NPE-free
-    val ranged = onDriver(zones, Seq("f", "lo", "hi")).collect()
+    val ranged = onDriver(zones, Seq("f", s"lo__$key", s"hi__$key")).collect()
       .map(r => (r.getString(0), r.get(1), r.get(2)))
       .filter(t => entries.contains(t._1) && t._2 != null && t._3 != null)
     def cmp(a: Any, b: Any): Int =
@@ -4197,10 +4112,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val reused = entries.filterNot(rewrite.toSet)
     val v = cur + 1
     claim(name, v)
-    val debt = readEntries(name, rewrite, readVersion(name, cur))
-    stage(name, v, Some(debt.repartitionByRange(
-      math.max(1, rewrite.size), col(key))), Seq(s"v$v"))
-    restageWithCarriedZones(name, v, key, zones, reused)
+    layout.recluster(readEntries(name, rewrite, readVersion(name, cur)),
+      math.max(1, rewrite.size))(c => stage(name, v, Some(c), Seq(s"v$v")))
+    restageWithCarriedZones(name, v, layout, zones, reused)
     swapTo(name, v)
     Files.write(sameMarkerPath(name, v),
       "content-identical-to-previous\n".getBytes(StandardCharsets.UTF_8))
@@ -4215,11 +4129,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * reuse and the content parity with the full-rewrite merge. Files
     * without zone stats (e.g. from a plain commitAppend) are
     * conservatively treated as always-touched. Works on BOTH prunable
-    * layouts (r16): the keyed layout prunes on [lo, hi]; a Z-ORDERED
-    * version prunes on the merge key's [lo__key, hi__key] and the
-    * rewritten slice re-clusters on the same z-value, so the table
-    * STAYS z-ordered across merges (a merge keyed on a non-z-column
-    * refuses).
+    * layouts (r16): the touch set prunes on the merge key's
+    * [lo__key, hi__key] and the rewritten slice re-clusters in the
+    * version's own layout, so a z-ordered table STAYS z-ordered across
+    * merges (a merge keyed on an unclustered column refuses).
     *
     * VECTOR-AWARE (X141w): an active delete vector on the SAME key
     * column folds INTO this merge as one commit — the vector's keys
@@ -4249,41 +4162,17 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       throw new IllegalArgumentException(
         s"'$name' v$cur has no zone stats — commitOverwriteKeyed first " +
           "(commitMerge is the stats-free full-rewrite path)"))
-    // TWO prunable layouts (r16 closes the r15 z-order refusal): the
-    // single-key keyed layout prunes on [lo, hi]; a Z-ORDERED version
-    // prunes on the merge key's own [lo__key, hi__key] — every
-    // z-column carries per-file ranges, so the touch-set intersection
-    // is just as computable (the X141w integration pattern). The
-    // rewritten slice re-clusters on the SAME z-value (zCols in the
-    // sidecar's declared order), so the new version stays z-ordered
-    // and every z-column keeps pruning. Only a merge keyed on a
-    // NON-z-column refuses — its ranges don't exist in the sidecar,
-    // and pruning with another column's would be unsound.
-    val singleKey = zones.columns.contains("lo")
-    val zCols: Seq[String] =
-      if (singleKey) Nil
-      else zones.columns.filter(_.startsWith("lo__"))
-        .map(_.stripPrefix("lo__")).toSeq
-    require(singleKey || zCols.contains(key),
-      s"'$name' v$cur is z-ordered on (${zCols.mkString(", ")}) but " +
-        s"this merge keys on '$key' — pruning by a non-clustered " +
-        "column's ranges is unsound; commitMerge (full rewrite) or " +
-        s"re-z-order on a set including '$key'")
-    // r17 soundness fix: the keyed branch must ALSO prove the merge
-    // key IS the clustering key (the compactDeleteKeys discipline —
-    // previously unchecked here): the [lo, hi] ranges describe the
-    // CLUSTERING column, so a merge keyed on anything else would
-    // compute its touch set against the wrong column's ranges and
-    // reuse files that still hold touched keys — silent wrong content
-    require(!singleKey || zoneKeyOf(name, cur).contains(key),
-      s"'$name' v$cur clusters on " +
-        s"'${zoneKeyOf(name, cur).getOrElse("<unknown>")}' but this " +
-        s"merge keys on '$key' — pruning the touch set by another " +
-        "column's ranges would silently reuse files holding touched " +
-        "keys; commitMerge (full rewrite) or re-cluster on " +
-        s"'$key' first")
-    val (loC, hiC) =
-      if (singleKey) ("lo", "hi") else (s"lo__$key", s"hi__$key")
+    // the touch set prunes on the merge key's own per-file range — the
+    // range column, or any z-column (r16) — and the rewritten slice
+    // re-clusters in the same layout, so every clustered column keeps
+    // pruning. A merge keyed on a column the sidecar has no range for
+    // refuses: pruning the touch set by another column's ranges would
+    // silently reuse files holding touched keys.
+    val layout = Clustering.of(zones)
+    layout.requireRange(name, cur, key, s"this merge keys on '$key' — " +
+      "pruning the touch set by another column's ranges would silently " +
+      "reuse files holding touched keys; commitMerge (full rewrite) or " +
+      s"re-cluster on a layout including '$key' first")
     // vector-aware: a vector on THIS key folds into the merge (its
     // keys join the touch set below, its rows drop from the rewrite
     // base, the new version carries no vector); any other column
@@ -4307,11 +4196,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       val touchedKeys = dels.fold(d.select(col(key)))(dl =>
         d.select(col(key)).unionByName(dl.select(col(key)))).distinct()
       val ranges = zoneRanges(zones)
-      val touchedFiles = ranges.as("z")
-        .join(touchedKeys.as("t"),
-          col(s"t.$key") >= col(s"z.$loC") && col(s"t.$key") <= col(s"z.$hiC"),
-          "left_semi")
-        .select("f").collect().map(_.getString(0)).toSet
+      val touchedFiles = layout.touched(ranges, touchedKeys, key)
       // entries without zone rows (a plain commitAppend's dir, say) are
       // conservatively always-rewritten — pruning needs stats to be sound
       val statless = entries.toSet -- zoneFiles(ranges).toSet
@@ -4323,27 +4208,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       // fold the vector: its rows leave the rewrite base here, and since
       // every vector-intersecting file is in `rewrite`, the fold is total
       val base = dels.fold(base0)(antiByKey(base0, _))
-      val merged0 = graft.ops.CdcOps.applyDiff(base, d, key)
-      // the rewritten slice re-clusters in the version's OWN dialect:
-      // keyed → range on the key; z-ordered → the same z-value sort as
-      // commitOverwriteZordered (bit depth only shapes clustering
-      // quality, never pruning soundness — the sidecar re-derives exact
-      // per-file ranges from the written files). The z branch consumes
-      // the merge join TWICE (quantile pass + staging write) — pin it,
-      // O(rewritten slice), released right after the stage.
-      val merged =
-        if (singleKey) merged0 else merged0.localCheckpoint()
-      try {
-        val clustered =
-          if (singleKey) merged.repartitionByRange(
-            math.max(1, rewrite.size), col(key))
-          else merged
-            .withColumn("__z", graft.ops.RelOps.zValueColumn(merged, zCols, 6))
-            .repartitionByRange(math.max(1, rewrite.size), col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        stage(name, v, Some(clustered), Seq(s"v$v"))
-      } finally if (!singleKey) graft.ops.RelOps.releaseCheckpoint(merged)
+      layout.recluster(graft.ops.CdcOps.applyDiff(base, d, key),
+        math.max(1, rewrite.size))(c => stage(name, v, Some(c), Seq(s"v$v")))
       // final zones = the new dir's rows ∪ the reused files' carried rows
       // (the shared carry tail — footer stats + ONE sidecar write, r18).
       // Ranges MAY overlap across files after a merge (an insert beyond
@@ -4352,8 +4218,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       // touch sets. A merge that deleted everything has no new files AND
       // no reused ones — the tail keeps the (schema-bearing, empty) dir
       // entry so the version reads.
-      if (singleKey) restageWithCarriedZones(name, v, key, zones, reused)
-      else restageWithCarriedZonesMulti(name, v, zCols, zones, reused)
+      restageWithCarriedZones(name, v, layout, zones, reused)
       swapTo(name, v)
       (v, reused.size)
     } finally graft.ops.RelOps.releaseCheckpoint(d)
@@ -4371,8 +4236,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * O(touched rewrite), never O(table) — at 100 TB, `DELETE WHERE
     * date < X` (the retention workload) opens only the files whose
     * date ranges cross the cut. The rewritten slice re-clusters in the
-    * version's OWN dialect (keyed → range on the zone key; z-ordered →
-    * the shared z-value sort; plain → written as scanned) and gains
+    * version's OWN layout ([[Clustering]]; plain → written as
+    * scanned) and gains
     * fresh zone rows, so pruning soundness and [[statsFromZones]]
     * coverage survive the delete. CHECK constraints validate the
     * rewritten slice in-stage (carried rows are unchanged); an evolved
@@ -4487,7 +4352,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   }
 
   /** Shared body of the predicate CoW mutations: zone-pruned touch
-    * discovery, file-granular rewrite through `transform`, dialect-
+    * discovery, file-granular rewrite through `transform`, layout-
     * preserving re-cluster, zone carry, vector fold, atomic commit. */
   private def predicateCow(name: String, predicate: String, op: String)(
       rewriteSlice: DataFrame => DataFrame): (Long, Int) = {
@@ -4500,16 +4365,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val expanded = entries.flatMap(expandEntry(name, _))
     val pinned = schemaAt(name, cur)
     val zones = readZones(name, cur)
-    val zKey = zoneKeyOf(name, cur)
-    val zCols: Seq[String] = zones match {
-      case Some(z) if zKey.isEmpty =>
-        z.columns.filter(_.startsWith("lo__"))
-          .map(_.stripPrefix("lo__")).toSeq
-      case _ => Nil
-    }
+    val layout = zones.map(Clustering.of)
     // VECTOR-AWARE (r18, the X141w pattern — closes the r17 missing
     // #1): an active delete vector whose key the layout can prune
-    // soundly (the clustering key, or a z-column) FOLDS into this
+    // soundly (a clustered column) FOLDS into this
     // mutation as the same commit — every vector-intersecting file
     // joins the rewrite set (rewritten minus its deleted rows), so the
     // new version carries NO vector and the GDPR-then-retention
@@ -4520,9 +4379,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val dels = deleteKeysAt(name, cur)
     dels.foreach { d =>
       val key = d.columns(0)
-      require(zones.exists(z =>
-          (z.columns.contains("lo") && zKey.contains(key)) ||
-            z.columns.contains(s"lo__$key")),
+      require(layout.exists(_.range(key).isDefined),
         s"'$name' v$cur carries an active delete vector on '$key' that " +
           s"this layout cannot prune — $op cannot fold it soundly; " +
           "fold it first with compactDeleteKeys")
@@ -4566,17 +4423,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // rewrites too, plus statless entries (conservatively — no ranges
     // to prove them clean), so no reused-by-reference file can hold a
     // vector-deleted row once the sidecar is gone
-    val vecTouched: Set[String] = (dels, ranges) match {
-      case (Some(d), Some(z)) =>
-        val key = d.columns(0)
-        val (loC, hiC) =
-          if (z.columns.contains("lo")) ("lo", "hi")
-          else (s"lo__$key", s"hi__$key")
-        val hit = z.as("z").join(d.as("t"),
-            col(s"t.$key") >= col(s"z.$loC") &&
-              col(s"t.$key") <= col(s"z.$hiC"), "left_semi")
-          .select("f").collect().map(_.getString(0)).toSet
-        hit ++ (expanded.toSet -- zoneFiles(z).toSet)
+    val vecTouched: Set[String] = (dels, layout, ranges) match {
+      case (Some(d), Some(l), Some(z)) =>
+        l.touched(z, d, d.columns(0)) ++ (expanded.toSet -- zoneFiles(z).toSet)
       case _ => Set.empty
     }
     val rewriteSet = predTouched.toSet ++ vecTouched
@@ -4591,23 +4440,14 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       // mutation transform; every vector-intersecting file is in
       // `rewrite`, so the fold is total and v carries no sidecar
       val out = rewriteSlice(dels.fold(base0)(antiByKey(base0, _)))
-      val clustered = zKey match {
-        case Some(k) => out.repartitionByRange(
-          math.max(1, rewrite.size), col(k))
-        case None if zCols.nonEmpty => out
-          .withColumn("__z", graft.ops.RelOps.zValueColumn(out, zCols, 6))
-          .repartitionByRange(math.max(1, rewrite.size), col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
-        case None => out
-      }
-      stage(name, v, Some(clustered), Seq(s"v$v"))
-      (zKey, zones) match {
-        case (Some(k), Some(z)) =>
-          restageWithCarriedZones(name, v, k, z, reused)
-        case (None, Some(z)) if zCols.nonEmpty =>
-          restageWithCarriedZonesMulti(name, v, zCols, z, reused)
-        case _ => stage(name, v, None, reused :+ s"v$v")
+      (layout, zones) match {
+        case (Some(l), Some(z)) =>
+          l.recluster(out, math.max(1, rewrite.size))(c =>
+            stage(name, v, Some(c), Seq(s"v$v")))
+          restageWithCarriedZones(name, v, l, z, reused)
+        case _ =>
+          stage(name, v, Some(out), Seq(s"v$v"))
+          stage(name, v, None, reused :+ s"v$v")
       }
       swapTo(name, v)
       (v, reused.size)
@@ -4622,11 +4462,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       val dd = dataDir(name).resolve(s"v$v")
       if (Files.exists(dd))
         org.apache.commons.io.FileUtils.deleteDirectory(dd.toFile)
-      Files.deleteIfExists(schemaMarkerPath(name, v))
-      Files.deleteIfExists(zoneKeyPath(name, v))
-      val zd = zonesDir(name, v)
-      if (Files.exists(zd))
-        org.apache.commons.io.FileUtils.deleteDirectory(zd.toFile)
+      deleteVersionSidecars(name, v)
       Files.deleteIfExists(manifestPath(name, v))
       releaseOwnClaim(name, v)
       throw e
@@ -4835,12 +4671,11 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val staleDels = listNames(tableDir(name).resolve("dels"))
       .filter(d => !liveV.contains(d) && safeDir(d) &&
         !stagedZonePins.contains(d))
-    // matches manifests ("vN"), content-preserving markers ("vN.same" —
-    // compactKeyed's changelog-skip flag) and clustering-key markers
-    // ("vN.zonekey"), all swept with their version
+    // matches manifests ("vN") and content-preserving markers ("vN.same"
+    // — compactKeyed's changelog-skip flag), swept with their version
     def staleVersionFiles(dir: Path): Seq[String] =
       listNames(dir).filter { n =>
-        val base = n.stripSuffix(".same").stripSuffix(".zonekey")
+        val base = n.stripSuffix(".same")
         base.startsWith("v") && base.drop(1).nonEmpty &&
           base.drop(1).forall(_.isDigit) && !liveV.contains(base)
       }
@@ -4863,8 +4698,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val staleManifests =
       (if (expiredOnly)
         staleVersionFiles(metaDir(name))
-          .filter(n => dirVersion(n.stripSuffix(".same")
-            .stripSuffix(".zonekey")).exists(_ <= cur))
+          .filter(n => dirVersion(n.stripSuffix(".same")).exists(_ <= cur))
       else staleVersionFiles(metaDir(name))) ++ staleSchemas
     VacuumPlan(orphanDirs.sorted, orphanFiles.sorted, staleZones.sorted,
       staleClaims, staleManifests.sorted, staleDels.sorted)
@@ -4971,10 +4805,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       .filter(z => Files.exists(tableDir(name).resolve("zones").resolve(z)))
     val deadDels = deadVs.toSeq.map(v => s"v$v")
       .filter(d => Files.exists(tableDir(name).resolve("dels").resolve(d)))
-    // a dead commit's schema/zonekey markers are reclaimed WITH its
-    // manifest — a re-claimant of the number must never inherit them
+    // a dead commit's schema marker is reclaimed WITH its manifest — a
+    // re-claimant of the number must never inherit it
     val deadManifests = deadVs.toSeq
-      .flatMap(v => Seq(s"v$v", s"v$v.schema", s"v$v.zonekey"))
+      .flatMap(v => Seq(s"v$v", s"v$v.schema"))
       .filter(m => Files.exists(metaDir(name).resolve(m)))
     execute(name, VacuumPlan(deadDirs.sorted, Nil, deadZones.sorted,
       Nil, deadManifests.sorted, deadDels.sorted))

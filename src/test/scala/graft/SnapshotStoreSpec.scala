@@ -237,6 +237,101 @@ class SnapshotStoreSpec extends SparkSpec {
       === 121L)
   }
 
+  test("readVersionWhere prunes only on a column the sidecar carries a " +
+      "range for: a keyed version read on another column, and a " +
+      "z-ordered version read on either z-column or an unclustered " +
+      "one, equal the filtered full read") {
+    val dir = java.nio.file.Files.createTempDirectory("snap_where_").toString
+    val ss = new SnapshotStore(spark, dir)
+    val df = spark.range(0L, 10000L).select(col("id").as("k"),
+      (lit(9999L) - col("id")).as("g"), (col("id") % 7).as("m"))
+    def full(v: Long, c: String, from: Long, to: Long): Set[Long] =
+      ss.readVersion("t", v).filter(col(c).between(from, to))
+        .select("k").as[Long].collect().toSet
+    def where(v: Long, c: String, from: Long, to: Long): Set[Long] =
+      ss.readVersionWhere("t", v, c, from, to).select("k").as[Long]
+        .collect().toSet
+    ss.commitOverwriteKeyed("t", "k", df, numFiles = 8)               // v1
+    // g is not the clustering column: k's ranges must not prune it
+    assert(full(1L, "g", 0L, 100L).size === 101)
+    assert(where(1L, "g", 0L, 100L) === full(1L, "g", 0L, 100L))
+    assert(ss.pruneFiles("t", 1L, "g", 0L, 100L)._2 === Nil)
+    ss.commitOverwriteZordered("t", Seq("k", "g"), df, numFiles = 8)  // v2
+    // g is a z-column: it prunes on its own range, exactly
+    assert(where(2L, "g", 0L, 100L) === full(2L, "g", 0L, 100L))
+    assert(ss.pruneFiles("t", 2L, "g", 0L, 100L)._2.nonEmpty)
+    // m is not clustered: every file is read
+    assert(where(2L, "m", 3L, 3L) === full(2L, "m", 3L, 3L))
+    assert(ss.pruneFiles("t", 2L, "m", 3L, 3L)._2 === Nil)
+  }
+
+  test("the layout survives every rewrite: range on k and z-order on " +
+      "(k, c) keep their sidecar stat columns, leave no marker file, and " +
+      "every clustered column still prunes exactly") {
+    import org.apache.spark.sql.DataFrame
+    def fat = org.apache.spark.sql.functions.concat_ws("",
+      (0 to 7).map(i => org.apache.spark.sql.functions.sha2(
+        concat(lit(i.toString), col("id").cast("string")), 256)): _*)
+    def batch(from: Long, to: Long): DataFrame = spark.range(from, to)
+      .select(col("id").as("k"), (col("id") % 50).as("c"), fat.as("v"))
+    val layouts: Seq[(String, Seq[String], (SnapshotStore, DataFrame) => Long)] =
+      Seq(
+        ("range", Seq("k"),
+          (ss, df) => ss.commitOverwriteKeyed("t", "k", df, numFiles = 4)),
+        ("z-order", Seq("k", "c"),
+          (ss, df) => ss.commitOverwriteZordered("t", Seq("k", "c"), df,
+            numFiles = 4, bits = 4)))
+    val ops: Seq[(String, SnapshotStore => Any)] = Seq(
+      "commitAppendZoned" -> (ss => ss.commitAppendZoned("t", batch(5000, 5100))),
+      "commitMergeCow" -> { ss =>
+        val cur = ss.readCurrent("t")
+        ss.commitMergeCow("t", "k", graft.ops.CdcOps.snapshotDiff(cur,
+            cur.withColumn("v", when(col("k") < 20L, lit("x"))
+              .otherwise(col("v"))), "k", Seq("c", "v"))
+          .filter(col("change_type") =!= "unchanged"))
+      },
+      "commitDeleteWhere" -> (ss =>
+        ss.commitDeleteWhere("t", "k >= 100 AND k < 200")),
+      "commitUpdateWhere" -> (ss =>
+        ss.commitUpdateWhere("t", "k < 50", Map("v" -> "concat(v, 'x')"))),
+      "commitDeleteKeys+compactDeleteKeys" -> { ss =>
+        ss.commitDeleteKeys("t", Seq(3L, 7L, 1500L).toDF("k"))
+        ss.compactDeleteKeys("t")
+      },
+      "optimizeSmallFiles" -> { ss =>
+        (1 to 3).foreach(i => ss.commitAppend("t",
+          Seq((5000L + i, 10L + i, s"s$i")).toDF("k", "c", "v").coalesce(1)))
+        ss.optimizeSmallFiles("t", targetBytes = 1L << 20,
+          smallBelowBytes = 64L << 10)
+      })
+    for ((layout, cols, overwrite) <- layouts; (op, run) <- ops) {
+      val dir = java.nio.file.Files.createTempDirectory("snap_layout_").toString
+      val ss = new SnapshotStore(spark, dir)
+      def statCols(v: Long): Seq[String] = ss.readZones("t", v).get.columns
+        .filter(c => c.startsWith("lo__") || c.startsWith("hi__")).toSeq
+      overwrite(ss, batch(0, 2000))
+      assert(statCols(1L) === cols.flatMap(c => Seq(s"lo__$c", s"hi__$c")))
+      run(ss)
+      val v = ss.currentVersion("t")
+      val what = s"$layout / $op (v$v)"
+      assert(v > 1L, s"$what committed nothing")
+      assert(statCols(v) === statCols(1L), s"$what changed the stat columns")
+      val markers = java.nio.file.Files.list(
+        java.nio.file.Paths.get(dir, "t", "meta")).iterator()
+      while (markers.hasNext) assert(
+        !markers.next().getFileName.toString.endsWith(".zonekey"), what)
+      for ((c, from, to) <- Seq(("k", 0L, 100L), ("c", 0L, 5L))
+           if cols.contains(c)) {
+        assert(ss.pruneFiles("t", v, c, from, to)._2.nonEmpty,
+          s"$what: $c no longer prunes")
+        val where = ss.readVersionWhere("t", v, c, from, to)
+          .select("k", "c", "v").collect().toSet
+        assert(where === ss.readVersion("t", v).filter(col(c).between(from, to))
+          .select("k", "c", "v").collect().toSet, s"$what: $c read differs")
+      }
+    }
+  }
+
   test("X141 property: a seeded random walk of commit/append/merge/CoW/" +
       "rollback/expire/crash ops matches an in-memory model at every " +
       "step, for current AND a random live historical version") {
@@ -1013,20 +1108,23 @@ class SnapshotStoreSpec extends SparkSpec {
       ((col("id") * 2654435761L) % 4096).as("b"), (col("id") * 3).as("m"))
     ss.commitOverwriteZordered("t", Seq("a", "b"), base,
       numFiles = 16, bits = 4)
+    // one column is the range layout: refused, naming the keyed commit
+    assert(intercept[IllegalArgumentException](ss.commitOverwriteZordered(
+      "one", Seq("a"), base)).getMessage.contains("commitOverwriteKeyed"))
     def rows3(df: org.apache.spark.sql.DataFrame) = df.select("a", "b", "m")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // pruning bites on BOTH z-columns, results stay exact
-    val (_, skipA) = ss.pruneFilesAny("t", 1L, "a", 0L, 200L)
-    val (_, skipB) = ss.pruneFilesAny("t", 1L, "b", 0L, 200L)
+    val (_, skipA) = ss.pruneFiles("t", 1L, "a", 0L, 200L)
+    val (_, skipB) = ss.pruneFiles("t", 1L, "b", 0L, 200L)
     assert(skipA.nonEmpty && skipB.nonEmpty,
       s"both z-columns must prune (skipped a=${skipA.size}, b=${skipB.size})")
-    assert(rows3(ss.readVersionWhereAny("t", 1L, "a", 0L, 200L)) ===
+    assert(rows3(ss.readVersionWhere("t", 1L, "a", 0L, 200L)) ===
       rows3(base.filter(col("a").between(0L, 200L))))
-    assert(rows3(ss.readVersionWhereAny("t", 1L, "b", 0L, 200L)) ===
+    assert(rows3(ss.readVersionWhere("t", 1L, "b", 0L, 200L)) ===
       rows3(base.filter(col("b").between(0L, 200L))))
     // an un-stat'd column chooses everything (conservative, still exact)
-    val (allM, noneM) = ss.pruneFilesAny("t", 1L, "m", 0L, 10L)
-    assert(noneM.isEmpty && rows3(ss.readVersionWhereAny("t", 1L, "m",
+    val (allM, noneM) = ss.pruneFiles("t", 1L, "m", 0L, 10L)
+    assert(noneM.isEmpty && rows3(ss.readVersionWhere("t", 1L, "m",
       0L, 30L)) === rows3(base.filter(col("m").between(0L, 30L))))
     // metadata-only stats: exact row count + per-column min/max, zero
     // data files opened
@@ -1062,7 +1160,7 @@ class SnapshotStoreSpec extends SparkSpec {
     ss.commitMergeCow("kt", "k", kd)
     val ks = ss.statsFromZones("kt", 2L).head()
     assert(ks.getAs[Long]("n_rows") === 990L)
-    assert(ks.getAs[Long]("lo") === 0L && ks.getAs[Long]("hi") === 989L)
+    assert(ks.getAs[Long]("lo__k") === 0L && ks.getAs[Long]("hi__k") === 989L)
   }
 
   test("r16: CoW merge on a Z-ORDERED table — prunes the touch set on " +
@@ -1093,13 +1191,13 @@ class SnapshotStoreSpec extends SparkSpec {
       "content parity with the logical merge")
     // the new version is STILL z-ordered: both z-columns prune and read
     // exactly, including rows in the rewritten (re-z-ordered) slice
-    val (_, skipA2) = ss.pruneFilesAny("t", 2L, "a", 3000L, 3200L)
-    val (_, skipB2) = ss.pruneFilesAny("t", 2L, "b", 0L, 200L)
+    val (_, skipA2) = ss.pruneFiles("t", 2L, "a", 3000L, 3200L)
+    val (_, skipB2) = ss.pruneFiles("t", 2L, "b", 0L, 200L)
     assert(skipA2.nonEmpty && skipB2.nonEmpty,
       s"post-merge pruning must bite (a=${skipA2.size}, b=${skipB2.size})")
-    assert(rows3(ss.readVersionWhereAny("t", 2L, "a", 0L, 30L)) ===
+    assert(rows3(ss.readVersionWhere("t", 2L, "a", 0L, 30L)) ===
       rows3(target.filter(col("a").between(0L, 30L))))
-    assert(rows3(ss.readVersionWhereAny("t", 2L, "b", 0L, 200L)) ===
+    assert(rows3(ss.readVersionWhere("t", 2L, "b", 0L, 200L)) ===
       rows3(target.filter(col("b").between(0L, 200L))))
     // metadata-only stats survive the merge (reused rows carry counts)
     assert(ss.statsFromZones("t", 2L).head().getAs[Long]("n_rows")
@@ -1132,7 +1230,7 @@ class SnapshotStoreSpec extends SparkSpec {
       "the fold is content-preserving")
     assert(ss.changesBetween("t", 5L, 6L).isEmpty,
       "the changelog must skip the content-preserving fold")
-    val (_, skipB3) = ss.pruneFilesAny("t", 6L, "b", 0L, 200L)
+    val (_, skipB3) = ss.pruneFiles("t", 6L, "b", 0L, 200L)
     assert(skipB3.nonEmpty, "the folded version must stay z-ordered")
     // a vector on a NON-z-column still refuses the fold
     ss.commitDeleteKeys("t", Seq(9L).toDF("m"))
@@ -1397,7 +1495,7 @@ class SnapshotStoreSpec extends SparkSpec {
     zs.commitOverwriteZordered("z", Seq("a", "b"), spark.range(0, 100)
       .select(col("id").as("a"), (col("id") % 10).as("b")))           // v1
     zs.commitDeleteKeys("z", Seq(7L).toDF("a"))                       // v2
-    assert(zs.readVersionWhereAny("z", 2L, "a", 0L, 20L).count() === 20L,
+    assert(zs.readVersionWhere("z", 2L, "a", 0L, 20L).count() === 20L,
       "the multi-column pruned read must merge the vector (21 − 1)")
     val (zv3, _) = zs.compactDeleteKeys("z")
     assert(zv3 === 3L && zs.deleteKeysAt("z", 3L).isEmpty &&
@@ -1769,11 +1867,11 @@ class SnapshotStoreSpec extends SparkSpec {
       === 2003L)
     // BOTH z-columns still prune, and the packed file (k>=5001, c>=501)
     // is skippable on each — the version STAYS z-ordered
-    assert(ss.pruneFilesAny("t", 5L, "k", 0L, 100L)._2.nonEmpty)
-    assert(ss.pruneFilesAny("t", 5L, "c", 0L, 5L)._2.nonEmpty)
-    assert(ss.readVersionWhereAny("t", 5L, "k", 5001L, 5003L).count()
+    assert(ss.pruneFiles("t", 5L, "k", 0L, 100L)._2.nonEmpty)
+    assert(ss.pruneFiles("t", 5L, "c", 0L, 5L)._2.nonEmpty)
+    assert(ss.readVersionWhere("t", 5L, "k", 5001L, 5003L).count()
       === 3L, "the pruned read over the packed rows stays exact")
-    assert(ss.readVersionWhereAny("t", 5L, "c", 7L, 7L).count()
+    assert(ss.readVersionWhere("t", 5L, "c", 7L, 7L).count()
       === ss.readVersion("t", 5L).filter(col("c") === 7L).count())
     // no further debt: NO-OP, nothing committed
     assert(ss.optimizeSmallFiles("t", 1L << 20, 64L << 10) === ((5L, 0, 0)))
@@ -2091,7 +2189,6 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(ss.currentVersion("t") === 2L)
     val meta = java.nio.file.Paths.get(dir, "t", "meta")
     assert(!java.nio.file.Files.exists(meta.resolve("v3.schema")) &&
-      !java.nio.file.Files.exists(meta.resolve("v3.zonekey")) &&
       !java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "t", "zones", "v3")),
       "the refusal must clear every pre-stamped v3 sidecar")
@@ -2550,10 +2647,10 @@ class SnapshotStoreSpec extends SparkSpec {
       .toDF("k", "c", "v")) === 2L)
     assert(ss.statsFromZones("z", 2L).head().getAs[Long]("n_rows")
       === 1001L)
-    assert(ss.pruneFilesAny("z", 2L, "k", 0L, 100L)._2.nonEmpty &&
-      ss.pruneFilesAny("z", 2L, "c", 0L, 5L)._2.nonEmpty,
+    assert(ss.pruneFiles("z", 2L, "k", 0L, 100L)._2.nonEmpty &&
+      ss.pruneFiles("z", 2L, "c", 0L, 5L)._2.nonEmpty,
       "the appended file must prune on both z-columns")
-    assert(ss.readVersionWhereAny("z", 2L, "c", 500L, 500L).count() === 1L)
+    assert(ss.readVersionWhere("z", 2L, "c", 500L, 500L).count() === 1L)
     // plain tables refuse (commitAppend is that path)
     ss.commitOverwrite("p", Seq((1L, "a")).toDF("k", "s"))
     val e = intercept[IllegalArgumentException](
@@ -2632,8 +2729,8 @@ class SnapshotStoreSpec extends SparkSpec {
     val (zv, zreused) = ss.commitDeleteWhere("z", "k < 100 AND c < 10")
     assert(zv === 2L && zreused > 0,
       s"hypercube files without matches must carry by reference: $zreused")
-    assert(ss.pruneFilesAny("z", 2L, "k", -10L, -1L)._2.nonEmpty &&
-      ss.pruneFilesAny("z", 2L, "c", -10L, -1L)._2.nonEmpty,
+    assert(ss.pruneFiles("z", 2L, "k", -10L, -1L)._2.nonEmpty &&
+      ss.pruneFiles("z", 2L, "c", -10L, -1L)._2.nonEmpty,
       "both z-columns must still prune after the mutation")
     assert(ss.readCurrent("z").count() ===
       2000L - spark.range(0L, 2000L).filter(col("id") < 100L &&

@@ -123,7 +123,7 @@ class ZoneStatsSpec extends SparkSpec {
     assert(!ss.lastZoneStatsFromFooters,
       "double stats are NaN-unreliable in footers — must scan")
     val z = sidecar(dir, "dbl", 1)
-    assert(z.agg(min("lo"), max("hi"), sum("n")).head.toSeq
+    assert(z.agg(min("lo__x"), max("hi__x"), sum("n")).head.toSeq
       === Seq(0.0, 148.5, 100L))
     // bloomed table: the bitset needs the data pass
     ss.declareBloom("blm", "id", 64, 3)
@@ -131,7 +131,7 @@ class ZoneStatsSpec extends SparkSpec {
     assert(!ss.lastZoneStatsFromFooters)
     val zb = sidecar(dir, "blm", 1)
     assert(zb.columns.contains("bloom"))
-    assert(zb.agg(min("lo"), max("hi"), sum("n")).head.toSeq
+    assert(zb.agg(min("lo__id"), max("hi__id"), sum("n")).head.toSeq
       === Seq(0L, 49L, 50L))
   }
 
