@@ -446,10 +446,9 @@ object RelOps {
     b.toInt
   }
 
-  /** The space-filling Z-VALUE column behind the Z-ordered layouts
-    * (TableStore.overwriteZordered and the versioned
-    * SnapshotStore.commitOverwriteZordered share this ONE definition):
-    * each cluster column maps to a 2^bits equi-depth bucket rank
+  /** The space-filling Z-VALUE column behind the Z-ordered layout
+    * (SnapshotStore.commitOverwriteZordered and the z-order re-clustering
+    * of its rewrites): each cluster column maps to a 2^bits equi-depth bucket rank
     * (approxQuantile boundaries — skew cannot collapse buckets), the
     * bucket bits interleave into one long. One quantile action per
     * column at plan time (a tiny driver array of cuts); the bucket

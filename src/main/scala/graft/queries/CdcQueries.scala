@@ -103,6 +103,17 @@ object CdcQueries {
     } finally rm(tmp.toFile)
   }
 
+  /** `read` of table `t` at version `v`, after requiring that it opens
+    * fewer files than the version holds: the x109 queries pin that zone
+    * pruning skips files, not only that the pruned read is exact. */
+  private def requirePruned(ss: graft.sources.SnapshotStore, v: Long,
+      read: DataFrame): DataFrame = {
+    val (opened, held) = (read.inputFiles.length, ss.readManifest("t", v).size)
+    require(opened < held,
+      s"zone pruning must skip files: opened $opened of $held")
+    read
+  }
+
   val all: Seq[Query] = Seq(
 
     // X105: snapshot diff summary — classify every key as
@@ -228,37 +239,36 @@ object CdcQueries {
           .orderBy("bucket")
       }),
 
-    // X109: file-level data skipping — range-clustered write (each file
-    // owns a narrow o_totalprice zone), min/max manifest, manifest-pruned
-    // range read (the scan never lists non-intersecting files; the
-    // Delta/Iceberg zone-map pattern over vanilla parquet). The oracle
-    // computes the same range aggregate from the raw table, so a hash
-    // match proves pruning loses no rows; DataSkippingSpec pins that
-    // files actually get skipped. Same temp-table + eager-summary
-    // lifecycle as x108.
+    // X109: file-level data skipping — a range-clustered versioned
+    // commit (each file owns a narrow o_totalprice zone, recorded in the
+    // same commit's zone sidecar) and a zone-pruned range read (the scan
+    // never lists non-intersecting files; the Delta/Iceberg zone-map
+    // pattern over vanilla parquet). The oracle computes the same range
+    // aggregate from the raw table, so a hash match proves pruning loses
+    // no rows; the require pins that files actually get skipped. Same
+    // temp-table + eager-summary lifecycle as x108.
     Query("x109_data_skipping",
       Some("""SELECT count(*) AS n,
              |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS total
              |FROM orders WHERE o_totalprice BETWEEN 100000 AND 200000""".stripMargin),
       env => withTempTableSummary(env.spark, "graft_x109_") { dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
-        store.overwriteClustered("t",
-          env.orders.select("o_orderkey", "o_totalprice"),
-          "o_totalprice", numFiles = 16)
-        store.buildManifest("t", "o_totalprice")
-        store.skippingRead("t", "o_totalprice", 100000.0, 200000.0)
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
+        ss.commitOverwriteKeyed("t", "o_totalprice",
+          env.orders.select("o_orderkey", "o_totalprice"), numFiles = 16)
+        requirePruned(ss, 1L,
+            ss.readVersionWhere("t", 1L, "o_totalprice", 100000.0, 200000.0))
           .agg(count(lit(1)).as("n"),
             round(sum(col("o_totalprice").cast("decimal(18,4)"))
               .cast("double"), 2).as("total"))
       }),
 
-    // X109b: MULTI-column zone skipping — the manifest carries min/max
-    // for several columns (what Delta/Iceberg per-file stats hold) and
-    // the read prunes on the CONJUNCTION of a price range and a key
-    // range: a file survives only if every predicate's range intersects
-    // its zone, so two predicates skip what neither alone could (the
-    // file-count claim is pinned in DataSkippingSpec on correlated
-    // columns; here the oracle pins exactness of the conjunctive read).
+    // X109b: MULTI-column zone skipping — the zone sidecar of a z-ordered
+    // commit carries min/max for both columns (what Delta/Iceberg per-file
+    // stats hold) and the read prunes on the CONJUNCTION of a price range
+    // and a key range: a file survives only if every predicate's range
+    // intersects its zone, so two predicates skip what neither alone
+    // could (the file-count claim is pinned in DataSkippingSpec; here the
+    // oracle pins exactness of the conjunctive read).
     Query("x109b_multi_skipping",
       Some("""SELECT count(*) AS n,
              |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS total,
@@ -267,14 +277,12 @@ object CdcQueries {
              |WHERE o_totalprice BETWEEN 100000 AND 200000
              |  AND o_orderkey BETWEEN 10000 AND 100000""".stripMargin),
       env => withTempTableSummary(env.spark, "graft_x109b_") { dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
-        store.overwriteClustered("t",
-          env.orders.select("o_orderkey", "o_totalprice"),
-          "o_totalprice", numFiles = 16)
-        store.buildManifestMulti("t", Seq("o_totalprice", "o_orderkey"))
-        store.skippingReadMulti("t", Seq(
-            ("o_totalprice", 100000.0, 200000.0),
-            ("o_orderkey", 10000L, 100000L)))
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
+        ss.commitOverwriteZordered("t", Seq("o_totalprice", "o_orderkey"),
+          env.orders.select("o_orderkey", "o_totalprice"), numFiles = 16)
+        requirePruned(ss, 1L, ss.readVersionWherePredicate("t", 1L,
+            "o_totalprice BETWEEN 100000 AND 200000 " +
+              "AND o_orderkey BETWEEN 10000 AND 100000"))
           .agg(count(lit(1)).as("n"),
             round(sum(col("o_totalprice").cast("decimal(18,4)"))
               .cast("double"), 2).as("total"),
@@ -332,20 +340,19 @@ object CdcQueries {
     // and a range predicate on EITHER column prunes files — here the
     // pruned read filters on o_orderkey alone, the predicate a linear
     // price-clustering can never skip on (DataSkippingSpec pins the
-    // file-count asymmetry; this oracle pins that the z-rewrite + pruned
-    // read lose no rows).
+    // file-count asymmetry; this oracle pins that the z-ordered commit +
+    // pruned read lose no rows).
     Query("x109c_zorder_skipping",
       Some("""SELECT count(*) AS n,
              |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS total,
              |  min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
              |FROM orders WHERE o_orderkey BETWEEN 2000 AND 7000""".stripMargin),
       env => withTempTableSummary(env.spark, "graft_x109c_") { dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
-        store.overwriteZordered("t",
-          env.orders.select("o_orderkey", "o_totalprice"),
-          Seq("o_totalprice", "o_orderkey"), numFiles = 16)
-        store.buildManifestMulti("t", Seq("o_totalprice", "o_orderkey"))
-        store.skippingReadMulti("t", Seq(("o_orderkey", 2000L, 7000L)))
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
+        ss.commitOverwriteZordered("t", Seq("o_totalprice", "o_orderkey"),
+          env.orders.select("o_orderkey", "o_totalprice"), numFiles = 16)
+        requirePruned(ss, 1L,
+            ss.readVersionWhere("t", 1L, "o_orderkey", 2000L, 7000L))
           .agg(count(lit(1)).as("n"),
             round(sum(col("o_totalprice").cast("decimal(18,4)"))
               .cast("double"), 2).as("total"),
@@ -354,13 +361,13 @@ object CdcQueries {
       }),
 
     // X109d: METADATA-only aggregate — count/min/max served from the zone
-    // manifest with zero data files opened (TableStore.statsOnlyAggregate;
+    // sidecar with zero data files opened (SnapshotStore.statsFromZones;
     // the Iceberg/Delta stats-rewrite fast path). The oracle recomputes
     // the same aggregate from the raw rows, so a hash match proves the
-    // per-file stats compose to the exact table-level answer. Includes an
-    // append + refreshManifestMulti cycle so the freshness gate (a stale
-    // manifest fails loudly, never silently wrong) is exercised on the
-    // oracle path too: the aggregate must reflect the appended rows.
+    // per-file stats compose to the exact table-level answer. A zoned
+    // append follows the z-ordered commit: its zone rows land in the same
+    // commit as its files, so the aggregate must reflect the appended
+    // rows with no refresh step.
     Query("x109d_stats_only_agg",
       Some("""WITH t AS (
              |  SELECT o_orderkey, o_totalprice FROM orders
@@ -373,15 +380,20 @@ object CdcQueries {
              |  max(o_totalprice) AS max_o_totalprice
              |FROM t""".stripMargin),
       env => withTempTableSummary(env.spark, "graft_x109d_") { dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
-        val base = env.orders.select("o_orderkey", "o_totalprice")
-        store.overwriteClustered("t", base, "o_totalprice", numFiles = 16)
-        store.buildManifestMulti("t", Seq("o_orderkey", "o_totalprice"))
-        store.append("t",
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
+        ss.commitOverwriteZordered("t", Seq("o_orderkey", "o_totalprice"),
+          env.orders.select("o_orderkey", "o_totalprice"), numFiles = 16)
+        val v = ss.commitAppendZoned("t",
           env.orders.filter(col("o_orderstatus") === "F")
             .select("o_orderkey", "o_totalprice"))
-        store.refreshManifestMulti("t", Seq("o_orderkey", "o_totalprice"))
-        store.statsOnlyAggregate("t", Seq("o_orderkey", "o_totalprice"))
+        val st = ss.statsFromZones("t", v)
+        require(st.inputFiles.forall(!_.contains("/data/")),
+          "metadata-only stats must never open a data file")
+        st.select(col("n_rows"),
+          col("lo__o_orderkey").as("min_o_orderkey"),
+          col("hi__o_orderkey").as("max_o_orderkey"),
+          col("lo__o_totalprice").as("min_o_totalprice"),
+          col("hi__o_totalprice").as("max_o_totalprice"))
       }),
 
     // X141: snapshot/time-travel reads — the versioned-manifest commit
@@ -542,11 +554,10 @@ object CdcQueries {
     // min / max served WITHOUT opening a data file (require-pinned: the
     // stats plan's inputFiles never touch /data/). Transactionally
     // exact by construction: the zone rows were written in the same
-    // commit as the files they describe, so the TableStore
-    // statsOnlyAggregate freshness gate disappears. Certified at v1 and
-    // again after a CoW merge (reused files carry their counts by
-    // reference); the oracle recomputes both versions' stats from the
-    // data the long way.
+    // commit as the files they describe, so no freshness gate is
+    // needed. Certified at v1 and again after a CoW merge (reused
+    // files carry their counts by reference); the oracle recomputes
+    // both versions' stats from the data the long way.
     Query("x141o_stats_only_versioned",
       Some("""WITH src AS (SELECT o_orderkey AS k,
              |    CAST(o_totalprice AS DECIMAL(18,4)) AS p FROM orders),
@@ -582,8 +593,8 @@ object CdcQueries {
     // of (orderkey × custkey), so a range read on the SECOND column
     // (which a linear orderkey clustering gives zero locality for)
     // still skips files (require-pinned) while staying exact; the
-    // oracle recomputes the range the long way. The z-value is the
-    // same shared definition TableStore's in-place variant uses.
+    // oracle recomputes the range the long way. x109b/c/d take the
+    // same z-ordered commit on (o_totalprice, o_orderkey).
     Query("x141p_zorder_versioned",
       Some("""SELECT count(*) AS n,
              |  count(DISTINCT o_orderkey) AS n_orders,

@@ -21,16 +21,15 @@ object ParquetFooters {
     * (JSON) under, and its reader takes the schema from. */
   val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  /** The data schema Spark's non-merging inference gives a scan of `paths`
-    * (absolute local files or directories), without its job: the Spark
-    * schema in the footer of the first of all their data files in path
-    * order — the file inference reads (a directory contributes every file
-    * below it that Spark's file index lists: `_`/`.` names and
-    * `._COPYING_` files skipped). None, so the caller infers as before,
-    * when the session merges schemas (inference then reads every footer),
-    * a directory holds a parquet summary file (inference would read it
-    * first), there is no data file, or that footer has no Spark schema. */
-  def inferredSchema(spark: SparkSession, paths: Seq[Path]): Option[StructType] = {
+  /** The data files a scan of `paths` (absolute local files or
+    * directories) reads, in path order: a directory contributes every file
+    * below it that Spark's file index lists (`_`/`.` names and
+    * `._COPYING_` files skipped). The first one's footer holds the schema
+    * Spark's non-merging inference gives the scan. None when inference
+    * would read another footer — the session merges schemas (inference
+    * then reads every footer) or a directory holds a parquet summary file
+    * (inference would read it first) — or a path cannot be listed. */
+  def dataFiles(spark: SparkSession, paths: Seq[Path]): Option[Seq[Path]] = {
     def name(p: Path) = p.getFileName.toString
     def summary(p: Path) =
       name(p).startsWith("_metadata") || name(p).startsWith("_common_metadata")
@@ -45,9 +44,17 @@ object ParquetFooters {
       }.filter(c => listed(c) || summary(c)).flatMap(files)
     if (spark.conf.get("spark.sql.parquet.mergeSchema") == "true") None
     else scala.util.Try(paths.flatMap(files)).toOption
-      .filterNot(_.exists(summary)).flatMap(_.minByOption(_.toString))
-      .flatMap(f => sparkSchema(spark, new org.apache.hadoop.fs.Path(f.toUri)))
+      .filterNot(_.exists(summary)).map(_.sortBy(_.toString))
   }
+
+  /** The data schema Spark's non-merging inference gives a scan of `paths`,
+    * without its job: the Spark schema in the footer of the first of
+    * [[dataFiles]] — the file inference reads. None, so the caller infers
+    * as before, when [[dataFiles]] is None, there is no data file, or that
+    * footer has no Spark schema. */
+  def inferredSchema(spark: SparkSession, paths: Seq[Path]): Option[StructType] =
+    dataFiles(spark, paths).flatMap(_.headOption)
+      .flatMap(f => sparkSchema(spark, new org.apache.hadoop.fs.Path(f.toUri)))
 
   /** The Spark schema in `file`'s footer, reading the footer alone
     * without its row groups (opening a ParquetFileReader costs ~15x more).

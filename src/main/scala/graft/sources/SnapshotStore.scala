@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Thrown when a committer loses the version-claim race (optimistic
@@ -115,7 +116,7 @@ private[sources] object Clustering {
 
 /** X141: versioned snapshot tables — the ACID-ish commit layer the
   * in-place [[TableStore]] (and the CDC family that rewrites through it,
-  * x105–x109) deliberately lacks. The public Iceberg/Delta idea in its
+  * x105–x108) deliberately lacks. The public Iceberg/Delta idea in its
   * minimal sound form:
   *
   *   `<root>/<table>/data/v<N>/`    immutable parquet file set per commit
@@ -1115,27 +1116,28 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * objects, so `f` must copy what it keeps). */
   private def readOnDriver[T](sidecar: DataFrame, cols: Seq[String])(
       f: org.apache.spark.sql.catalyst.InternalRow => T): Seq[T] = {
-    val read = driverReader(sidecar, cols)
-    sidecar.inputFiles.toSeq.flatMap(read(_).map(f).toVector)
+    val read = driverReader(sidecar.schema, cols)
+    sidecar.inputFiles.toSeq.flatMap(uri => read(
+      new org.apache.hadoop.fs.Path(new java.net.URI(uri))).map(f).toVector)
   }
 
-  /** Spark's own parquet reader of `frame`'s `cols`, called on the
-    * driver: it opens one file (a URI) and returns its rows as read. The
-    * reader reuses its row objects, and closes a file once its rows are
-    * exhausted. */
-  private def driverReader(frame: DataFrame, cols: Seq[String])
-      : String => Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+  /** Spark's own parquet reader of `cols` of files with data schema
+    * `schema`, called on the driver: it opens one file and returns its
+    * rows as read. The reader reuses its row objects, and closes a file
+    * once its rows are exhausted. */
+  private def driverReader(schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[String])
+      : org.apache.hadoop.fs.Path => Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.{FileFormat,
       PartitionedFile}
     val read = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetFileFormat().buildReaderWithPartitionValues(spark,
-        frame.schema, new org.apache.spark.sql.types.StructType(),
-        org.apache.spark.sql.types.StructType(cols.map(frame.schema(_))),
+        schema, new org.apache.spark.sql.types.StructType(),
+        org.apache.spark.sql.types.StructType(cols.map(schema(_))),
         Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConf())
-    uri => {
-      val p = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
+    p => {
       val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getFileStatus(p)
       read(PartitionedFile(InternalRow.empty,
@@ -1220,28 +1222,47 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   }
 
   /** head() of sub `sub` at version `v`. A plain sub's first row is read
-    * on the driver by Spark's own reader, its files in path order, and
-    * no further file is opened once a row is found (a watermark read:
-    * 1-row meta subs). A bucketed sub, or an empty one, goes through
+    * on the driver by Spark's own reader without building a DataFrame:
+    * the files come from the sub's manifest entries, in path order, and
+    * the schema from the first one's footer — the scan and schema
+    * [[readTableVersion]] builds — and no further file is opened once a
+    * row is found (a watermark read: 1-row meta subs). A bucketed sub, an
+    * empty one, or one whose footer lacks the Spark schema goes through
     * [[readTableVersion]]'s head(), so an empty sub throws head()'s
     * standard error. */
   def tinySubHead(name: String, v: Long,
       sub: String): org.apache.spark.sql.Row = {
-    val df = readTableVersion(name, v, sub)
-    val first = df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        val read = driverReader(df, df.columns.toSeq)
-        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToScalaConverter(df.schema)
-        df.inputFiles.sorted.iterator.map(read).find(_.hasNext).map { rows =>
-          val row = toRow(rows.next()).asInstanceOf[org.apache.spark.sql.Row]
-          rows.foreach(_ => ()) // the reader closes the file once drained
-          row
-        }
-      case _ => None
+    val paths = readManifest(name, v).filter(subOf(_).contains(sub))
+      .map(pathOf)
+    def hadoop(f: Path) = new org.apache.hadoop.fs.Path(f.toUri)
+    val first = for {
+      files <- Option.when(paths.nonEmpty && !paths.exists(bucketedEntry))(
+          paths.map(dataDir(name).resolve(_).normalize()))
+        .flatMap(ParquetFooters.dataFiles(spark, _))
+      footer <- files.headOption
+        .flatMap(f => ParquetFooters.sparkSchema(spark, hadoop(f)))
+      schema = nullable(footer)
+      read = driverReader(schema, schema.fieldNames.toSeq)
+      rows <- files.iterator.map(f => read(hadoop(f))).find(_.hasNext)
+    } yield {
+      val row = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(schema)(rows.next())
+        .asInstanceOf[org.apache.spark.sql.Row]
+      rows.foreach(_ => ()) // the reader closes the file once drained
+      row
     }
-    first.getOrElse(df.head())
+    first.getOrElse(readTableVersion(name, v, sub).head())
   }
+
+  /** `t` with every field, element and map value nullable, as a file
+    * scan reads a footer schema (Spark's internal `asNullable`). */
+  private def nullable[T <: DataType](t: T): T = (t match {
+    case s: StructType => StructType(s.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), true)
+    case o => o
+  }).asInstanceOf[T]
 
   private def schemaMarkerPath(name: String, v: Long): Path =
     metaDir(name).resolve(s"v$v.schema")
@@ -2211,10 +2232,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     claim(name, nv)
     def abort(msg: String): Nothing = {
       // release our own claim so the retry isn't wedged on it — and any
-      // schema marker already stamped for nv: a later commit reclaiming
-      // this number would otherwise inherit a stale schema and silently
-      // mis-read every file from then on
-      Files.deleteIfExists(schemaMarkerPath(name, nv))
+      // sidecar already copied or stamped for nv: a later commit
+      // reclaiming this number would otherwise inherit stale zones, a
+      // stale delete vector or a stale schema and silently mis-read
+      deleteVersionSidecars(name, nv)
       Files.deleteIfExists(claimsDir(name).resolve(s"v$nv"))
       throw new ConcurrentCommitException(msg)
     }
@@ -2916,13 +2937,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // exchange-free); mixed dialects union by name — a compaction
     // ([[compactBucketed]]) re-localizes the whole sub when the union
     // should collapse back to one bucketed scan.
-    val bktRef = raw"\.\./\.\./([^/]+)/data/(bkt__.+)".r
-    val (bucketed, plain) = paths.partition(p =>
-      p.startsWith("bkt__") || (p match {
-        case bktRef(_, _) => true; case _ => false
-      }))
+    val (bucketed, plain) = paths.partition(bucketedEntry)
     val byOwner = bucketed.map {
-        case bktRef(t, local) => (t, local)
+        case bucketedRef(t, local) => (t, local)
         case local => (name, local)
       }.groupBy { case (t, local) =>
         (t, local.stripPrefix("bkt__").split("/", 2)(0))
@@ -2937,6 +2954,12 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
             "unreachable: entries non-empty"))))
     pieces.reduce(_.unionByName(_))
   }
+
+  /** A sub entry path that is a bucketed partition: local, or
+    * cross-referenced from its owner (`bucketedRef(owner, local)`). */
+  private val bucketedRef = raw"\.\./\.\./([^/]+)/data/(bkt__.+)".r
+  private def bucketedEntry(p: String): Boolean =
+    p.startsWith("bkt__") || bucketedRef.matches(p)
 
   /** One bucketed sub's partitions read through its OWNER's catalog —
     * the bucketed-scan body shared by local and cross-referenced group
@@ -3068,7 +3091,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         import org.apache.spark.sql.functions._
         val statAggs = cols.flatMap(c =>
           Seq(min(col(c)).as(s"lo__$c"), max(col(c)).as(s"hi__$c")))
-        val prefix = dataDir(name).toString + "/"
+        // input_file_name() is a URI, so the data dir is matched in its
+        // encoded form (a root with [ ] { } encodes them)
+        val prefix = new org.apache.hadoop.fs.Path(dataDir(name).toString)
+          .toUri.getRawPath + "/"
         val aggs = statAggs ++ Seq(count(lit(1)).as("n")) ++
           bloomSpecOf(name).map { case (c, bits, k) =>
             udaf(new graft.functions.BloomAgg(bits, k),
@@ -3080,7 +3106,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
           .agg(aggs.head, aggs.tail: _*)
           // Column ops, not an interpolated expr: the path must never be
           // parsed as SQL text (the constructor guard refuses roots whose
-          // characters would URI-encode inside input_file_name)
+          // characters are ambiguous inside input_file_name)
           .withColumn("f", col("f").substr(
             locate(prefix, col("f")) + lit(prefix.length), lit(1 << 30)))
         // the file list from the footers' row counts — exactly the files
@@ -3419,13 +3445,12 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     (pick, entries.filterNot(pick.toSet))
   }
 
-  /** Zone-pruned range read of a clustered snapshot —
-    * TableStore.skippingRead for versioned tables: only files whose
-    * range on `key` intersects [from, to] are OPENED (the rest are never
-    * listed into the scan); the residual filter still applies, so the
-    * result is exact. With n files z-ordered over 2 columns, a range on
-    * either touches ~sqrt(n) files. Falls back to a filtered full read
-    * when `v` has no zone range for `key`. */
+  /** Zone-pruned range read of a clustered snapshot (X109, X141p): only
+    * files whose range on `key` intersects [from, to] are OPENED (the
+    * rest are never listed into the scan); the residual filter still
+    * applies, so the result is exact. With n files z-ordered over 2
+    * columns, a range on either touches ~sqrt(n) files. Falls back to a
+    * filtered full read when `v` has no zone range for `key`. */
   def readVersionWhere(name: String, v: Long, key: String,
                        from: Any, to: Any): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -3512,10 +3537,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   /** Z-ORDER clustered versioned commit — the multi-column layout
     * investment (Delta OPTIMIZE ZORDER / Iceberg sort-order) on the
     * snapshot store: the write range-partitions + sorts on one
-    * space-filling z-value ([[graft.ops.RelOps.zValueColumn]] — the SAME
-    * definition TableStore's in-place variant uses), so files own small
-    * HYPERCUBES of the value space and a zone read filtering on ANY
-    * clustered column ([[readVersionWhere]]) skips most files — with
+    * space-filling z-value ([[graft.ops.RelOps.zValueColumn]]), so files
+    * own small HYPERCUBES of the value space and a zone read filtering
+    * on ANY clustered column ([[readVersionWhere]]) skips most files — with
     * n files over 2 columns a single-column range touches ~sqrt(n)
     * files where a linear clustering on the other column touches all n.
     * The sidecar carries per-file [lo, hi] for EVERY z-column plus row
@@ -3546,20 +3570,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     v
   }
 
-  /** Translate a SQL predicate into a zone-sidecar SKIP condition
-    * (r18; Delta's data-skipping-on-DELETE shape): a file whose
-    * per-column [lo, hi] ranges make the returned condition FALSE
-    * provably holds no row where the predicate is TRUE, so discovery
-    * may skip it. Only `col <op> literal` comparisons over a CLUSTERED
-    * column translate (`range` maps a data column to its lo/hi zone
-    * columns); the sound degradations are built in — an AND drops an
-    * untranslatable side (the translatable side alone still bounds the
-    * match set), an OR with an untranslatable side refuses the whole
-    * disjunction, anything else (NOT, <>, function calls, column-to-
-    * column) returns None ⇒ no pruning. NULL semantics hold for free:
-    * a comparison can only be TRUE on a non-null value inside the
-    * file's range, and an all-null file's lo/hi are NULL so every
-    * translated comparison evaluates NULL ⇒ skipped, correctly. */
   /** True when comparing a column of `colType` to a literal of
     * `litType` happens IN THE COLUMN'S OWN ORDERING (r18 review fix):
     * the zone lo/hi (and the bloom bitsets) live in the column's
@@ -3623,10 +3633,26 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     }
   }
 
+  /** Translate a SQL predicate into a zone-sidecar SKIP condition
+    * (r18; Delta's data-skipping-on-DELETE shape): a file whose
+    * per-column [lo, hi] ranges make the returned condition FALSE
+    * provably holds no row where the predicate is TRUE, so discovery
+    * may skip it. Only `col <op> literal` comparisons (BETWEEN as its
+    * two bounds) over a CLUSTERED column translate (`range` maps a data
+    * column to its lo/hi zone columns); the sound degradations are built
+    * in — an AND drops an untranslatable side (the translatable side
+    * alone still bounds the match set), an OR with an untranslatable
+    * side refuses the whole disjunction, anything else (NOT — so NOT
+    * BETWEEN —, <>, other function calls, column-to-column) returns
+    * None ⇒ no pruning. NULL semantics hold for free: a comparison can
+    * only be TRUE on a non-null value inside the file's range, and an
+    * all-null file's lo/hi are NULL so every translated comparison
+    * evaluates NULL ⇒ skipped, correctly. */
   private def zoneSkipCondition(predicate: String,
       range: String => Option[(String, String,
         org.apache.spark.sql.types.DataType)]): Option[String] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+      UnresolvedFunction}
     import org.apache.spark.sql.catalyst.expressions._
     def attr(e: Expression): Option[(String, String,
         org.apache.spark.sql.types.DataType)] = e match {
@@ -3678,6 +3704,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
             litSql(b, r._3).map(s => s"(`${r._2}` >= $s)"))
           .orElse(attr(b).flatMap(r =>
             litSql(a, r._3).map(s => s"(`${r._1}` <= $s)")))
+      // the parser leaves `a BETWEEN lo AND hi` as the call between(a,
+      // lo, hi), which Spark evaluates as `a >= lo AND a <= hi`
+      case f: UnresolvedFunction if f.nameParts.length == 1 &&
+          f.nameParts.head.equalsIgnoreCase("between") &&
+          f.arguments.length == 3 =>
+        val Seq(a, lo, hi) = f.arguments
+        walk(And(GreaterThanOrEqual(a, lo), LessThanOrEqual(a, hi)))
       case In(a, vs) if vs.nonEmpty =>
         attr(a).flatMap { r =>
           val ss = vs.map(litSql(_, r._3))
@@ -3857,8 +3890,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * per-column min/max plus the exact row count, touching ZERO data
     * files. Transactionally exact by construction: the zone rows were
     * written in the SAME commit as the files they describe, so there is
-    * no freshness gate to check (the TableStore statsOnlyAggregate
-    * contract, upgraded — its stale-manifest require disappears).
+    * no freshness gate to check (X109d, X141o).
     * Refuses loudly when the version has entries without zone rows (a
     * plain append's dir — stats would silently undercount; compact
     * first) or zone rows without row counts (a pre-counts layout). The

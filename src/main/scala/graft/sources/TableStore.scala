@@ -167,10 +167,10 @@ final class TableStore(spark: SparkSession, root: String) {
   def applyChangesPartitioned(name: String, key: String, partCol: String,
       upserts: DataFrame, deletes: DataFrame): Long = {
     // Guard the layout contract up front: called against a table written
-    // FLAT (overwrite/overwriteClustered), the dynamic-overwrite
-    // partitionBy write below would ADD partCol=... dirs while the old
-    // root-level parquet files remain — silently duplicating every
-    // untouched row on subsequent reads. Fail fast instead.
+    // FLAT (overwrite), the dynamic-overwrite partitionBy write below
+    // would ADD partCol=... dirs while the old root-level parquet files
+    // remain — silently duplicating every untouched row on subsequent
+    // reads. Fail fast instead.
     requirePartitionedLayout(name, partCol)
     // pinned: each side feeds touched-derivation, the key anti-join, and
     // (upserts) the union — and the write replaces files their lineage
@@ -250,298 +250,13 @@ final class TableStore(spark: SparkSession, root: String) {
         "merge on a flat table would duplicate every untouched row)")
   }
 
-  /** File-level data-skipping manifest: (file, min, max, n_rows) per
-    * parquet file for `statsCol` — the min/max zone map a table format
-    * (Delta/Iceberg) keeps in its metadata, expressed as one aggregate
-    * over `input_file_name()`. Build it ONCE after a clustered write
-    * (`overwriteClustered`) and persist it as `<name>__manifest_<col>`;
-    * at 100 TB the manifest is thousands of rows where the table is
-    * billions, and maintaining it incrementally per written file is the
-    * table format's job — this path-based engine rebuilds on rewrite. */
-  def buildManifest(name: String, statsCol: String): DataFrame = {
-    val m = canonZones(zoneRows(read(name), Seq(statsCol), flat = true))
-    overwrite(manifestName(name, statsCol), m)
-    read(manifestName(name, statsCol))
-  }
-
-  /** Multi-column zone manifest: one row per file carrying min/max for
-    * EVERY stats column (`min_<col>`/`max_<col>`) plus the row count —
-    * what a table format's per-file column statistics hold. Real tables
-    * skip on several columns at once (a date AND a key); the single-col
-    * manifest forces a choice. Stored as `<name>__zonemap`; read it back
-    * with skippingReadMulti, refresh incrementally with
-    * refreshManifestMulti. */
-  def buildManifestMulti(name: String, statsCols: Seq[String]): DataFrame = {
-    require(statsCols.nonEmpty, "need at least one stats column")
-    val m = canonZones(zoneRows(read(name), statsCols, flat = false))
-    overwrite(zonemapName(name), m)
-    read(zonemapName(name))
-  }
-
-  /** Materialize a zones frame driver-side with canonical 'file' paths —
-    * input_file_name() percent-encodes and echoes back any glob escapes
-    * the scan's input paths carried, so the stored strings must be
-    * normalized once at write time or identity comparisons and later
-    * literal reads break under glob-metachar roots. Bounded by FILE
-    * count (the same cardinality skippingRead collects). */
-  private def canonZones(zones: DataFrame): DataFrame = {
-    val idx = zones.schema.fieldIndex("file")
-    val rows = zones.collect().map { r =>
-      org.apache.spark.sql.Row.fromSeq(
-        r.toSeq.updated(idx, canonPath(r.getString(idx))))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1), zones.schema)
-  }
-
-  /** Per-file zone aggregation: `flat` keeps the legacy single-column
-    * (min_v, max_v) names the x109 surface and specs pin; multi-column
-    * zones use min_<col>/max_<col>. */
-  private def zoneRows(df: DataFrame, statsCols: Seq[String],
-      flat: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{count, input_file_name, lit, max, min}
-    val aggs = statsCols.flatMap { c =>
-      val (mn, mx) = if (flat) ("min_v", "max_v") else (s"min_$c", s"max_$c")
-      Seq(min(col(c)).as(mn), max(col(c)).as(mx))
-    } :+ count(lit(1)).as("n_rows")
-    df.groupBy(input_file_name().as("file")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  private def manifestName(name: String, statsCol: String) =
-    s"${name}__manifest_$statsCol"
-
-  private def zonemapName(name: String) = s"${name}__zonemap"
-
-  /** Percent-decode a path string (%XX → char). `input_file_name()`
-    * URL-encodes paths while `DataFrame.inputFiles` does not, so file
-    * identity must be compared on DECODED forms or a store root with a
-    * space/percent would make every manifested file look new forever
-    * (duplicated zones → double-counted reads). Same decoder family as
-    * CdcOps.unescapePathName. */
-  private def decodePath(s: String): String = graft.ops.CdcOps.unescapePathName(s)
-
   /** Hadoop's path resolution glob-expands every path handed to
-    * spark.read, so a file list fed back verbatim from a manifest could
-    * fail to resolve (or match unintended files) when the store root
-    * contains glob metacharacters like [ ] { } * ?. Backslash-escape
-    * them so each manifest entry matches exactly one literal file —
-    * the same discipline decodePath applies for identity comparison. */
+    * spark.read, so a store root containing glob metacharacters like
+    * [ ] { } * ? would resolve to the wrong directory (or nothing).
+    * Backslash-escape them so a read path matches exactly one literal
+    * directory. */
   private def escapeGlob(s: String): String =
     s.replaceAll("([\\\\\\[\\]{}*?])", "\\\\$1")
-
-  /** Canonical on-disk form of a path string produced by
-    * input_file_name() or DataFrame.inputFiles: percent-decode, then drop
-    * the backslash escapes OUR OWN escapeGlob added to the scan's input
-    * paths (Spark echoes them back inside the reported file names).
-    * Without this, a manifest refreshed under a glob-metachar store root
-    * stores entries like `v\[1\]` that neither match buildManifest's
-    * entries nor resolve on disk. */
-  private def canonPath(s: String): String =
-    decodePath(s).replaceAll("\\\\([\\\\\\[\\]{}*?])", "$1")
-
-  /** Manifest 'file' strings resolve to exactly one literal file:
-    * canonicalize, then glob-escape for the read. */
-  private def literalPath(s: String): String = escapeGlob(canonPath(s))
-
-  /** Incremental manifest maintenance: compute zones ONLY for files the
-    * manifest does not know yet (appendKeyed and streaming sinks add
-    * files per batch) and append those rows — the per-commit metadata
-    * update a table format performs, without rescanning the manifested
-    * files. Zones whose files VANISHED from the table (compaction or a
-    * full rewrite replaced them) are dropped in the same pass — a stale
-    * zone would feed dead paths to skippingRead's file-list scan. One
-    * pruned scan of the new files; surviving manifest rows are untouched
-    * (DataSkippingSpec pins both). Returns the number of new file zones
-    * added. */
-  def refreshManifest(name: String, statsCol: String): Long =
-    refreshZones(name, manifestName(name, statsCol), Seq(statsCol),
-      flat = true)
-
-  /** Incremental refresh of the multi-column zone manifest — same
-    * new-files-only scan / dead-zone drop as refreshManifest, over the
-    * wider per-column schema. */
-  def refreshManifestMulti(name: String, statsCols: Seq[String]): Long =
-    refreshZones(name, zonemapName(name), statsCols, flat = false)
-
-  private def refreshZones(name: String, mName: String,
-      statsCols: Seq[String], flat: Boolean): Long = {
-    val mDf = read(mName)
-    val mSchema = mDf.schema
-    val knownRows = mDf.collect()
-    val known = knownRows.map(r => canonPath(r.getAs[String]("file"))).toSet
-    val allFiles = read(name).inputFiles
-    val live = allFiles.map(canonPath).toSet
-    val newFiles = allFiles.filterNot(f => known.contains(canonPath(f)))
-    val dead = knownRows.filterNot(r =>
-      live.contains(canonPath(r.getAs[String]("file"))))
-    if (dead.nonEmpty) {
-      // rewrite the manifest without the dead zones. Survivors are built
-      // from the ALREADY-COLLECTED rows (bounded by file count): a lazy
-      // read-filter of mName here would be destroyed by the overwrite,
-      // which deletes the very files the scan's lineage lists before the
-      // write job reads them (FAILED_READ_FILE.FILE_NOT_EXIST).
-      val deadKeys = dead.map(r => canonPath(r.getAs[String]("file"))).toSet
-      val survivorRows = knownRows.filterNot(r =>
-        deadKeys.contains(canonPath(r.getAs[String]("file"))))
-      val survivors = spark.createDataFrame(
-        spark.sparkContext.parallelize(survivorRows.toSeq, 1), mSchema)
-      overwrite(mName, survivors)
-    }
-    if (newFiles.isEmpty) 0L
-    else {
-      // scan paths go out literal (canonical + glob-escaped); the zone
-      // rows come back canonicalized before they are stored
-      val zones = canonZones(zoneRows(
-        spark.read.schema(readSchema(name))
-          .parquet(newFiles.map(literalPath).toIndexedSeq: _*),
-        statsCols, flat))
-      zones.write.mode(SaveMode.Append).parquet(path(mName))
-      zones.count()
-    }
-  }
-
-  /** Range-clustered rewrite: repartitionByRange + sortWithinPartitions on
-    * `clusterCol` into `numFiles` files, so each file owns a narrow value
-    * range and the manifest's min/max zones become selective. The layout
-    * investment that makes skippingRead pay — same trade as bucketing,
-    * paid once at write time. */
-  def overwriteClustered(name: String, df: DataFrame, clusterCol: String,
-      numFiles: Int): Long = {
-    val clustered = df.repartitionByRange(numFiles, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-    overwrite(name, clustered)
-  }
-
-  /** Z-order clustered rewrite — the MULTI-column layout investment
-    * (Delta OPTIMIZE ZORDER / Iceberg sort-order pattern): each cluster
-    * column maps to a 2^bits equi-depth bucket rank (approxQuantile
-    * boundaries, so skew cannot collapse buckets), the bucket bits
-    * interleave into one space-filling z-value, and the write
-    * range-partitions + sorts on it. Files then own small HYPERCUBES of
-    * the value space instead of slabs of one column, so a zone-map read
-    * filtering on ANY clustered column — not just the leading one —
-    * skips most files: with n files over 2 columns a single-column
-    * range predicate touches ~sqrt(n) files where a linear clustering
-    * on the other column touches all n (DataSkippingSpec pins this).
-    *
-    * Scale shape: boundaries are one approxQuantile pass collected as a
-    * tiny driver array ((2^bits - 1) doubles per column); the bucket-id
-    * sum-of-comparisons and the shift/or interleave are pure codegen'd
-    * expressions (no UDF, no HOF); the write shuffles ONCE
-    * (repartitionByRange on the z-value). Numeric columns only —
-    * approxQuantile's domain; NULL ranks into bucket 0. */
-  def overwriteZordered(name: String, df: DataFrame, zCols: Seq[String],
-      numFiles: Int, bits: Int = 6): Long = {
-    val clustered = df
-      .withColumn("__z", graft.ops.RelOps.zValueColumn(df, zCols, bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-    overwrite(name, clustered)
-  }
-
-  /** Manifest-pruned range read: select the files whose [min,max] zone
-    * intersects [lo,hi] from the manifest (tiny), read ONLY those, then
-    * apply the exact predicate. On a range-clustered table this skips the
-    * files parquet row-group stats alone cannot — the SCAN never lists
-    * them. Falls back to an empty frame when no zone intersects.
-    * DataSkippingSpec pins fewer-files-read + result equality with the
-    * full-scan filter.
-    *
-    * Driver-memory bound at 100 TB file counts: the zone FILTER runs
-    * distributed (the manifest is a parquet table), and the surviving
-    * paths are collected only when there are at most `maxFileList` of
-    * them — the regime where an explicit file list beats a directory
-    * scan. Past the cap the read degrades to the plain table read plus
-    * the exact predicate: Spark's own (distributed, parallel-listing)
-    * directory scan with parquet row-group stats doing the intra-file
-    * pruning the clustered layout set up — when most zones survive,
-    * most files get read either way, so enumerating them buys nothing.
-    * Net: driver footprint is O(min(survivors, maxFileList)), strictly
-    * below the O(all files) InMemoryFileIndex any plain read already
-    * pays; it never balloons with table growth. */
-  def skippingRead(name: String, statsCol: String, lo: Any, hi: Any,
-      maxFileList: Int = 100000): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val surviving = read(manifestName(name, statsCol))
-      .filter(col("max_v") >= lit(lo) && col("min_v") <= lit(hi))
-      .select("file")
-    prunedScan(name, surviving, maxFileList)
-      .filter(col(statsCol) >= lit(lo) && col(statsCol) <= lit(hi))
-  }
-
-  /** Conjunctive manifest-pruned read: keep a file only if EVERY
-    * predicate's [lo,hi] range intersects that column's zone — the
-    * multi-predicate skip a table format performs against its per-file
-    * column stats. Each extra predicate can only shrink the file list
-    * (intersection of per-column survivors), so a query filtering on
-    * date AND key skips what neither filter alone could. Exact
-    * predicates re-apply after the pruned scan, as in skippingRead. */
-  def skippingReadMulti(name: String,
-      predicates: Seq[(String, Any, Any)],
-      maxFileList: Int = 100000): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    require(predicates.nonEmpty, "need at least one predicate")
-    val zoneCond = predicates.map { case (c, lo, hi) =>
-      col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
-    }.reduce(_ && _)
-    val surviving = read(zonemapName(name)).filter(zoneCond).select("file")
-    predicates.foldLeft(prunedScan(name, surviving, maxFileList)) {
-      case (df, (c, lo, hi)) =>
-        df.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
-    }
-  }
-
-  /** Shared scan builder for the skipping reads: collect the surviving
-    * file paths only when there are at most `maxFileList` (the cap is
-    * checked by fetching cap+1 paths, so the driver never holds more
-    * than that regardless of how many zones survive); otherwise fall
-    * back to the plain table read and let the exact predicates prune.
-    * Empty survivor set → statically-empty frame, no scan at all. */
-  private def prunedScan(name: String, surviving: DataFrame,
-      maxFileList: Int): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val probe = surviving.limit(maxFileList + 1)
-      .collect().map(r => literalPath(r.getString(0)))
-    if (probe.isEmpty) read(name).filter(lit(false))
-    else if (probe.length > maxFileList) read(name)
-    else spark.read.schema(readSchema(name)).parquet(probe.toIndexedSeq: _*)
-  }
-
-  /** X109d: METADATA-only aggregate — count(*)/min/max per stats column
-    * answered from the zone manifest ALONE: no data file is opened. This
-    * is the table-format fast path (Iceberg's and Delta's stats-based
-    * query rewrite) that makes "how many rows, what key range" O(files)
-    * instead of O(rows) — at 100 TB the manifest is thousands of rows
-    * where the table is billions, so the aggregate is effectively free.
-    * Exact by construction: per-file min/max/n_rows come from a full
-    * scan at manifest-build time, and sum/min/max compose losslessly
-    * (min of file minima = table min; both ignore all-null files the
-    * way a direct aggregate ignores null values).
-    *
-    * Correct ONLY against a fresh manifest, so the file listing (still
-    * metadata: read(name).inputFiles, no data IO) is compared against
-    * the manifest's file set and a stale manifest fails loudly instead
-    * of returning silently wrong numbers — run refreshManifestMulti
-    * after appends. */
-  def statsOnlyAggregate(name: String, statsCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{max, min, sum}
-    require(statsCols.nonEmpty, "need at least one stats column")
-    val zones = read(zonemapName(name))
-    val known = zones.select("file").collect()
-      .map(r => canonPath(r.getString(0))).toSet
-    val live = read(name).inputFiles.map(canonPath).toSet
-    require(live == known,
-      s"zone manifest for '$name' is stale " +
-        s"(${(live diff known).size} unmanifested, " +
-        s"${(known diff live).size} dead files) — refreshManifestMulti first")
-    val aggs = statsCols.flatMap { c =>
-      Seq(min(col(s"min_$c")).as(s"min_$c"), max(col(s"max_$c")).as(s"max_$c"))
-    } :+ sum(col("n_rows")).as("n_rows")
-    zones.agg(aggs.head, aggs.tail: _*)
-  }
-
-  private def readSchema(name: String): StructType = read(name).schema
 
   /** Compaction: rewrite the table's accumulated small files into
     * `numFiles` larger ones (same rows, same schema). Append-style

@@ -1,303 +1,253 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sources.TableStore
+import graft.sources.SnapshotStore
 
-/** File-level data skipping: clustered layout → min/max manifest → pruned
-  * range reads. Pins the two claims that matter: the pruned read touches
-  * FEWER files than the table holds, and returns exactly the rows the
-  * full-scan filter returns. */
+/** File-level data skipping on the versioned store: a clustered commit
+  * writes per-file zone stats in the same commit as its files, and range
+  * reads prune against them. Pins the two claims that matter: the pruned
+  * read opens FEWER files than the version holds, and returns exactly the
+  * rows the full-scan filter returns. */
 class DataSkippingSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("skippingRead prunes files on a clustered table and matches the " +
-      "full-scan filter exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_store_")
-    val store = new TableStore(spark, dir.toString)
-    store.overwriteClustered("orders_c",
-      env.orders.select("o_orderkey", "o_totalprice"),
-      "o_totalprice", numFiles = 8)
-    val manifest = store.buildManifest("orders_c", "o_totalprice")
-    assert(manifest.count() === 8) // one zone row per file
-    // zones are selective: clustered files cover disjoint-ish ranges
-    val full = store.read("orders_c")
+  private def store(prefix: String): SnapshotStore = new SnapshotStore(spark,
+    java.nio.file.Files.createTempDirectory(prefix).toString)
+
+  private def orders: DataFrame = env.orders.select("o_orderkey", "o_totalprice")
+
+  private def keys(df: DataFrame): Seq[Long] =
+    df.select("o_orderkey").as[Long].collect().sorted.toSeq
+
+  /** Version `v`'s zone rows, as (file, row) pairs. */
+  private def zoneRows(ss: SnapshotStore, v: Long)
+      : Set[(String, Seq[Any])] =
+    ss.readZones("t", v).get.collect()
+      .map(r => (r.getAs[String]("f"), r.toSeq)).toSet
+
+  test("readVersionWhere prunes files on a clustered version and matches " +
+      "the full-scan filter exactly") {
+    val ss = store("skip_store_")
+    ss.commitOverwriteKeyed("t", "o_totalprice", orders, numFiles = 8)
+    assert(ss.readZones("t", 1L).get.count() === 8) // one zone row per file
+    val full = ss.readVersion("t", 1L)
     val (lo, hi) = (100000.0, 150000.0)
-    val pruned = store.skippingRead("orders_c", "o_totalprice", lo, hi)
+    val pruned = ss.readVersionWhere("t", 1L, "o_totalprice", lo, hi)
     assert(pruned.inputFiles.length < full.inputFiles.length,
       s"no files skipped: ${pruned.inputFiles.length} of ${full.inputFiles.length}")
-    val got = pruned.select("o_orderkey").as[Long].collect().sorted.toSeq
-    val want = full.filter(col("o_totalprice").between(lo, hi))
-      .select("o_orderkey").as[Long].collect().sorted.toSeq
-    assert(got === want)
+    val got = keys(pruned)
+    assert(got === keys(full.filter(col("o_totalprice").between(lo, hi))))
     assert(got.nonEmpty)
   }
 
-  test("refreshManifest adds zones for appended files only; skippingRead " +
-      "sees appended rows") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_store3_")
-    val store = new TableStore(spark, dir.toString)
-    store.overwriteClustered("t3",
-      env.orders.select("o_orderkey", "o_totalprice").filter(col("o_orderkey") < 1000),
-      "o_totalprice", numFiles = 4)
-    store.buildManifest("t3", "o_totalprice")
-    val before = store.read("t3__manifest_o_totalprice")
-      .collect().map(_.toSeq).toSet
-    // keyed append lands new rows in NEW files
-    store.appendKeyed("t3", "o_orderkey",
-      env.orders.select("o_orderkey", "o_totalprice")
-        .filter(col("o_orderkey") >= 1000 && col("o_orderkey") < 1100))
-    val added = store.refreshManifest("t3", "o_totalprice")
-    assert(added > 0)
-    val after = store.read("t3__manifest_o_totalprice")
-      .collect().map(_.toSeq).toSet
-    // old zones byte-identical, new zones appended
-    assert(before.subsetOf(after) && after.size === before.size + added)
-    // a second refresh is a no-op
-    assert(store.refreshManifest("t3", "o_totalprice") === 0L)
-    // pruned read over the whole range now covers appended rows too
-    val all = store.skippingRead("t3", "o_totalprice", 0.0, 1e9)
-      .count()
-    assert(all === store.read("t3").count())
+  test("a zoned append adds zone rows for its own files only; the carried " +
+      "rows are unchanged and pruned reads see the appended rows") {
+    val ss = store("skip_store3_")
+    ss.commitOverwriteKeyed("t", "o_totalprice",
+      orders.filter(col("o_orderkey") < 1000), numFiles = 4)
+    val before = zoneRows(ss, 1L)
+    val v = ss.commitAppendZoned("t",
+      orders.filter(col("o_orderkey") >= 1000 && col("o_orderkey") < 1100))
+    val after = zoneRows(ss, v)
+    val added = after -- before
+    // carried rows byte-identical, one new row per appended file
+    assert(before.subsetOf(after))
+    assert(added.nonEmpty && added.map(_._1) ===
+      (ss.readManifest("t", v).toSet -- ss.readManifest("t", 1L)))
+    assert(after.map(_._1) === ss.readManifest("t", v).toSet)
+    // a pruned read over the whole range covers the appended rows too
+    assert(ss.readVersionWhere("t", v, "o_totalprice", 0.0, 1e9).count()
+      === ss.readVersion("t", v).count())
   }
 
-  test("refreshManifest survives a full rewrite: dead zones dropped, new " +
-      "zones added, pruned reads stay exact") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_store4_")
-    val store = new TableStore(spark, dir.toString)
-    store.overwriteClustered("t4",
-      env.orders.select("o_orderkey", "o_totalprice"),
-      "o_totalprice", numFiles = 6)
-    store.buildManifest("t4", "o_totalprice")
-    // compaction replaces EVERY file: all manifest zones go dead at once —
-    // the branch that must not read the manifest while overwriting it
-    store.compact("t4", numFiles = 2)
-    val added = store.refreshManifest("t4", "o_totalprice")
-    assert(added === 2) // one zone per compacted file
-    val manifest = store.read("t4__manifest_o_totalprice")
-    assert(manifest.count() === 2) // dead zones gone, only live files remain
-    val live = store.read("t4").inputFiles.map(_.replaceAll("^file:/+", "/")).toSet
-    // every manifest entry points at a live file (decoded comparison)
-    val manifested = manifest.select("file").collect()
-      .map(r => graft.ops.CdcOps.unescapePathName(r.getString(0))
-        .replaceAll("^file:/+", "/")).toSet
-    assert(manifested === live)
-    // pruned read on the post-compaction manifest is still exact
+  test("a full rewrite's zones cover exactly the live files: no zone row " +
+      "of a replaced file survives, and pruned reads stay exact") {
+    val ss = store("skip_store4_")
+    ss.commitOverwriteKeyed("t", "o_totalprice", orders, numFiles = 6)
+    // compaction replaces EVERY file
+    val v = ss.compactKeyed("t", "o_totalprice", numFiles = 2)
+    val zoned = zoneRows(ss, v).map(_._1)
+    assert(zoned.size === 2) // one zone per compacted file
+    assert(zoned === ss.readManifest("t", v).toSet)
+    assert((zoned & ss.readManifest("t", 1L).toSet).isEmpty)
     val (lo, hi) = (100000.0, 150000.0)
-    val got = store.skippingRead("t4", "o_totalprice", lo, hi)
-      .select("o_orderkey").as[Long].collect().sorted.toSeq
-    val want = store.read("t4").filter(col("o_totalprice").between(lo, hi))
-      .select("o_orderkey").as[Long].collect().sorted.toSeq
-    assert(got === want && got.nonEmpty)
+    val got = keys(ss.readVersionWhere("t", v, "o_totalprice", lo, hi))
+    assert(got === keys(ss.readVersion("t", v)
+      .filter(col("o_totalprice").between(lo, hi))))
+    assert(got.nonEmpty)
   }
 
   test("multi-column zonemap: a 2-predicate read skips more files than " +
       "either predicate alone; refresh maintains every column's zones") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_store5_")
-    val store = new TableStore(spark, dir.toString)
-    // two correlated columns (k2 = key + 1000): range-clustering on the
-    // key makes BOTH columns' zones narrow, so each predicate prunes
-    val df = env.orders.select("o_orderkey", "o_totalprice")
-      .withColumn("k2", col("o_orderkey") + 1000)
-    store.overwriteClustered("t5", df, "o_orderkey", numFiles = 8)
-    val manifest = store.buildManifestMulti("t5",
-      Seq("o_orderkey", "k2", "o_totalprice"))
-    assert(manifest.count() === 8)
-    assert(manifest.columns.toSet === Set("file", "n_rows",
-      "min_o_orderkey", "max_o_orderkey", "min_k2", "max_k2",
-      "min_o_totalprice", "max_o_totalprice"))
+    val ss = store("skip_store5_")
+    // two correlated columns (k2 = key + 1000): z-ordering on both makes
+    // BOTH columns' zones narrow, so each predicate prunes
+    val df = orders.withColumn("k2", col("o_orderkey") + 1000)
+    ss.commitOverwriteZordered("t", Seq("o_orderkey", "k2"), df, numFiles = 8)
+    val zones = ss.readZones("t", 1L).get
+    assert(zones.count() === 8)
+    assert(zones.columns.toSet === Set("f", "n",
+      "lo__o_orderkey", "hi__o_orderkey", "lo__k2", "hi__k2"))
     val maxKey = df.agg(max("o_orderkey")).head.getLong(0)
     // predicate A: first ~quarter of keys; predicate B: keys shifted by
     // 1000 covering the second ~quarter — the conjunction intersects in
     // a sliver around the quarter boundary
-    val pA: (String, Any, Any) = ("o_orderkey", 0L, maxKey / 4)
-    val pB: (String, Any, Any) = ("k2", maxKey / 5 + 1000, maxKey / 2 + 1000)
-    val both = store.skippingReadMulti("t5", Seq(pA, pB))
-    val onlyA = store.skippingReadMulti("t5", Seq(pA))
-    val onlyB = store.skippingReadMulti("t5", Seq(pB))
-    val total = store.read("t5").inputFiles.length
-    assert(both.inputFiles.length < math.min(onlyA.inputFiles.length,
-      onlyB.inputFiles.length))
-    assert(onlyA.inputFiles.length < total && onlyB.inputFiles.length < total)
+    val pA = s"o_orderkey BETWEEN 0 AND ${maxKey / 4}"
+    val pB = s"k2 BETWEEN ${maxKey / 5 + 1000} AND ${maxKey / 2 + 1000}"
+    def opened(p: String) = ss.pruneFilesForPredicate("t", 1L, p)._1.size
+    val total = ss.readManifest("t", 1L).size
+    assert(opened(s"$pA AND $pB") < math.min(opened(pA), opened(pB)))
+    assert(opened(pA) < total && opened(pB) < total)
     // result equality with the full-scan conjunction
-    val got = both.select("o_orderkey").as[Long].collect().sorted.toSeq
-    val want = store.read("t5")
+    val got = keys(ss.readVersionWherePredicate("t", 1L, s"$pA AND $pB"))
+    assert(got === keys(ss.readVersion("t", 1L)
       .filter(col("o_orderkey").between(0, maxKey / 4) &&
-        col("k2").between(maxKey / 5 + 1000, maxKey / 2 + 1000))
-      .select("o_orderkey").as[Long].collect().sorted.toSeq
-    assert(got === want && got.nonEmpty)
-    // incremental refresh covers appended files for EVERY column
-    store.appendKeyed("t5", "o_orderkey",
+        col("k2").between(maxKey / 5 + 1000, maxKey / 2 + 1000))))
+    assert(got.nonEmpty)
+    // a zoned append's own zone rows carry EVERY column's range
+    val v = ss.commitAppendZoned("t",
       df.filter(col("o_orderkey") > maxKey - 100)
         .withColumn("o_orderkey", col("o_orderkey") + maxKey))
-    val added = store.refreshManifestMulti("t5",
-      Seq("o_orderkey", "k2", "o_totalprice"))
-    assert(added > 0)
-    val allRows = store.skippingReadMulti("t5",
-      Seq(("o_orderkey", 0L, 10L * maxKey))).count()
-    assert(allRows === store.read("t5").count())
+    val fresh = ss.readZones("t", v).get
+      .filter(!col("f").isin(ss.readManifest("t", 1L): _*))
+    assert(fresh.count() > 0)
+    assert(fresh.filter(col("lo__o_orderkey").isNull ||
+      col("lo__k2").isNull).isEmpty)
+    assert(ss.readVersionWhere("t", v, "o_orderkey", 0L, 10L * maxKey).count()
+      === ss.readVersion("t", v).count())
   }
 
   test("z-order layout: a range predicate on EITHER clustered column " +
       "prunes files; linear clustering prunes only its own column") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_zorder_")
-    val store = new TableStore(spark, dir.toString)
+    val lin = store("skip_linear_")
+    val zord = store("skip_zorder_")
     // o_orderkey and o_totalprice are statistically independent — the
     // case where a single-column sort cannot help the other predicate
-    val df = env.orders.select("o_orderkey", "o_totalprice")
-    store.overwriteClustered("lin", df, "o_totalprice", numFiles = 16)
-    store.overwriteZordered("zord", df, Seq("o_totalprice", "o_orderkey"),
-      numFiles = 16)
-    store.buildManifestMulti("lin", Seq("o_totalprice", "o_orderkey"))
-    store.buildManifestMulti("zord", Seq("o_totalprice", "o_orderkey"))
-    val total = store.read("zord").inputFiles.length
+    lin.commitOverwriteKeyed("t", "o_totalprice", orders, numFiles = 16)
+    zord.commitOverwriteZordered("t", Seq("o_totalprice", "o_orderkey"),
+      orders, numFiles = 16)
+    val total = zord.readManifest("t", 1L).size
     assert(total === 16)
-    val maxKey = df.agg(max("o_orderkey")).head.getLong(0)
-    // predicate on the column the LINEAR table is NOT clustered by
-    val pKey: (String, Any, Any) = ("o_orderkey", 0L, maxKey / 8)
-    // linear-on-price files each span ~the full key range: nothing skips
-    assert(store.skippingReadMulti("lin", Seq(pKey)).inputFiles.length
-      === store.read("lin").inputFiles.length)
+    val maxKey = orders.agg(max("o_orderkey")).head.getLong(0)
+    // a key range on the price-clustered version: nothing skips
+    assert(lin.pruneFiles("t", 1L, "o_orderkey", 0L, maxKey / 8)._2.isEmpty)
+    assert(lin.pruneFiles("t", 1L, "o_totalprice", 100000.0, 150000.0)
+      ._2.nonEmpty)
     // z-ordered files own key×price hypercubes: most files skip on a
     // 1/8-of-domain key slab (z-curve bound: ~sqrt fraction touched)
-    val zKeyFiles = store.skippingReadMulti("zord", Seq(pKey)).inputFiles.length
+    val zKeyFiles = zord.pruneFiles("t", 1L, "o_orderkey", 0L, maxKey / 8)
+      ._1.size
     assert(zKeyFiles * 2 <= total, s"key predicate read $zKeyFiles of $total")
-    // the price predicate still prunes the z table too (both columns win)
-    val pPrice: (String, Any, Any) = ("o_totalprice", 100000.0, 150000.0)
-    val zPriceFiles = store.skippingReadMulti("zord", Seq(pPrice)).inputFiles.length
+    // the price predicate still prunes the z version too (both columns win)
+    val zPriceFiles = zord.pruneFiles("t", 1L, "o_totalprice", 100000.0,
+      150000.0)._1.size
     assert(zPriceFiles < total, s"price predicate read $zPriceFiles of $total")
     // exactness: conjunctive pruned read ≡ full-scan conjunctive filter
-    val got = store.skippingReadMulti("zord", Seq(pKey, pPrice))
-      .select("o_orderkey").as[Long].collect().sorted.toSeq
-    val want = store.read("zord")
+    val got = keys(zord.readVersionWherePredicate("t", 1L,
+      s"o_orderkey BETWEEN 0 AND ${maxKey / 8} AND " +
+        "o_totalprice BETWEEN 100000.0 AND 150000.0"))
+    assert(got === keys(zord.readVersion("t", 1L)
       .filter(col("o_orderkey").between(0L, maxKey / 8) &&
-        col("o_totalprice").between(100000.0, 150000.0))
-      .select("o_orderkey").as[Long].collect().sorted.toSeq
-    assert(got === want && got.nonEmpty)
+        col("o_totalprice").between(100000.0, 150000.0))))
+    assert(got.nonEmpty)
     // the rewrite loses no rows
-    assert(store.read("zord").count() === df.count())
+    assert(zord.readVersion("t", 1L).count() === orders.count())
   }
 
-  test("skippingRead resolves manifest entries literally under a store " +
-      "root containing glob metacharacters") {
+  test("zone entries resolve literally under a store root containing " +
+      "glob metacharacters") {
     val base = java.nio.file.Files.createTempDirectory("skip_glob_")
-    // a root like .../v[1]{2}/ — every manifest 'file' string then
-    // contains characters Hadoop's glob expansion would interpret
+    // a root like .../v[1]{2}/ — every file path then contains
+    // characters Hadoop's glob expansion would interpret
     val dir = base.resolve("v[1]{2}")
     java.nio.file.Files.createDirectories(dir)
-    val store = new TableStore(spark, dir.toString)
-    store.overwriteClustered("tg",
-      env.orders.select("o_orderkey", "o_totalprice")
-        .filter(col("o_orderkey") % 2 === 0),
-      "o_totalprice", numFiles = 4)
-    store.buildManifest("tg", "o_totalprice")
-    val (lo, hi) = (0.0, 1e9)
-    val got = store.skippingRead("tg", "o_totalprice", lo, hi).count()
-    assert(got === store.read("tg").count() && got > 0)
-    // incremental refresh also feeds new-file paths through a read
-    store.appendKeyed("tg", "o_orderkey",
-      env.orders.select("o_orderkey", "o_totalprice")
-        .filter(col("o_orderkey") % 2 === 1).limit(50))
-    assert(store.refreshManifest("tg", "o_totalprice") > 0)
-    assert(store.skippingRead("tg", "o_totalprice", lo, hi).count()
-      === store.read("tg").count())
-  }
-
-  test("maxFileList bounds the driver-side file list: over the cap the " +
-      "read falls back to the plain scan and stays exact") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_cap_")
-    val store = new TableStore(spark, dir.toString)
-    store.overwriteClustered("tc",
-      env.orders.select("o_orderkey", "o_totalprice"),
-      "o_totalprice", numFiles = 8)
-    store.buildManifest("tc", "o_totalprice")
+    val ss = new SnapshotStore(spark, dir.toString)
+    ss.commitOverwriteKeyed("t", "o_totalprice",
+      orders.filter(col("o_orderkey") % 2 === 0), numFiles = 4)
+    assert(ss.readVersionWhere("t", 1L, "o_totalprice", 0.0, 1e9).count()
+      === ss.readVersion("t", 1L).count())
+    // a zoned append feeds its new files' paths through the same reads
+    val v = ss.commitAppendZoned("t",
+      orders.filter(col("o_orderkey") % 2 === 1).limit(50))
+    val all = ss.readVersionWhere("t", v, "o_totalprice", 0.0, 1e9).count()
+    assert(all === ss.readVersion("t", v).count() && all > 0)
     val (lo, hi) = (100000.0, 150000.0)
-    val want = store.read("tc")
-      .filter(col("o_totalprice").between(lo, hi))
-      .select("o_orderkey").as[Long].collect().sorted.toSeq
-    // cap below the surviving-zone count: the driver collects at most
-    // cap+1 paths (here 2), then reads the whole table — every file —
-    // and the exact predicate does the filtering
-    val fallback = store.skippingRead("tc", "o_totalprice", lo, hi,
-      maxFileList = 1)
-    assert(fallback.inputFiles.length === store.read("tc").inputFiles.length)
-    assert(fallback.select("o_orderkey").as[Long].collect().sorted.toSeq
-      === want)
-    // cap above it: the literal pruned list engages and skips files
-    val pruned = store.skippingRead("tc", "o_totalprice", lo, hi,
-      maxFileList = 100)
-    assert(pruned.inputFiles.length < store.read("tc").inputFiles.length)
-    assert(pruned.select("o_orderkey").as[Long].collect().sorted.toSeq
-      === want)
-    // same contract on the multi-column path
-    store.buildManifestMulti("tc", Seq("o_totalprice"))
-    val multiFallback = store.skippingReadMulti("tc",
-      Seq(("o_totalprice", lo, hi)), maxFileList = 1)
-    assert(multiFallback.inputFiles.length
-      === store.read("tc").inputFiles.length)
-    assert(multiFallback.select("o_orderkey").as[Long].collect().sorted.toSeq
-      === want)
+    val pruned = ss.readVersionWhere("t", v, "o_totalprice", lo, hi)
+    assert(pruned.inputFiles.length < ss.readManifest("t", v).size)
+    assert(keys(pruned) === keys(ss.readVersion("t", v)
+      .filter(col("o_totalprice").between(lo, hi))))
   }
 
-  test("statsOnlyAggregate answers count/min/max from the manifest alone " +
+  test("an unzoned plain-append dir is always chosen: the pruned read " +
+      "stays exact and still skips zoned files") {
+    val ss = store("skip_plain_")
+    ss.commitOverwriteKeyed("t", "o_totalprice",
+      orders.filter(col("o_orderkey") % 2 === 0), numFiles = 8)
+    // a plain append carries the zones but adds none for its own dir
+    val v = ss.commitAppend("t", orders.filter(col("o_orderkey") % 2 === 1))
+    val dir = s"v$v"
+    assert(ss.readManifest("t", v).contains(dir))
+    assert(!zoneRows(ss, v).map(_._1).contains(dir))
+    val (lo, hi) = (100000.0, 150000.0)
+    val (pick, skip) = ss.pruneFiles("t", v, "o_totalprice", lo, hi)
+    assert(pick.contains(dir) && skip.nonEmpty)
+    // a range no zoned file holds still opens the unzoned dir
+    assert(ss.pruneFiles("t", v, "o_totalprice", -2.0, -1.0)._1 === Seq(dir))
+    val got = keys(ss.readVersionWhere("t", v, "o_totalprice", lo, hi))
+    assert(got === keys(ss.readVersion("t", v)
+      .filter(col("o_totalprice").between(lo, hi))))
+    assert(got.exists(_ % 2 == 1)) // appended rows are found
+  }
+
+  test("statsFromZones answers count/min/max from the zone sidecar alone " +
       "and matches the full scan") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_store_soa_")
-    val store = new TableStore(spark, dir.toString)
-    store.overwriteClustered("t",
-      env.orders.select("o_orderkey", "o_totalprice"),
-      "o_totalprice", numFiles = 8)
-    store.buildManifestMulti("t", Seq("o_orderkey", "o_totalprice"))
-    val got = store.statsOnlyAggregate("t", Seq("o_orderkey", "o_totalprice"))
-    // the aggregate's scan reads ONLY the zonemap table, never 't' data
-    val scanned = got.queryExecution.executedPlan.collectLeaves()
-      .flatMap(_.toString.linesIterator.take(3)).mkString("\n")
-    assert(got.inputFiles.forall(_.contains("__zonemap")),
-      s"stats aggregate must scan only the manifest, saw: $scanned")
-    val want = store.read("t").agg(
+    val ss = store("skip_store_soa_")
+    ss.commitOverwriteZordered("t", Seq("o_orderkey", "o_totalprice"),
+      orders, numFiles = 8)
+    val got = ss.statsFromZones("t", 1L)
+    // the aggregate reads ONLY the zone sidecar, never a data file
+    assert(got.inputFiles.forall(!_.contains("/data/")),
+      s"stats aggregate must not open a data file: ${got.inputFiles.toSeq}")
+    val want = ss.readVersion("t", 1L).agg(
       count(lit(1)).as("n_rows"),
-      min("o_orderkey").as("min_o_orderkey"),
-      max("o_orderkey").as("max_o_orderkey"),
-      min("o_totalprice").as("min_o_totalprice"),
-      max("o_totalprice").as("max_o_totalprice")).collect()(0)
+      min("o_orderkey").as("lo__o_orderkey"),
+      max("o_orderkey").as("hi__o_orderkey"),
+      min("o_totalprice").as("lo__o_totalprice"),
+      max("o_totalprice").as("hi__o_totalprice")).collect()(0)
     val g = got.collect()(0)
     assert(g.getAs[Long]("n_rows") === want.getAs[Long]("n_rows"))
-    assert(g.getAs[Long]("min_o_orderkey") === want.getAs[Long]("min_o_orderkey"))
-    assert(g.getAs[Long]("max_o_orderkey") === want.getAs[Long]("max_o_orderkey"))
-    assert(g.getAs[Double]("min_o_totalprice") === want.getAs[Double]("min_o_totalprice"))
-    assert(g.getAs[Double]("max_o_totalprice") === want.getAs[Double]("max_o_totalprice"))
+    Seq("lo__o_orderkey", "hi__o_orderkey").foreach(c =>
+      assert(g.getAs[Long](c) === want.getAs[Long](c), c))
+    Seq("lo__o_totalprice", "hi__o_totalprice").foreach(c =>
+      assert(g.getAs[Double](c) === want.getAs[Double](c), c))
   }
 
-  test("statsOnlyAggregate fails loudly on a stale manifest; refresh heals") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_store_soa2_")
-    val store = new TableStore(spark, dir.toString)
-    store.overwriteClustered("t",
-      env.orders.select("o_orderkey", "o_totalprice")
-        .filter(col("o_orderkey") < 1000),
-      "o_totalprice", numFiles = 4)
-    store.buildManifestMulti("t", Seq("o_orderkey"))
-    val before = store.statsOnlyAggregate("t", Seq("o_orderkey")).collect()(0)
-    store.append("t",
-      env.orders.select("o_orderkey", "o_totalprice")
-        .filter(col("o_orderkey") >= 1000 && col("o_orderkey") < 2000))
-    // unmanifested files → the gate must refuse, not silently answer stale
-    val e = intercept[IllegalArgumentException] {
-      store.statsOnlyAggregate("t", Seq("o_orderkey"))
-    }
-    assert(e.getMessage.contains("stale"))
-    store.refreshManifestMulti("t", Seq("o_orderkey"))
-    val after = store.statsOnlyAggregate("t", Seq("o_orderkey")).collect()(0)
+  test("statsFromZones refuses a version with an unzoned plain append; " +
+      "a zoned rewrite heals") {
+    val ss = store("skip_store_soa2_")
+    ss.commitOverwriteKeyed("t", "o_orderkey",
+      orders.filter(col("o_orderkey") < 1000), numFiles = 4)
+    val before = ss.statsFromZones("t", 1L).collect()(0)
+    val v = ss.commitAppend("t",
+      orders.filter(col("o_orderkey") >= 1000 && col("o_orderkey") < 2000))
+    // entries without zone rows → refuse, never silently undercount
+    val e = intercept[IllegalArgumentException](ss.statsFromZones("t", v))
+    assert(e.getMessage.contains("plain append"))
+    val healed = ss.compactKeyed("t", "o_orderkey", numFiles = 4)
+    val after = ss.statsFromZones("t", healed).collect()(0)
+    assert(after.getAs[Long]("n_rows") === ss.readVersion("t", healed).count())
     assert(after.getAs[Long]("n_rows") > before.getAs[Long]("n_rows"))
-    assert(after.getAs[Long]("max_o_orderkey") >= 1000L)
+    assert(after.getAs[Long]("hi__o_orderkey") >= 1000L)
   }
 
-  test("skippingRead outside every zone returns empty without failing") {
-    val dir = java.nio.file.Files.createTempDirectory("skip_store2_")
-    val store = new TableStore(spark, dir.toString)
-    store.overwriteClustered("orders_c2",
-      env.orders.select("o_orderkey", "o_totalprice"),
-      "o_totalprice", numFiles = 4)
-    store.buildManifest("orders_c2", "o_totalprice")
-    assert(store.skippingRead("orders_c2", "o_totalprice",
-      -2.0, -1.0).count() === 0)
+  test("readVersionWhere outside every zone opens no file and returns " +
+      "empty without failing") {
+    val ss = store("skip_store2_")
+    ss.commitOverwriteKeyed("t", "o_totalprice", orders, numFiles = 4)
+    assert(ss.pruneFiles("t", 1L, "o_totalprice", -2.0, -1.0)._1.isEmpty)
+    assert(ss.readVersionWhere("t", 1L, "o_totalprice", -2.0, -1.0)
+      .count() === 0)
   }
 }

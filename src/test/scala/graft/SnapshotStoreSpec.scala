@@ -651,6 +651,30 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(rows(ss.readCurrent("t")) === Set((3L, "v3")))
   }
 
+  test("a rollback that aborts after copying the target's sidecars " +
+      "leaves no zones or delete vector for the next claimant of its " +
+      "version number") {
+    val dir = java.nio.file.Files.createTempDirectory("snap_rbabort_")
+    val ss = new SnapshotStore(spark, dir.toString)
+    ss.commitOverwriteKeyed("t", "k", spark.range(0L, 100L)
+      .select(col("id").as("k"), lit("x").as("v")), numFiles = 4)
+    ss.commitDeleteKeys("t", Seq(5L).toDF("k"))                    // v2
+    ss.commitOverwrite("t", Seq((9L, "z")).toDF("k", "v"))         // v3
+    // a leftover dangling link where v4's delete vector lands: the zones
+    // copy lands, the vector copy fails, and the rollback aborts
+    val link = dir.resolve("t/dels/v4")
+    java.nio.file.Files.createSymbolicLink(link, dir.resolve("gone"))
+    intercept[graft.sources.ConcurrentCommitException](ss.rollback("t", 2L))
+    assert(!java.nio.file.Files.exists(dir.resolve("t/zones/v4")),
+      "zones/v4 left")
+    assert(!java.nio.file.Files.isDirectory(link), "dels/v4 left")
+    java.nio.file.Files.delete(link)
+    // the number is free, and its next claimant inherits nothing
+    assert(ss.commitAppend("t", Seq((10L, "y")).toDF("k", "v")) === 4L)
+    assert(ss.readZones("t", 4L).isEmpty && ss.deleteKeysAt("t", 4L).isEmpty)
+    assert(rows(ss.readCurrent("t")) === Set((9L, "z"), (10L, "y")))
+  }
+
   test("X141l: vacuumStale runs beside a live committer — an in-lease " +
       "claim and its staging are untouched and the commit completes; a " +
       "crashed claim reclaims after the lease without quiescing; a " +
@@ -3072,6 +3096,25 @@ class SnapshotStoreSpec extends SparkSpec {
     val zBoth = ss.pruneFilesForPredicate("z", 1L, "k < 100 AND c < 5")._1.size
     assert(zK < zAll, s"a z-column range must prune the hypercubes: $zK/$zAll")
     assert(zBoth <= zK, "both z-columns compound")
+  }
+
+  test("BETWEEN prunes as its two comparisons: k BETWEEN x AND y chooses " +
+      "exactly the files of k >= x AND k <= y; NOT BETWEEN does not prune") {
+    val dir = java.nio.file.Files.createTempDirectory("pbetween_").toString
+    val ss = new SnapshotStore(spark, dir)
+    ss.commitOverwriteKeyed("t", "k", spark.range(0L, 1600L)
+      .select(col("id").as("k"), (col("id") % 7).as("v")), numFiles = 16)
+    def chosen(p: String) = ss.pruneFilesForPredicate("t", 1L, p)._1
+    val between = chosen("k BETWEEN 250 AND 420")
+    assert(between === chosen("k >= 250 AND k <= 420"))
+    assert(between.nonEmpty && between.size < 16,
+      s"BETWEEN must prune: chose ${between.size} of 16")
+    assert(chosen("k NOT BETWEEN 250 AND 420").size === 16)
+    assert(chosen("NOT (k BETWEEN 250 AND 420)").size === 16)
+    // the mutation prunes too, and stays exact
+    val (_, reused) = ss.commitDeleteWhere("t", "k BETWEEN 250 AND 420")
+    assert(reused === 16 - between.size)
+    assert(ss.readCurrent("t").count() === 1600L - 171L)
   }
 
   test("r18 vector fold into predicate mutations (the X141w pattern): " +

@@ -233,4 +233,31 @@ class TinySubSpec extends SparkSpec {
       assert(local.getFileName.toString.endsWith(".zstd.parquet"))
     }
   }
+
+  test("TS9: tinySubHead reads plain, cloned and evolved-schema meta subs " +
+      "from the manifest and footer with 0 jobs, equal to the Spark " +
+      "read's head()") {
+    val dir = tmp()
+    val ss = new SnapshotStore(spark, dir)
+    ss.commitTables("t", overwrites = Map(
+      "data" -> spark.range(5).toDF,
+      "meta" -> graft.ops.RelOps.localLongRow(spark, "src_v" -> 7L)))
+    // evolved: the next meta is wider, and Spark-written (not a literal)
+    ss.commitTables("t", overwrites = Map(
+      "meta" -> spark.range(1).select(lit(8L).as("src_v"),
+        lit("note").as("why"))))
+    // cloned: the clone's meta entry cross-references t's file
+    ss.cloneTable("c", "t")
+    assert(ss.readManifest("c", 1L).exists(_.startsWith("meta:../../t/")))
+    Seq(("t", 1L, Row(7L)), ("t", 2L, Row(8L, "note")),
+        ("c", 1L, Row(8L, "note"))).foreach { case (t, v, want) =>
+      val (head, jobs) = JobCounter(spark.sparkContext)(
+        ss.tinySubHead(t, v, "meta"))
+      assert(jobs.isEmpty, s"$t v$v: tinySubHead started jobs $jobs")
+      val viaSpark = ss.readTableVersion(t, v, "meta")
+      assert(head === viaSpark.head(), s"$t v$v")
+      assert(head.schema === viaSpark.schema, s"$t v$v")
+      assert(head === want, s"$t v$v")
+    }
+  }
 }
