@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * key (term, doc) is tiny. df and the corpus stats (N, total tokens) are
   * scalar-sized; at 100 TB the only corpus-sized job is the one filtered
   * token scan, and a deployment serving many queries uses the persisted
-  * inverted index ([[buildBm25Index]]/[[probeBm25Index]]) instead of
-  * re-tokenizing per query.
+  * inverted index ([[buildBm25IndexVersioned]]/
+  * [[probeBm25IndexVersioned]]) instead of re-tokenizing per query.
   *
   * Numeric discipline (x60's): tf/df/dl cast to double BEFORE arithmetic,
   * every expression left-associated exactly as the oracle SQL writes it,
@@ -36,7 +36,8 @@ object RetrievalOps {
     * stay pinned until the driver GCs the plan. A long-lived session
     * scoring many ad-hoc queries should either drop references promptly
     * (our harness sweeps persistent RDDs between queries) or use the
-    * persisted index ([[buildBm25Index]]/[[probeBm25Index]]), which holds
+    * persisted index ([[buildBm25IndexVersioned]]/
+    * [[probeBm25IndexVersioned]]), which holds
     * no blocks — per-query scoring over a static corpus is exactly what
     * the index exists for. */
   def bm25Scores(docs: DataFrame, idCol: String, textCol: String,
@@ -85,46 +86,22 @@ object RetrievalOps {
       .agg(count(lit(1)).as("n_hit"), round(sum(col("__s")), 6).as("bm25"))
   }
 
-  /** X125b: PERSISTED inverted index — the buildMinhashIndex /
-    * buildNoveltyIndex build-once/probe-many discipline applied to BM25,
-    * closing the gap [[bm25Scores]]'s own scaladoc declares (re-tokenizing
-    * the corpus per query run). Four tables through the store:
-    *   `<name>_postings` (id, term, tf)  — the inverted index proper
-    *   `<name>_dl`       (id, dl)       — doc lengths + the doc registry
-    *   `<name>_stats`    (n, tt)        — one row PER COMMIT; probes sum
-    *   `<name>_dead`     (id)           — tombstones ([[deleteBm25Docs]];
-    *                                      a dead id stays dead until
-    *                                      [[compactBm25Index]] drops its
-    *                                      rows — only then can it re-add)
-    * Probes read postings filtered to the query's terms (parquet pushes
-    * the `term IN (...)` predicate to the scan — the corpus-sized token
-    * scan bm25Scores pays per query becomes a pruned index read bounded
-    * by |terms| · |matching docs|), dl joins only against that bounded tf
-    * side, and the stats fold is additive longs so N commits compose to
-    * exactly the from-scratch totals. Append-friendly plain layout (the
-    * index GROWS per batch, like the minhash index); doc ids must be
-    * unique across corpus and batches. */
-  def buildBm25Index(store: graft.sources.TableStore, name: String,
-                     docs: DataFrame, idCol: String, textCol: String): Unit = {
-    val base = docs.select(col(idCol).as("id"),
-      TextOps.tokens(col(textCol)).as("__t")).localCheckpoint()
-    try {
-      requireUniqueIds(base, "buildBm25Index")
-      store.overwrite(s"${name}_postings", postingsOf(base))
-      store.overwrite(s"${name}_dl",
-        base.select(col("id"), size(col("__t")).cast("long").as("dl")))
-      store.overwrite(s"${name}_stats", statsOf(base))
-      store.overwrite(s"${name}_dead",
-        base.select(col("id")).filter(lit(false)))
-    } finally RelOps.releaseCheckpoint(base)
-  }
-
-  /** Tombstone list; an index written before deletes existed (no `_dead`
-    * table yet) reads as empty rather than failing. */
-  private def deadIds(store: graft.sources.TableStore,
-                      name: String): DataFrame =
-    if (store.exists(s"${name}_dead")) store.read(s"${name}_dead")
-    else store.read(s"${name}_dl").select("id").filter(lit(false))
+  // --- X125b: the persisted inverted index ----------------------------
+  // Four sub-tables of one SnapshotStore group, committed atomically by
+  // the *Versioned functions below (X125d):
+  //   postings (id, term, tf) — the inverted index proper
+  //   dl       (id, dl)       — doc lengths + the doc registry
+  //   stats    (n, tt)        — one row PER COMMIT; probes sum
+  //   dead     (id)           — tombstones (a dead id stays dead until
+  //                             compaction drops its rows — only then
+  //                             can it re-add)
+  // Probes read postings filtered to the query's terms (parquet pushes
+  // the `term IN (...)` predicate to the scan — the corpus-sized token
+  // scan bm25Scores pays per query becomes a pruned index read bounded
+  // by |terms| · |matching docs|), dl joins only against that bounded tf
+  // side, and the stats fold is additive longs so N commits compose to
+  // exactly the from-scratch totals. Doc ids must be unique across
+  // corpus and batches.
 
   private def postingsOf(base: DataFrame): DataFrame =
     base.select(col("id"), explode(col("__t")).as("term"))
@@ -137,7 +114,7 @@ object RetrievalOps {
   /** The index's uniqueness contract, enforced LOUDLY: a batch carrying
     * the same doc id twice would double-count dl and the stats row while
     * keeping them mutually consistent — the one torn shape
-    * [[auditBm25Index]] cannot detect. One agg over the already-
+    * [[auditBm25IndexVersioned]] cannot detect. One agg over the already-
     * checkpointed batch (O(batch)); the registry anti-join only guards
     * against ids indexed in PRIOR commits, not within-batch collisions. */
   private def requireUniqueIds(base: DataFrame, op: String): Unit = {
@@ -149,20 +126,10 @@ object RetrievalOps {
         "dedup the batch (e.g. dropDuplicates) before indexing")
   }
 
-  /** BM25 over the PERSISTED index — same output schema and bit-identical
-    * doubles as [[bm25Scores]] over the indexed corpus (shared
-    * [[scoreMatches]]; stats summed as exact longs before the ONE
-    * division). The corpus text is never re-read. */
-  def probeBm25Index(store: graft.sources.TableStore, name: String,
-                     idCol: String, terms: Seq[String], k1: Double = 1.2,
-                     b: Double = 0.75): DataFrame =
-    probeCore(store.read(s"${name}_stats"),
-      store.read(s"${name}_postings"), store.read(s"${name}_dl"),
-      deadIds(store, name), idCol, terms, k1, b)
-
-  /** The one probe body both index layouts share — the plain TableStore
-    * tables and the versioned SnapshotStore group resolve to the same
-    * four frames, so versioned ≡ plain is parity by construction. */
+  /** The probe body over the index's four frames (any version): the
+    * pruned postings read and tombstone anti-joins feeding the shared
+    * [[scoreMatches]], so probe ≡ [[bm25Scores]] over the same corpus is
+    * parity by construction. */
   private def probeCore(stats: DataFrame, postings: DataFrame,
                         dlTable: DataFrame, dead: DataFrame, idCol: String,
                         terms: Seq[String], k1: Double,
@@ -188,27 +155,13 @@ object RetrievalOps {
     scoreMatches(tf, dl, idCol, nDocs, avgdl, k1, b)
   }
 
-  /** Consistency audit of the index's data tables — detects a TORN
-    * multi-table commit: the build/append/delete operations write
-    * postings, dl and stats as separate appends that are NOT atomic as a
-    * group, so a process dying between them leaves the tables
-    * disagreeing (and the registry anti-join can then make a redelivery
-    * skip or duplicate work). Invariants checked:
+  /** Consistency audit over the index's four frames. Invariants:
     *   - every postings doc id is registered in dl (no orphan postings)
     *   - the additive stats totals equal the dl-derived live totals
     * Returns (consistent, orphanPostingDocs, docDrift, tokenDrift) — all
-    * zero ⟺ consistent. A torn index is repaired by rebuilding from the
-    * corpus (or restoring the store from a snapshot); run this after any
-    * unclean shutdown of an ingestion job before trusting probes. The
-    * VERSIONED layout ([[buildBm25IndexVersioned]] and family) makes
-    * these torn shapes impossible by construction — prefer it for any
-    * index that ingests while serving. */
-  def auditBm25Index(store: graft.sources.TableStore,
-                     name: String): (Boolean, Long, Long, Long) =
-    auditCore(store.read(s"${name}_stats"),
-      store.read(s"${name}_postings"), store.read(s"${name}_dl"),
-      deadIds(store, name))
-
+    * zero ⟺ consistent. A group whose sub-tables were committed
+    * inconsistently by hand (or by a writer bypassing the append/delete
+    * functions) is what these counts expose. */
   private def auditCore(stats: DataFrame, postings: DataFrame,
       dl: DataFrame, dead: DataFrame): (Boolean, Long, Long, Long) = {
     val orphans = postings.select("id").distinct()
@@ -225,106 +178,21 @@ object RetrievalOps {
       orphans, docDrift, tokenDrift)
   }
 
-  /** Tombstone-delete documents from the BM25 index — O(batch): appends
-    * the ids to `<name>_dead` and a NEGATIVE stats row (the additive fold
-    * then yields exactly the surviving corpus's totals, so df/idf/avgdl
-    * all re-derive correctly); postings and dl rows are NOT rewritten —
-    * probes anti-join the broadcast tombstone list. Unknown and
-    * already-dead ids are ignored, so a retried delete adds nothing
-    * (keeping the stats exact). Returns docs actually deleted. After many
-    * deletes, [[compactBm25Index]] bounds the tombstone list again. */
-  def deleteBm25Docs(store: graft.sources.TableStore, name: String,
-                     ids: DataFrame, idCol: String): Long = {
-    val victims = ids.select(col(idCol).as("id")).distinct()
-      .join(store.read(s"${name}_dl"), Seq("id"))
-      .join(deadIds(store, name), Seq("id"), "left_anti")
-      .localCheckpoint()
-    try {
-      val n = victims.count()
-      if (n > 0) {
-        store.append(s"${name}_dead", victims.select("id"))
-        store.append(s"${name}_stats",
-          victims.agg((-count(lit(1))).as("n"),
-            (-coalesce(sum(col("dl")), lit(0L))).as("tt")))
-      }
-      n
-    } finally RelOps.releaseCheckpoint(victims)
-  }
-
-  /** Compaction: physically drop tombstoned docs from postings and dl,
-    * reset the tombstone list, and collapse the stats ledger to one
-    * canonical row over the survivors — the lakehouse compaction step
-    * that re-bounds the probe-side anti-join after heavy churn. Probe
-    * results are UNCHANGED across a compaction (the spec pins it).
-    * Returns surviving doc count. */
-  def compactBm25Index(store: graft.sources.TableStore,
-                       name: String): Long = {
-    val dead = deadIds(store, name)
-    // materialize BEFORE overwriting: the new tables derive from reads of
-    // the very paths being replaced
-    val newDl = store.read(s"${name}_dl")
-      .join(dead, Seq("id"), "left_anti").localCheckpoint()
-    val newPost = store.read(s"${name}_postings")
-      .join(dead, Seq("id"), "left_anti").localCheckpoint()
-    try {
-      store.overwrite(s"${name}_dl", newDl)
-      store.overwrite(s"${name}_postings", newPost)
-      store.overwrite(s"${name}_stats",
-        newDl.agg(count(lit(1)).as("n"),
-          coalesce(sum(col("dl")), lit(0L)).as("tt")))
-      store.overwrite(s"${name}_dead", newDl.select("id").filter(lit(false)))
-      newDl.count()
-    } finally {
-      RelOps.releaseCheckpoint(newDl)
-      RelOps.releaseCheckpoint(newPost)
-    }
-  }
-
-  /** Fold a batch into the BM25 index (ingest commit). Idempotent on doc
-    * id — the anti-join against the dl registry runs BEFORE tokenization,
-    * so a retried batch is never re-tokenized and adds nothing twice
-    * (including its stats row: a fully-duplicate batch appends no rows at
-    * all, keeping the additive stats exact). O(batch) work; the corpus
-    * index is append-only, never rewritten. Returns docs added. */
-  def appendBm25Batch(store: graft.sources.TableStore, name: String,
-                      batch: DataFrame, idCol: String,
-                      textCol: String): Long = {
-    // registry side aliased so an idCol literally named "id" cannot make
-    // the anti-join condition ambiguous
-    val fresh = batch.join(
-      store.read(s"${name}_dl").select(col("id").as("__indexed_id")),
-      col(idCol) === col("__indexed_id"), "left_anti")
-    val base = fresh.select(col(idCol).as("id"),
-      TextOps.tokens(col(textCol)).as("__t")).localCheckpoint()
-    try {
-      requireUniqueIds(base, "appendBm25Batch")
-      val nDocs = base.count()
-      if (nDocs > 0) {
-        store.append(s"${name}_postings", postingsOf(base))
-        store.append(s"${name}_dl",
-          base.select(col("id"), size(col("__t")).cast("long").as("dl")))
-        store.append(s"${name}_stats", statsOf(base))
-      }
-      nDocs
-    } finally RelOps.releaseCheckpoint(base)
-  }
-
   // --- X125d: the BM25 index as ONE versioned multi-table group ---------
 
   /** X125d: the persisted BM25 index routed through
-    * [[graft.sources.SnapshotStore.commitTables]] — the same four logical
-    * tables as the TableStore layout (postings/dl/stats/dead), but every
+    * [[graft.sources.SnapshotStore.commitTables]] — every
     * build/append/delete/compact lands as ONE atomic multi-table commit:
     * all sub-tables' data dirs + one manifest + one pointer swap. A crash
     * ANYWHERE mid-commit leaves the index serving the previous version
-    * with every sub-table mutually consistent — the torn-index shapes
-    * [[auditBm25Index]] exists to detect CANNOT OCCUR here (the audit
-    * stays useful as a cheap invariant check, and must pass at every
-    * version). Commits compose with the store's history: a bad ingest is
-    * one metadata-only rollback away, probes can time-travel to any live
-    * version, and [[graft.sources.SnapshotStore.expireVersions]]/vacuum
-    * bound the storage. Probe cost is identical to the plain layout
-    * (same pruned postings read, shared [[probeCore]]). */
+    * with every sub-table mutually consistent — no commit can tear the
+    * group (a postings append without its dl/stats rows, say), so
+    * [[auditBm25IndexVersioned]] stays a cheap invariant check that must
+    * pass at every version. Commits compose with the store's history: a
+    * bad ingest is one metadata-only rollback away, probes can
+    * time-travel to any live version, and
+    * [[graft.sources.SnapshotStore.expireVersions]]/vacuum bound the
+    * storage. */
   def buildBm25IndexVersioned(ss: graft.sources.SnapshotStore, name: String,
       docs: DataFrame, idCol: String, textCol: String): Long = {
     val v0 = ss.currentVersion(name)
@@ -363,9 +231,11 @@ object RetrievalOps {
       TextOps.tokens(col(textCol)).as("__t")).localCheckpoint()
   }
 
-  /** Fold a batch into the versioned BM25 index — [[appendBm25Batch]]'s
-    * semantics (registry anti-join idempotency, additive stats, O(batch)
-    * work) with the commit made ATOMIC across postings/dl/stats. A fully
+  /** Fold a batch into the versioned BM25 index (ingest commit).
+    * Idempotent on doc id — the anti-join against the dl registry runs
+    * BEFORE tokenization, so a retried batch is never re-tokenized and
+    * adds nothing twice; the stats row is additive and the work
+    * O(batch). The commit is ATOMIC across postings/dl/stats. A fully
     * duplicate batch commits NOTHING (no new version — redelivery leaves
     * even the version history unchanged). The registry read is PINNED
     * and the commit CASes on it (commitTablesAt), so a concurrent commit
@@ -385,11 +255,15 @@ object RetrievalOps {
     } finally RelOps.releaseCheckpoint(base)
   }
 
-  /** Tombstone-delete from the versioned index — [[deleteBm25Docs]]'s
-    * semantics with the dead-list append and the negative stats row in
-    * ONE atomic commit (the pair can no longer tear), CASed on the
-    * pinned read version. Returns docs deleted; a no-op delete commits
-    * no version. */
+  /** Tombstone-delete documents — O(batch): the ids join the `dead`
+    * list and a NEGATIVE stats row lands beside them (the additive fold
+    * then yields exactly the surviving corpus's totals, so df/idf/avgdl
+    * all re-derive), in ONE atomic commit CASed on the pinned read
+    * version; postings and dl rows are not rewritten — probes anti-join
+    * the tombstones. Unknown and already-dead ids are ignored, so a
+    * retried delete adds nothing. Returns docs deleted; a no-op delete
+    * commits no version. After many deletes,
+    * [[compactBm25IndexVersioned]] bounds the tombstone list again. */
   def deleteBm25DocsVersioned(ss: graft.sources.SnapshotStore, name: String,
       ids: DataFrame, idCol: String): Long = {
     val v0 = ss.currentVersion(name)
@@ -435,7 +309,7 @@ object RetrievalOps {
 
   /** Probe the versioned index — optionally TIME-TRAVELED to any live
     * `version` (scores exactly as of that commit). Shared [[probeCore]]:
-    * bit-identical to the plain probe and to [[bm25Scores]] over the
+    * bit-identical to [[bm25Scores]] over the
     * corpus the version represents. */
   def probeBm25IndexVersioned(ss: graft.sources.SnapshotStore, name: String,
       idCol: String, terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,

@@ -357,57 +357,8 @@ object SimilarityOps {
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
 
-  /** PERSISTED MinHash signature index — the build-once / probe-many
-    * discipline of buildIvfIndex applied to near-dup dedup: ingest a NEW
-    * batch against an existing corpus WITHOUT recomputing corpus
-    * signatures (at 100 TB, re-shingling the corpus per batch is the
-    * cost that kills incremental dedup pipelines). Three tables through
-    * the store:
-    *   `<name>_sigs`  (id, shs)         — exact shingle sets, verify side
-    *   `<name>_bands` (id, band, bkey)  — LSH band-bucket keys, probe side
-    *   `<name>_meta`  (shingle_len, bands, rows_per_band)
-    * Probes read bands (24-byte rows) for candidates and touch sigs only
-    * for candidate ids; document text is never re-read. Plain (append-
-    * able) layout: unlike the IVF index, this index GROWS per batch, so
-    * append-friendliness beats the bucketed-join co-location a rewrite-
-    * only layout would buy; the probe-side shuffle moves band keys, not
-    * text. Doc ids must be unique across corpus and batches. */
-  def buildMinhashIndex(store: graft.sources.TableStore, name: String,
-                        df: DataFrame, idCol: String, textCol: String,
-                        shingleLen: Int = 3, bands: Int = 8,
-                        rowsPerBand: Int = 4): Unit = {
-    val sig = minhashAgg(df, idCol, textCol, shingleLen,
-      bands * rowsPerBand).localCheckpoint()
-    try {
-      store.overwrite(s"${name}_sigs", sig.select("id", "shs"))
-      store.overwrite(s"${name}_bands", bandKeysOf(sig, bands, rowsPerBand))
-      store.overwrite(s"${name}_meta",
-        minhashMetaDf(df, shingleLen, bands, rowsPerBand))
-    } finally RelOps.releaseCheckpoint(sig)
-  }
-
-  /** Near-dup pairs INVOLVING the batch: batch-vs-corpus plus
-    * batch-vs-batch, scored with exact Jaccard — exactly the pairs
-    * minhashNearDups(corpus ∪ batch) emits beyond the corpus-only run,
-    * so incremental dedup composes as
-    *   minhashNearDups(union) ≡ minhashNearDups(corpus) ∪ probe(batch)
-    * (pinned in SimilarityOpsSpec and the x31c driver contract; the
-    * bucket census runs over index ∪ batch band rows so the degenerate-
-    * bucket guard sees what the union run would see — equivalence is
-    * conditional only on no bucket crossing maxBucket between the
-    * corpus-only run and the union, the guard's own boundary).
-    * Corpus signatures are READ, never recomputed. */
-  def probeMinhashIndex(store: graft.sources.TableStore, name: String,
-                        batch: DataFrame, idCol: String, textCol: String,
-                        threshold: Double = 0.5,
-                        maxBucket: Int = 4096): DataFrame =
-    probeMinhashCore(store.read(s"${name}_meta").head(),
-      store.read(s"${name}_bands"), store.read(s"${name}_sigs"),
-      batch, idCol, textCol, threshold, maxBucket)
-
-  /** The one probe body both minhash-index layouts share (plain
-    * TableStore tables / versioned SnapshotStore group) — layout parity
-    * by construction, the probeCore discipline from RetrievalOps. */
+  /** The minhash-index probe body over one version's meta row, band
+    * rows and signature sets (see [[probeMinhashIndexVersioned]]). */
   private def probeMinhashCore(meta: org.apache.spark.sql.Row,
       iBands: DataFrame, iSigs: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double,
@@ -442,15 +393,26 @@ object SimilarityOps {
     df.sparkSession.createDataFrame(Seq((shingleLen, bands, rowsPerBand)))
       .toDF("shingle_len", "bands", "rows_per_band")
 
-  /** X31d: the persisted MinHash index routed through
-    * `SnapshotStore.commitTables` — x125d's atomicity for the dedup
-    * family: sigs/bands/meta commit as ONE version (all data dirs + one
-    * manifest + one pointer swap), so a crash mid-build or mid-append
-    * leaves the index serving the previous version with the three
-    * tables mutually consistent (a plain-layout crash between the sigs
-    * and bands appends makes the registry anti-join silently skip the
-    * batch's band rows forever). Probe shares [[probeMinhashCore]] with
-    * the plain layout and time-travels to any live version. */
+  /** X31c/X31d: PERSISTED MinHash signature index — ingest a NEW batch
+    * against an existing corpus WITHOUT recomputing corpus signatures
+    * (at 100 TB, re-shingling the corpus per batch is the cost that
+    * kills incremental dedup pipelines). Three sub-tables:
+    *   `sigs`  (id, shs)         — exact shingle sets, verify side
+    *   `bands` (id, band, bkey)  — LSH band-bucket keys, probe side
+    *   `meta`  (shingle_len, bands, rows_per_band)
+    * Probes read bands (24-byte rows) for candidates and touch sigs only
+    * for candidate ids; document text is never re-read. The index GROWS
+    * per batch, so the sub-tables are plain (appendable) rather than
+    * bucketed. Doc ids must be unique across corpus and batches.
+    *
+    * Routed through `SnapshotStore.commitTables` — x125d's atomicity
+    * for the dedup family: sigs/bands/meta commit as ONE version (all
+    * data dirs + one manifest + one pointer swap), so a crash mid-build
+    * or mid-append leaves the index serving the previous version with
+    * the three tables mutually consistent (two separate sigs and bands
+    * appends could tear between them, and the registry anti-join would
+    * then silently skip the batch's band rows forever). Probes
+    * time-travel to any live version. */
   def buildMinhashIndexVersioned(ss: graft.sources.SnapshotStore,
       name: String, df: DataFrame, idCol: String, textCol: String,
       shingleLen: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): Long = {
@@ -519,9 +481,18 @@ object SimilarityOps {
     } finally RelOps.releaseCheckpoint(sig)
   }
 
-  /** Probe the versioned index, optionally time-traveled to `version` —
-    * near-dup pairs involving the batch, exactly as
-    * [[probeMinhashIndex]] over the corpus that version represents. */
+  /** Near-dup pairs INVOLVING the batch against the index, optionally
+    * time-traveled to `version`: batch-vs-corpus plus batch-vs-batch,
+    * scored with exact Jaccard — exactly the pairs
+    * minhashNearDups(corpus ∪ batch) emits beyond the corpus-only run,
+    * so incremental dedup composes as
+    *   minhashNearDups(union) ≡ minhashNearDups(corpus) ∪ probe(batch)
+    * (pinned in SimilarityOpsSpec and the x31c/x31d driver contracts;
+    * the bucket census runs over index ∪ batch band rows so the
+    * degenerate-bucket guard sees what the union run would see —
+    * equivalence is conditional only on no bucket crossing maxBucket
+    * between the corpus-only run and the union, the guard's own
+    * boundary). Corpus signatures are READ, never recomputed. */
   def probeMinhashIndexVersioned(ss: graft.sources.SnapshotStore,
       name: String, batch: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, maxBucket: Int = 4096,
@@ -531,36 +502,6 @@ object SimilarityOps {
       ss.readTableVersion(name, v, "bands"),
       ss.readTableVersion(name, v, "sigs"),
       batch, idCol, textCol, threshold, maxBucket)
-  }
-
-  /** Fold a probed batch into the index so the NEXT batch dedups against
-    * it too — the ingest loop's commit step. Idempotent on doc id (an
-    * appendKeyed-style anti-join guards both tables), so a retried batch
-    * adds nothing twice. Returns the number of documents added. */
-  def appendMinhashBatch(store: graft.sources.TableStore, name: String,
-                         batch: DataFrame, idCol: String,
-                         textCol: String): Long = {
-    val meta = store.read(s"${name}_meta").head()
-    val (sl, nb, rpb) = (meta.getAs[Int]("shingle_len"),
-      meta.getAs[Int]("bands"), meta.getAs[Int]("rows_per_band"))
-    // anti-join BEFORE signature computation: already-indexed docs don't
-    // even get re-shingled (appendKeyed would compute first, filter after
-    // — and its one-row-per-key dedup would drop band rows anyway)
-    // registry side aliased so an idCol literally named "id" cannot make
-    // the anti-join condition ambiguous
-    val fresh = batch.join(
-      store.read(s"${name}_sigs").select(col("id").as("__indexed_id")),
-      col(idCol) === col("__indexed_id"), "left_anti")
-    val sig = minhashAgg(fresh, idCol, textCol, sl, nb * rpb)
-      .localCheckpoint()
-    try {
-      val n = sig.count()
-      if (n > 0) {
-        store.append(s"${name}_sigs", sig.select("id", "shs"))
-        store.append(s"${name}_bands", bandKeysOf(sig, nb, rpb))
-      }
-      n
-    } finally RelOps.releaseCheckpoint(sig)
   }
 
   /** 64-bit SimHash from a token array: explode tokens, per-bit signed
@@ -777,54 +718,10 @@ object SimilarityOps {
           + 1))
   }
 
-  /** X32f: incremental IVF maintenance — ingest a batch of NEW vectors
-    * into a persisted index WITHOUT refitting the coarse quantizer (the
-    * appendMinhashBatch discipline on the vector side). The batch is
-    * normalized, anti-joined on id against the index (idempotent
-    * re-ingestion), assigned to its nearest EXISTING centroid via the
-    * shared assignCells plan, and appended bucket-aligned — per-batch
-    * cost O(batch · nLists · d) plus one id-column scan of the index;
-    * the corpus vectors are never re-read or re-assigned. Centroids
-    * drift from optimal as the corpus grows — an IVF property, not a
-    * bug: cells only bound the probe set, recall stays pinned by the
-    * nProbe/nLists contracts, and a rebuild is the explicit re-optimize.
-    * batch: (c_id, ce). Returns the vectors actually ingested (0 for a
-    * fully-redundant batch) — the appendMinhashBatch/appendBm25Batch
-    * convention; a post-append index size would cost an O(index) scan
-    * per commit. */
-  def appendIvfBatch(store: graft.sources.TableStore, name: String,
-                     batch: DataFrame): Long = {
-    val spark = batch.sparkSession
-    def l2norm(c: org.apache.spark.sql.Column) = sqrt(aggregate(
-      c, lit(0.0), (acc, v) => acc + v * v))
-    val centroids = store.read(s"${name}_centroids")
-    val nCells = centroids.count().toInt
-    val existing = spark.table(s"${name}_assigned").select("c_id")
-    val fresh = batch.select("c_id", "ce")
-      .join(existing, Seq("c_id"), "left_anti")
-    // assign from the RAW vector (see assignCells), derive the stored
-    // normalized column once at write time. Checkpointed BEFORE the
-    // emptiness probe so the anti-join + assignment run once (not again
-    // inside the write, whose lineage would also re-list the directory
-    // being appended — the TableStore.appendKeyed hazard); released
-    // after the write materializes.
-    val assigned = assignCells(fresh, centroids)
-      .withColumn("cn", l2norm(col("ce")))
-      .withColumn("nv", transform(col("ce"), v => v / col("cn")))
-      .select("c_id", "nv", "cell")
-      .localCheckpoint()
-    // fully-redundant re-ingestion leaves no empty bucket files behind
-    val n = if (assigned.isEmpty) 0L
-            else store.appendBucketed(s"${name}_assigned", assigned,
-              "cell", nCells)
-    RelOps.releaseCheckpoint(assigned)
-    n
-  }
-
   /** The IVF probe plan, shared by the in-session path (ivfCosineTopK)
-    * and the persisted-index path (probeIvfIndex) so the two cannot
-    * drift: rank centroids per query (tiny broadcast cross join), keep
-    * nProbe cells, equi-join the index on cell id, score with the
+    * and the persisted-index path (probeIvfIndexVersioned) so the two
+    * cannot drift: rank centroids per query (tiny broadcast cross join),
+    * keep nProbe cells, equi-join the index on cell id, score with the
     * codegen VecCosine, window top-k. */
   private def ivfProbe(assigned: DataFrame, centroids: DataFrame,
                        queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
@@ -847,30 +744,8 @@ object SimilarityOps {
       .select("q_id", "c_id", "cos_sim", "rn")
   }
 
-  /** X32d: PERSISTED IVF index — the build-once / probe-many layout the
-    * ivfCosineTopK scaladoc promises at cluster scale, made concrete.
-    * Build fits the coarse quantizer ONCE and writes two tables through
-    * the store: `<name>_assigned` (c_id, nv, cell) hash-BUCKETED on cell
-    * (bucket count = nLists) so every probe join reads co-located buckets
-    * with no exchange on the large index side, and `<name>_centroids`
-    * (nLists rows — broadcast at probe time). Probing is a pure read
-    * path: no KMeans, no normalization pass over the corpus, just the
-    * shared ivfProbe plan over the two tables. At 100 TB the build cost
-    * amortizes across every retrieval the index ever serves. */
-  def buildIvfIndex(store: graft.sources.TableStore, name: String,
-                    candidates: DataFrame, nLists: Int = 16,
-                    seed: Long = 42L): Unit = {
-    val (cand, centroids) = fitIvfCentroids(candidates, nLists, seed)
-    store.overwriteBucketed(s"${name}_assigned",
-      assignCells(cand.select("c_id", "ce", "nv"), centroids)
-        .select("c_id", "nv", "cell"), "cell", nLists)
-    store.overwrite(s"${name}_centroids", centroids)
-    // both tables are materialized — the fit-input blocks can go now
-    RelOps.releaseCheckpoint(cand)
-  }
-
-  /** Shared coarse-quantizer fit for the plain and versioned IVF builds
-    * (ONE implementation, the fitSemDedupCentroids discipline). Returns
+  /** The coarse-quantizer fit of the persisted IVF build (the
+    * fitSemDedupCentroids shape). Returns
     * (checkpointed (c_id, ce, nv, v) candidates, (cell, centroid)).
     * Caller releases the checkpoint. */
   private def fitIvfCentroids(candidates: DataFrame, nLists: Int,
@@ -895,15 +770,6 @@ object SimilarityOps {
       .toDF("cell", "centroid")
     (cand, centroids)
   }
-
-  /** Probe a persisted IVF index (see buildIvfIndex). queries:
-    * (q_id, qe). Reads `<name>_assigned` through the session catalog so
-    * the bucket spec applies (a bare path read would see files but no
-    * bucketing). */
-  def probeIvfIndex(store: graft.sources.TableStore, name: String,
-                    queries: DataFrame, k: Int, nProbe: Int = 6): DataFrame =
-    ivfProbe(queries.sparkSession.table(s"${name}_assigned"),
-      store.read(s"${name}_centroids"), queries, k, nProbe)
 
   /** X68: SemDeDup-style semantic deduplication (Abbas et al. 2023,
     * arXiv:2303.09540): k-means the embedding space into nClusters cells,
@@ -984,9 +850,9 @@ object SimilarityOps {
 
   /** The SemDeDup core under a FIXED centroid set — shared by the
     * in-session path ([[semDedup]]), the persisted-index build
-    * ([[buildSemDedupIndex]]) and every from-scratch parity recompute,
-    * so incremental maintenance is parity-by-construction (the x32f
-    * discipline). Returns (c_id, ce, cell, owner, dropped). */
+    * ([[buildSemDedupIndexVersioned]]) and every from-scratch parity
+    * recompute, so incremental maintenance is parity-by-construction
+    * (the x32f discipline). Returns (c_id, ce, cell, owner, dropped). */
   def semDedupWithCentroids(vectors: DataFrame, centroids: DataFrame,
                             tau: Double): DataFrame = {
     graft.functions.VecCosine.register(vectors.sparkSession)
@@ -1007,92 +873,6 @@ object SimilarityOps {
     assigned.select("c_id", "ce", "cell")
       .join(dropped, Seq("c_id"), "left_outer")
       .withColumn("dropped", col("owner").isNotNull)
-  }
-
-  /** X68c: persist a SemDeDup state table for incremental ingestion —
-    * `<name>_centroids` (the frozen quantizer) and `<name>_assigned`
-    * (c_id, ce, cell, owner, dropped) hash-BUCKETED on cell so batch
-    * appends join co-located buckets with no index-side exchange.
-    * DROPPED rows are stored too: a later batch row can be owned by an
-    * already-dropped doc (keep-min-id drops against ANY smaller-id
-    * near-dup, not just survivors), so pruning them would silently
-    * change semantics vs a from-scratch run. */
-  def buildSemDedupIndex(store: graft.sources.TableStore, name: String,
-                         vectors: DataFrame, nClusters: Int, tau: Double,
-                         seed: Long = 42L,
-                         fitSampleRows: Int = 100000): Unit = {
-    val (cand, centroids) = fitSemDedupCentroids(vectors, nClusters, seed,
-      fitSampleRows)
-    store.overwriteBucketed(s"${name}_assigned",
-      semDedupWithCentroids(cand.select("c_id", "ce"), centroids, tau),
-      "cell", nClusters)
-    store.overwrite(s"${name}_centroids", centroids)
-    RelOps.releaseCheckpoint(cand)
-  }
-
-  /** X68c: incremental SemDeDup — dedup a NEW batch against the persisted
-    * index without touching indexed rows (per-batch cost O(batch) work
-    * against co-located cell buckets; the corpus is never re-paired).
-    * The batch is anti-joined on id (idempotent re-ingestion), assigned
-    * to the FROZEN centroids via the shared assignCells plan, and each
-    * batch row takes as owner the smallest same-cell id within tau among
-    * index rows ∪ smaller-id batch rows. With batch ids above all index
-    * ids (the ingestion invariant — monotone ids), the post-append table
-    * is IDENTICAL to a from-scratch [[semDedupWithCentroids]] over the
-    * union: index-row verdicts cannot depend on larger-id batch rows.
-    * The invariant is ENFORCED — a batch id at or below the index
-    * high-water mark would need index-row verdicts re-evaluated, which
-    * this append by design never does, so it fails fast instead of
-    * silently diverging from the from-scratch result.
-    * Returns the post-append index size. */
-  def appendSemDedupBatch(store: graft.sources.TableStore, name: String,
-                          batch: DataFrame, tau: Double): Long = {
-    val spark = batch.sparkSession
-    graft.functions.VecCosine.register(spark)
-    val centroids = store.read(s"${name}_centroids")
-    val nCells = centroids.count().toInt
-    val index = spark.table(s"${name}_assigned")
-    val fresh = batch.select("c_id", "ce")
-      .join(index.select("c_id"), Seq("c_id"), "left_anti")
-    val assigned = assignCells(fresh, centroids).localCheckpoint()
-    // fully-redundant re-ingestion: nothing to dedup, and an empty
-    // bucketed append would still write per-bucket empty files — skip
-    // the write so idempotent retries leave no file cruft behind
-    if (assigned.isEmpty) {
-      val n = index.count()
-      RelOps.releaseCheckpoint(assigned)
-      return n
-    }
-    val bounds = assigned.agg(min("c_id").as("lo")).crossJoin(
-      index.agg(max("c_id").as("hi"))).head()
-    require(bounds.isNullAt(1) || bounds.getLong(0) > bounds.getLong(1),
-      s"appendSemDedupBatch: batch id ${bounds.getLong(0)} <= index " +
-        s"high-water mark ${bounds.getLong(1)} — non-monotone ingestion " +
-        "would silently diverge from a from-scratch dedup (indexed " +
-        "verdicts are never re-evaluated); rebuild the index instead")
-    val candidates = index.select(col("cell"), col("c_id").as("id_a"),
-        col("ce").as("ea"))
-      .unionByName(assigned.select(col("cell"), col("c_id").as("id_a"),
-        col("ce").as("ea")))
-    val owners = assigned
-      .select(col("cell"), col("c_id"), col("ce").as("eb"))
-      .join(candidates, "cell")
-      .filter(col("id_a") < col("c_id"))
-      .filter(graft.functions.VecCosine.vec_cosine(col("ea"), col("eb"))
-        >= tau)
-      .groupBy("c_id")
-      .agg(min("id_a").as("owner"))
-    store.appendBucketed(s"${name}_assigned",
-      assigned.select("c_id", "ce", "cell")
-        .join(owners, Seq("c_id"), "left_outer")
-        .withColumn("dropped", col("owner").isNotNull),
-      "cell", nCells)
-    // the write + count below materialize everything derived from the
-    // checkpoint; release so per-batch ingestion loops don't accumulate
-    // executor storage blocks (TableStore.appendKeyed discipline)
-    val n = spark.table(s"${name}_assigned").count()
-    RelOps.releaseCheckpoint(assigned)
-    n
   }
 
   /** X129: leakage-safe train/val/test split — assignment by DUPLICATE
@@ -1117,7 +897,7 @@ object SimilarityOps {
   /** The split-assignment half of [[leakageSafeSplit]], parameterized on
     * ANY (id, comp) label frame — what lets the x129b incremental path
     * assign from the PERSISTED component state
-    * ([[readComponentsState]]) instead of a from-scratch CC, with
+    * ([[readComponentsStateVersioned]]) instead of a from-scratch CC, with
     * byte-identical output (singletons default to their own id either
     * way, and the md5-uniform draw is a pure function of the label). */
   def assignSplitsByComponent(docs: DataFrame, idCol: String,
@@ -1252,50 +1032,19 @@ object SimilarityOps {
   }
 
   // --- X62c: persisted incremental connected components ------------------
-
-  /** X62c: the PERSISTED component state — closes the one gap in the
-    * incremental-dedup story (r11 verdict #2): every other dedup family
-    * ingests O(batch) (x31c/x39c/x120c), but clustering re-ran
-    * [[connectedComponents]] over the FULL edge set per run.
-    *
-    * Layout: `<name>_comps` (id, comp) APPEND-ONLY (merge-on-read). The
-    * key insight making O(batch) writes possible: min-label propagation
-    * is MONOTONE — a node's label only ever decreases — so the
-    * reconciled label of an id is simply min(comp) over its rows, no
-    * sequence numbers or tombstones needed. A relabel appends the new
-    * smaller rows; stale rows lose the min automatically. A scattered
-    * point-update through a rewrite path (upsert / partitioned apply)
-    * costs O(table) or O(touched partitions each rewritten whole) —
-    * measured 2× corpus-growth bleed-through in round 12 — while this
-    * append writes exactly the changed rows.
-    * [[compactComponentsState]] folds the deltas back to one row per id
-    * when read amplification warrants. Returns nodes labeled. */
-  def buildComponentsState(store: graft.sources.TableStore, name: String,
-      edges: DataFrame): Long = {
-    val comps = connectedComponents(edges)
-    try {
-      val n = store.overwrite(s"${name}_comps", comps)
-      n
-    } finally RelOps.releaseCheckpoint(comps)
-  }
-
-  /** The reconciled component state: current label per node =
-    * min(comp) over the append-only rows. One aggregation over the
-    * state — what a consumer (or [[compactComponentsState]]) reads. */
-  def readComponentsState(store: graft.sources.TableStore,
-      name: String): DataFrame =
-    store.read(s"${name}_comps").groupBy("id")
-      .agg(min("comp").as("comp"))
-
-  /** Fold the deltas to one row per id — bounds the merge-on-read
-    * amplification after many appends (the BM25 compaction discipline).
-    * Reconciled labels are unchanged by construction. */
-  def compactComponentsState(store: graft.sources.TableStore,
-      name: String): Long = {
-    val folded = readComponentsState(store, name).localCheckpoint()
-    try store.overwrite(s"${name}_comps", folded)
-    finally RelOps.releaseCheckpoint(folded)
-  }
+  // Clustering's O(batch) ingest path: without it, every run re-ran
+  // connectedComponents over the FULL edge set. The state is one
+  // `comps` (id, comp) sub-table, APPEND-ONLY (merge-on-read). What
+  // makes O(batch) writes possible: min-label propagation is MONOTONE —
+  // a node's label only ever decreases — so the reconciled label of an
+  // id is simply min(comp) over its rows, no sequence numbers or
+  // tombstones needed. A relabel appends the new smaller rows; stale
+  // rows lose the min automatically. A scattered point-update through a
+  // rewrite path (upsert / partitioned apply) costs O(table) or
+  // O(touched partitions each rewritten whole) — measured 2× corpus-
+  // growth bleed-through in round 12 — while this append writes exactly
+  // the changed rows; compaction folds the deltas back to one row per id
+  // when read amplification warrants.
 
   /** The append's label lookup — ONE shuffle-free pass over the state:
     * semi-probe with the SMALL side hinted (broadcast-right is the only
@@ -1314,34 +1063,6 @@ object SimilarityOps {
       .join(CdcOps.probeSide(nodes, nNodes), Seq("id"), "left_semi")
       .groupBy("id").agg(min("comp").as("__mc"))
 
-  /** Merge a batch of edges into the persisted component state —
-    * union-find-style label reconciliation, O(batch) WRITES and zero
-    * state shuffles:
-    *
-    *   1. the batch's nodes look up their current labels (min over
-    *      their state rows; fresh nodes label themselves) — a broadcast
-    *      semi-probe into one columnar state scan;
-    *   2. the batch collapses to a REDUCED graph over those labels
-    *      (each edge becomes label(a)–label(b)); min-label CC runs on
-    *      THAT graph — O(batch components), never the corpus, because a
-    *      stored label already stands for its whole component;
-    *   3. members of the remapped components get NEW rows at the merged
-    *      label (broadcast filter of the state scan — sound because a
-    *      label, once superseded, can never be current again: labels
-    *      are min member ids and only decrease, so comp = C rows are
-    *      exactly C's current members while C is current), fresh nodes
-    *      append their rows, and NOTHING is rewritten — min-reconcile
-    *      retires the stale rows at read time.
-    *
-    * The appended labels equal the from-scratch min-ids: stored labels
-    * are their components' minima, so min over merged labels ∪ fresh
-    * ids IS min over all member ids. Identical edges re-delivered find
-    * their endpoints already merged: the reduced graph is empty,
-    * nothing is appended — the retry is a no-op (returns 0), the x31c
-    * ingestion discipline. Returns rows appended (remapped members +
-    * fresh nodes). The contract query (x62c) pins
-    * build→append→append→retry ≡ the from-scratch recursive-CTE oracle
-    * over the union of all edges. */
   /** Component labels of a REDUCED graph — [[connectedComponents]]'
     * contract ((id, comp), comp = the component's min id) with a
     * driver-local union-find fast path below `localEdgeLimit` edges.
@@ -1393,25 +1114,32 @@ object SimilarityOps {
     }
   }
 
-  def appendComponentEdges(store: graft.sources.TableStore, name: String,
-      batchEdges: DataFrame): Long = {
-    val raw = batchEdges.select(col("a"), col("b")).localCheckpoint()
-    try {
-      val appends = componentAppendRows(store.read(s"${name}_comps"), raw)
-      try {
-        val n = appends.count()
-        if (n > 0) store.append(s"${name}_comps", appends)
-        n
-      } finally RelOps.releaseCheckpoint(appends)
-    } finally RelOps.releaseCheckpoint(raw)
-  }
-
-  /** The append's DELTA rows against any state scan — the ONE
-    * union-find-reconciliation body behind the plain (x62c) and
-    * versioned (x62d) layouts, and the kill-at-the-seam staging seam of
-    * the x62d contract query. `raw` must be a pinned (checkpointed)
-    * (a, b) frame; the returned appends are checkpointed — caller
-    * counts, commits, releases. */
+  /** The append's DELTA rows against any state scan — union-find-style
+    * label reconciliation, O(batch) WRITES and zero state shuffles:
+    *
+    *   1. the batch's nodes look up their current labels (min over
+    *      their state rows; fresh nodes label themselves) — a broadcast
+    *      semi-probe into one columnar state scan;
+    *   2. the batch collapses to a REDUCED graph over those labels
+    *      (each edge becomes label(a)–label(b)); min-label CC runs on
+    *      THAT graph — O(batch components), never the corpus, because a
+    *      stored label already stands for its whole component;
+    *   3. members of the remapped components get NEW rows at the merged
+    *      label (broadcast filter of the state scan — sound because a
+    *      label, once superseded, can never be current again: labels
+    *      are min member ids and only decrease, so comp = C rows are
+    *      exactly C's current members while C is current), fresh nodes
+    *      append their rows, and NOTHING is rewritten — min-reconcile
+    *      retires the stale rows at read time.
+    *
+    * The appended labels equal the from-scratch min-ids: stored labels
+    * are their components' minima, so min over merged labels ∪ fresh
+    * ids IS min over all member ids. Identical edges re-delivered find
+    * their endpoints already merged: the reduced graph is empty and no
+    * row is returned. The body behind [[appendComponentEdgesVersioned]]
+    * and the kill-at-the-seam staging seam of the x62d contract query.
+    * `raw` must be a pinned (checkpointed) (a, b) frame; the returned
+    * appends are checkpointed — caller counts, commits, releases. */
   private[graft] def componentAppendRows(state: DataFrame,
       raw: DataFrame): DataFrame = {
     // one count of the pinned batch gates EVERY probe hint below
@@ -1475,17 +1203,14 @@ object SimilarityOps {
     }
   }
 
-  // --- X62d: versioned-BUCKETED component state — the last persisted
-  // index family brought under SnapshotStore's atomic CASed commits
-  // (minhash = X31d, BM25 = X125d, novelty/IVF/SemDeDup = X120d/X32g/
-  // X68d graduated in r12/r13). The plain x62c layout's relabel APPEND
-  // is a single TableStore write so it cannot tear, but it has no CAS
-  // (a concurrent relabel + compact can interleave), no time travel
-  // (a split drawn from the state is not reproducible-by-version the
-  // way x127b features are), and no streaming sink with crash-atomic
-  // commits. Here `comps` is an id-BUCKETED sub: the merge-on-read
-  // reconciliation (min per id) and the append's label probe aggregate
-  // bucket-locally — no state shuffle at any version.
+  // --- X62d: the component state as a versioned-BUCKETED group: every
+  // build/append/compact is one CASed SnapshotStore commit (a concurrent
+  // relabel + compact cannot interleave), every version time-travels (a
+  // split drawn from the state is reproducible-by-version the way x127b
+  // features are), and the streaming sink commits crash-atomically.
+  // `comps` is an id-BUCKETED sub: the merge-on-read reconciliation
+  // (min per id) and the append's label probe aggregate bucket-locally
+  // — no state shuffle at any version.
 
   /** Build the versioned component state: one atomic commit of the
     * from-scratch labels, `comps` hash-bucketed on `id`. CASed at the
@@ -1506,10 +1231,10 @@ object SimilarityOps {
   }
 
   /** The reconciled labels of state version `v` (default current) —
-    * min(comp) per id over the append-only rows, exactly
-    * [[readComponentsState]] but time-travelable: a leakage-safe split
-    * drawn from a PINNED version reproduces byte-for-byte forever
-    * (the x127b training-reproducibility contract for dedup state).
+    * min(comp) per id over the append-only rows, time-travelable: a
+    * leakage-safe split drawn from a PINNED version reproduces
+    * byte-for-byte forever (the x127b training-reproducibility contract
+    * for dedup state).
     * The aggregation runs bucket-local (comps is id-bucketed). */
   def readComponentsStateVersioned(ss: graft.sources.SnapshotStore,
       name: String, version: Option[Long] = None): DataFrame = {
@@ -1518,14 +1243,16 @@ object SimilarityOps {
       .agg(min("comp").as("comp"))
   }
 
-  /** Merge an edge batch into the versioned state — the x62c
-    * reconciliation ([[componentAppendRows]]) with the state read PINNED
-    * at v0 and the append committed as ONE CASed version: a concurrent
-    * relabel or compaction surfaces as a retryable conflict instead of
-    * silently interleaving (the race the plain layout admits).
-    * Redelivered batches find their endpoints merged, the reduced graph
-    * empties, and NOTHING commits — not even a version. Returns rows
-    * appended. */
+  /** Merge an edge batch into the versioned state — the
+    * reconciliation of [[componentAppendRows]] with the state read
+    * PINNED at v0 and the append committed as ONE CASed version: a
+    * concurrent relabel or compaction surfaces as a retryable conflict
+    * instead of silently interleaving. Redelivered batches find their
+    * endpoints merged, the reduced graph empties, and NOTHING commits —
+    * not even a version. Returns rows appended (remapped members +
+    * fresh nodes). The contract queries (x62c/x62d) pin
+    * build→append→append→retry ≡ the from-scratch recursive-CTE oracle
+    * over the union of all edges. */
   def appendComponentEdgesVersioned(ss: graft.sources.SnapshotStore,
       name: String, batchEdges: DataFrame): Long = {
     val v0 = ss.currentVersion(name)
@@ -1543,10 +1270,12 @@ object SimilarityOps {
   }
 
   /** Fold the merge-on-read deltas to one row per id as a new version —
-    * bounds read amplification like [[compactComponentsState]], now with
-    * history intact (old versions still serve their exact state;
-    * retention + vacuum reclaim the superseded partitions once the
-    * window moves past). CASed on the read version. NOT marked
+    * bounds the merge-on-read amplification after many appends (the
+    * BM25 compaction discipline) with history intact (old versions
+    * still serve their exact state; retention + vacuum reclaim the
+    * superseded partitions once the window moves past). Reconciled
+    * labels are unchanged by construction. CASed on the read version.
+    * NOT marked
     * content-preserving: the ROWS change (stale deltas fold away) even
     * though the reconciled labels do not, and the changelog must see
     * that. */
@@ -1647,8 +1376,8 @@ object SimilarityOps {
   }
 
   /** X39c: persist the duplicated-window census so NEW batches dedup
-    * against the corpus without re-hashing it (the buildMinhashIndex /
-    * buildIvfIndex build-once/probe-many discipline applied to substring
+    * against the corpus without re-hashing it (the persisted minhash /
+    * IVF indexes' build-once/probe-many discipline applied to substring
     * dedup). The index is NOT the window list: because append batches
     * carry disjoint NEW doc ids, per-window doc counts are additive, so
     * the aggregated census (h, ndocs) — one row per DISTINCT window,
@@ -1678,7 +1407,7 @@ object SimilarityOps {
     * O(batch windows) + a bucket-aligned join, never a corpus re-hash —
     * corpus-side spans newly created by the batch are the next full
     * run's business, not the ingest loop's (same boundary as
-    * probeMinhashIndex). */
+    * probeMinhashIndexVersioned). */
   def probeWindowIndex(store: graft.sources.TableStore, name: String,
                        batch: DataFrame, idCol: String, textCol: String,
                        minDocs: Int = 2): DataFrame = {
@@ -1861,43 +1590,8 @@ object SimilarityOps {
     TextOps.explodeShingles(df.select(idCol, textCol), idCol, textCol, n)
       .select(col(idCol), xxhash64(col("s")).as("h"))
 
-  /** X120c: persist the first-seen gram census so NEW batches score
-    * novelty without re-shingling the corpus — the buildMinhashIndex /
-    * buildWindowIndex build-once/probe-many discipline applied to the
-    * novelty score. The index is (h, owner): one row per distinct gram,
-    * owner = the smallest doc id that introduced it, h-bucketed so probes
-    * join without an index-side exchange. Under MONOTONE ingestion (every
-    * batch id above the indexed high-water mark — enforced in the
-    * appender) ownership is immutable: a new document can never steal a
-    * gram the corpus already owns, which is exactly what makes the
-    * incremental score ≡ the from-scratch score (the driver contract).
-    * Index size is O(distinct grams), 16-byte rows. */
-  def buildNoveltyIndex(store: graft.sources.TableStore, name: String,
-                        df: DataFrame, idCol: String, textCol: String,
-                        n: Int, nBuckets: Int = 32): Unit = {
-    store.overwriteBucketed(s"${name}_grams",
-      gramRows(df, idCol, textCol, n)
-        .groupBy("h").agg(min(col(idCol)).as("owner")),
-      "h", nBuckets)
-    store.overwrite(s"${name}_docs", df.select(col(idCol).as("id")))
-    store.overwrite(s"${name}_meta",
-      df.sparkSession.createDataFrame(Seq(Tuple1(n))).toDF("gram_len"))
-  }
-
-  /** Novelty of a BATCH against index ∪ batch: a batch doc owns a gram iff
-    * it is the smallest id among the indexed owner and every batch doc
-    * containing it (least() skips the null of an unindexed gram). Pays
-    * O(batch grams) + one bucket-aligned join — the corpus is never
-    * re-shingled. probe(batch) ≡ ngramNovelty(corpus ∪ batch) ⋉ batch ids
-    * when batch ids sit above the corpus (pinned by spec + x120c). */
-  def probeNoveltyIndex(store: graft.sources.TableStore, name: String,
-                        batch: DataFrame, idCol: String,
-                        textCol: String): DataFrame =
-    probeNoveltyCore(store.read(s"${name}_meta").head().getAs[Int]("gram_len"),
-      batch.sparkSession.table(s"${name}_grams"), batch, idCol, textCol)
-
-  /** The ONE probe plan both novelty layouts share (plain catalog table /
-    * versioned-bucketed snapshot), so the two cannot drift. */
+  /** The novelty-census probe plan over one version's census (see
+    * [[probeNoveltyIndexVersioned]]). */
   private def probeNoveltyCore(n: Int, census: DataFrame, batch: DataFrame,
                                idCol: String, textCol: String): DataFrame = {
     val bg = gramRows(batch, idCol, textCol, n).localCheckpoint()
@@ -1916,56 +1610,29 @@ object SimilarityOps {
     } finally RelOps.releaseCheckpoint(bg)
   }
 
-  /** Fold a batch into the novelty index (ingest commit). Idempotent on
-    * doc id (anti-join before any shingling); monotone ingestion is
-    * ENFORCED — a batch id at or below the registry's high-water mark
-    * would rewrite history (its grams might deserve ownership the census
-    * already assigned) and silently diverge from a from-scratch score.
-    * Because owners are immutable under that invariant, the commit is
-    * append-only: only grams the census has never seen add rows
-    * (bucket-aligned appendBucketed) — no census rewrite, O(batch) per
-    * batch. Returns the number of docs added. */
-  def appendNoveltyBatch(store: graft.sources.TableStore, name: String,
-                         batch: DataFrame, idCol: String, textCol: String,
-                         nBuckets: Int = 32): Long = {
-    val n = store.read(s"${name}_meta").head().getAs[Int]("gram_len")
-    val fresh = batch.join(
-      store.read(s"${name}_docs").select(col("id").as("__indexed_id")),
-      col(idCol) === col("__indexed_id"), "left_anti").localCheckpoint()
-    try {
-      val nDocs = fresh.count()
-      if (nDocs > 0) {
-        val bounds = fresh.agg(min(col(idCol)).as("lo")).crossJoin(
-          store.read(s"${name}_docs").agg(max(col("id")).as("hi"))).head()
-        require(bounds.isNullAt(1) || bounds.getLong(0) > bounds.getLong(1),
-          s"appendNoveltyBatch: batch id ${bounds.getLong(0)} <= index " +
-            s"high-water mark ${bounds.getLong(1)} — non-monotone " +
-            "ingestion would rewrite gram ownership; rebuild the index")
-        val census = batch.sparkSession.table(s"${name}_grams")
-        val delta = gramRows(fresh, idCol, textCol, n)
-          .groupBy("h").agg(min(col(idCol)).as("owner"))
-          .join(census.select("h"), Seq("h"), "left_anti")
-        store.appendBucketed(s"${name}_grams", delta, "h", nBuckets)
-        store.append(s"${name}_docs", fresh.select(col(idCol).as("id")))
-      }
-      nDocs
-    } finally RelOps.releaseCheckpoint(fresh)
-  }
+  // --- versioned-bucketed state (x120d/x32g/x68d): the novelty, IVF and
+  // SemDeDup indexes as SnapshotStore groups with atomic multi-table
+  // commits + CAS. Writing the sub-tables in SEPARATE steps would let a
+  // crash between them tear the group (grams registered without their
+  // docs row, assignments without refreshed centroids); here every
+  // family commits as ONE version (all partitions + one manifest + one
+  // pointer swap), and SnapshotStore.SubBucket keeps probe joins
+  // exchange-free on the index side.
 
-  // --- versioned-bucketed state (x120d/x32g/x68d): the last persisted
-  // index families brought under SnapshotStore's atomic multi-table
-  // commits + CAS. The plain-layout builds/appends above write their
-  // sub-tables in SEPARATE steps, so a crash between them tears the
-  // group (grams registered without their docs row, assignments without
-  // refreshed centroids); here every family commits as ONE version (all
-  // partitions + one manifest + one pointer swap) with the bucketed
-  // co-location contract intact — SnapshotStore.SubBucket keeps probe
-  // joins exchange-free on the index side, exactly like the catalog
-  // tables the plain layout uses.
-
-  /** X120d: the versioned novelty census — grams/docs/meta as ONE atomic
-    * commit; `grams` is h-bucketed so versioned probes stay
-    * exchange-free on the census side. CASed at the read version. */
+  /** X120c/X120d: persist the first-seen gram census so NEW batches
+    * score novelty without re-shingling the corpus — the
+    * build-once/probe-many discipline of the minhash index applied to
+    * the novelty score. The census `grams` is (h, owner): one row per
+    * distinct gram, owner = the smallest doc id that introduced it,
+    * h-bucketed so probes join without an index-side exchange; `docs`
+    * registers ids for idempotent commits and `meta` holds the gram
+    * length. Under MONOTONE ingestion (every batch id above the indexed
+    * high-water mark — enforced in the appender) ownership is
+    * immutable: a new document can never steal a gram the corpus
+    * already owns, which is exactly what makes the incremental score ≡
+    * the from-scratch score (the driver contract). Index size is
+    * O(distinct grams), 16-byte rows. grams/docs/meta commit as ONE
+    * atomic version, CASed at the read version. */
   def buildNoveltyIndexVersioned(ss: graft.sources.SnapshotStore,
       name: String, df: DataFrame, idCol: String, textCol: String,
       n: Int, nBuckets: Int = 0): Long = {
@@ -1987,9 +1654,13 @@ object SimilarityOps {
     } finally RelOps.releaseCheckpoint(census)
   }
 
-  /** Probe the versioned census, optionally time-traveled — same output
-    * as [[probeNoveltyIndex]] over the corpus that version represents
-    * (shared probeNoveltyCore). */
+  /** Novelty of a BATCH against index ∪ batch, optionally
+    * time-traveled: a batch doc owns a gram iff it is the smallest id
+    * among the indexed owner and every batch doc containing it (least()
+    * skips the null of an unindexed gram). Pays O(batch grams) + one
+    * bucket-aligned join — the corpus is never re-shingled.
+    * probe(batch) ≡ ngramNovelty(corpus ∪ batch) ⋉ batch ids when batch
+    * ids sit above the corpus (pinned by spec + x120c/x120d). */
   def probeNoveltyIndexVersioned(ss: graft.sources.SnapshotStore,
       name: String, batch: DataFrame, idCol: String, textCol: String,
       version: Option[Long] = None): DataFrame = {
@@ -2024,12 +1695,17 @@ object SimilarityOps {
       "docs" -> fresh.select(col(idCol).as("id")))
   }
 
-  /** Fold a batch into the versioned census — grams + docs in ONE atomic
-    * commit CASed on the pinned read version (the plain
-    * [[appendNoveltyBatch]] writes them in two steps: a crash between
-    * leaves grams whose doc is unregistered). Monotone ingestion
-    * enforced as in the plain path; a fully-duplicate batch commits
-    * NOTHING (no version). Returns docs added. */
+  /** Fold a batch into the versioned census (ingest commit) — grams +
+    * docs in ONE atomic commit CASed on the pinned read version, so no
+    * crash can leave grams whose doc is unregistered. Idempotent on doc
+    * id (anti-join before any shingling); monotone ingestion is
+    * ENFORCED — a batch id at or below the registry's high-water mark
+    * would rewrite history (its grams might deserve ownership the
+    * census already assigned) and silently diverge from a from-scratch
+    * score. Because owners are immutable under that invariant, the
+    * commit is append-only: only grams the census has never seen add
+    * rows — no census rewrite, O(batch) per batch. A fully-duplicate
+    * batch commits NOTHING (no version). Returns docs added. */
   def appendNoveltyBatchVersioned(ss: graft.sources.SnapshotStore,
       name: String, batch: DataFrame, idCol: String,
       textCol: String): Long = {
@@ -2052,10 +1728,18 @@ object SimilarityOps {
     } finally RelOps.releaseCheckpoint(fresh)
   }
 
-  /** X32g: the versioned IVF index — assigned/centroids as ONE atomic
-    * commit, `assigned` cell-bucketed (bucket count = nLists) so the
-    * probe join reads co-located buckets with no index-side exchange
-    * at every version. */
+  /** X32d/X32g: PERSISTED IVF index — the build-once / probe-many
+    * layout the ivfCosineTopK scaladoc promises at cluster scale. Build
+    * fits the coarse quantizer ONCE and commits `assigned` (c_id, nv,
+    * cell) and `centroids` (nLists rows — broadcast at probe time) as
+    * ONE atomic version, so an index can never serve assignments
+    * against centroids from a different commit. `assigned` is
+    * cell-bucketed (bucket count = nLists), so the probe join reads
+    * co-located buckets with no index-side exchange at every version.
+    * Probing is a pure read path: no KMeans, no normalization pass over
+    * the corpus, just the shared ivfProbe plan over the two sub-tables.
+    * At 100 TB the build cost amortizes across every retrieval the
+    * index ever serves. */
   def buildIvfIndexVersioned(ss: graft.sources.SnapshotStore, name: String,
       candidates: DataFrame, nLists: Int = 16, seed: Long = 42L): Long = {
     val (cand, centroids) = fitIvfCentroids(candidates, nLists, seed)
@@ -2086,9 +1770,19 @@ object SimilarityOps {
       .localCheckpoint()
   }
 
-  /** Ingest new vectors into the versioned IVF index without refitting —
-    * ONE atomic cell-bucketed append CASed on the pinned read version;
-    * a fully-redundant batch commits NOTHING. Returns vectors added. */
+  /** X32f: incremental IVF maintenance — ingest a batch of NEW vectors
+    * (c_id, ce) WITHOUT refitting the coarse quantizer. The batch is
+    * anti-joined on id against the index (idempotent re-ingestion),
+    * assigned to its nearest EXISTING centroid via the shared
+    * assignCells plan, and committed as ONE atomic cell-bucketed append
+    * CASed on the pinned read version — per-batch cost
+    * O(batch · nLists · d) plus one id-column scan of the index; the
+    * corpus vectors are never re-read or re-assigned. Centroids drift
+    * from optimal as the corpus grows — an IVF property, not a bug:
+    * cells only bound the probe set, recall stays pinned by the
+    * nProbe/nLists contracts, and a rebuild is the explicit
+    * re-optimize. A fully-redundant batch commits NOTHING. Returns
+    * vectors added. */
   def appendIvfBatchVersioned(ss: graft.sources.SnapshotStore,
       name: String, batch: DataFrame): Long = {
     val v0 = ss.currentVersion(name)
@@ -2111,8 +1805,14 @@ object SimilarityOps {
       ss.readTableVersion(name, v, "centroids"), queries, k, nProbe)
   }
 
-  /** X68d: the versioned SemDeDup state — assigned/centroids as ONE
-    * atomic commit, `assigned` cell-bucketed like the plain layout. */
+  /** X68c/X68d: persist a SemDeDup state for incremental ingestion —
+    * `centroids` (the frozen quantizer) and `assigned` (c_id, ce, cell,
+    * owner, dropped) as ONE atomic version, `assigned` cell-bucketed so
+    * batch appends join co-located buckets with no index-side exchange.
+    * DROPPED rows are stored too: a later batch row can be owned by an
+    * already-dropped doc (keep-min-id drops against ANY smaller-id
+    * near-dup, not just survivors), so pruning them would silently
+    * change semantics vs a from-scratch run. */
   def buildSemDedupIndexVersioned(ss: graft.sources.SnapshotStore,
       name: String, vectors: DataFrame, nClusters: Int, tau: Double,
       seed: Long = 42L, fitSampleRows: Int = 100000): Long = {
@@ -2129,9 +1829,8 @@ object SimilarityOps {
 
   /** The versioned SemDeDup append's verdict frame, PINNED at `v0`:
     * anti-join, frozen-centroid assignment, monotone-id gate, and the
-    * owner search over index rows ∪ smaller-id batch rows — exactly the
-    * plain [[appendSemDedupBatch]] semantics against the pinned
-    * snapshot. Caller must releaseCheckpoint. */
+    * owner search over index rows ∪ smaller-id batch rows, against the
+    * pinned snapshot. Caller must releaseCheckpoint. */
   private[graft] def semDedupFreshVersioned(ss: graft.sources.SnapshotStore,
       name: String, v0: Long, batch: DataFrame, tau: Double): DataFrame = {
     graft.functions.VecCosine.register(batch.sparkSession)
@@ -2168,11 +1867,22 @@ object SimilarityOps {
     out
   }
 
-  /** Dedup a batch against the versioned SemDeDup state — ONE atomic
-    * cell-bucketed append CASed on the pinned read version (idempotent:
-    * a fully-redundant batch commits NOTHING). Returns vectors added —
-    * NOT the post-append index size the plain append returns; the
-    * versioned layout never pays an O(index) count per commit. */
+  /** X68c: incremental SemDeDup — dedup a NEW batch against the
+    * persisted state without touching indexed rows (the corpus is never
+    * re-paired). The batch is anti-joined on id (idempotent
+    * re-ingestion), assigned to the FROZEN centroids via the shared
+    * assignCells plan, and each batch row takes as owner the smallest
+    * same-cell id within tau among index rows ∪ smaller-id batch rows.
+    * With batch ids above all index ids (the ingestion invariant —
+    * monotone ids), the post-append table is IDENTICAL to a from-scratch
+    * [[semDedupWithCentroids]] over the union: index-row verdicts cannot
+    * depend on larger-id batch rows. The invariant is ENFORCED — a batch
+    * id at or below the index high-water mark would need index-row
+    * verdicts re-evaluated, which this append by design never does, so
+    * it fails fast. The verdicts land as ONE atomic cell-bucketed append
+    * CASed on the pinned read version (a fully-redundant batch commits
+    * NOTHING). Returns vectors added — never an O(index) count per
+    * commit. */
   def appendSemDedupBatchVersioned(ss: graft.sources.SnapshotStore,
       name: String, batch: DataFrame, tau: Double): Long = {
     val v0 = ss.currentVersion(name)

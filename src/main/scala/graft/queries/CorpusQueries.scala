@@ -43,8 +43,8 @@ object CorpusQueries {
 
   private val bm25Oracle: Option[String] = bm25OracleOver("")
 
-  /** ONE oracle for x129 (one-shot), x129b (plain incremental state) and
-    * x129c (versioned state, pinned-version assignment): every split
+  /** ONE oracle for x129 (one-shot), x129b (incremental state, current
+    * version) and x129c (pinned-version assignment): every split
     * contract is "same assignment as the from-scratch recursive-CTE
     * clustering + md5-uniform draw", so they share the SQL verbatim. */
   private val leakageSplitOracle: Option[String] =
@@ -62,9 +62,9 @@ object CorpusQueries {
         |FROM s ORDER BY doc_id""".stripMargin)
 
   /** The ONE wave rule behind every incremental-components query (x62c/
-    * x129b plain layout, x62d/x129c versioned — duplicating it would let
-    * the rule drift between queries whose oracles all assume the same
-    * ingest): pair-graph edges classified by the newest "arrival wave"
+    * x62d/x129b/x129c — duplicating it would let the rule drift between
+    * queries whose oracles all assume the same ingest): pair-graph
+    * edges classified by the newest "arrival wave"
     * of their endpoints. Returns the CHECKPOINTED edge frame (caller
     * releases) and the per-wave slice. */
   private def waveEdgeSlices(env: graft.Env)
@@ -81,28 +81,12 @@ object CorpusQueries {
     (edges, w => edges.filter(wmax === w))
   }
 
-  /** The wave-ingestion loop behind x62c and x129b: component state
-    * built on the old corpus then folded per wave, the last wave retried
-    * (must append NOTHING — labels already merged). Leaves
-    * `<name>_comps` in the store; edges are checkpointed and released
-    * here (a throwing ingest step would otherwise leak the blocks for
-    * the rest of the verify session). */
-  private def waveIngestComponents(env: graft.Env,
-      store: graft.sources.TableStore, name: String): Unit = {
-    val (edges, slice) = waveEdgeSlices(env)
-    try {
-      SimilarityOps.buildComponentsState(store, name, slice(0))
-      SimilarityOps.appendComponentEdges(store, name, slice(1))
-      SimilarityOps.appendComponentEdges(store, name, slice(2))
-      val retried = SimilarityOps.appendComponentEdges(store, name, slice(2))
-      require(retried == 0L,
-        s"retried edge batch must append nothing, appended $retried")
-    } finally graft.ops.RelOps.releaseCheckpoint(edges)
-  }
-
-  /** [[waveIngestComponents]] on the VERSIONED-bucketed layout (x62d/
-    * x129c): same wave rule, each fold ONE atomic CASed commit; the
-    * retried wave must commit nothing — not even a version. */
+  /** The wave-ingestion loop behind x62c, x129b and x129c: component
+    * state built on the old corpus then folded per wave, each fold ONE
+    * atomic CASed commit, the last wave retried (labels already merged,
+    * so it must commit nothing — not even a version). Edges are
+    * checkpointed and released here (a throwing ingest step would
+    * otherwise leak the blocks for the rest of the verify session). */
   private def waveIngestComponentsVersioned(env: graft.Env,
       ss: graft.sources.SnapshotStore, name: String): Unit = {
     val (edges, slice) = waveEdgeSlices(env)
@@ -427,29 +411,31 @@ object CorpusQueries {
              |GROUP BY sh.doc_id ORDER BY sh.doc_id""".stripMargin),
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x120c_") {
         dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
         val maxId = env.documents.agg(max("doc_id")).head().getLong(0)
         val (t1, t2) = (maxId * 3 / 5, maxId * 4 / 5)
         val corpus = env.documents.filter(col("doc_id") <= t1)
         val batch1 = env.documents
           .filter(col("doc_id") > t1 && col("doc_id") <= t2)
         val batch2 = env.documents.filter(col("doc_id") > t2)
-        SimilarityOps.buildNoveltyIndex(store, "nv", corpus,
+        SimilarityOps.buildNoveltyIndexVersioned(ss, "nv", corpus,
           "doc_id", "text", 5)
-        val p1 = SimilarityOps.probeNoveltyIndex(store, "nv", batch1,
+        val p1 = SimilarityOps.probeNoveltyIndexVersioned(ss, "nv", batch1,
           "doc_id", "text")
-        SimilarityOps.appendNoveltyBatch(store, "nv", batch1,
+        SimilarityOps.appendNoveltyBatchVersioned(ss, "nv", batch1,
           "doc_id", "text")
-        val p2 = SimilarityOps.probeNoveltyIndex(store, "nv", batch2,
+        val p2 = SimilarityOps.probeNoveltyIndexVersioned(ss, "nv", batch2,
           "doc_id", "text")
-        p1.unionByName(p2).orderBy("doc_id")
+        val out = p1.unionByName(p2).orderBy("doc_id")
+        ss.dropCatalogTables("nv")
+        out
       }),
 
     // X120d: the VERSIONED novelty census — x120c's lifecycle routed
     // through SnapshotStore's atomic multi-table commits on the
     // versioned-BUCKETED layout (grams h-bucketed under commit_v
-    // partitions; the plain layout's grams/docs two-step append can tear
-    // between them). Build v1, probe batch1, commit it (v2), RETRY the
+    // partitions; grams and docs land in one commit, so they cannot
+    // tear apart). Build v1, probe batch1, commit it (v2), RETRY the
     // commit (must commit nothing — not even a version), probe batch2,
     // then stage a THIRD append completely (grams + docs partitions +
     // manifest) and DIE before the pointer swap — v2 must keep serving,
@@ -555,21 +541,22 @@ object CorpusQueries {
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x125b_") {
         dir =>
         import graft.ops.RetrievalOps
-        val store = new graft.sources.TableStore(env.spark, dir)
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
         val maxId = env.documents.agg(max("doc_id")).head().getLong(0)
         val (t1, t2) = (maxId * 3 / 5, maxId * 4 / 5)
         val batch2 = env.documents.filter(col("doc_id") > t2)
-        RetrievalOps.buildBm25Index(store, "bm",
+        RetrievalOps.buildBm25IndexVersioned(ss, "bm",
           env.documents.filter(col("doc_id") <= t1), "doc_id", "text")
-        RetrievalOps.appendBm25Batch(store, "bm",
+        RetrievalOps.appendBm25BatchVersioned(ss, "bm",
           env.documents.filter(col("doc_id") > t1 && col("doc_id") <= t2),
           "doc_id", "text")
-        RetrievalOps.appendBm25Batch(store, "bm", batch2, "doc_id", "text")
-        val retried = RetrievalOps.appendBm25Batch(store, "bm", batch2,
+        RetrievalOps.appendBm25BatchVersioned(ss, "bm", batch2,
           "doc_id", "text")
+        val retried = RetrievalOps.appendBm25BatchVersioned(ss, "bm",
+          batch2, "doc_id", "text")
         require(retried == 0L,
           s"retried commit must be a no-op, added $retried docs")
-        RetrievalOps.probeBm25Index(store, "bm", "doc_id",
+        RetrievalOps.probeBm25IndexVersioned(ss, "bm", "doc_id",
           Seq("window", "merge", "join")).orderBy("doc_id")
       }),
 
@@ -586,17 +573,19 @@ object CorpusQueries {
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x125c_") {
         dir =>
         import graft.ops.RetrievalOps
-        val store = new graft.sources.TableStore(env.spark, dir)
-        RetrievalOps.buildBm25Index(store, "bm", env.documents,
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
+        RetrievalOps.buildBm25IndexVersioned(ss, "bm", env.documents,
           "doc_id", "text")
         val victims = env.documents.filter(col("doc_id") % 7 === 0)
           .select("doc_id")
-        val n1 = RetrievalOps.deleteBm25Docs(store, "bm", victims, "doc_id")
+        val n1 = RetrievalOps.deleteBm25DocsVersioned(ss, "bm", victims,
+          "doc_id")
         require(n1 > 0L, "expected deletions")
-        val n2 = RetrievalOps.deleteBm25Docs(store, "bm", victims, "doc_id")
+        val n2 = RetrievalOps.deleteBm25DocsVersioned(ss, "bm", victims,
+          "doc_id")
         require(n2 == 0L, s"retried delete must be a no-op, removed $n2")
-        RetrievalOps.compactBm25Index(store, "bm")
-        RetrievalOps.probeBm25Index(store, "bm", "doc_id",
+        RetrievalOps.compactBm25IndexVersioned(ss, "bm")
+        RetrievalOps.probeBm25IndexVersioned(ss, "bm", "doc_id",
           Seq("window", "merge", "join")).orderBy("doc_id")
       }),
 
@@ -854,12 +843,16 @@ object CorpusQueries {
         "SELECT doc_id, comp FROM cl ORDER BY doc_id"),
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x62c_") {
         dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
-        waveIngestComponents(env, store, "cc")
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
+        waveIngestComponentsVersioned(env, ss, "cc")
         // fold the merge-on-read deltas; reconciled labels must not move
-        SimilarityOps.compactComponentsState(store, "cc")
-        SimilarityOps.readComponentsState(store, "cc")
-          .select(col("id").as("doc_id"), col("comp")).orderBy("doc_id")
+        SimilarityOps.compactComponentsStateVersioned(ss, "cc")
+        // materialize before dropping the catalog registration (the
+        // x62d discipline)
+        val state = SimilarityOps.readComponentsStateVersioned(ss, "cc")
+          .localCheckpoint()
+        ss.dropCatalogTables("cc")
+        state.select(col("id").as("doc_id"), col("comp")).orderBy("doc_id")
       }),
 
     // X62d: the VERSIONED component state — x62c's lifecycle routed
@@ -951,19 +944,24 @@ object CorpusQueries {
     // X129b: the leakage-safe split served FROM THE PERSISTED COMPONENT
     // STATE — the incremental curation path x62c enables: edges ingest
     // in waves (build + two appends + no-op retry, as in x62c), then the
-    // split assignment reads readComponentsState instead of running a
-    // from-scratch CC. Must hash-match x129's EXACT oracle (which does
-    // recompute everything from scratch) — proving a per-batch ingest
-    // loop reproduces the one-shot curation split byte-for-byte, the
-    // flattening answer to the r11 verdict's curation-probe item.
+    // split assignment reads readComponentsStateVersioned instead of
+    // running a from-scratch CC. Must hash-match x129's EXACT oracle
+    // (which does recompute everything from scratch) — proving a
+    // per-batch ingest loop reproduces the one-shot curation split
+    // byte-for-byte, the flattening answer to the r11 verdict's
+    // curation-probe item.
     Query("x129b_incremental_split", leakageSplitOracle,
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x129b_") {
         dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
-        waveIngestComponents(env, store, "cc")
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
+        waveIngestComponentsVersioned(env, ss, "cc")
+        // materialize before dropping the catalog registration (the
+        // x62d discipline)
+        val state = SimilarityOps.readComponentsStateVersioned(ss, "cc")
+          .localCheckpoint()
+        ss.dropCatalogTables("cc")
         SimilarityOps.assignSplitsByComponent(env.documents, "doc_id",
-            SimilarityOps.readComponentsState(store, "cc"),
-            Seq(("train", 0.8), ("val", 0.9), ("test", 1.0)))
+            state, Seq(("train", 0.8), ("val", 0.9), ("test", 1.0)))
           .orderBy("doc_id")
       }),
 
@@ -977,8 +975,7 @@ object CorpusQueries {
     // version and silently break reproducibility (the r14 verdict's
     // missing-tags gap). The tag clamps the sweep, so the tag-resolved
     // assignment still hash-matches the oracle computed over the
-    // pre-bridge edge set. The plain x62c layout cannot make this
-    // promise — its state has no versions to pin.
+    // pre-bridge edge set.
     Query("x129c_versioned_split", leakageSplitOracle,
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x129c_") {
         dir =>

@@ -336,7 +336,7 @@ object EmbeddingQueries {
       Some("SELECT true AS parity"),
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x68c_") {
         dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
         val tau = 0.4
         val emb = env.embeddings.select(col("vec_id").as("c_id"),
           transform(col("embedding"), x => x.cast("double")).as("ce"))
@@ -344,17 +344,19 @@ object EmbeddingQueries {
         val cut = maxId * 4 / 5
         val corpus = emb.filter(col("c_id") <= cut)
         val batch = emb.filter(col("c_id") > cut)
-        graft.ops.SimilarityOps.buildSemDedupIndex(store, "x68c_sd",
+        graft.ops.SimilarityOps.buildSemDedupIndexVersioned(ss, "x68c_sd",
           corpus, nClusters = 10, tau = tau)
-        graft.ops.SimilarityOps.appendSemDedupBatch(store, "x68c_sd",
-          batch, tau)
-        val n2 = graft.ops.SimilarityOps.appendSemDedupBatch(store,
+        val n1 = graft.ops.SimilarityOps.appendSemDedupBatchVersioned(ss,
           "x68c_sd", batch, tau)
+        val n2 = graft.ops.SimilarityOps.appendSemDedupBatchVersioned(ss,
+          "x68c_sd", batch, tau)
+        require(n2 == 0L, s"re-append must be a no-op, ingested $n2")
         val reference = graft.ops.SimilarityOps.semDedupWithCentroids(
-          corpus.unionByName(batch), store.read("x68c_sd_centroids"), tau)
+          corpus.unionByName(batch), ss.readTable("x68c_sd", "centroids"),
+          tau)
           .select(col("c_id"), col("cell").as("rcell"),
             col("owner").as("rowner"), col("dropped").as("rdropped"))
-        val maintained = env.spark.table("x68c_sd_assigned")
+        val maintained = ss.readTable("x68c_sd", "assigned")
           .select("c_id", "cell", "owner", "dropped")
         val out = maintained.join(reference, Seq("c_id"), "full_outer")
           .agg(count(when(col("cell").isNull || col("rcell").isNull ||
@@ -363,8 +365,11 @@ object EmbeddingQueries {
               !(col("owner") <=> col("rowner")), 1)).as("mismatched"),
             count(lit(1)).as("n"))
           .select((col("mismatched") === 0 &&
-            col("n") === lit(n2)).as("parity"))
-        env.spark.sql("DROP TABLE IF EXISTS x68c_sd_assigned")
+            col("n") === lit(corpus.count() + n1)).as("parity"))
+          // materialize BEFORE dropping the registrations: a catalog-
+          // partitioned scan lists its partitions lazily at execution
+          .localCheckpoint()
+        ss.dropCatalogTables("x68c_sd")
         out
       }),
 

@@ -171,22 +171,22 @@ object TextQueries {
       Some("SELECT true AS parity"),
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x32f_") {
         dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
         val emb = env.embeddings.withColumn("e",
           transform(col("embedding"), v => v.cast("double")))
         val corpus = emb.filter(col("vec_id") % 5 =!= 0)
           .select(col("vec_id").as("c_id"), col("e").as("ce"))
         val batch = emb.filter(col("vec_id") % 5 === 0)
           .select(col("vec_id").as("c_id"), col("e").as("ce"))
-        SimilarityOps.buildIvfIndex(store, "x32f_ivf", corpus)
-        val n1 = SimilarityOps.appendIvfBatch(store, "x32f_ivf", batch)
-        val n2 = SimilarityOps.appendIvfBatch(store, "x32f_ivf", batch)
+        SimilarityOps.buildIvfIndexVersioned(ss, "x32f_ivf", corpus)
+        val n1 = SimilarityOps.appendIvfBatchVersioned(ss, "x32f_ivf", batch)
+        val n2 = SimilarityOps.appendIvfBatchVersioned(ss, "x32f_ivf", batch)
         require(n2 == 0L, s"re-append must be a no-op, ingested $n2")
         val nExpected = corpus.count() + n1
         val reference = SimilarityOps.assignCells(
-          corpus.unionByName(batch), store.read("x32f_ivf_centroids"))
+          corpus.unionByName(batch), ss.readTable("x32f_ivf", "centroids"))
           .select(col("c_id"), col("cell").as("ref_cell"))
-        val maintained = env.spark.table("x32f_ivf_assigned")
+        val maintained = ss.readTable("x32f_ivf", "assigned")
           .select("c_id", "cell")
         val out = maintained.join(reference, Seq("c_id"), "full_outer")
           .agg(count(when(col("cell").isNull ||
@@ -195,7 +195,10 @@ object TextQueries {
             count(lit(1)).as("n"))
           .select((col("mismatched") === 0 &&
             col("n") === lit(nExpected)).as("parity"))
-        env.spark.sql("DROP TABLE IF EXISTS x32f_ivf_assigned")
+          // materialize BEFORE dropping the registrations: a catalog-
+          // partitioned scan lists its partitions lazily at execution
+          .localCheckpoint()
+        ss.dropCatalogTables("x32f_ivf")
         out
       }),
 
@@ -263,8 +266,9 @@ object TextQueries {
     // MinHash signature index (build once on the corpus slice, probe the
     // new batch, never re-shingle the corpus) must decompose the full-
     // corpus run exactly — minhashNearDups(corpus ∪ batch) ≡
-    // minhashNearDups(corpus) ∪ probeMinhashIndex(batch) — with the two
-    // sides disjoint (the probe emits only pairs involving the batch).
+    // minhashNearDups(corpus) ∪ probeMinhashIndexVersioned(batch) — with
+    // the two sides disjoint (the probe emits only pairs involving the
+    // batch).
     // This is the build-once/probe-many ingest loop a 100 TB dedup
     // pipeline runs per arriving batch; a regression in the persisted
     // schema, the probe's census, or the cross/intra candidate split
@@ -273,13 +277,13 @@ object TextQueries {
       Some("SELECT true AS parity"),
       env => CdcQueries.withTempTableSummary(env.spark, "graft_x31c_") {
         dir =>
-        val store = new graft.sources.TableStore(env.spark, dir)
+        val ss = new graft.sources.SnapshotStore(env.spark, dir)
         val corpus = env.documents.filter(col("doc_id") % 5 =!= 0)
         val batch = env.documents.filter(col("doc_id") % 5 === 0)
-        SimilarityOps.buildMinhashIndex(store, "mh", corpus,
+        SimilarityOps.buildMinhashIndexVersioned(ss, "mh", corpus,
           "doc_id", "text")
-        val probed = SimilarityOps.probeMinhashIndex(store, "mh", batch,
-            "doc_id", "text")
+        val probed = SimilarityOps.probeMinhashIndexVersioned(ss, "mh",
+            batch, "doc_id", "text")
           .select(col("id_a"), col("id_b"), lit(1).as("p"))
         val corpusOnly = SimilarityOps
           .minhashNearDups("doc_id", "text")(corpus)

@@ -2254,10 +2254,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     if (Files.exists(z))
       try org.apache.commons.io.FileUtils
         .copyDirectory(z.toFile, zonesDir(name, nv).toFile)
-      catch { case _: java.io.IOException =>
-        // source vanished mid-copy: the sweep is reclaiming v right now
-        abort(s"rollback target v$v of '$name' lost its zone stats to " +
-          "a concurrent retention run — pick a live version and retry")
+      catch { case _: java.io.IOException | _: IllegalArgumentException =>
+        // source vanished mid-copy (the sweep is reclaiming v right now),
+        // or a leftover blocks the destination (commons-io reports that
+        // as IllegalArgumentException)
+        abort(s"rollback of '$name' could not copy v$v's zone stats (a " +
+          "concurrent retention run reclaimed them, or a leftover blocks " +
+          s"v$nv's) — pick a live version and retry")
       }
     // a delete-vector sidecar travels with its version the same way: a
     // rollback to a vector-bearing version restores its deletes, and a
@@ -2267,9 +2270,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     if (Files.exists(dl))
       try org.apache.commons.io.FileUtils
         .copyDirectory(dl.toFile, delsDir(name, nv).toFile)
-      catch { case _: java.io.IOException =>
-        abort(s"rollback target v$v of '$name' lost its delete vector " +
-          "to a concurrent retention run — pick a live version and retry")
+      catch { case _: java.io.IOException | _: IllegalArgumentException =>
+        abort(s"rollback of '$name' could not copy v$v's delete vector " +
+          "(a concurrent retention run reclaimed it, or a leftover blocks " +
+          s"v$nv's) — pick a live version and retry")
       }
     // an EVOLVED table's rollback restores the schema in force at the
     // target along with its content — without this, a schema-narrowing

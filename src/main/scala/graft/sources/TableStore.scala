@@ -97,10 +97,9 @@ final class TableStore(spark: SparkSession, root: String) {
 
   /** Raw append: new files land next to the existing ones, no key
     * filtering — for callers that pre-filter (SimilarityOps'
-    * appendMinhashBatch anti-joins on doc id BEFORE computing rows, and
-    * needs multiple rows per key, which appendKeyed's per-key dedup
-    * would drop). The frame must be pinned/materialized by the caller if
-    * its lineage reads this same table. */
+    * appendWindowBatch anti-joins on doc id BEFORE computing rows).
+    * The frame must be pinned/materialized by the caller if its lineage
+    * reads this same table. */
   def append(name: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(path(name))
 
@@ -437,8 +436,8 @@ final class TableStore(spark: SparkSession, root: String) {
     // row count from an Observation riding the write job itself — the
     // post-write spark.table(name).count() this replaces was a full
     // readback scan of everything just written, a real second pass at
-    // 100 TB (r19 optimization round; replaceCounted and appendBucketed
-    // already measure this way)
+    // 100 TB (r19 optimization round; replaceCounted already measures
+    // this way)
     val obs = org.apache.spark.sql.Observation()
     // repartition ON THE BUCKET KEY first: the bucketed writer emits one
     // file per (task, bucket) pair, so a 32-partition batch over 16
@@ -451,29 +450,6 @@ final class TableStore(spark: SparkSession, root: String) {
       .observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite)
-      .bucketBy(nBuckets, key).sortBy(key)
-      .option("path", path(name))
-      .saveAsTable(name)
-    obs.get("n").asInstanceOf[Long]
-  }
-
-  /** Append a batch to a bucketed table created by [[overwriteBucketed]]
-    * (the spec must match the existing table). Each batch adds at most
-    * one file per non-empty bucket and the bucket layout survives, so
-    * downstream co-located joins stay exchange-free on this side —
-    * the ingestion-shaped write an incremental index needs.
-    * Returns the rows APPENDED, observed on the write job itself — a
-    * post-append table count would scan the ever-growing table on every
-    * ingest commit: O(table) per batch on a streaming hot path. */
-  def appendBucketed(name: String, df: DataFrame, key: String,
-                     nBuckets: Int): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    // task/bucket alignment, as in overwriteBucketed — this is what makes
-    // the "at most one file per non-empty bucket" contract above true
-    df.repartition(nBuckets, org.apache.spark.sql.functions.col(key))
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode(SaveMode.Append)
       .bucketBy(nBuckets, key).sortBy(key)
       .option("path", path(name))
       .saveAsTable(name)

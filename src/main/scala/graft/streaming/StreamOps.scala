@@ -271,37 +271,6 @@ object StreamOps extends Serializable {
       }
       .start()
 
-  /** Streaming ingestion of the first-seen n-gram census — x120c's commit
-    * step as a sink: each micro-batch folds into the persisted novelty
-    * index via SimilarityOps.appendNoveltyBatch. The appender's doc-id
-    * anti-join makes a redelivered batch (even redelivered AFTER later
-    * batches committed) a no-op, and a mixed batch commits only its fresh
-    * docs — effectively-once under at-least-once delivery, the
-    * keyedAppendSink discipline applied to a derived-state table. The
-    * monotone-ingestion gate still rejects a FRESH id at or below the
-    * census high-water mark: that batch would rewrite gram ownership, so
-    * the query fails loudly rather than silently diverge from the batch
-    * census (the x120c contract). Probe scores against the streamed
-    * census are therefore ≡ scores against a batch-built one. */
-  def noveltyCensusSink(store: graft.sources.TableStore, name: String,
-      idCol: String, textCol: String, checkpointDir: String)(df: DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // foreachBatch executes in the stream's CLONED session: the census
-    // appends refresh the clone's relation cache, while the caller
-    // session's cached `<name>_grams` file listing goes stale — a
-    // post-stream probe would silently read the pre-stream census.
-    // Invalidate the caller's cache after every commit.
-    val caller = df.sparkSession
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.SimilarityOps.appendNoveltyBatch(store, name, batch,
-          idCol, textCol)
-        caller.catalog.refreshTable(s"${name}_grams")
-      }
-      .start()
-  }
-
   /** Per-batch CDC reduction + application: reduce a change batch to its
     * LATEST change per key (ordered by `orderCol`), split tombstones
     * (`opCol` == "D") from upserts, and apply both in one table rewrite.
@@ -338,35 +307,13 @@ object StreamOps extends Serializable {
     }
   }
 
-  /** Streaming ingestion into the persisted BM25 inverted index —
-    * noveltyCensusSink's discipline for the retrieval family: each
-    * micro-batch folds through RetrievalOps.appendBm25Batch, whose
-    * doc-registry anti-join makes redelivered (and reordered) duplicates
-    * no-ops and whose additive stats row keeps df/avgdl exact across any
-    * batch split — WHOLE-BATCH redelivery is effectively-once, and probe
-    * scores against the streamed index ≡ a batch-built one (spec). All
-    * four index tables are plain parquet paths (no catalog relation to
-    * go stale, unlike the bucketed novelty census).
-    *
-    * Crash caveat: a batch's postings/dl/stats appends through the plain
-    * TableStore layout are not atomic AS A GROUP — a process dying
-    * mid-commit can tear them (auditBm25Index detects, cannot prevent).
-    * [[versionedBm25IndexSink]] removes the caveat entirely; this sink
-    * remains for indexes already living in a plain TableStore. */
-  def bm25IndexSink(store: graft.sources.TableStore, name: String,
-      idCol: String, textCol: String, checkpointDir: String)(df: DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.RetrievalOps.appendBm25Batch(store, name, batch,
-          idCol, textCol): Unit
-      }
-      .start()
-
   /** Streaming ingestion into the VERSIONED BM25 index (x125d): each
-    * micro-batch folds through RetrievalOps.appendBm25BatchVersioned —
-    * one atomic multi-table commit per batch, so a crash at ANY point
+    * micro-batch folds through RetrievalOps.appendBm25BatchVersioned,
+    * whose doc-registry anti-join makes redelivered (and reordered)
+    * duplicates no-ops and whose additive stats row keeps df/avgdl exact
+    * across any batch split, so probe scores against the streamed index
+    * ≡ a batch-built one (spec). One atomic multi-table commit per
+    * batch, so a crash at ANY point
     * leaves the index serving the previous version with postings/dl/
     * stats mutually consistent; there is no torn state to audit for.
     * Redelivered duplicate batches commit NOTHING (the registry
@@ -389,47 +336,21 @@ object StreamOps extends Serializable {
       }
       .start()
 
-  /** Streaming ingestion into the persisted MinHash signature index —
-    * the x31c build-once/probe-many dedup loop as a sink: each
-    * micro-batch folds through SimilarityOps.appendMinhashBatch, whose
+  /** Streaming ingestion into the VERSIONED minhash index (x31d) — the
+    * x31c build-once/probe-many dedup loop as a sink: each micro-batch
+    * folds through SimilarityOps.appendMinhashBatchVersioned, whose
     * doc-id anti-join against the SIGNATURE registry makes redelivered
-    * and reordered duplicate batches no-ops — effectively-once under
-    * at-least-once delivery, and batch order does not matter
-    * (signatures are per-doc facts, unlike the novelty census's
-    * first-seen ownership). Probing after the stream ≡ probing a
-    * batch-built index over the same docs (spec). All three index
-    * tables are plain parquet paths — no catalog relation to go stale.
-    * A production loop typically probes each batch for its near-dup
-    * pairs BEFORE folding it in (the x62c ingest composition:
-    * probeMinhashIndex → appendComponentEdges → this commit).
-    *
-    * Crash caveat: the append writes sigs THEN bands as separate
-    * TableStore commits. A process dying between them leaves docs
-    * registered in sigs with NO band rows — and because the anti-join
-    * guards on sigs, redelivery skips exactly those docs, so they
-    * silently never produce near-dup candidates. The plain layout
-    * cannot close this window; [[versionedMinhashIndexSink]] commits
-    * sigs + bands as ONE atomic version and removes the tear entirely —
-    * prefer it for any new index. */
-  def minhashIndexSink(store: graft.sources.TableStore, name: String,
-      idCol: String, textCol: String, checkpointDir: String)(df: DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.SimilarityOps.appendMinhashBatch(store, name, batch,
-          idCol, textCol): Unit
-      }
-      .start()
-
-  /** Streaming ingestion into the VERSIONED minhash index (x31d): each
-    * micro-batch folds through SimilarityOps.appendMinhashBatchVersioned
-    * — sigs + bands in ONE atomic commit, so the plain sink's crash
-    * caveat (docs registered in sigs with no band rows, skipped forever
-    * by redelivery) is structurally impossible. Redelivered duplicate
-    * batches commit NOTHING (no version): content AND history are
+    * and reordered duplicate batches no-ops, and batch order does not
+    * matter (signatures are per-doc facts, unlike the novelty census's
+    * first-seen ownership). Sigs + bands land in ONE atomic commit, so
+    * docs registered in sigs with no band rows (which redelivery would
+    * then skip forever) cannot occur. Redelivered duplicate batches
+    * commit NOTHING (no version): content AND history are
     * effectively-once; every batch is an auditable, rollback-able,
     * time-travelable version of the whole sigs/bands/meta group. A
+    * production loop typically probes each batch for its near-dup
+    * pairs BEFORE folding it in (probeMinhashIndexVersioned →
+    * appendComponentEdgesVersioned → this commit). A
     * crash between claim and swap self-heals on restart via
     * [[withSinkClaimRecovery]] (single-writer checkpoint-lock
     * contract). */
@@ -447,13 +368,15 @@ object StreamOps extends Serializable {
       .start()
 
   /** Streaming ingestion into the VERSIONED novelty census (x120d):
-    * grams + docs in ONE atomic commit per micro-batch — the plain
-    * [[noveltyCensusSink]]'s two-step append (grams then docs) can tear
-    * between them; here the torn state is unconstructible and every
-    * batch is a time-travelable version. Redelivery commits nothing
-    * (the doc-registry anti-join empties it before the commit); the
-    * monotone-ingestion gate still fails the query loudly on a fresh
-    * below-HWM id (the x120c contract). No caller-session cache
+    * grams + docs in ONE atomic commit per micro-batch, so no batch can
+    * leave grams whose doc is unregistered, and every batch is a
+    * time-travelable version. Redelivery (even after later batches
+    * committed) commits nothing — the doc-registry anti-join empties it
+    * before the commit — and a mixed batch commits only its fresh docs.
+    * The monotone-ingestion gate fails the query loudly on a fresh
+    * below-HWM id: that batch would rewrite gram ownership (the x120c
+    * contract). Probe scores against the streamed census are therefore
+    * ≡ scores against a batch-built one. No caller-session cache
     * refresh is needed: the bucketed commit itself refreshes the
     * store-session registration, and versioned reads re-list partitions
     * per execution against the manifest's commit_v set. */
@@ -487,12 +410,15 @@ object StreamOps extends Serializable {
       }
       .start()
 
-  /** Streaming ingestion into the VERSIONED SemDeDup state (x68d):
-    * [[semDedupIndexSink]]'s semantics — frozen centroids, monotone-id
-    * gate, dedup against index ∪ smaller-id batch rows — with each
-    * batch's verdicts landing as ONE atomic cell-bucketed version. No
-    * caller cache refresh needed (the versionedNoveltyCensusSink
-    * rationale). */
+  /** Streaming ingestion into the VERSIONED SemDeDup state (x68d) —
+    * x68c's append as a sink: frozen centroids, dedup against index ∪
+    * smaller-id batch rows, with each batch's verdicts landing as ONE
+    * atomic cell-bucketed version. Duplicate redelivery is absorbed (the
+    * anti-join empties it before the gate); the monotone-id gate fails
+    * the query loudly on a FRESH id at or below the index high-water
+    * mark, so unlike [[versionedMinhashIndexSink]], batch REORDERING
+    * with fresh ids is rejected by design. No caller cache refresh
+    * needed (the versionedNoveltyCensusSink rationale). */
   def versionedSemDedupIndexSink(ss: graft.sources.SnapshotStore,
       name: String, tau: Double, checkpointDir: String)(df: DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -537,34 +463,6 @@ object StreamOps extends Serializable {
         }
       }
       .start()
-
-  /** Streaming ingestion into the persisted SemDeDup index — x68c's
-    * append as a sink. Each micro-batch anti-joins the indexed ids
-    * (fully-redundant redelivery commits nothing), assigns to the FROZEN
-    * centroids, and dedups only against index ∪ smaller-id batch rows.
-    * The monotone-id ingestion invariant is inherited and ENFORCED: a
-    * batch carrying a FRESH id at or below the index high-water mark
-    * fails the query loudly rather than silently diverge from the
-    * from-scratch dedup — so unlike [[minhashIndexSink]], batch
-    * REORDERING with fresh ids is rejected by design; only duplicate
-    * redelivery is absorbed. The `<name>_assigned` relation is a
-    * bucketed CATALOG table, so the caller session's relation cache is
-    * refreshed after every commit (the noveltyCensusSink lesson: the
-    * foreachBatch clone refreshes its own cache, the caller's would
-    * silently serve the pre-stream file listing). */
-  def semDedupIndexSink(store: graft.sources.TableStore, name: String,
-      tau: Double, checkpointDir: String)(df: DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val caller = df.sparkSession
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.SimilarityOps.appendSemDedupBatch(store, name, batch,
-          tau)
-        caller.catalog.refreshTable(s"${name}_assigned")
-      }
-      .start()
-  }
 
   /** Versioned-sink commit wrapper, single-writer crash recovery: a
     * sink crashing between its commit's claim and pointer swap would

@@ -83,22 +83,22 @@ class RetrievalOpsSpec extends SparkSpec {
   test("X125b: persisted-index probe ≡ bm25Scores at every commit point; " +
       "retried append is a no-op") {
     val dir = java.nio.file.Files.createTempDirectory("bm25_idx_").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     val terms = Seq("join", "rare")
     val part1 = corpus.filter($"doc_id" <= 2)
     val part2 = corpus.filter($"doc_id" > 2)
-    def probe() = scored(RetrievalOps.probeBm25Index(store, "bm",
+    def probe() = scored(RetrievalOps.probeBm25IndexVersioned(ss, "bm",
       "doc_id", terms))
-    RetrievalOps.buildBm25Index(store, "bm", part1, "doc_id", "text")
+    RetrievalOps.buildBm25IndexVersioned(ss, "bm", part1, "doc_id", "text")
     // parity BEFORE any commit (partial-corpus df/avgdl, not full)
     assert(probe() === scored(
       RetrievalOps.bm25Scores(part1, "doc_id", "text", terms)))
-    assert(RetrievalOps.appendBm25Batch(store, "bm", part2,
+    assert(RetrievalOps.appendBm25BatchVersioned(ss, "bm", part2,
       "doc_id", "text") === 2L)
     val full = scored(RetrievalOps.bm25Scores(corpus, "doc_id", "text", terms))
     assert(probe() === full)
     // idempotent retry: adds nothing, stats stay exact
-    assert(RetrievalOps.appendBm25Batch(store, "bm", part2,
+    assert(RetrievalOps.appendBm25BatchVersioned(ss, "bm", part2,
       "doc_id", "text") === 0L)
     assert(probe() === full)
   }
@@ -107,26 +107,28 @@ class RetrievalOpsSpec extends SparkSpec {
       "leaves probe results unchanged; deleted ids re-add only after " +
       "compaction") {
     val dir = java.nio.file.Files.createTempDirectory("bm25_del_").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     val terms = Seq("join", "rare")
-    RetrievalOps.buildBm25Index(store, "bm", corpus, "doc_id", "text")
-    def probe() = scored(RetrievalOps.probeBm25Index(store, "bm",
+    RetrievalOps.buildBm25IndexVersioned(ss, "bm", corpus, "doc_id", "text")
+    def probe() = scored(RetrievalOps.probeBm25IndexVersioned(ss, "bm",
       "doc_id", terms))
     val doomed = corpus.filter($"doc_id" === 2).select("doc_id")
-    assert(RetrievalOps.deleteBm25Docs(store, "bm", doomed, "doc_id") === 1L)
+    assert(RetrievalOps.deleteBm25DocsVersioned(ss, "bm", doomed,
+      "doc_id") === 1L)
     // retried delete: no-op (stats must not double-subtract)
-    assert(RetrievalOps.deleteBm25Docs(store, "bm", doomed, "doc_id") === 0L)
+    assert(RetrievalOps.deleteBm25DocsVersioned(ss, "bm", doomed,
+      "doc_id") === 0L)
     val survivors = scored(RetrievalOps.bm25Scores(
       corpus.filter($"doc_id" =!= 2), "doc_id", "text", terms))
     assert(probe() === survivors)
     // a dead id cannot silently re-add before compaction
-    assert(RetrievalOps.appendBm25Batch(store, "bm",
+    assert(RetrievalOps.appendBm25BatchVersioned(ss, "bm",
       corpus.filter($"doc_id" === 2), "doc_id", "text") === 0L)
     // compaction: physical rewrite, probe unchanged
-    assert(RetrievalOps.compactBm25Index(store, "bm") === 3L)
+    assert(RetrievalOps.compactBm25IndexVersioned(ss, "bm") === 3L)
     assert(probe() === survivors)
     // post-compaction the id is genuinely gone, so re-adding works
-    assert(RetrievalOps.appendBm25Batch(store, "bm",
+    assert(RetrievalOps.appendBm25BatchVersioned(ss, "bm",
       corpus.filter($"doc_id" === 2), "doc_id", "text") === 1L)
     assert(probe() === scored(RetrievalOps.bm25Scores(corpus,
       "doc_id", "text", terms)))
@@ -135,51 +137,55 @@ class RetrievalOpsSpec extends SparkSpec {
   test("X125b: append works when the caller's id column is literally " +
       "named 'id' (registry alias keeps the anti-join unambiguous)") {
     val dir = java.nio.file.Files.createTempDirectory("bm25_idcol_").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     val docs = corpus.withColumnRenamed("doc_id", "id")
-    RetrievalOps.buildBm25Index(store, "bm",
+    RetrievalOps.buildBm25IndexVersioned(ss, "bm",
       docs.filter($"id" <= 2), "id", "text")
-    assert(RetrievalOps.appendBm25Batch(store, "bm",
+    assert(RetrievalOps.appendBm25BatchVersioned(ss, "bm",
       docs.filter($"id" > 2), "id", "text") === 2L)
-    assert(scored(RetrievalOps.probeBm25Index(store, "bm", "id",
+    assert(scored(RetrievalOps.probeBm25IndexVersioned(ss, "bm", "id",
       Seq("join", "rare"))) ===
       scored(RetrievalOps.bm25Scores(docs, "id", "text", Seq("join", "rare"))))
   }
 
-  test("X125: auditBm25Index passes a healthy index through its whole " +
-      "lifecycle and flags each torn-commit shape") {
+  test("X125: auditBm25IndexVersioned passes a healthy index through its " +
+      "whole lifecycle and flags each torn shape committed on purpose") {
     val dir = java.nio.file.Files.createTempDirectory("bm25_audit_").toString
-    val store = new graft.sources.TableStore(spark, dir)
-    RetrievalOps.buildBm25Index(store, "bm",
+    val ss = new graft.sources.SnapshotStore(spark, dir)
+    RetrievalOps.buildBm25IndexVersioned(ss, "bm",
       corpus.filter($"doc_id" <= 3), "doc_id", "text")
-    assert(RetrievalOps.auditBm25Index(store, "bm")._1)
-    RetrievalOps.appendBm25Batch(store, "bm",
+    assert(RetrievalOps.auditBm25IndexVersioned(ss, "bm")._1)
+    RetrievalOps.appendBm25BatchVersioned(ss, "bm",
       corpus.filter($"doc_id" > 3), "doc_id", "text")
-    RetrievalOps.deleteBm25Docs(store, "bm",
+    RetrievalOps.deleteBm25DocsVersioned(ss, "bm",
       corpus.filter($"doc_id" === 2).select("doc_id"), "doc_id")
-    assert(RetrievalOps.auditBm25Index(store, "bm")._1,
+    assert(RetrievalOps.auditBm25IndexVersioned(ss, "bm")._1,
       "append + delete must keep the invariants")
-    // torn commit shape 1: postings landed, dl/stats did not
-    store.append("bm_postings",
-      Seq((99L, "ghost", 1L)).toDF("id", "term", "tf"))
-    val (ok1, orphans, _, _) = RetrievalOps.auditBm25Index(store, "bm")
+    // torn shape 1: postings without their dl/stats rows, committed
+    // deliberately as one group version
+    val v = ss.commitTables("bm", appends = Map("postings" ->
+      Seq((99L, "ghost", 1L)).toDF("id", "term", "tf")))
+    val (ok1, orphans, _, _) = RetrievalOps.auditBm25IndexVersioned(ss, "bm")
     assert(!ok1 && orphans === 1L)
-    // torn commit shape 2: dl landed, stats did not (on a fresh index)
-    val store2 = new graft.sources.TableStore(spark,
+    // the version before it still audits clean
+    assert(RetrievalOps.auditBm25IndexVersioned(ss, "bm", Some(v - 1))._1)
+    // torn shape 2: a dl row without its stats row (on a fresh index)
+    val ss2 = new graft.sources.SnapshotStore(spark,
       java.nio.file.Files.createTempDirectory("bm25_audit2_").toString)
-    RetrievalOps.buildBm25Index(store2, "bm", corpus, "doc_id", "text")
-    store2.append("bm_dl", Seq((99L, 7L)).toDF("id", "dl"))
+    RetrievalOps.buildBm25IndexVersioned(ss2, "bm", corpus, "doc_id", "text")
+    ss2.commitTables("bm",
+      appends = Map("dl" -> Seq((99L, 7L)).toDF("id", "dl")))
     val (ok2, _, docDrift, tokenDrift) =
-      RetrievalOps.auditBm25Index(store2, "bm")
+      RetrievalOps.auditBm25IndexVersioned(ss2, "bm")
     assert(!ok2 && docDrift === -1L && tokenDrift === -7L)
   }
 
   test("X125b: the index probe PUSHES the term filter to the postings " +
       "scan — the pruned-read claim, pinned in the plan") {
     val dir = java.nio.file.Files.createTempDirectory("bm25_plan_").toString
-    val store = new graft.sources.TableStore(spark, dir)
-    RetrievalOps.buildBm25Index(store, "bm", corpus, "doc_id", "text")
-    val probe = RetrievalOps.probeBm25Index(store, "bm", "doc_id",
+    val ss = new graft.sources.SnapshotStore(spark, dir)
+    RetrievalOps.buildBm25IndexVersioned(ss, "bm", corpus, "doc_id", "text")
+    val probe = RetrievalOps.probeBm25IndexVersioned(ss, "bm", "doc_id",
       Seq("join", "rare"))
     val plan = probe.queryExecution.executedPlan.toString
     assert(plan.contains("In(term, [join,rare])") ||
@@ -342,26 +348,26 @@ class RetrievalOpsSpec extends SparkSpec {
   test("X125: a batch with duplicate doc ids is refused loudly on build " +
       "and append (dl/stats would silently double-count)") {
     val dir = java.nio.file.Files.createTempDirectory("bm25_dup_").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     val dup = corpus.unionByName(corpus.filter($"doc_id" === 1))
     val e = intercept[IllegalArgumentException](
-      RetrievalOps.buildBm25Index(store, "bm", dup, "doc_id", "text"))
+      RetrievalOps.buildBm25IndexVersioned(ss, "bm", dup, "doc_id", "text"))
     assert(e.getMessage.contains("duplicate doc ids"))
-    RetrievalOps.buildBm25Index(store, "bm",
+    RetrievalOps.buildBm25IndexVersioned(ss, "bm",
       corpus.filter($"doc_id" <= 2), "doc_id", "text")
     intercept[IllegalArgumentException](
-      RetrievalOps.appendBm25Batch(store, "bm",
+      RetrievalOps.appendBm25BatchVersioned(ss, "bm",
         corpus.filter($"doc_id" > 2)
           .unionByName(corpus.filter($"doc_id" === 3)), "doc_id", "text"))
   }
 
   test("X125b: empty corpus fails loudly (avgdl undefined) on both paths") {
     val dir = java.nio.file.Files.createTempDirectory("bm25_empty_").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     val empty = corpus.filter($"doc_id" < 0)
-    RetrievalOps.buildBm25Index(store, "bm", empty, "doc_id", "text")
+    RetrievalOps.buildBm25IndexVersioned(ss, "bm", empty, "doc_id", "text")
     intercept[IllegalArgumentException] {
-      RetrievalOps.probeBm25Index(store, "bm", "doc_id", Seq("join"))
+      RetrievalOps.probeBm25IndexVersioned(ss, "bm", "doc_id", Seq("join"))
     }
     intercept[IllegalArgumentException] {
       RetrievalOps.bm25Scores(empty, "doc_id", "text", Seq("join"))

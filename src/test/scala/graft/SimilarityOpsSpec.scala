@@ -189,42 +189,44 @@ class SimilarityOpsSpec extends SparkSpec {
   test("X120c: probe ≡ from-scratch novelty on batch ids; append is " +
       "idempotent and append-only; non-monotone ids are rejected") {
     val dir = java.nio.file.Files.createTempDirectory("novelty_idx_")
-    val store = new graft.sources.TableStore(spark, dir.toString)
+    val ss = new graft.sources.SnapshotStore(spark, dir.toString)
     val docs = env.documents
     // withhold id 250 from the build: the monotone check below needs an
     // UNREGISTERED id under the high-water mark
     val corpus = docs.filter($"doc_id" < 300 && $"doc_id" =!= 250)
     val batch = docs.filter($"doc_id" >= 300 && $"doc_id" < 400)
-    SimilarityOps.buildNoveltyIndex(store, "nvspec", corpus,
-      "doc_id", "text", 5)
-    val probed = SimilarityOps.probeNoveltyIndex(store, "nvspec", batch,
-      "doc_id", "text")
-    val want = SimilarityOps.ngramNovelty(
-        corpus.unionByName(batch), "doc_id", "text", 5)
-      .filter($"doc_id" >= 300)
-    assert(probed.count() > 0)
-    assert(probed.exceptAll(want).count() === 0)
-    assert(want.exceptAll(probed).count() === 0)
-    // commit, then re-offering the same batch adds nothing (idempotent)
-    val censusBefore = spark.table("nvspec_grams").count()
-    assert(SimilarityOps.appendNoveltyBatch(store, "nvspec", batch,
-      "doc_id", "text") === batch.count())
-    val censusAfter = spark.table("nvspec_grams").count()
-    assert(censusAfter > censusBefore)
-    assert(SimilarityOps.appendNoveltyBatch(store, "nvspec", batch,
-      "doc_id", "text") === 0L)
-    assert(spark.table("nvspec_grams").count() === censusAfter)
-    // owners in the census never change on commit (append-only invariant)
-    val owned = spark.table("nvspec_grams")
-      .groupBy("h").count().filter($"count" > 1).count()
-    assert(owned === 0L, "census must stay one owner per gram")
-    // an UNREGISTERED id below the high-water mark must be refused — it
-    // would deserve ownership the census already handed out
-    val e = intercept[IllegalArgumentException] {
-      SimilarityOps.appendNoveltyBatch(store, "nvspec",
-        docs.filter($"doc_id" === 250), "doc_id", "text")
-    }
-    assert(e.getMessage.contains("non-monotone"))
+    try {
+      SimilarityOps.buildNoveltyIndexVersioned(ss, "nvspec", corpus,
+        "doc_id", "text", 5)
+      val probed = SimilarityOps.probeNoveltyIndexVersioned(ss, "nvspec",
+        batch, "doc_id", "text")
+      val want = SimilarityOps.ngramNovelty(
+          corpus.unionByName(batch), "doc_id", "text", 5)
+        .filter($"doc_id" >= 300)
+      assert(probed.count() > 0)
+      assert(probed.exceptAll(want).count() === 0)
+      assert(want.exceptAll(probed).count() === 0)
+      // commit, then re-offering the same batch adds nothing (idempotent)
+      def census() = ss.readTable("nvspec", "grams")
+      val censusBefore = census().count()
+      assert(SimilarityOps.appendNoveltyBatchVersioned(ss, "nvspec", batch,
+        "doc_id", "text") === batch.count())
+      val censusAfter = census().count()
+      assert(censusAfter > censusBefore)
+      assert(SimilarityOps.appendNoveltyBatchVersioned(ss, "nvspec", batch,
+        "doc_id", "text") === 0L)
+      assert(census().count() === censusAfter)
+      // owners in the census never change on commit (append-only)
+      val owned = census().groupBy("h").count().filter($"count" > 1).count()
+      assert(owned === 0L, "census must stay one owner per gram")
+      // an UNREGISTERED id below the high-water mark must be refused — it
+      // would deserve ownership the census already handed out
+      val e = intercept[IllegalArgumentException] {
+        SimilarityOps.appendNoveltyBatchVersioned(ss, "nvspec",
+          docs.filter($"doc_id" === 250), "doc_id", "text")
+      }
+      assert(e.getMessage.contains("non-monotone"))
+    } finally ss.dropCatalogTables("nvspec")
   }
 
   test("X30c: simhash distance separates near-dups from random pairs") {
@@ -518,35 +520,37 @@ class SimilarityOpsSpec extends SparkSpec {
   test("X32d: persisted IVF index — build once, probe many, bucketed " +
     "index side, results match the in-session path") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_store").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     val emb = env.embeddings.withColumn("e",
       transform($"embedding", v => v.cast("double")))
     val q = emb.filter($"vec_id" < 5).select($"vec_id".as("q_id"), $"e".as("qe"))
     val c = emb.select($"vec_id".as("c_id"), $"e".as("ce"))
-    SimilarityOps.buildIvfIndex(store, "ivfspec", c)
-    val probe1 = SimilarityOps.probeIvfIndex(store, "ivfspec", q, k = 10)
-    // the index side must come in through the catalog with its bucket
-    // spec (the co-located probe-join layout), not as bare parquet
-    val plan = probe1.queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"),
-      s"probe must scan the bucketed index:\n$plan")
-    val r1 = probe1.select("q_id", "c_id").as[(Long, Long)].collect().toSet
-    // probe-many: a second probe reuses the same persisted index (no
-    // refit — same cells, same result)
-    val r2 = SimilarityOps.probeIvfIndex(store, "ivfspec", q, k = 10)
-      .select("q_id", "c_id").as[(Long, Long)].collect().toSet
-    assert(r1 === r2)
-    // and the persisted path agrees with the in-session path end to end
-    val inSession = SimilarityOps.ivfCosineTopK(q, c, 10)
-      .select("q_id", "c_id").as[(Long, Long)].collect().toSet
-    assert(r1 === inSession)
-    spark.sql("DROP TABLE IF EXISTS ivfspec_assigned")
+    try {
+      SimilarityOps.buildIvfIndexVersioned(ss, "ivfspec", c)
+      val probe1 = SimilarityOps.probeIvfIndexVersioned(ss, "ivfspec", q,
+        k = 10)
+      // the index side must come in through the catalog with its bucket
+      // spec (the co-located probe-join layout), not as bare parquet
+      val plan = probe1.queryExecution.executedPlan.toString
+      assert(plan.contains("Bucketed: true"),
+        s"probe must scan the bucketed index:\n$plan")
+      val r1 = probe1.select("q_id", "c_id").as[(Long, Long)].collect().toSet
+      // probe-many: a second probe reuses the same persisted index (no
+      // refit — same cells, same result)
+      val r2 = SimilarityOps.probeIvfIndexVersioned(ss, "ivfspec", q, k = 10)
+        .select("q_id", "c_id").as[(Long, Long)].collect().toSet
+      assert(r1 === r2)
+      // and the persisted path agrees with the in-session path end to end
+      val inSession = SimilarityOps.ivfCosineTopK(q, c, 10)
+        .select("q_id", "c_id").as[(Long, Long)].collect().toSet
+      assert(r1 === inSession)
+    } finally ss.dropCatalogTables("ivfspec")
   }
 
   test("X32f: incremental IVF — append assigns with the shared plan " +
     "(parity with from-scratch), is idempotent, and new vectors probe") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_inc").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     val emb = env.embeddings.withColumn("e",
       transform($"embedding", v => v.cast("double")))
     val corpus = emb.filter($"vec_id" % 5 =!= 0)
@@ -554,34 +558,37 @@ class SimilarityOpsSpec extends SparkSpec {
     val batch = emb.filter($"vec_id" % 5 === 0)
       .select($"vec_id".as("c_id"), $"e".as("ce"))
     val total = emb.count()
-    SimilarityOps.buildIvfIndex(store, "ivfinc", corpus)
-    val preCells = spark.table("ivfinc_assigned").select("c_id", "cell")
+    def cells() = ss.readTable("ivfinc", "assigned").select("c_id", "cell")
       .as[(Long, Int)].collect().toMap
-    val nBatch = batch.count()
-    val n1 = SimilarityOps.appendIvfBatch(store, "ivfinc", batch)
-    assert(n1 === nBatch, s"append must ingest the $nBatch-vector batch, got $n1")
-    // idempotent: re-ingesting the same batch adds nothing
-    val n2 = SimilarityOps.appendIvfBatch(store, "ivfinc", batch)
-    assert(n2 === 0L, s"re-append must be a no-op, got $n2")
-    assert(spark.table("ivfinc_assigned").count() === total,
-      s"index should hold all $total vectors")
-    val after = spark.table("ivfinc_assigned").select("c_id", "cell")
-      .as[(Long, Int)].collect().toMap
-    // corpus assignments untouched by the append
-    preCells.foreach { case (id, cell) => assert(after(id) === cell) }
-    // batch assignments ≡ the shared plan applied from scratch with the
-    // SAME centroids (parity by construction — one code path, raw input)
-    val reference = SimilarityOps.assignCells(
-      batch, store.read("ivfinc_centroids"))
-      .select("c_id", "cell").as[(Long, Int)].collect().toMap
-    reference.foreach { case (id, cell) => assert(after(id) === cell) }
-    // appended vectors are retrievable: probing WITH batch vectors as
-    // queries reaches candidates (and the index side stays bucketed)
-    val probe = SimilarityOps.probeIvfIndex(store, "ivfinc",
-      batch.limit(5).select($"c_id".as("q_id"), $"ce".as("qe")), k = 5)
-    assert(probe.queryExecution.executedPlan.toString.contains("Bucketed: true"))
-    assert(probe.count() > 0)
-    spark.sql("DROP TABLE IF EXISTS ivfinc_assigned")
+    try {
+      SimilarityOps.buildIvfIndexVersioned(ss, "ivfinc", corpus)
+      val preCells = cells()
+      val nBatch = batch.count()
+      val n1 = SimilarityOps.appendIvfBatchVersioned(ss, "ivfinc", batch)
+      assert(n1 === nBatch,
+        s"append must ingest the $nBatch-vector batch, got $n1")
+      // idempotent: re-ingesting the same batch adds nothing
+      val n2 = SimilarityOps.appendIvfBatchVersioned(ss, "ivfinc", batch)
+      assert(n2 === 0L, s"re-append must be a no-op, got $n2")
+      assert(ss.readTable("ivfinc", "assigned").count() === total,
+        s"index should hold all $total vectors")
+      val after = cells()
+      // corpus assignments untouched by the append
+      preCells.foreach { case (id, cell) => assert(after(id) === cell) }
+      // batch assignments ≡ the shared plan applied from scratch with the
+      // SAME centroids (parity by construction — one code path, raw input)
+      val reference = SimilarityOps.assignCells(
+        batch, ss.readTable("ivfinc", "centroids"))
+        .select("c_id", "cell").as[(Long, Int)].collect().toMap
+      reference.foreach { case (id, cell) => assert(after(id) === cell) }
+      // appended vectors are retrievable: probing WITH batch vectors as
+      // queries reaches candidates (and the index side stays bucketed)
+      val probe = SimilarityOps.probeIvfIndexVersioned(ss, "ivfinc",
+        batch.limit(5).select($"c_id".as("q_id"), $"ce".as("qe")), k = 5)
+      assert(probe.queryExecution.executedPlan.toString
+        .contains("Bucketed: true"))
+      assert(probe.count() > 0)
+    } finally ss.dropCatalogTables("ivfinc")
   }
 
   test("X62c: componentsRemap — the small reduced graph takes the " +
@@ -613,67 +620,74 @@ class SimilarityOpsSpec extends SparkSpec {
     "whole merged component; retry appends nothing; appends are " +
     "O(batch) rows; compaction folds without changing labels") {
     val dir = java.nio.file.Files.createTempDirectory("cc_store").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     def state(): Map[Long, Long] =
-      SimilarityOps.readComponentsState(store, "cc")
+      SimilarityOps.readComponentsStateVersioned(ss, "cc")
         .as[(Long, Long)].collect().toMap
-    // base graph: {5,9}, {20,21}, {30,31} — labels 5, 20, 30
-    SimilarityOps.buildComponentsState(store, "cc",
-      Seq((5L, 9L), (20L, 21L), (30L, 31L)).toDF("a", "b"))
-    assert(state() === Map(5L -> 5L, 9L -> 5L, 20L -> 20L, 21L -> 20L,
-      30L -> 30L, 31L -> 30L))
-    // batch 1: fresh node 3 bridges INTO {5,9} via 9, and {20,21} merges
-    // with {30,31} via a 21–30 edge: new labels 3 and 20 — the fresh id
-    // below the old min must win, exactly as a from-scratch run would
-    val w1 = SimilarityOps.appendComponentEdges(store, "cc",
-      Seq((3L, 9L), (21L, 30L)).toDF("a", "b"))
-    val expect1 = Map(3L -> 3L, 5L -> 3L, 9L -> 3L,
-      20L -> 20L, 21L -> 20L, 30L -> 20L, 31L -> 20L)
-    assert(state() === expect1)
-    assert(w1 === 5L, s"5,9 relabeled + 1 fresh + 30,31 relabeled = 5, got $w1")
-    // merge-on-read: the append wrote ONLY those 5 rows (6 base + 5)
-    assert(store.read("cc_comps").count() === 11L)
-    // parity with from-scratch over the union of all edges
-    val scratch = SimilarityOps.connectedComponents(
-      Seq((5L, 9L), (20L, 21L), (30L, 31L), (3L, 9L), (21L, 30L))
-        .toDF("a", "b"))
-    assert(scratch.as[(Long, Long)].collect().toMap === expect1)
-    graft.ops.RelOps.releaseCheckpoint(scratch)
-    // exact retry: endpoints already share labels ⇒ reduced graph empty,
-    // nothing appended
-    assert(SimilarityOps.appendComponentEdges(store, "cc",
-      Seq((3L, 9L), (21L, 30L)).toDF("a", "b")) === 0L)
-    assert(store.read("cc_comps").count() === 11L)
-    // a disjoint fresh pair appends ONLY its own rows
-    assert(SimilarityOps.appendComponentEdges(store, "cc",
-      Seq((100L, 101L)).toDF("a", "b")) === 2L)
-    assert(state()(100L) === 100L && state()(101L) === 100L)
-    assert(state().size === 9)
-    // a self-loop-only node enters as a singleton, exactly as
-    // connectedComponents would keep it in a from-scratch run
-    assert(SimilarityOps.appendComponentEdges(store, "cc",
-      Seq((200L, 200L)).toDF("a", "b")) === 1L)
-    assert(state()(200L) === 200L)
-    assert(state().size === 10)
-    // compaction: one row per id, reconciled labels unchanged
-    val before = state()
-    assert(SimilarityOps.compactComponentsState(store, "cc") === 10L)
-    assert(store.read("cc_comps").count() === 10L)
-    assert(state() === before)
-    // plan pin for the append's label lookup — the PRODUCTION helper
-    // (stateLabelProbe, the exact plan appendComponentEdges executes):
-    // with auto-broadcast OFF, the HINTED batch side still builds — the
-    // state scan never sort-merges (a hint on the LEFT of an outer join
-    // is silently ignored by Spark; the semi-probe shape keeps it true)
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def comps() = ss.readTable("cc", "comps")
     try {
-      val p = SimilarityOps.stateLabelProbe(store.read("cc_comps"),
-          Seq(5L, 100L).toDF("id"))
-        .queryExecution.executedPlan.toString
-      assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
-        s"state semi-probe must broadcast the batch side:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+      // base graph: {5,9}, {20,21}, {30,31} — labels 5, 20, 30
+      SimilarityOps.buildComponentsStateVersioned(ss, "cc",
+        Seq((5L, 9L), (20L, 21L), (30L, 31L)).toDF("a", "b"))
+      assert(state() === Map(5L -> 5L, 9L -> 5L, 20L -> 20L, 21L -> 20L,
+        30L -> 30L, 31L -> 30L))
+      // batch 1: fresh node 3 bridges INTO {5,9} via 9, and {20,21}
+      // merges with {30,31} via a 21–30 edge: new labels 3 and 20 — the
+      // fresh id below the old min must win, exactly as a from-scratch
+      // run would
+      val w1 = SimilarityOps.appendComponentEdgesVersioned(ss, "cc",
+        Seq((3L, 9L), (21L, 30L)).toDF("a", "b"))
+      val expect1 = Map(3L -> 3L, 5L -> 3L, 9L -> 3L,
+        20L -> 20L, 21L -> 20L, 30L -> 20L, 31L -> 20L)
+      assert(state() === expect1)
+      assert(w1 === 5L,
+        s"5,9 relabeled + 1 fresh + 30,31 relabeled = 5, got $w1")
+      // merge-on-read: the append wrote ONLY those 5 rows (6 base + 5)
+      assert(comps().count() === 11L)
+      // parity with from-scratch over the union of all edges
+      val scratch = SimilarityOps.connectedComponents(
+        Seq((5L, 9L), (20L, 21L), (30L, 31L), (3L, 9L), (21L, 30L))
+          .toDF("a", "b"))
+      assert(scratch.as[(Long, Long)].collect().toMap === expect1)
+      graft.ops.RelOps.releaseCheckpoint(scratch)
+      // exact retry: endpoints already share labels ⇒ reduced graph
+      // empty, nothing appended
+      assert(SimilarityOps.appendComponentEdgesVersioned(ss, "cc",
+        Seq((3L, 9L), (21L, 30L)).toDF("a", "b")) === 0L)
+      assert(comps().count() === 11L)
+      // a disjoint fresh pair appends ONLY its own rows
+      assert(SimilarityOps.appendComponentEdgesVersioned(ss, "cc",
+        Seq((100L, 101L)).toDF("a", "b")) === 2L)
+      assert(state()(100L) === 100L && state()(101L) === 100L)
+      assert(state().size === 9)
+      // a self-loop-only node enters as a singleton, exactly as
+      // connectedComponents would keep it in a from-scratch run
+      assert(SimilarityOps.appendComponentEdgesVersioned(ss, "cc",
+        Seq((200L, 200L)).toDF("a", "b")) === 1L)
+      assert(state()(200L) === 200L)
+      assert(state().size === 10)
+      // compaction: one row per id, reconciled labels unchanged
+      val before = state()
+      SimilarityOps.compactComponentsStateVersioned(ss, "cc")
+      assert(comps().count() === 10L)
+      assert(state() === before)
+      // plan pin for the append's label lookup — the PRODUCTION helper
+      // (stateLabelProbe, the exact plan appendComponentEdgesVersioned
+      // executes): with auto-broadcast OFF, the HINTED batch side still
+      // builds — the state scan never sort-merges (a hint on the LEFT of
+      // an outer join is silently ignored by Spark; the semi-probe shape
+      // keeps it true)
+      val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val p = SimilarityOps.stateLabelProbe(comps(),
+            Seq(5L, 100L).toDF("id"))
+          .queryExecution.executedPlan.toString
+        assert(p.contains("BroadcastHashJoin") &&
+          !p.contains("SortMergeJoin"),
+          s"state semi-probe must broadcast the batch side:\n$p")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    } finally ss.dropCatalogTables("cc")
   }
 
   test("X62d: VERSIONED components state — merges ≡ from-scratch at " +
@@ -695,7 +709,7 @@ class SimilarityOpsSpec extends SparkSpec {
         30L -> 30L, 31L -> 30L)
       assert(state() === base)
       // v2: fresh node 3 bridges into {5,9}; {20,21} merges {30,31} —
-      // same reconciliation as the plain x62c spec, now ONE CASed commit
+      // the x62c spec's reconciliation, as ONE CASed commit
       val w1 = SimilarityOps.appendComponentEdgesVersioned(ss, "cc",
         Seq((3L, 9L), (21L, 30L)).toDF("a", "b"))
       assert(w1 === 5L && ss.currentVersion("cc") === 2L)
@@ -711,8 +725,7 @@ class SimilarityOpsSpec extends SparkSpec {
       // time travel: v1 still serves the pre-merge labels exactly
       assert(state(Some(1L)) === base)
       // the CAS: a claim landed between the pinned read and the commit —
-      // the plain layout would interleave silently; here it fails
-      // retryably and the post-release retry lands (v3)
+      // the append fails retryably and the post-release retry lands (v3)
       ss.claim("cc", 3L)
       intercept[graft.sources.ConcurrentCommitException](
         SimilarityOps.appendComponentEdgesVersioned(ss, "cc",
@@ -737,60 +750,52 @@ class SimilarityOpsSpec extends SparkSpec {
     } finally ss.dropCatalogTables("cc")
   }
 
-  test("X31d: VERSIONED minhash index — probe ≡ the plain layout at " +
-    "every version; group rollback restores the pre-append index whole") {
+  test("X31d: VERSIONED minhash index — probe ≡ the minhashNearDups " +
+    "decomposition at every version; group rollback restores the " +
+    "pre-append index whole") {
     val ss = new graft.sources.SnapshotStore(spark,
       java.nio.file.Files.createTempDirectory("mh_ver").toString)
-    val plain = new graft.sources.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("mh_pl").toString)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)]
         .collect().toSet
+    def nearDups(df: org.apache.spark.sql.DataFrame) =
+      pairs(SimilarityOps.minhashNearDups("doc_id", "text")(df))
     val corpus = env.documents.filter($"doc_id" % 5 =!= 0)
     val batch = env.documents.filter($"doc_id" % 5 === 0)
     val held = env.documents.filter($"doc_id" % 7 === 0)
       .select(($"doc_id" + 900000000L).as("doc_id"), $"text")
+    val corpusOnly = nearDups(corpus)
+    val full = nearDups(env.documents)
+    // the batch's pairs against version 1: exactly what the union run
+    // adds to the corpus-only run
+    def batchAgainstCurrent() = pairs(SimilarityOps
+      .probeMinhashIndexVersioned(ss, "mh", batch, "doc_id", "text"))
     assert(SimilarityOps.buildMinhashIndexVersioned(ss, "mh", corpus,
       "doc_id", "text") === 1L)
-    SimilarityOps.buildMinhashIndex(plain, "mh", corpus, "doc_id", "text")
-    // probe parity with the plain layout (shared core)
-    assert(pairs(SimilarityOps.probeMinhashIndexVersioned(ss, "mh", batch,
-      "doc_id", "text")) ===
-      pairs(SimilarityOps.probeMinhashIndex(plain, "mh", batch,
-        "doc_id", "text")))
-    // append commits ONE version; held-out probe matches a plain index
-    // grown the same way
+    val probed = batchAgainstCurrent()
+    assert(probed.nonEmpty && corpusOnly ++ probed === full &&
+      (corpusOnly intersect probed).isEmpty)
+    // append commits ONE version; a held-out probe against it adds
+    // exactly the union run's new pairs
     assert(SimilarityOps.appendMinhashBatchVersioned(ss, "mh", batch,
       "doc_id", "text") === batch.count())
-    SimilarityOps.appendMinhashBatch(plain, "mh", batch, "doc_id", "text")
     assert(ss.currentVersion("mh") === 2L)
-    assert(pairs(SimilarityOps.probeMinhashIndexVersioned(ss, "mh", held,
-      "doc_id", "text")) ===
-      pairs(SimilarityOps.probeMinhashIndex(plain, "mh", held,
-        "doc_id", "text")))
+    val heldPairs = pairs(SimilarityOps.probeMinhashIndexVersioned(ss,
+      "mh", held, "doc_id", "text"))
+    assert(heldPairs.nonEmpty &&
+      full ++ heldPairs ===
+        nearDups(env.documents.select("doc_id", "text").unionByName(held)))
     // metadata-only rollback moves sigs+bands+meta TOGETHER: probing at
     // current again decomposes like the corpus-only index
     ss.rollback("mh", 1L)
     assert(ss.readTable("mh", "sigs").count() === corpus.count())
-    assert(pairs(SimilarityOps.probeMinhashIndexVersioned(ss, "mh", batch,
-      "doc_id", "text")) ===
-      pairs(SimilarityOps.probeMinhashIndex(plain2Corpus(corpus), "mh",
-        batch, "doc_id", "text")))
-  }
-
-  /** A plain corpus-only index for the rollback comparison. */
-  private def plain2Corpus(corpus: org.apache.spark.sql.DataFrame)
-      : graft.sources.TableStore = {
-    val st = new graft.sources.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("mh_pl2").toString)
-    SimilarityOps.buildMinhashIndex(st, "mh", corpus, "doc_id", "text")
-    st
+    assert(batchAgainstCurrent() === probed)
   }
 
   test("X31c: persisted MinHash index — incremental batch dedup equals " +
     "the full-corpus run on the union; append is idempotent") {
     val dir = java.nio.file.Files.createTempDirectory("mh_store").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)]
         .collect().toSet
@@ -798,9 +803,10 @@ class SimilarityOpsSpec extends SparkSpec {
     // families straddle the split, so cross pairs must be found
     val corpus = env.documents.filter($"doc_id" % 5 =!= 0)
     val batch = env.documents.filter($"doc_id" % 5 === 0)
-    SimilarityOps.buildMinhashIndex(store, "mh", corpus, "doc_id", "text")
-    val probed = pairs(SimilarityOps.probeMinhashIndex(
-      store, "mh", batch, "doc_id", "text"))
+    SimilarityOps.buildMinhashIndexVersioned(ss, "mh", corpus,
+      "doc_id", "text")
+    val probed = pairs(SimilarityOps.probeMinhashIndexVersioned(
+      ss, "mh", batch, "doc_id", "text"))
     val corpusOnly = pairs(
       SimilarityOps.minhashNearDups("doc_id", "text")(corpus))
     val full = pairs(
@@ -812,19 +818,20 @@ class SimilarityOpsSpec extends SparkSpec {
     assert((corpusOnly intersect probed).isEmpty)
     // commit the batch, then probe it AGAIN as if retried: the index now
     // contains the batch docs, so every batch pair is intra-index…
-    val added = SimilarityOps.appendMinhashBatch(
-      store, "mh", batch, "doc_id", "text")
+    val added = SimilarityOps.appendMinhashBatchVersioned(
+      ss, "mh", batch, "doc_id", "text")
     assert(added === batch.count())
     // …and a re-append adds nothing (idempotent ingest commit)
-    assert(SimilarityOps.appendMinhashBatch(
-      store, "mh", batch, "doc_id", "text") === 0L)
+    assert(SimilarityOps.appendMinhashBatchVersioned(
+      ss, "mh", batch, "doc_id", "text") === 0L)
     // a NEXT batch now dedups against corpus ∪ batch: probing the next
     // batch against the grown index completes the union run again
     val corpus2 = env.documents.filter($"doc_id" % 5 =!= 1)
     val batch2 = env.documents.filter($"doc_id" % 5 === 1)
-    SimilarityOps.buildMinhashIndex(store, "mh2", corpus2, "doc_id", "text")
-    val probed2 = pairs(SimilarityOps.probeMinhashIndex(
-      store, "mh2", batch2, "doc_id", "text"))
+    SimilarityOps.buildMinhashIndexVersioned(ss, "mh2", corpus2,
+      "doc_id", "text")
+    val probed2 = pairs(SimilarityOps.probeMinhashIndexVersioned(
+      ss, "mh2", batch2, "doc_id", "text"))
     val corpus2Only = pairs(
       SimilarityOps.minhashNearDups("doc_id", "text")(corpus2))
     assert(corpus2Only ++ probed2 === full)
@@ -1003,7 +1010,7 @@ class SimilarityOpsSpec extends SparkSpec {
   test("X68c: incremental semdedup — a batch row can be owned by an " +
     "ALREADY-DROPPED index row; re-append is a no-op") {
     val dir = java.nio.file.Files.createTempDirectory("sd_inc").toString
-    val store = new graft.sources.TableStore(spark, dir)
+    val ss = new graft.sources.SnapshotStore(spark, dir)
     def unit(deg: Double) = Seq(math.cos(math.toRadians(deg)),
       math.sin(math.toRadians(deg)))
     val tau = math.cos(math.toRadians(40)) // ≈ 0.766
@@ -1011,34 +1018,38 @@ class SimilarityOpsSpec extends SparkSpec {
     // v3 at 180° (unrelated survivor)
     val corpus = Seq((1L, unit(0)), (2L, unit(35)), (3L, unit(180)))
       .toDF("c_id", "ce")
-    SimilarityOps.buildSemDedupIndex(store, "sdinc", corpus,
-      nClusters = 2, tau = tau)
-    // batch: id 10 at 70° — cos to v2(35°) = 0.819 ≥ τ, but cos to the
-    // SURVIVOR v1(0°) = 0.342 < τ: its only owner is the dropped row 2.
-    // Pruning dropped rows from the owner search would wrongly keep it.
-    val batch = Seq((10L, unit(70))).toDF("c_id", "ce")
-    val n1 = SimilarityOps.appendSemDedupBatch(store, "sdinc", batch, tau)
-    assert(n1 === 4L)
-    val row10 = spark.table("sdinc_assigned")
-      .filter($"c_id" === 10L)
-      .select("owner", "dropped").as[(Option[Long], Boolean)].head()
-    assert(row10 === ((Some(2L), true)))
-    // idempotent re-ingestion: same batch again changes nothing
-    val n2 = SimilarityOps.appendSemDedupBatch(store, "sdinc", batch, tau)
-    assert(n2 === 4L)
-    // corpus verdicts untouched by the append
-    val verdicts = spark.table("sdinc_assigned")
-      .filter($"c_id" < 10L).select("c_id", "dropped")
-      .as[(Long, Boolean)].collect().toMap
-    assert(verdicts === Map(1L -> false, 2L -> true, 3L -> false))
-    // non-monotone ingestion (id below the index high-water mark) would
-    // need indexed verdicts re-evaluated — must fail fast, not diverge
-    val err = intercept[IllegalArgumentException] {
-      SimilarityOps.appendSemDedupBatch(store, "sdinc",
-        Seq((5L, unit(120))).toDF("c_id", "ce"), tau)
-    }
-    assert(err.getMessage.contains("non-monotone"))
-    spark.sql("DROP TABLE IF EXISTS sdinc_assigned")
+    def assigned() = ss.readTable("sdinc", "assigned")
+    try {
+      SimilarityOps.buildSemDedupIndexVersioned(ss, "sdinc", corpus,
+        nClusters = 2, tau = tau)
+      // batch: id 10 at 70° — cos to v2(35°) = 0.819 ≥ τ, but cos to the
+      // SURVIVOR v1(0°) = 0.342 < τ: its only owner is the dropped row 2.
+      // Pruning dropped rows from the owner search would wrongly keep it.
+      val batch = Seq((10L, unit(70))).toDF("c_id", "ce")
+      assert(SimilarityOps.appendSemDedupBatchVersioned(ss, "sdinc", batch,
+        tau) === 1L)
+      assert(assigned().count() === 4L)
+      val row10 = assigned()
+        .filter($"c_id" === 10L)
+        .select("owner", "dropped").as[(Option[Long], Boolean)].head()
+      assert(row10 === ((Some(2L), true)))
+      // idempotent re-ingestion: same batch again changes nothing
+      assert(SimilarityOps.appendSemDedupBatchVersioned(ss, "sdinc", batch,
+        tau) === 0L)
+      assert(assigned().count() === 4L)
+      // corpus verdicts untouched by the append
+      val verdicts = assigned()
+        .filter($"c_id" < 10L).select("c_id", "dropped")
+        .as[(Long, Boolean)].collect().toMap
+      assert(verdicts === Map(1L -> false, 2L -> true, 3L -> false))
+      // non-monotone ingestion (id below the index high-water mark) would
+      // need indexed verdicts re-evaluated — must fail fast, not diverge
+      val err = intercept[IllegalArgumentException] {
+        SimilarityOps.appendSemDedupBatchVersioned(ss, "sdinc",
+          Seq((5L, unit(120))).toDF("c_id", "ce"), tau)
+      }
+      assert(err.getMessage.contains("non-monotone"))
+    } finally ss.dropCatalogTables("sdinc")
   }
 
   /** Pin settings for a block, restoring the suite session afterwards. */

@@ -675,6 +675,28 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(rows(ss.readCurrent("t")) === Set((9L, "z"), (10L, "y")))
   }
 
+  test("a rollback whose delete-vector copy is blocked by a leftover " +
+      "directory aborts retryably and leaves no claim, zones or vector " +
+      "behind") {
+    val dir = java.nio.file.Files.createTempDirectory("snap_rbblock_")
+    val ss = new SnapshotStore(spark, dir.toString)
+    ss.commitOverwriteKeyed("t", "k", spark.range(0L, 100L)
+      .select(col("id").as("k"), lit("x").as("v")), numFiles = 4)
+    ss.commitDeleteKeys("t", Seq(5L).toDF("k"))                    // v2
+    ss.commitOverwrite("t", Seq((9L, "z")).toDF("k", "v"))         // v3
+    // a non-empty directory where one of v2's vector files lands in v4:
+    // commons-io refuses that copy with IllegalArgumentException
+    val listing = java.nio.file.Files.list(dir.resolve("t/dels/v2"))
+    val vectorFile = try listing.iterator().next().getFileName
+      finally listing.close()
+    java.nio.file.Files.createDirectories(
+      dir.resolve("t/dels/v4").resolve(vectorFile).resolve("leftover"))
+    intercept[graft.sources.ConcurrentCommitException](ss.rollback("t", 2L))
+    Seq("t/meta/_claims/v4", "t/zones/v4", "t/dels/v4").foreach(p =>
+      assert(!java.nio.file.Files.exists(dir.resolve(p)), s"$p left"))
+    assert(ss.currentVersion("t") === 3L)
+  }
+
   test("X141l: vacuumStale runs beside a live committer — an in-lease " +
       "claim and its staging are untouched and the commit completes; a " +
       "crashed claim reclaims after the lease without quiescing; a " +

@@ -385,9 +385,9 @@ class StreamOpsSpec extends SparkSpec {
       "redelivered and mixed batches converge to the batch-built census; " +
       "probe scores match; a fresh below-HWM id fails loudly") {
     implicit val sc = spark.sqlContext
-    val storeS = new graft.sources.TableStore(spark,
+    val ssS = new graft.sources.SnapshotStore(spark,
       java.nio.file.Files.createTempDirectory("nv_stream_").toString)
-    val storeB = new graft.sources.TableStore(spark,
+    val ssB = new graft.sources.SnapshotStore(spark,
       java.nio.file.Files.createTempDirectory("nv_batchref_").toString)
     val ck = java.nio.file.Files.createTempDirectory("nv_ck_").toString
     import graft.ops.SimilarityOps
@@ -402,179 +402,55 @@ class StreamOpsSpec extends SparkSpec {
     def asDocs(df: org.apache.spark.sql.DataFrame): Seq[Doc] =
       df.select("doc_id", "text").as[(Long, String)].collect().toSeq
         .map { case (id, tx) => Doc(id, tx, t(1)) }
-    SimilarityOps.buildNoveltyIndex(storeS, "nvs", corpus, "doc_id", "text", 5)
-    val mem = MemoryStream[Doc]
-    val q = StreamOps.noveltyCensusSink(storeS, "nvs", "doc_id", "text", ck)(
-      mem.toDF())
     try {
-      mem.addData(asDocs(b1): _*); q.processAllAvailable()
-      mem.addData(asDocs(b2): _*); q.processAllAvailable()
-      // full redelivery of b1 AFTER b2 committed (reordered duplicate):
-      // the doc-registry anti-join makes it a no-op
-      mem.addData(asDocs(b1): _*); q.processAllAvailable()
-      // mixed batch: already-committed b2 docs + fresh b3 docs — only the
-      // fresh docs commit, and the monotone gate sees only them
-      mem.addData(asDocs(b2.unionByName(b3)): _*); q.processAllAvailable()
-    } finally q.stop()
-    // one-shot batch reference over the identical final corpus
-    SimilarityOps.buildNoveltyIndex(storeB, "nvb",
-      corpus.unionByName(b1).unionByName(b2).unionByName(b3),
-      "doc_id", "text", 5)
-    def census(n: String) = spark.table(s"${n}_grams")
-      .as[(Long, Long)].collect().toSet
-    assert(census("nvs") === census("nvb"))
-    assert(storeS.read("nvs_docs").as[Long].collect().toSet ===
-      storeB.read("nvb_docs").as[Long].collect().toSet)
-    // probe parity: a new batch scores identically against both censuses
-    def probe(st: graft.sources.TableStore, n: String) =
-      SimilarityOps.probeNoveltyIndex(st, n, probeBatch, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3))).toSet
-    val p = probe(storeS, "nvs")
-    assert(p.nonEmpty && p === probe(storeB, "nvb"))
-    // genuinely out-of-order ingestion (fresh id BELOW the high-water
-    // mark, never committed) must fail the query, not rewrite ownership
-    val mem2 = MemoryStream[Doc]
-    val ck2 = java.nio.file.Files.createTempDirectory("nv_ck2_").toString
-    val q2 = StreamOps.noveltyCensusSink(storeS, "nvs", "doc_id", "text",
-      ck2)(mem2.toDF())
-    try {
-      mem2.addData(Doc(10L, "fresh doc below the high water mark", t(2)))
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q2.processAllAvailable()
-      }
-    } finally q2.stop()
-  }
-
-  test("X125-stream: bm25IndexSink ingests micro-batches into the " +
-      "persisted index; redelivery is a no-op; probe ≡ batch-built") {
-    implicit val sc = spark.sqlContext
-    import graft.ops.RetrievalOps
-    val store = new graft.sources.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("bm25_sink_").toString)
-    val ck = java.nio.file.Files.createTempDirectory("bm25_ck_").toString
-    val docs = env.documents
-    val corpus = docs.filter($"doc_id" < 150)
-    val b1 = docs.filter($"doc_id" >= 150 && $"doc_id" < 250)
-    val b2 = docs.filter($"doc_id" >= 250 && $"doc_id" < 350)
-    def asDocs(df: org.apache.spark.sql.DataFrame): Seq[Doc] =
-      df.select("doc_id", "text").as[(Long, String)].collect().toSeq
-        .map { case (id, tx) => Doc(id, tx, t(1)) }
-    RetrievalOps.buildBm25Index(store, "bm", corpus, "doc_id", "text")
-    val mem = MemoryStream[Doc]
-    val q = StreamOps.bm25IndexSink(store, "bm", "doc_id", "text", ck)(
-      mem.toDF())
-    try {
-      mem.addData(asDocs(b1): _*); q.processAllAvailable()
-      mem.addData(asDocs(b2): _*); q.processAllAvailable()
-      mem.addData(asDocs(b1): _*); q.processAllAvailable() // redelivery
-    } finally q.stop()
-    val terms = Seq("window", "merge", "join")
-    val streamed = RetrievalOps.probeBm25Index(store, "bm", "doc_id", terms)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val batch = RetrievalOps.bm25Scores(
-        corpus.unionByName(b1).unionByName(b2), "doc_id", "text", terms)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(streamed.nonEmpty && streamed === batch)
-  }
-
-  test("X31c-stream: minhashIndexSink — out-of-order + redelivered " +
-      "batches converge to the batch-built index; a held-out probe " +
-      "finds identical pairs against either") {
-    implicit val sc = spark.sqlContext
-    import graft.ops.SimilarityOps
-    val store = new graft.sources.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("mh_sink_").toString)
-    val ck = java.nio.file.Files.createTempDirectory("mh_ck_").toString
-    val docs = env.documents
-    val corpus = docs.filter($"doc_id" % 5 =!= 0 && $"doc_id" < 400)
-    val b1 = docs.filter($"doc_id" % 5 === 0 && $"doc_id" < 200)
-    val b2 = docs.filter($"doc_id" % 5 === 0 &&
-      $"doc_id" >= 200 && $"doc_id" < 400)
-    val held = docs.filter($"doc_id" >= 400 && $"doc_id" < 500)
-    def asDocs(df: org.apache.spark.sql.DataFrame): Seq[Doc] =
-      df.select("doc_id", "text").as[(Long, String)].collect().toSeq
-        .map { case (id, tx) => Doc(id, tx, t(1)) }
-    SimilarityOps.buildMinhashIndex(store, "mh", corpus, "doc_id", "text")
-    val mem = MemoryStream[Doc]
-    val q = StreamOps.minhashIndexSink(store, "mh", "doc_id", "text", ck)(
-      mem.toDF())
-    try {
-      mem.addData(asDocs(b2): _*); q.processAllAvailable() // out of order
-      mem.addData(asDocs(b1): _*); q.processAllAvailable()
-      mem.addData(asDocs(b2): _*); q.processAllAvailable() // redelivery
-    } finally q.stop()
-    // reference: the same index built in ONE batch
-    val ref = new graft.sources.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("mh_ref_").toString)
-    SimilarityOps.buildMinhashIndex(ref, "mh",
-      corpus.unionByName(b1).unionByName(b2), "doc_id", "text")
-    def pairs(st: graft.sources.TableStore) =
-      SimilarityOps.probeMinhashIndex(st, "mh", held, "doc_id", "text")
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val streamed = pairs(store)
-    assert(streamed === pairs(ref))
-    // the streamed docs are really in the index (not a vacuous equality):
-    // signature tables hold corpus ∪ b1 ∪ b2
-    assert(store.read("mh_sigs").count() ===
-      corpus.count() + b1.count() + b2.count())
-  }
-
-  test("X68c-stream: semDedupIndexSink — in-order batches converge to " +
-      "the from-scratch dedup over the union; duplicate redelivery " +
-      "commits nothing; a FRESH below-high-water id fails loudly") {
-    implicit val sc = spark.sqlContext
-    import graft.ops.SimilarityOps
-    val store = new graft.sources.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("sd_sink_").toString)
-    val ck = java.nio.file.Files.createTempDirectory("sd_ck_").toString
-    val tau = 0.4
-    val emb = env.embeddings.select($"vec_id".as("c_id"),
-      org.apache.spark.sql.functions.transform($"embedding",
-        x => x.cast("double")).as("ce"))
-    val maxId = emb.agg(org.apache.spark.sql.functions.max("c_id"))
-      .head().getLong(0)
-    val (c1, c2) = (maxId * 3 / 5, maxId * 4 / 5)
-    val corpus = emb.filter($"c_id" <= c1)
-    val b1 = emb.filter($"c_id" > c1 && $"c_id" <= c2)
-    val b2 = emb.filter($"c_id" > c2)
-    def asVecs(df: org.apache.spark.sql.DataFrame): Seq[Vec] =
-      df.as[(Long, Seq[Double])].collect().toSeq
-        .map { case (id, v) => Vec(id, v) }
-    SimilarityOps.buildSemDedupIndex(store, "sds", corpus,
-      nClusters = 10, tau = tau)
-    val mem = MemoryStream[Vec]
-    val q = StreamOps.semDedupIndexSink(store, "sds", tau, ck)(mem.toDF())
-    try {
-      mem.addData(asVecs(b1): _*); q.processAllAvailable()
-      mem.addData(asVecs(b2): _*); q.processAllAvailable()
-      // duplicate redelivery of b1: ids are below the HWM but the
-      // anti-join empties the batch BEFORE the monotone gate — no-op
-      mem.addData(asVecs(b1): _*); q.processAllAvailable()
-    } finally q.stop()
-    val reference = SimilarityOps.semDedupWithCentroids(
-      emb, store.read("sds_centroids"), tau)
-      .select($"c_id", $"cell".as("rcell"), $"owner".as("rowner"),
-        $"dropped".as("rdropped"))
-    val maintained = spark.table("sds_assigned")
-      .select("c_id", "cell", "owner", "dropped")
-    val mismatched = maintained.join(reference, Seq("c_id"), "full_outer")
-      .filter($"cell".isNull || $"rcell".isNull ||
-        $"cell" =!= $"rcell" || $"dropped" =!= $"rdropped" ||
-        !($"owner" <=> $"rowner")).count()
-    assert(mismatched === 0L)
-    assert(maintained.count() === emb.count())
-    // a FRESH id below the high-water mark must fail the query loudly
-    val ck2 = java.nio.file.Files.createTempDirectory("sd_ck2_").toString
-    val mem2 = MemoryStream[Vec]
-    val q2 = StreamOps.semDedupIndexSink(store, "sds", tau, ck2)(mem2.toDF())
-    try {
-      mem2.addData(Vec(-1L, Seq.fill(64)(0.5)))
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q2.processAllAvailable()
-      }
-    } finally q2.stop()
-    spark.sql("DROP TABLE IF EXISTS sds_assigned")
+      SimilarityOps.buildNoveltyIndexVersioned(ssS, "nvs", corpus,
+        "doc_id", "text", 5)
+      val mem = MemoryStream[Doc]
+      val q = StreamOps.versionedNoveltyCensusSink(ssS, "nvs", "doc_id",
+        "text", ck)(mem.toDF())
+      try {
+        mem.addData(asDocs(b1): _*); q.processAllAvailable()
+        mem.addData(asDocs(b2): _*); q.processAllAvailable()
+        // full redelivery of b1 AFTER b2 committed (reordered duplicate):
+        // the doc-registry anti-join makes it a no-op
+        mem.addData(asDocs(b1): _*); q.processAllAvailable()
+        // mixed batch: already-committed b2 docs + fresh b3 docs — only
+        // the fresh docs commit, and the monotone gate sees only them
+        mem.addData(asDocs(b2.unionByName(b3)): _*); q.processAllAvailable()
+      } finally q.stop()
+      // one-shot batch reference over the identical final corpus
+      SimilarityOps.buildNoveltyIndexVersioned(ssB, "nvb",
+        corpus.unionByName(b1).unionByName(b2).unionByName(b3),
+        "doc_id", "text", 5)
+      def census(ss: graft.sources.SnapshotStore, n: String) =
+        ss.readTable(n, "grams").as[(Long, Long)].collect().toSet
+      assert(census(ssS, "nvs") === census(ssB, "nvb"))
+      assert(ssS.readTable("nvs", "docs").as[Long].collect().toSet ===
+        ssB.readTable("nvb", "docs").as[Long].collect().toSet)
+      // probe parity: a new batch scores identically against both
+      def probe(ss: graft.sources.SnapshotStore, n: String) =
+        SimilarityOps.probeNoveltyIndexVersioned(ss, n, probeBatch,
+            "doc_id", "text")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getDouble(3))).toSet
+      val p = probe(ssS, "nvs")
+      assert(p.nonEmpty && p === probe(ssB, "nvb"))
+      // genuinely out-of-order ingestion (fresh id BELOW the high-water
+      // mark, never committed) must fail the query, not rewrite ownership
+      val mem2 = MemoryStream[Doc]
+      val ck2 = java.nio.file.Files.createTempDirectory("nv_ck2_").toString
+      val q2 = StreamOps.versionedNoveltyCensusSink(ssS, "nvs", "doc_id",
+        "text", ck2)(mem2.toDF())
+      try {
+        mem2.addData(Doc(10L, "fresh doc below the high water mark", t(2)))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q2.processAllAvailable()
+        }
+      } finally q2.stop()
+    } finally {
+      ssS.dropCatalogTables("nvs")
+      ssB.dropCatalogTables("nvb")
+    }
   }
 
   test("X125d-stream: versionedBm25IndexSink — each micro-batch is ONE " +
@@ -753,16 +629,21 @@ class StreamOpsSpec extends SparkSpec {
       assert(ss.currentVersion("mh") === 3L,
         "a redelivered batch must not even commit a version")
     } finally q.stop()
-    val ref = new graft.sources.TableStore(spark,
+    // reference: the same index built in ONE batch
+    val ref = new graft.sources.SnapshotStore(spark,
       java.nio.file.Files.createTempDirectory("mh_vref_").toString)
-    SimilarityOps.buildMinhashIndex(ref, "mh",
+    SimilarityOps.buildMinhashIndexVersioned(ref, "mh",
       corpus.unionByName(b1).unionByName(b2), "doc_id", "text")
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairSet(SimilarityOps.probeMinhashIndexVersioned(ss, "mh",
       held, "doc_id", "text")) ===
-      pairSet(SimilarityOps.probeMinhashIndex(ref, "mh", held,
+      pairSet(SimilarityOps.probeMinhashIndexVersioned(ref, "mh", held,
         "doc_id", "text")))
+    // the streamed docs are really in the index (not a vacuous equality):
+    // the sig registry holds corpus ∪ b1 ∪ b2
+    assert(ss.readTable("mh", "sigs").count() ===
+      corpus.count() + b1.count() + b2.count())
     // mid-stream time travel: v2's sig registry = corpus ∪ b2 only
     assert(ss.readTableVersion("mh", 2L, "sigs").count() ===
       corpus.count() + b2.count())
@@ -803,20 +684,22 @@ class StreamOpsSpec extends SparkSpec {
         assert(ss.currentVersion("nv") === 3L,
           "a redelivered batch must not even commit a version")
       } finally q.stop()
-      // streamed census ≡ plain batch-built census for a held-out probe
-      val ref = new graft.sources.TableStore(spark,
+      // streamed census ≡ a one-shot batch-built census for a held-out
+      // probe
+      val ref = new graft.sources.SnapshotStore(spark,
         java.nio.file.Files.createTempDirectory("nv_vref_").toString)
-      SimilarityOps.buildNoveltyIndex(ref, "nvr", docs, "doc_id", "text", 5)
+      SimilarityOps.buildNoveltyIndexVersioned(ref, "nvr", docs,
+        "doc_id", "text", 5)
       def scores(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq).toSet
-      assert(scores(SimilarityOps.probeNoveltyIndexVersioned(ss, "nv",
-        held, "doc_id", "text")) ===
-        scores(SimilarityOps.probeNoveltyIndex(ref, "nvr", held,
-          "doc_id", "text")))
+      try assert(scores(SimilarityOps.probeNoveltyIndexVersioned(ss, "nv",
+          held, "doc_id", "text")) ===
+          scores(SimilarityOps.probeNoveltyIndexVersioned(ref, "nvr", held,
+            "doc_id", "text")))
+      finally ref.dropCatalogTables("nvr")
       // mid-stream time travel: v2 registers corpus ∪ b1 docs only
       assert(ss.readTableVersion("nv", 2L, "docs").count() ===
         corpus.count() + b1.count())
-      spark.sql("DROP TABLE IF EXISTS nvr_grams")
     } finally ss.dropCatalogTables("nv")
   }
 
@@ -1138,6 +1021,20 @@ class StreamOpsSpec extends SparkSpec {
           $"cell" =!= $"rcell" || $"dropped" =!= $"rdropped" ||
           !($"owner" <=> $"rowner")).count()
       assert(mismatched === 0L)
+      assert(ssS.readTable("sd", "assigned").count() === emb.count())
+      // a FRESH id below the high-water mark must fail the query loudly
+      // and commit nothing
+      val ck2 = java.nio.file.Files.createTempDirectory("sd_vck2_").toString
+      val mem2 = MemoryStream[Vec]
+      val q2 = StreamOps.versionedSemDedupIndexSink(ssS, "sd", tau, ck2)(
+        mem2.toDF())
+      try {
+        mem2.addData(Vec(-1L, Seq.fill(64)(0.5)))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q2.processAllAvailable()
+        }
+      } finally q2.stop()
+      assert(ssS.currentVersion("sd") === 3L)
     } finally ssS.dropCatalogTables("sd")
   }
 

@@ -1,15 +1,15 @@
 package graft
 
 import graft.ops.SimilarityOps
-import graft.sources.{SnapshotStore, TableStore}
+import graft.sources.SnapshotStore
 import org.apache.spark.sql.functions._
 
 /** X120d/X32g/X68d: the versioned-bucketed state families. The driver
   * queries hash-gate the full lifecycles (build → append → no-op retry →
   * kill-at-the-seam → time-traveled probes); this spec pins what they
-  * can't: result parity WITH THE PLAIN LAYOUT on identical input, the
-  * bucketed-scan plan shape of the versioned read path, and the
-  * monotone-ingestion gates failing loudly. */
+  * can't: result parity with the FROM-SCRATCH operators on identical
+  * input, the bucketed-scan plan shape of the versioned read path, and
+  * the monotone-ingestion gates failing loudly. */
 class VersionedStateSpec extends SparkSpec {
 
   import spark.implicits._
@@ -18,26 +18,23 @@ class VersionedStateSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(p).toString
 
 
-  test("X120d: versioned novelty probe ≡ plain-layout probe on identical " +
-      "corpus/batch; the versioned census scan is bucketed and adds no " +
-      "exchange over the plain plan") {
+  test("X120d: versioned novelty probe ≡ from-scratch ngramNovelty over " +
+      "the union on the batch ids; the versioned census scan is bucketed " +
+      "and its h-keyed agg adds no exchange") {
     val docs = env.documents.limit(200).localCheckpoint()
     val maxId = docs.agg(max("doc_id")).head().getLong(0)
     val corpus = docs.filter(col("doc_id") <= maxId / 2)
     val batch = docs.filter(col("doc_id") > maxId / 2)
-    val store = new TableStore(spark, tmp("nvplain_"))
     val ss = new SnapshotStore(spark, tmp("nvvers_"))
     try {
-      SimilarityOps.buildNoveltyIndex(store, "nvp", corpus,
-        "doc_id", "text", 5)
       SimilarityOps.buildNoveltyIndexVersioned(ss, "nvv", corpus,
         "doc_id", "text", 5)
-      val plain = SimilarityOps.probeNoveltyIndex(store, "nvp", batch,
-        "doc_id", "text")
+      val scratch = SimilarityOps.ngramNovelty(docs, "doc_id", "text", 5)
+        .filter(col("doc_id") > maxId / 2)
       val versioned = SimilarityOps.probeNoveltyIndexVersioned(ss, "nvv",
         batch, "doc_id", "text")
-      assert(plain.collect().map(_.toSeq).toSet ===
-        versioned.collect().map(_.toSeq).toSet)
+      val rows = versioned.collect().map(_.toSeq).toSet
+      assert(rows.nonEmpty && rows === scratch.collect().map(_.toSeq).toSet)
       // co-location: an h-keyed aggregation over the versioned census
       // runs on the bucketed scan with ZERO exchanges — the probe's
       // census-side join inherits exactly this partitioning (the probe
@@ -60,12 +57,12 @@ class VersionedStateSpec extends SparkSpec {
           "doc_id", "text"))
       assert(e.getMessage.contains("non-monotone"))
       assert(ss.currentVersion("nvv") === 1L, "failed append must not commit")
-    } finally { ss.dropCatalogTables("nvv")
-      spark.sql("DROP TABLE IF EXISTS nvp_grams") }
+    } finally ss.dropCatalogTables("nvv")
   }
 
-  test("X32g: versioned IVF probe ≡ plain probe under the same seed; " +
-      "the versioned assigned scan is bucketed at every version") {
+  test("X32g: versioned IVF assignments ≡ assignCells of the union under " +
+      "the same centroids; the versioned assigned scan is bucketed at " +
+      "every version") {
     val emb = env.embeddings.withColumn("e",
       transform($"embedding", v => v.cast("double")))
     val corpus = emb.filter($"vec_id" % 5 =!= 0)
@@ -74,33 +71,32 @@ class VersionedStateSpec extends SparkSpec {
       .select($"vec_id".as("c_id"), $"e".as("ce"))
     val q = emb.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"e".as("qe"))
-    val store = new TableStore(spark, tmp("ivfplain_"))
     val ss = new SnapshotStore(spark, tmp("ivfvers_"))
     try {
-      SimilarityOps.buildIvfIndex(store, "ivfp", corpus)
       SimilarityOps.buildIvfIndexVersioned(ss, "ivfv", corpus)
-      assert(SimilarityOps.appendIvfBatch(store, "ivfp", batch) ===
-        SimilarityOps.appendIvfBatchVersioned(ss, "ivfv", batch))
-      val plain = SimilarityOps.probeIvfIndex(store, "ivfp", q, k = 10)
-        .select("q_id", "c_id").as[(Long, Long)].collect().toSet
+      assert(SimilarityOps.appendIvfBatchVersioned(ss, "ivfv", batch) ===
+        batch.count())
+      def cells(df: org.apache.spark.sql.DataFrame) =
+        df.select("c_id", "cell").as[(Long, Int)].collect().toSet
+      assert(cells(ss.readTable("ivfv", "assigned")) ===
+        cells(SimilarityOps.assignCells(corpus.unionByName(batch),
+          ss.readTable("ivfv", "centroids"))))
       val probe = SimilarityOps.probeIvfIndexVersioned(ss, "ivfv", q, k = 10)
       assert(probe.queryExecution.executedPlan.toString
         .contains("Bucketed: true"))
-      assert(probe.select("q_id", "c_id").as[(Long, Long)].collect().toSet
-        === plain)
+      assert(probe.count() > 0)
       // time travel: the pre-append index still probes (v1), bucketed
       val v1 = SimilarityOps.probeIvfIndexVersioned(ss, "ivfv", q, k = 10,
         version = Some(1L))
       assert(v1.queryExecution.executedPlan.toString
         .contains("Bucketed: true"))
       assert(v1.count() > 0)
-    } finally { ss.dropCatalogTables("ivfv")
-      spark.sql("DROP TABLE IF EXISTS ivfp_assigned") }
+    } finally ss.dropCatalogTables("ivfv")
   }
 
-  test("X68d: versioned SemDeDup verdicts ≡ plain-layout verdicts row " +
-      "for row; the non-monotone gate refuses below-HWM batches without " +
-      "committing") {
+  test("X68d: versioned SemDeDup verdicts ≡ semDedupWithCentroids over " +
+      "the union row for row; the non-monotone gate refuses below-HWM " +
+      "batches without committing") {
     val emb = env.embeddings.select($"vec_id".as("c_id"),
       transform($"embedding", x => x.cast("double")).as("ce"))
     val maxId = emb.agg(max("c_id")).head().getLong(0)
@@ -108,20 +104,17 @@ class VersionedStateSpec extends SparkSpec {
     val corpus = emb.filter($"c_id" <= cut)
     val batch = emb.filter($"c_id" > cut)
     val tau = 0.4
-    val store = new TableStore(spark, tmp("sdplain_"))
     val ss = new SnapshotStore(spark, tmp("sdvers_"))
     try {
-      SimilarityOps.buildSemDedupIndex(store, "sdp", corpus,
-        nClusters = 10, tau = tau)
       SimilarityOps.buildSemDedupIndexVersioned(ss, "sdv", corpus,
         nClusters = 10, tau = tau)
-      SimilarityOps.appendSemDedupBatch(store, "sdp", batch, tau)
       SimilarityOps.appendSemDedupBatchVersioned(ss, "sdv", batch, tau)
       def verdicts(df: org.apache.spark.sql.DataFrame) =
         df.select("c_id", "cell", "owner", "dropped")
           .collect().map(_.toSeq).toSet
       assert(verdicts(ss.readTable("sdv", "assigned")) ===
-        verdicts(spark.table("sdp_assigned")))
+        verdicts(SimilarityOps.semDedupWithCentroids(
+          corpus.unionByName(batch), ss.readTable("sdv", "centroids"), tau)))
       // v1 time-travels to exactly the corpus verdicts
       assert(ss.readTableVersion("sdv", 1L, "assigned").count()
         === corpus.count())
@@ -132,7 +125,6 @@ class VersionedStateSpec extends SparkSpec {
         SimilarityOps.appendSemDedupBatchVersioned(ss, "sdv", bad, tau))
       assert(e.getMessage.contains("non-monotone"))
       assert(ss.currentVersion("sdv") === 2L, "failed append must not commit")
-    } finally { ss.dropCatalogTables("sdv")
-      spark.sql("DROP TABLE IF EXISTS sdp_assigned") }
+    } finally ss.dropCatalogTables("sdv")
   }
 }
