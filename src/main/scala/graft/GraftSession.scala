@@ -8,6 +8,16 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`). The default of 100 is smaller
+    * than one day of the daily DAG compiles, so each day recompiled the
+    * plans the day before had compiled; 4,000 covers the engine's working
+    * set. Spark 4.1.2 reads the size once, when `CodeGenerator$` is first
+    * initialized (its static initializer calls
+    * `SQLConf.get.codegenCacheMaxEntries`): the setting holds only when the
+    * JVM's first session is built here, and setting it later does nothing. */
+  private val CodegenCacheEntries = 4000
+
   /** Tuned builder. `shufflePartitions` should track the actual
     * parallelism: cores locally, ~2-3× total executor cores on a cluster
     * (AQE coalesces downward at runtime). */
@@ -18,6 +28,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // events.parquet carries TIMESTAMP(NANOS); read as long + convert
       // (see Env.events). Set here so driver-created sessions match.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

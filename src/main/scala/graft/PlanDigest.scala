@@ -122,8 +122,10 @@ object PlanDigest {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("PLAN_DIGESTS.txt")
     val dumpDir = args.lift(2).getOrElse("target/plan_dump")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus)
+    // PLAN_DIGESTS.txt was recorded on local[32]: the core count sets the
+    // shuffle partitions and range splits printed in every plan, so it is
+    // fixed here rather than read from the host
+    val spark = GraftSession.local(32)
     // FileScan metadata (DataFilters/PushedFilters/...) is truncated to
     // spark.sql.maxMetadataStringLength RAW chars — so the cut point
     // depends on expression-id WIDTH, which the global exprId counter

@@ -137,7 +137,7 @@ object RetrievalOps {
     require(terms.nonEmpty, "need at least one query term")
     val st = stats.agg(sum(col("n")).as("n"), sum(col("tt")).as("tt")).head()
     val nDocs = if (st.isNullAt(0)) 0L else st.getLong(0)
-    require(nDocs > 0, "probeBm25Index: empty index (avgdl undefined)")
+    require(nDocs > 0, "probeBm25IndexVersioned: empty index (avgdl undefined)")
     val avgdl = st.getLong(1).toDouble / nDocs
     // no broadcast hint: between compactions the tombstone list is
     // unbounded under delete churn, and a forced broadcast of it on the

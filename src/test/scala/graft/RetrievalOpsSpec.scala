@@ -366,9 +366,11 @@ class RetrievalOpsSpec extends SparkSpec {
     val ss = new graft.sources.SnapshotStore(spark, dir)
     val empty = corpus.filter($"doc_id" < 0)
     RetrievalOps.buildBm25IndexVersioned(ss, "bm", empty, "doc_id", "text")
-    intercept[IllegalArgumentException] {
+    val probe = intercept[IllegalArgumentException] {
       RetrievalOps.probeBm25IndexVersioned(ss, "bm", "doc_id", Seq("join"))
     }
+    // the refusal names the entry point the caller used
+    assert(probe.getMessage.contains("probeBm25IndexVersioned: empty index"))
     intercept[IllegalArgumentException] {
       RetrievalOps.bm25Scores(empty, "doc_id", "text", Seq("join"))
     }

@@ -84,6 +84,26 @@ class SnapshotJobBudgetSpec extends SparkSpec {
     assert(ss.readCurrent("t").count() === 20016L)
   }
 
+  test("a repeated store read compiles nothing, even after 150 other " +
+      "classes were compiled in between") {
+    val ss = new SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_codegen_cache_").toString)
+    ss.commitOverwriteKeyed("t", "k", rows(spark.range(0, 5000).toDF("k"), 0L),
+      numFiles = 4)
+    val v = ss.currentVersion("t")
+    def read() = agg(ss.readVersionWhere("t", v, "k", 1000L, 2999L))
+    val (first, _) = CodegenCounter(read())
+    // each literal makes a distinct class: more than Spark's default cache
+    // of 100 entries holds
+    val (_, others) = CodegenCounter((1 to 150).foreach { i =>
+      spark.range(10).selectExpr(s"id * $i + 1").collect() })
+    assert(others >= 150)
+    val (again, compiled) = CodegenCounter(read())
+    assert(again === first)
+    assert(compiled === 0L,
+      s"the read compiled $compiled classes again after $others other compiles")
+  }
+
   test("bloom probe hashes evaluated on the driver ≡ Spark's xxhash64 of " +
     "the same cast literal, for every type a bloom column can have") {
     import org.apache.spark.sql.types._
