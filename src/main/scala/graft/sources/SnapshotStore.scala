@@ -146,13 +146,16 @@ private[sources] object Clustering {
   * racing writers can never interleave into the same staging dir and no
   * committed data is ever silently lost) → write data (new dir, never
   * touching existing files) → write the manifest → ATOMICALLY swap the
-  * pointer (write-temp + ATOMIC_MOVE rename). Readers resolve the
+  * pointer (write-temp + ATOMIC_MOVE rename), every commit kind through
+  * one transaction ([[transact]]): a commit that THROWS after its claim
+  * deletes what it staged and releases the claim. Readers resolve the
   * pointer, then read exactly the dirs its manifest lists — so a commit
-  * that dies before the swap leaves orphan files but a fully intact,
-  * readable table (the spec simulates that death at the seam). A crashed
-  * claimant's leftovers (claim, data, manifest — all invisible) are
-  * released by [[vacuum]], run with writers quiesced; the next commit of
-  * that version then proceeds normally.
+  * whose process dies before the swap leaves orphan files but a fully
+  * intact, readable table (the spec simulates that death at the seam). A
+  * crashed claimant's leftovers (claim, data, manifest — all invisible)
+  * are released by [[vacuum]] (writers quiesced), [[vacuumStale]] or
+  * [[releaseDeadClaims]]; the next commit of that version then proceeds
+  * normally.
   *
   * What each operation costs at 100 TB:
   *   - append: writes ONLY the batch; the manifest grows by one line.
@@ -738,173 +741,161 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
           s"whose history is ${if (tgtIsGroup) "a multi-table group"
           else "single-table"} — group-ness cannot mix in one history")
     }
-    // bucketed subs: the layout spec must travel with the reference —
-    // the target's reads resolve partitions through the OWNER's
-    // catalog, and the target's own later commits to the sub write
-    // locally under the same spec. A conflicting pre-existing spec on
-    // a publish target refuses (the co-location contract).
-    if (srcIsGroup) bucketedSubs(srcTable).foreach { sub =>
-      val spec = bucketSpecOf(srcTable, sub).get
-      bucketSpecOf(name, sub) match {
-        case Some(t) => require(t == spec,
-          s"sub '$sub' of '$name' is bucketed $t but '$srcTable' " +
-            s"declares $spec — the layouts cannot mix")
-        case None =>
-          Files.createDirectories(metaDir(name))
-          Files.copy(bucketSpecPath(srcTable, sub),
-            bucketSpecPath(name, sub),
-            StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
     // fast-forward publishes pin the claim to EXACTLY base+1 (the
     // commitTablesAt discipline): a commit racing into the target
     // between the guard and this claim makes the claim fail retryably
-    // instead of being clobbered
-    expectedCurrent.foreach(checkExpected(name, _))
-    val v = expectedCurrent.getOrElse(currentVersion(name)) + 1
-    claim(name, v) // the same CAS as every commit: racing cloners/
-                   // publishers of one target resolve to one winner
-    // mark every table the new manifest will reference BEFORE the
-    // manifest lands (incl. transitive refs copied verbatim), so their
-    // vacuums run the reachability scan from this moment on (the
-    // stamp-to-stage window itself is fenced by this commit's claim —
-    // see [[maybeClearXrefMarker]])
-    val refTables = srcEntries.map(refEntry(name, srcTable, _)).map(pathOf)
-      .filter(_.startsWith("../../"))
-      .map(_.stripPrefix("../../").split("/", 2)(0)).distinct
-    refTables.foreach { t =>
-      Files.createDirectories(metaDir(t))
-      try Files.write(xrefMarkerPath(t), Array.empty[Byte],
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
+    // instead of being clobbered; racing cloners/publishers of one
+    // target resolve to one winner through the same claim
+    transact(name, expectedCurrent.getOrElse(currentVersion(name))) { v =>
+      // bucketed subs: the layout spec must travel with the reference —
+      // the target's reads resolve partitions through the OWNER's
+      // catalog, and the target's own later commits to the sub write
+      // locally under the same spec. A conflicting pre-existing spec on
+      // a publish target refuses (the co-location contract).
+      if (srcIsGroup) bucketedSubs(srcTable).foreach { sub =>
+        val spec = bucketSpecOf(srcTable, sub).get
+        bucketSpecOf(name, sub) match {
+          case Some(t) => require(t == spec,
+            s"sub '$sub' of '$name' is bucketed $t but '$srcTable' " +
+              s"declares $spec — the layouts cannot mix")
+          case None => writeBucketSpec(name, v, sub, spec)
+        }
+      }
+      // mark every table the new manifest will reference BEFORE the
+      // manifest lands (incl. transitive refs copied verbatim), so their
+      // vacuums run the reachability scan from this moment on (the
+      // stamp-to-stage window itself is fenced by this commit's claim —
+      // see [[maybeClearXrefMarker]])
+      val refTables = srcEntries.map(refEntry(name, srcTable, _)).map(pathOf)
+        .filter(_.startsWith("../../"))
+        .map(_.stripPrefix("../../").split("/", 2)(0)).distinct
+      refTables.foreach { t =>
+        Files.createDirectories(metaDir(t))
+        try Files.write(xrefMarkerPath(t), Array.empty[Byte],
+          java.nio.file.StandardOpenOption.CREATE_NEW)
+        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      }
+      // the target's CHECKs validate the referenced content — one
+      // aggregate scan, no rewrite (a publish IS a write to the target;
+      // stage(None) below bypasses the piggybacked validation)
+      requireConforms(name, readVersion(srcTable, sv),
+        checks(name).toSeq.sortBy(_._1), s"publish from '$srcTable'")
+      stage(name, v, None, srcEntries.map(refEntry(name, srcTable, _)))
+      // fence against a source expire+vacuum that completed INSIDE the
+      // [read-manifest → stage] window: from here the staged manifest
+      // itself protects the files (planVacuum counts every peer's staged
+      // entries), so verifying existence NOW closes the race — a
+      // reclaimed path aborts RETRYABLY before the swap
+      def verifyEntriesExist(cause: String): Unit = {
+        val gone = srcEntries
+          // an EMPTY bucketed append's partition dir was never written
+          // (the SnapshotBucketedSpec-pinned Spark behavior) — its entry
+          // is legitimate and contributes no files; only non-bucketed
+          // entries fence on existence (a reclaimed bucketed partition
+          // implies its version expired, which the floor re-check
+          // catches)
+          .filterNot(e => pathOf(e).contains("bkt__"))
+          .map(e => dataDir(name)
+            .resolve(pathOf(refEntry(name, srcTable, e))).normalize())
+          .filterNot(Files.exists(_))
+        if (gone.nonEmpty)
+          throw new ConcurrentCommitException(
+            s"source '$srcTable' v$sv was $cause while " +
+              s"cloning/publishing into '$name' (missing: ${gone.head}) " +
+              "— re-read the source version and retry")
+      }
+      verifyEntriesExist("expired and vacuumed")
+      // FLOOR re-check, the fence's second half: the existence probe is
+      // dir-granular for whole-dir entries, so a vacuum whose plan
+      // predates this stage can have reclaimed dead .parquet NEIGHBORS
+      // inside a still-existing dir (the source expired mid-clone; the
+      // dir survived only through a successor's partial file references).
+      // Expiry floors move atomically BEFORE any reclaim and are
+      // monotone, so `sv` still being live NOW proves it was live at
+      // every earlier instant — every vacuum plan computed before this
+      // fence saw the source manifest whole and protected its entries
+      // (transitive third-table refs included: they are protected by
+      // THIS source version's live manifest, whose liveness is exactly
+      // what is re-checked). Plans computed after the stage see the
+      // staged manifest itself.
+      if (sv <= expiredBelow(srcTable))
+        throw new ConcurrentCommitException(
+          s"source '$srcTable' v$sv was expired while cloning/publishing " +
+            s"into '$name' — files inside still-existing dirs may already " +
+            "be reclaimed; re-read the source version and retry")
+      // DROP/RENAME tombstone fence: a concurrent dropTable/renameTable of
+      // any referenced table re-checks cross-refs AFTER writing its
+      // tombstone, so either it sees this staged manifest and refuses, or
+      // this fence sees its tombstone and aborts — no interleaving swaps
+      // a clone whose referenced table is mid-delete.
+      refTables.filter(t => Files.exists(droppedMarkerPath(t)))
+        .foreach(t => throw new ConcurrentCommitException(
+          s"referenced table '$t' is being dropped/renamed concurrently " +
+            s"with this clone/publish into '$name' — retry once the " +
+            "drop resolves"))
+      // existence RE-check AFTER the tombstone fence (r17): a drop that
+      // ran entirely between the first verification and the tombstone
+      // check removes its tombstone LAST (dropTable's teardown order),
+      // so either the tombstone was still visible above, or the data is
+      // fully gone and THIS re-check aborts — the pair closes the
+      // vanished-drop window the race spec caught (a swapped clone
+      // reading PATH_NOT_FOUND after a completed drop).
+      verifyEntriesExist("dropped or vacuumed concurrently")
+      // schema marker: stamp the EFFECTIVE read schema whenever either
+      // side ever evolved — an evolved source's files need its marker to
+      // read right here, and the x142e narrowing-overwrite rule demands
+      // the new content never be read through an older, wider marker of
+      // the target
+      val srcSchema = schemaAt(srcTable, sv)
+      if (srcSchema.nonEmpty || (v > 1 && schemaAt(name, v - 1).nonEmpty))
+        stampSchema(name, v,
+          srcSchema.getOrElse(readVersion(srcTable, sv).schema))
+      // the ACCUMULATED delete vector copies as THIS version's sidecar —
+      // the reference commit is self-contained, merge-on-read continues
+      deleteKeysAt(srcTable, sv).foreach(_.coalesce(1).write
+        .mode(SaveMode.Overwrite).parquet(delsDir(name, v).toString))
+      // bloom spec: a fresh clone inherits it (so carried bitsets stay
+      // probe-able and future commits keep maintaining them); a publish
+      // never overwrites the target's own declaration
+      if (copyBloomSpec && Files.exists(bloomSpecPath(srcTable))) {
+        Files.createDirectories(metaDir(name))
+        Files.copy(bloomSpecPath(srcTable), bloomSpecPath(name),
+          StandardCopyOption.REPLACE_EXISTING)
+      }
+      // CHECK constraints inherit on CLONE (Delta SHALLOW CLONE carries
+      // table properties): a fork must not silently accept commits its
+      // source would refuse. The cloned content conforms by induction
+      // (it IS the source's validated content), so no scan. A PUBLISH
+      // never copies — the target's own declarations govern (and were
+      // validated against the source content above).
+      if (copyBloomSpec) checks(srcTable).foreach { case (cn, p) =>
+        Files.createDirectories(metaDir(name))
+        Files.write(checkMarkerPath(name, cn),
+          s"$p\n".getBytes(StandardCharsets.UTF_8))
+      }
+      // zone stats: file ids rewritten into the cross-reference dialect so
+      // every zones consumer (prune, CoW touch sets, optimize) matches the
+      // manifest; bloom bitsets only travel when the probe spec matches —
+      // they are parameterized by (bits, k), and a mismatched probe would
+      // skip files wrongly (dropped column ⇒ conservative full read)
+      readZones(srcTable, sv).foreach { z =>
+        import org.apache.spark.sql.functions._
+        // the same three-way rewrite as refEntry, so zone rows keep
+        // matching their manifest entries string-for-string
+        val selfPrefix = s"../../$name/data/"
+        val zc = z.withColumn("f",
+          when(col("f").startsWith(selfPrefix),
+              col("f").substr(lit(selfPrefix.length + 1), lit(1 << 30)))
+            .when(col("f").startsWith("../../"), col("f"))
+            .otherwise(concat(lit(s"../../$srcTable/data/"), col("f"))))
+        val zs = if (!zc.columns.contains("bloom") ||
+            bloomSpecOf(name) == bloomSpecOf(srcTable)) zc
+          else zc.drop("bloom")
+        zs.coalesce(1).write.mode(SaveMode.Overwrite)
+          .parquet(zonesDir(name, v).toString)
+      }
+      v
     }
-    // the target's CHECKs validate the referenced content — one
-    // aggregate scan, no rewrite (a publish IS a write to the target;
-    // stage(None) below bypasses the piggybacked validation)
-    try requireConforms(name, readVersion(srcTable, sv),
-      checks(name).toSeq.sortBy(_._1), s"publish from '$srcTable'")
-    catch { case e: Throwable => releaseOwnClaim(name, v); throw e }
-    stage(name, v, None, srcEntries.map(refEntry(name, srcTable, _)))
-    // fence against a source expire+vacuum that completed INSIDE the
-    // [read-manifest → stage] window: from here the staged manifest
-    // itself protects the files (planVacuum counts every peer's staged
-    // entries), so verifying existence NOW closes the race — a
-    // reclaimed path aborts RETRYABLY before the swap
-    def abortStaged(msg: String): Nothing = {
-      Files.deleteIfExists(manifestPath(name, v))
-      releaseOwnClaim(name, v)
-      throw new ConcurrentCommitException(msg)
-    }
-    def verifyEntriesExist(cause: String): Unit = {
-      val gone = srcEntries
-        // an EMPTY bucketed append's partition dir was never written
-        // (the SnapshotBucketedSpec-pinned Spark behavior) — its entry
-        // is legitimate and contributes no files; only non-bucketed
-        // entries fence on existence (a reclaimed bucketed partition
-        // implies its version expired, which the floor re-check
-        // catches)
-        .filterNot(e => pathOf(e).contains("bkt__"))
-        .map(e => dataDir(name)
-          .resolve(pathOf(refEntry(name, srcTable, e))).normalize())
-        .filterNot(Files.exists(_))
-      if (gone.nonEmpty)
-        abortStaged(
-          s"source '$srcTable' v$sv was $cause while " +
-            s"cloning/publishing into '$name' (missing: ${gone.head}) " +
-            "— re-read the source version and retry")
-    }
-    verifyEntriesExist("expired and vacuumed")
-    // FLOOR re-check, the fence's second half: the existence probe is
-    // dir-granular for whole-dir entries, so a vacuum whose plan
-    // predates this stage can have reclaimed dead .parquet NEIGHBORS
-    // inside a still-existing dir (the source expired mid-clone; the
-    // dir survived only through a successor's partial file references).
-    // Expiry floors move atomically BEFORE any reclaim and are
-    // monotone, so `sv` still being live NOW proves it was live at
-    // every earlier instant — every vacuum plan computed before this
-    // fence saw the source manifest whole and protected its entries
-    // (transitive third-table refs included: they are protected by
-    // THIS source version's live manifest, whose liveness is exactly
-    // what is re-checked). Plans computed after the stage see the
-    // staged manifest itself.
-    if (sv <= expiredBelow(srcTable))
-      abortStaged(
-        s"source '$srcTable' v$sv was expired while cloning/publishing " +
-          s"into '$name' — files inside still-existing dirs may already " +
-          "be reclaimed; re-read the source version and retry")
-    // DROP/RENAME tombstone fence: a concurrent dropTable/renameTable of
-    // any referenced table re-checks cross-refs AFTER writing its
-    // tombstone, so either it sees this staged manifest and refuses, or
-    // this fence sees its tombstone and aborts — no interleaving swaps
-    // a clone whose referenced table is mid-delete.
-    refTables.filter(t => Files.exists(droppedMarkerPath(t)))
-      .foreach(t => abortStaged(
-        s"referenced table '$t' is being dropped/renamed concurrently " +
-          s"with this clone/publish into '$name' — retry once the " +
-          "drop resolves"))
-    // existence RE-check AFTER the tombstone fence (r17): a drop that
-    // ran entirely between the first verification and the tombstone
-    // check removes its tombstone LAST (dropTable's teardown order),
-    // so either the tombstone was still visible above, or the data is
-    // fully gone and THIS re-check aborts — the pair closes the
-    // vanished-drop window the race spec caught (a swapped clone
-    // reading PATH_NOT_FOUND after a completed drop).
-    verifyEntriesExist("dropped or vacuumed concurrently")
-    // schema marker: stamp the EFFECTIVE read schema whenever either
-    // side ever evolved — an evolved source's files need its marker to
-    // read right here, and the x142e narrowing-overwrite rule demands
-    // the new content never be read through an older, wider marker of
-    // the target
-    val srcSchema = schemaAt(srcTable, sv)
-    if (srcSchema.nonEmpty || (v > 1 && schemaAt(name, v - 1).nonEmpty))
-      stampSchema(name, v,
-        srcSchema.getOrElse(readVersion(srcTable, sv).schema))
-    // the ACCUMULATED delete vector copies as THIS version's sidecar —
-    // the reference commit is self-contained, merge-on-read continues
-    deleteKeysAt(srcTable, sv).foreach(_.coalesce(1).write
-      .mode(SaveMode.Overwrite).parquet(delsDir(name, v).toString))
-    // bloom spec: a fresh clone inherits it (so carried bitsets stay
-    // probe-able and future commits keep maintaining them); a publish
-    // never overwrites the target's own declaration
-    if (copyBloomSpec && Files.exists(bloomSpecPath(srcTable))) {
-      Files.createDirectories(metaDir(name))
-      Files.copy(bloomSpecPath(srcTable), bloomSpecPath(name),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    // CHECK constraints inherit on CLONE (Delta SHALLOW CLONE carries
-    // table properties): a fork must not silently accept commits its
-    // source would refuse. The cloned content conforms by induction
-    // (it IS the source's validated content), so no scan. A PUBLISH
-    // never copies — the target's own declarations govern (and were
-    // validated against the source content above).
-    if (copyBloomSpec) checks(srcTable).foreach { case (cn, p) =>
-      Files.createDirectories(metaDir(name))
-      Files.write(checkMarkerPath(name, cn),
-        s"$p\n".getBytes(StandardCharsets.UTF_8))
-    }
-    // zone stats: file ids rewritten into the cross-reference dialect so
-    // every zones consumer (prune, CoW touch sets, optimize) matches the
-    // manifest; bloom bitsets only travel when the probe spec matches —
-    // they are parameterized by (bits, k), and a mismatched probe would
-    // skip files wrongly (dropped column ⇒ conservative full read)
-    readZones(srcTable, sv).foreach { z =>
-      import org.apache.spark.sql.functions._
-      // the same three-way rewrite as refEntry, so zone rows keep
-      // matching their manifest entries string-for-string
-      val selfPrefix = s"../../$name/data/"
-      val zc = z.withColumn("f",
-        when(col("f").startsWith(selfPrefix),
-            col("f").substr(lit(selfPrefix.length + 1), lit(1 << 30)))
-          .when(col("f").startsWith("../../"), col("f"))
-          .otherwise(concat(lit(s"../../$srcTable/data/"), col("f"))))
-      val zs = if (!zc.columns.contains("bloom") ||
-          bloomSpecOf(name) == bloomSpecOf(srcTable)) zc
-        else zc.drop("bloom")
-      zs.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(zonesDir(name, v).toString)
-    }
-    swapTo(name, v)
-    v
   }
 
   /** Tombstone a drop/rename writes BEFORE touching data — the
@@ -1379,16 +1370,15 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val aligned = df.select(evolved.fields.map(f =>
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    val v = cur + 1
-    claim(name, v)
-    // rebalance: file sizing for the layout-free evolved append
-    stage(name, v, Some(rebalanced(aligned)),
-      readManifest(name, cur) :+ s"v$v")
-    // stamp BEFORE the swap: a crash in between leaves an above-pointer
-    // marker no reader resolves (vacuum debris, harmless)
-    stampSchema(name, v, evolved)
-    swapTo(name, v)
-    v
+    transact(name, cur) { v =>
+      // rebalance: file sizing for the layout-free evolved append
+      stage(name, v, Some(rebalanced(aligned)),
+        readManifest(name, cur) :+ s"v$v")
+      // stamp BEFORE the swap: a crash in between leaves an above-pointer
+      // marker no reader resolves (vacuum debris, harmless)
+      stampSchema(name, v, evolved)
+      v
+    }
   }
 
   /** Read snapshot `v` — exactly the file sets its manifest lists,
@@ -1515,41 +1505,31 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val all = deleteKeysAt(name, cur)
       .fold(keys.select(col(key)))(_.unionByName(keys.select(col(key))))
       .distinct()
-    val v = cur + 1
-    claim(name, v)
-    // ONE job evaluates the accumulated vector: the sidecar write with
-    // the NULL guard riding the same pass as an Observation (r18
-    // optimization round — previously a localCheckpoint + a separate
-    // isEmpty probe + the write = 3 jobs per delete-vector commit).
-    // A NULL key can never match: the merge-on-read anti-join (and
-    // the fold's zone-range join) treat NULL = NULL as no-match, so a
-    // NULL entry would sit in the vector forever deleting NOTHING —
-    // the worst failure mode for the erasure use case this op serves.
-    // Refuse it loudly instead of silently not-deleting; the refusal is
-    // pre-swap and DETERMINISTIC, so (like stage()'s CHECK violations)
-    // it cleans its staging and releases its claim for the retry.
-    val obs = org.apache.spark.sql.Observation()
-    all.observe(obs, org.apache.spark.sql.functions.count_if(
-        col(key).isNull).as("nullKeys"))
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(delsDir(name, v).toString)
-    if (obs.get("nullKeys").asInstanceOf[Long] > 0L) {
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        delsDir(name, v).toFile)
-      releaseOwnClaim(name, v)
-      throw new IllegalArgumentException(
+    transact(name, cur) { v =>
+      // ONE job evaluates the accumulated vector: the sidecar write with
+      // the NULL guard riding the same pass as an Observation (r18
+      // optimization round — previously a localCheckpoint + a separate
+      // isEmpty probe + the write = 3 jobs per delete-vector commit).
+      // A NULL key can never match: the merge-on-read anti-join (and
+      // the fold's zone-range join) treat NULL = NULL as no-match, so a
+      // NULL entry would sit in the vector forever deleting NOTHING —
+      // the worst failure mode for the erasure use case this op serves.
+      // Refuse it loudly instead of silently not-deleting; the refusal
+      // is pre-swap, so the transaction discards the written vector.
+      val obs = org.apache.spark.sql.Observation()
+      all.observe(obs, org.apache.spark.sql.functions.count_if(
+          col(key).isNull).as("nullKeys"))
+        .coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(delsDir(name, v).toString)
+      require(obs.get("nullKeys").asInstanceOf[Long] == 0L,
         s"delete keys for '$name' contain NULL '$key' values — a NULL " +
           "key never matches a row (SQL null-equality), so it would be " +
           "silently ignored; filter NULLs out explicitly")
+      // same entries, by reference — the no-rewrite contract
+      stage(name, v, None, readManifest(name, cur))
+      copyIfExists(zonesDir(name, cur), zonesDir(name, v))
+      v
     }
-    // same entries, by reference — the no-rewrite contract
-    stage(name, v, None, readManifest(name, cur))
-    val z = zonesDir(name, cur)
-    if (Files.exists(z))
-      org.apache.commons.io.FileUtils
-        .copyDirectory(z.toFile, zonesDir(name, v).toFile)
-    swapTo(name, v)
-    v
   }
 
   /** Fold the active delete vector into the files, copy-on-write at
@@ -1591,44 +1571,45 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val statless = entries.toSet -- zoneFiles(ranges).toSet
     val rewrite = (touched ++ statless).filter(entries.contains)
     val reused = entries.filterNot(rewrite)
-    val v = cur + 1
-    claim(name, v)
-    // antiByKey keeps the committed column order: this frame is WRITTEN,
-    // and on-disk files should not carry a different physical order than
-    // their siblings just because of which column the vector keyed on
-    val folded = antiByKey(
-      readEntries(name, rewrite.toSeq, readVersion(name, cur)), dels)
-    layout.recluster(folded, math.max(1, rewrite.size))(c =>
-      stage(name, v, Some(c), Seq(s"v$v")))
-    restageWithCarriedZones(name, v, layout, zones, reused)
-    swapTo(name, v)
-    // content-preserving (post-swap stamp: a crash loses only the
-    // changelog optimization, never correctness — see compactKeyed)
-    Files.write(sameMarkerPath(name, v),
-      "content-identical-to-previous\n".getBytes(StandardCharsets.UTF_8))
-    (v, reused.size)
+    val v = transact(name, cur) { v =>
+      // antiByKey keeps the committed column order: this frame is
+      // WRITTEN, and on-disk files should not carry a different physical
+      // order than their siblings just because of which column the
+      // vector keyed on
+      val folded = antiByKey(
+        readEntries(name, rewrite.toSeq, readVersion(name, cur)), dels)
+      layout.recluster(folded, math.max(1, rewrite.size))(c =>
+        stage(name, v, Some(c), Seq(s"v$v")))
+      restageWithCarriedZones(name, v, layout, Some(zones), reused)
+      v
+    }
+    (stampContentPreserving(name, v), reused.size)
   }
 
-  /** The zone-carry + re-stage protocol shared by the file-granular
-    * rewrites ([[compactDeleteKeys]], [[optimizeSmallFiles]] and the
-    * other zoned rewrites): fresh zone rows on `layout`'s columns for
-    * the just-written `v$v` dir, the reused files' rows
-    * carried untouched (blooms ride along; allowMissingColumns covers a
-    * bloom sidecar declared mid-history — the missing side null-fills,
-    * which pruning treats conservatively), then the FILE-granular
+  /** The zone-carry + re-stage protocol shared by every zoned commit
+    * (the clustered overwrites, [[compactDeleteKeys]],
+    * [[optimizeSmallFiles]] and the other file-granular rewrites): fresh
+    * zone rows on `layout`'s columns for the just-written `v$v` dir, the
+    * `reused` files' rows carried untouched from `zones` (blooms ride
+    * along; allowMissingColumns covers a bloom sidecar declared
+    * mid-history — the missing side null-fills, which pruning treats
+    * conservatively), then the FILE-granular
     * manifest so later CoW merges prune the new files individually.
     * Guarded: an all-empty rewrite (no reused files, zero rows packed)
     * keeps the schema-bearing empty `v$v` dir entry — an EMPTY manifest
     * would publish a version [[readVersion]] permanently refuses. */
   private def restageWithCarriedZones(name: String, v: Long,
-      layout: Clustering, zones: DataFrame, reused: Seq[String]): Unit = {
+      layout: Clustering, zones: Option[DataFrame],
+      reused: Seq[String]): Unit = {
     import org.apache.spark.sql.functions._
     // r18 optimization: stats come from the staged files' footers when
     // exact (no readback scan), and the sidecar writes ONCE — fresh ∪
     // carried — instead of write + readback + checkpoint + rewrite
     val nz = stagedZoneStats(name, s"v$v", layout.cols)
-    writeSidecar(name, v, nz,
-      Some(zones.filter(col("f").isin(reused: _*))))
+    zones.map(_.filter(col("f").isin(reused: _*)))
+      .fold(nz.df)(c => nz.df.unionByName(c, allowMissingColumns = true))
+      .coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(zonesDir(name, v).toString)
     val entriesOut =
       if (reused.isEmpty && nz.files.isEmpty) Seq(s"v$v")
       else reused ++ nz.files
@@ -1638,7 +1619,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   /** Stage version `v`: write the batch's data dir (when `df` is set) and
     * the manifest, WITHOUT making `v` visible. This is the commit's
     * pre-swap half — public-to-the-spec seam for proving that a death
-    * here leaves the table intact. Returns rows written. */
+    * here leaves the table intact. A batch that violates a declared
+    * CHECK throws here; the enclosing [[transact]] discards what was
+    * staged and releases the claim. Returns rows written. */
   private[graft] def stage(name: String, v: Long, df: Option[DataFrame],
                            dirs: Seq[String]): Long = {
     Files.createDirectories(metaDir(name))
@@ -1663,53 +1646,69 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   }
 
   /** The Observation staging pass of [[stage]] — row count + CHECK
-    * violation counts riding the staging write. */
+    * violation counts riding the staging write. The violating rows were
+    * staged pre-swap, never queryable; the refusal throws and the
+    * enclosing [[transact]] discards them with the rest of `v`. */
   private def stageObserved(name: String, v: Long, d: DataFrame,
       cks: Seq[(String, String)]): Long = {
-    locally {
-      import org.apache.spark.sql.functions.{coalesce, count, count_if,
-        expr, lit, not}
-      val obs = org.apache.spark.sql.Observation()
-      val aggs = count(lit(1)).as("n") +: cks.map { case (cn, p) =>
-        count_if(not(coalesce(expr(p), lit(true)))).as(s"bad_$cn") }
-      d.observe(obs, aggs.head, aggs.tail: _*)
-        .write.mode(SaveMode.Overwrite) // retry of a dead commit may reuse v
-        .parquet(dataDir(name).resolve(s"v$v").toString)
-      cks.foreach { case (cn, p) =>
-        val bad = obs.get(s"bad_$cn").asInstanceOf[Long]
-        if (bad > 0) {
-          // the violating rows were staged pre-swap (never queryable);
-          // clean up so the DETERMINISTIC failure is immediately
-          // retryable — staged dir removed, own claim released (a dead
-          // claim here would wedge the version number until vacuum),
-          // and every sidecar the commit may have PRE-stamped for v
-          // (keyed/z-ordered/evolved overwrites stamp their schema
-          // marker before staging) — the released number's next
-          // claimant must not inherit a ghost marker (the
-          // releaseDeadClaims hazard, same cleanup set)
-          org.apache.commons.io.FileUtils.deleteDirectory(
-            dataDir(name).resolve(s"v$v").toFile)
-          deleteVersionSidecars(name, v)
-          releaseOwnClaim(name, v)
-          throw new IllegalArgumentException(
-            s"commit to '$name' violates CHECK '$cn' ($p): $bad row(s) " +
-              "— refused, nothing published")
-        }
-      }
-      obs.get("n").asInstanceOf[Long]
+    import org.apache.spark.sql.functions.{coalesce, count, count_if,
+      expr, lit, not}
+    val obs = org.apache.spark.sql.Observation()
+    val aggs = count(lit(1)).as("n") +: cks.map { case (cn, p) =>
+      count_if(not(coalesce(expr(p), lit(true)))).as(s"bad_$cn") }
+    d.observe(obs, aggs.head, aggs.tail: _*)
+      .write.mode(SaveMode.Overwrite) // retry of a dead commit may reuse v
+      .parquet(dataDir(name).resolve(s"v$v").toString)
+    cks.foreach { case (cn, p) =>
+      val bad = obs.get(s"bad_$cn").asInstanceOf[Long]
+      if (bad > 0)
+        throw new IllegalArgumentException(
+          s"commit to '$name' violates CHECK '$cn' ($p): $bad row(s) " +
+            "— refused, nothing published")
     }
+    obs.get("n").asInstanceOf[Long]
   }
 
-  /** Release THIS instance's own claim on (`name`, `v`) — only used by
-    * deterministic pre-swap refusals (a CHECK violation), where leaving
-    * the dead claim would wedge the version number until a vacuum. */
-  private def releaseOwnClaim(name: String, v: Long): Unit =
+  /** [[transact]]'s undo: run `sweep`, then release this instance's
+    * claim on `v` — only while the claim still carries this instance's
+    * token (a fenced claim and what was staged under it belong to whoever
+    * fenced it). A sweep that throws keeps the claim for vacuum. */
+  private def releaseOwnClaim(name: String, v: Long)(sweep: => Unit): Unit =
     claimTokens.remove((name, v)).foreach { token =>
       val cf = claimsDir(name).resolve(s"v$v")
       if (Files.exists(cf) && new String(Files.readAllBytes(cf),
-          StandardCharsets.UTF_8).trim == token)
+          StandardCharsets.UTF_8).trim == token) {
+        sweep
         Files.deleteIfExists(cf): Unit
+      }
     }
+
+  /** The one commit path: every version-creating method states only what
+    * it stages, as `body(v)`. Opens at `expected` ([[checkExpected]], then
+    * [[claim]] of `expected + 1`), runs the body, then swaps the pointer —
+    * or, with `publish = false`, leaves the claim open for
+    * [[publishStaged]] / [[discardStaged]]. If anything throws after the
+    * claim, every artifact of `v` goes ([[deleteVersionArtifacts]]), the
+    * claim is released and the original exception rethrows, so the next
+    * commit takes `v`. A lost or fenced claim undoes nothing: the number
+    * is another writer's. Post-swap steps (the `.same` stamp) run
+    * outside; a process crash still leaves its claim for
+    * [[releaseDeadClaims]] / [[vacuumStale]]. */
+  private def transact[T](name: String, expected: Long,
+      publish: Boolean = true)(body: Long => T): T = {
+    checkExpected(name, expected)
+    val v = expected + 1
+    claim(name, v)
+    try {
+      val out = body(v)
+      if (publish) swapTo(name, v)
+      out
+    } catch { case e: Throwable =>
+      try releaseOwnClaim(name, v)(deleteVersionArtifacts(name, v))
+      catch { case u: Throwable => e.addSuppressed(u) }
+      throw e
+    }
+  }
 
   private def claimsDir(name: String): Path =
     metaDir(name).resolve("_claims")
@@ -1751,7 +1750,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   /** Release claims ABOVE the committed pointer for `name`. ONLY safe
     * when the caller is the sole writer of this table — then any
     * above-pointer claim must be the caller's own previous incarnation's
-    * dead claim (crash between claim and swap), never a live peer's.
+    * dead claim (a process crash between claim and swap; a commit that
+    * throws releases its own), never a live peer's.
     * The streaming sinks run under exactly that contract (Structured
     * Streaming's checkpoint lock admits one live instance per query), so
     * they self-heal on restart by releasing and retrying once; multi-
@@ -1762,15 +1762,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val dead = listNames(claimsDir(name))
       .filter(n => dirVersion(n).exists(_ > cur)).sorted
     dead.foreach { c =>
-      // a dead evolved/overwrite commit may have stamped its schema
-      // marker pre-swap: the released number's next claimant must not
-      // inherit it (stage() rewrites the manifest, nothing else rewrites
-      // the marker). The SAME holds for every per-version sidecar a dead
-      // commit staged — a ghost dels/vN in particular would make the
-      // number's next claimant silently anti-join rows away forever (a
-      // dead commitDeleteKeys leaves one; the fresh commit's
-      // requireNoDeletes checks only the CURRENT version, and once the
-      // ghost's version goes live nothing ever sweeps it).
+      // the released number's next claimant must inherit no sidecar of
+      // the dead commit: stage() rewrites the manifest, but nothing
+      // rewrites a schema marker, and a ghost dels/vN would silently
+      // anti-join rows away once the number goes live
       dirVersion(c).foreach(deleteVersionSidecars(name, _))
       Files.deleteIfExists(claimsDir(name).resolve(c))
     }
@@ -1779,13 +1774,42 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
 
   /** Remove version `v`'s own per-version sidecars — its schema marker,
     * zone stats and delete vector — so that the next claimant of a
-    * released version number inherits none of them. Callers delete the
-    * version's data, manifest and claim themselves. */
+    * released version number inherits none of them. A plain file where
+    * a sidecar dir belongs goes too. */
   private def deleteVersionSidecars(name: String, v: Long): Unit = {
     Files.deleteIfExists(schemaMarkerPath(name, v))
     Seq(zonesDir(name, v), delsDir(name, v)).filter(Files.exists(_))
-      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
+      .foreach(d => org.apache.commons.io.FileUtils.forceDelete(d.toFile))
   }
+
+  /** Delete every artifact of version `v` — what a failed ([[transact]])
+    * or discarded ([[discardStaged]]) commit staged: its data dirs
+    * (`v<N>` and `v<N>__<sub>`), sidecars and manifest, a bucket spec `v`
+    * wrote first with the catalog registration made from it, and the
+    * CHECKs a failed first commit (a clone) copied. Entries it carried
+    * from published versions are untouched; the claim is the caller's. */
+  private def deleteVersionArtifacts(name: String, v: Long): Unit = {
+    val dd = dataDir(name)
+    listNames(dd).filter(dn => dirVersion(dn).contains(v)).foreach(dn =>
+      org.apache.commons.io.FileUtils.forceDelete(dd.resolve(dn).toFile))
+    deleteVersionSidecars(name, v)
+    Files.deleteIfExists(manifestPath(name, v))
+    // a table whose first commit failed never existed, so it declares no
+    // CHECK (addCheck needs a committed table; a clone copies its own)
+    if (!exists(name)) listNames(metaDir(name)).filter(_.startsWith("check."))
+      .foreach(n => Files.delete(metaDir(name).resolve(n)))
+    bucketedSubs(name).filter(bucketSpecFields(name, _)(2) == s"$v")
+      .foreach { sub =>
+        spark.sql(s"DROP TABLE IF EXISTS ${catalogTableName(name, sub)}")
+        Files.delete(bucketSpecPath(name, sub))
+      }
+  }
+
+  /** Copy the sidecar dir `from` to `to` when it exists — a version that
+    * keeps every file of the one before keeps its zone stats. */
+  private def copyIfExists(from: Path, to: Path): Unit =
+    if (Files.exists(from))
+      org.apache.commons.io.FileUtils.copyDirectory(from.toFile, to.toFile)
 
   /** The swap half: make `v` the committed version. Atomic rename — a
     * reader sees the old pointer or the new one, never a torn write.
@@ -1842,19 +1866,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * `expectedCurrent` can never silently clobber a commit that landed
     * in between. */
   def commitOverwriteAt(name: String, expectedCurrent: Long,
-                        df: DataFrame): Long = {
-    val v = stageOverwriteAt(name, expectedCurrent, df)
-    swapTo(name, v)
-    v
-  }
+                        df: DataFrame): Long =
+    overwriteAt(name, expectedCurrent, df, publish = true)
 
   /** Append commit → new version = previous snapshot's file sets plus the
     * batch's; nothing existing is rewritten. */
-  def commitAppend(name: String, df: DataFrame): Long = {
-    val v = stageAppend(name, df)
-    swapTo(name, v)
-    v
-  }
+  def commitAppend(name: String, df: DataFrame): Long =
+    append(name, df, publish = true)
 
   // --- optimistic concurrency: conflict retry ---------------------------
 
@@ -1874,8 +1892,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * concurrent change (the lost-update anomaly). Failed attempts cost
     * no data I/O: [[claim]] is step one of every commit path, so a lost
     * race surfaces before any file is written. `onConflict(attempt)`
-    * runs before each re-attempt — the metrics/test seam. Writers that
-    * CRASH mid-commit still wedge their number until
+    * runs before each re-attempt — the metrics/test seam. A commit that
+    * THROWS releases its own claim ([[transact]]), so the next attempt
+    * takes the same number; only a writer whose process CRASHES
+    * mid-commit wedges its number until
     * [[releaseDeadClaims]]/[[vacuumStale]] (the retry loop waits out
     * live contention, never steals a claim). */
   def retryCommit[T](maxAttempts: Int = 8, backoffMs: Long = 100,
@@ -1949,7 +1969,11 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * land on this table (single staged commit at a time — the staged-WAP
     * flavor); a crashed stager's claim releases via the usual
     * vacuum / vacuumStale / releaseDeadClaims contracts. */
-  def stageAppend(name: String, df: DataFrame): Long = {
+  def stageAppend(name: String, df: DataFrame): Long =
+    append(name, df, publish = false)
+
+  private def append(name: String, df: DataFrame, publish: Boolean)
+      : Long = {
     val cur = currentVersion(name)
     require(cur >= 1, s"'$name' has no committed version to append to — " +
       "use commitOverwrite for the first commit")
@@ -1957,21 +1981,18 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     requireNoDeletes(name, cur, "commitAppend",
       "an appended row re-using a deleted key would be silently " +
         "suppressed by the vector")
-    val v = cur + 1
-    claim(name, v)
-    // rebalance: file sizing for the layout-free append (keyed /
-    // z-ordered staging paths keep their own clustering repartitions,
-    // caller-declared layouts win - see [[rebalanced]])
-    stage(name, v, Some(rebalanced(df)),
-      readManifest(name, cur) :+ s"v$v")
-    // a keyed table's zone stats survive the append (the new dir simply
-    // has no rows in them, so CoW merges rewrite it conservatively —
-    // the statless branch in commitMergeCow)
-    val z = zonesDir(name, cur)
-    if (Files.exists(z))
-      org.apache.commons.io.FileUtils
-        .copyDirectory(z.toFile, zonesDir(name, v).toFile)
-    v
+    transact(name, cur, publish) { v =>
+      // rebalance: file sizing for the layout-free append (keyed /
+      // z-ordered staging paths keep their own clustering repartitions,
+      // caller-declared layouts win - see [[rebalanced]])
+      stage(name, v, Some(rebalanced(df)),
+        readManifest(name, cur) :+ s"v$v")
+      // a keyed table's zone stats survive the append (the new dir simply
+      // has no rows in them, so CoW merges rewrite it conservatively —
+      // the statless branch in commitMergeCow)
+      copyIfExists(zonesDir(name, cur), zonesDir(name, v))
+      v
+    }
   }
 
   /** Append BORN PRUNABLE (r17, X141ac): [[commitAppend]] for tables
@@ -2039,43 +2060,46 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         val rw = expanded.filter(f => hit(f) || !known(f))
         (rw, expanded.filterNot(rw.toSet))
     }
-    val v = cur + 1
-    claim(name, v)
-    val batch = dels match {
-      case None => df
-      case Some(d) =>
-        val folded = antiByKey(
-          readEntries(name, foldRewrite, readVersion(name, cur)), d)
-        folded.unionByName(
-          df.select(folded.columns.map(col).toIndexedSeq: _*))
+    transact(name, cur) { v =>
+      val batch = dels match {
+        case None => df
+        case Some(d) =>
+          val folded = antiByKey(
+            readEntries(name, foldRewrite, readVersion(name, cur)), d)
+          folded.unionByName(
+            df.select(folded.columns.map(col).toIndexedSeq: _*))
+      }
+      layout.recluster(batch, numFiles + foldRewrite.size)(c =>
+        stage(name, v, Some(c), Seq(s"v$v")))
+      // every non-rewritten prior entry carries; the shared carry-tail
+      // unions the new files' fresh zone rows with the carried sidecar
+      // and restages the manifest file-granular for the new dir. With no
+      // vector, `carried` IS the prior manifest verbatim — zero plan
+      // change for the existing append path.
+      restageWithCarriedZones(name, v, layout, Some(zones), carried)
+      v
     }
-    layout.recluster(batch, numFiles + foldRewrite.size)(c =>
-      stage(name, v, Some(c), Seq(s"v$v")))
-    // every non-rewritten prior entry carries; the shared carry-tail
-    // unions the new files' fresh zone rows with the carried sidecar
-    // and restages the manifest file-granular for the new dir. With no
-    // vector, `carried` IS the prior manifest verbatim — zero plan
-    // change for the existing append path.
-    restageWithCarriedZones(name, v, layout, zones, carried)
-    swapTo(name, v)
-    v
   }
 
   /** [[stageAppend]]'s full-replace sibling: stage an OVERWRITE at
     * expectedCurrent+1 without publishing; the claim CASes the staged
     * content against the snapshot its reads were pinned to. */
   def stageOverwriteAt(name: String, expectedCurrent: Long,
-                       df: DataFrame): Long = {
+                       df: DataFrame): Long =
+    overwriteAt(name, expectedCurrent, df, publish = false)
+
+  private def overwriteAt(name: String, expectedCurrent: Long,
+      df: DataFrame, publish: Boolean): Long = {
     requireSingleTable(name, "commitOverwrite")
-    checkExpected(name, expectedCurrent)
-    val v = expectedCurrent + 1
-    claim(name, v)
-    // rebalance: file sizing for the layout-free overwrite
-    stage(name, v, Some(rebalanced(df)), Seq(s"v$v"))
-    // an overwrite of a previously-EVOLVED table must pin its own schema,
-    // or the older (wider) marker would misread the fresh content
-    if (schemaAt(name, expectedCurrent).isDefined) stampSchema(name, v, df.schema)
-    v
+    transact(name, expectedCurrent, publish) { v =>
+      // rebalance: file sizing for the layout-free overwrite
+      stage(name, v, Some(rebalanced(df)), Seq(s"v$v"))
+      // an overwrite of a previously-EVOLVED table must pin its own
+      // schema, or the older (wider) marker would misread the content
+      if (schemaAt(name, expectedCurrent).isDefined)
+        stampSchema(name, v, df.schema)
+      v
+    }
   }
 
   def stageOverwrite(name: String, df: DataFrame): Long =
@@ -2179,12 +2203,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       }
     }
     claimTokens.remove((name, v)): Unit
-    val dd = dataDir(name)
-    listNames(dd).filter(dn => dirVersion(dn).contains(v)).foreach(dn =>
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(dd.resolve(dn).toFile))
-    deleteVersionSidecars(name, v)
-    Files.deleteIfExists(manifestPath(name, v))
+    deleteVersionArtifacts(name, v)
     Files.deleteIfExists(cf): Unit
   }
 
@@ -2228,71 +2247,58 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * can commit a version whose reads fail. */
   def rollback(name: String, v: Long): Long = {
     val target = readManifest(name, v) // validates v
-    val nv = currentVersion(name) + 1
-    claim(name, nv)
-    def abort(msg: String): Nothing = {
-      // release our own claim so the retry isn't wedged on it — and any
-      // sidecar already copied or stamped for nv: a later commit
-      // reclaiming this number would otherwise inherit stale zones, a
-      // stale delete vector or a stale schema and silently mis-read
-      deleteVersionSidecars(name, nv)
-      Files.deleteIfExists(claimsDir(name).resolve(s"v$nv"))
-      throw new ConcurrentCommitException(msg)
+    transact(name, currentVersion(name)) { nv =>
+      // every refusal below is retryable: the transaction discards what
+      // was staged, copied or stamped for nv, so the next commit of this
+      // number inherits no stale zones, vector or schema
+      if (v <= expiredBelow(name))
+        throw new ConcurrentCommitException(s"rollback target v$v of " +
+          s"'$name' was expired by a concurrent retention run — pick a " +
+          "live version and retry")
+      stage(name, nv, None, target)
+      // copy the target's zone stats BEFORE the decisive floor re-check:
+      // the sweep's staleZones axis doesn't read staged manifests (zone
+      // dirs aren't manifest entries), so a keyed rollback racing
+      // retention must either land its copy while v is live or fail the
+      // re-check below — never publish a keyed version silently stripped
+      // of its stats (zones/nv itself is safe: its version is above the
+      // pointer, which the expired-only sweep never touches). A
+      // delete-vector sidecar travels with its version the same way: a
+      // rollback to a vector-bearing version restores its deletes, and a
+      // rollback PAST a delete commit resurrects the rows (the
+      // changelog's vector-step insert branch) — nv simply carries no
+      // dels dir then.
+      Seq("zone stats" -> zonesDir _, "delete vector" -> delsDir _).foreach {
+        case (what, dir) =>
+          try copyIfExists(dir(name, v), dir(name, nv))
+          catch { case _: java.io.IOException | _: IllegalArgumentException =>
+            // source vanished mid-copy (the sweep is reclaiming v right
+            // now), or a leftover blocks the destination (commons-io
+            // reports that as IllegalArgumentException)
+            throw new ConcurrentCommitException(
+              s"rollback of '$name' could not copy v$v's $what (a " +
+                "concurrent retention run reclaimed them, or a leftover " +
+                s"blocks v$nv's) — pick a live version and retry")
+          }
+      }
+      // an EVOLVED table's rollback restores the schema in force at the
+      // target along with its content — without this, a schema-narrowing
+      // overwrite's marker would misread the rolled-back files (columns
+      // silently dropped). Never-evolved tables have no markers and skip.
+      if (listNames(metaDir(name)).exists(_.endsWith(".schema")))
+        stampSchema(name, nv,
+          schemaAt(name, v).getOrElse(readVersion(name, v).schema))
+      // the decisive re-check: from here on the staged manifest pins the
+      // entries against the sweep, and a floor that moved past v BEFORE
+      // the stage/zone-copy (when nothing pinned them) is caught here —
+      // so no interleaving publishes a version whose entries (or zone
+      // stats) were reclaimed
+      if (v <= expiredBelow(name))
+        throw new ConcurrentCommitException(s"rollback target v$v of " +
+          s"'$name' was expired by a concurrent retention run mid-" +
+          "rollback — pick a live version and retry")
+      nv
     }
-    if (v <= expiredBelow(name))
-      abort(s"rollback target v$v of '$name' was expired by a concurrent " +
-        "retention run — pick a live version and retry")
-    stage(name, nv, None, target)
-    // copy the target's zone stats BEFORE the decisive floor re-check:
-    // the sweep's staleZones axis doesn't read staged manifests (zone
-    // dirs aren't manifest entries), so a keyed rollback racing
-    // retention must either land its copy while v is live or fail the
-    // re-check below — never publish a keyed version silently stripped
-    // of its stats (zones/nv itself is safe: its version is above the
-    // pointer, which the expired-only sweep never touches)
-    val z = zonesDir(name, v)
-    if (Files.exists(z))
-      try org.apache.commons.io.FileUtils
-        .copyDirectory(z.toFile, zonesDir(name, nv).toFile)
-      catch { case _: java.io.IOException | _: IllegalArgumentException =>
-        // source vanished mid-copy (the sweep is reclaiming v right now),
-        // or a leftover blocks the destination (commons-io reports that
-        // as IllegalArgumentException)
-        abort(s"rollback of '$name' could not copy v$v's zone stats (a " +
-          "concurrent retention run reclaimed them, or a leftover blocks " +
-          s"v$nv's) — pick a live version and retry")
-      }
-    // a delete-vector sidecar travels with its version the same way: a
-    // rollback to a vector-bearing version restores its deletes, and a
-    // rollback PAST a delete commit resurrects the rows (the changelog's
-    // vector-step insert branch) — nv simply carries no dels dir then
-    val dl = delsDir(name, v)
-    if (Files.exists(dl))
-      try org.apache.commons.io.FileUtils
-        .copyDirectory(dl.toFile, delsDir(name, nv).toFile)
-      catch { case _: java.io.IOException | _: IllegalArgumentException =>
-        abort(s"rollback of '$name' could not copy v$v's delete vector " +
-          "(a concurrent retention run reclaimed it, or a leftover blocks " +
-          s"v$nv's) — pick a live version and retry")
-      }
-    // an EVOLVED table's rollback restores the schema in force at the
-    // target along with its content — without this, a schema-narrowing
-    // overwrite's marker would misread the rolled-back files (columns
-    // silently dropped). Never-evolved tables have no markers and skip.
-    if (listNames(metaDir(name)).exists(_.endsWith(".schema")))
-      stampSchema(name, nv,
-        schemaAt(name, v).getOrElse(readVersion(name, v).schema))
-    // the decisive re-check: from here on the staged manifest pins the
-    // entries against the sweep, and a floor that moved past v BEFORE
-    // the stage/zone-copy (when nothing pinned them) is caught here —
-    // so no interleaving publishes a version whose entries (or zone
-    // stats) were reclaimed
-    if (v <= expiredBelow(name))
-      abort(s"rollback target v$v of '$name' was expired by a concurrent " +
-        "retention run mid-rollback — the staged manifest stays for " +
-        "vacuum; pick a live version and retry")
-    swapTo(name, nv)
-    nv
   }
 
   /** Marker stamped by content-preserving commits ([[compactKeyed]]):
@@ -2302,6 +2308,16 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * diff. Purely an optimization flag — its absence is always safe. */
   private def sameMarkerPath(name: String, v: Long): Path =
     metaDir(name).resolve(s"v$v.same")
+
+  /** Stamp the just-published version `v` content-preserving; returns
+    * `v`. AFTER the swap on purpose: a crash between swap and stamp only
+    * loses the optimization (the changelog then computes the empty diff —
+    * correct, just slower), never the other way around. */
+  private def stampContentPreserving(name: String, v: Long): Long = {
+    Files.write(sameMarkerPath(name, v),
+      "content-identical-to-previous\n".getBytes(StandardCharsets.UTF_8))
+    v
+  }
 
   /** Expand a manifest entry to its individual parquet files (driver-side
     * listing, bounded by the dir's file count — a layout property): the
@@ -2607,12 +2623,10 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     require((appends.keySet & overwrites.keySet).isEmpty,
       s"subs both appended and overwritten: ${appends.keySet & overwrites.keySet}")
     validateBucketed(name, appends ++ overwrites, buckets)
-    checkExpected(name, expectedCurrent)
-    val v = expectedCurrent + 1
-    claim(name, v)
-    stageTables(name, v, appends, overwrites, buckets)
-    swapTo(name, v)
-    v
+    transact(name, expectedCurrent) { v =>
+      stageTables(name, v, appends, overwrites, buckets)
+      v
+    }
   }
 
   /** Eager conflict check for the At-variants: fail fast (and loudly)
@@ -2689,12 +2703,15 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
               def call(): String = stageOne(sub, df)
             })
           }
-          futs.map { f =>
-            try f.get()
-            catch { // surface the staging failure itself, not the wrapper
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause
-            }
+          // wait for EVERY sub before surfacing a failure: a failed
+          // commit's undo must not race a sibling sub still writing its
+          // dir for this version
+          futs.map(f => scala.util.Try(f.get())).map {
+            case scala.util.Success(entry) => entry
+            // surface the staging failure itself, not the wrapper
+            case scala.util.Failure(
+                e: java.util.concurrent.ExecutionException) => throw e.getCause
+            case scala.util.Failure(e) => throw e
           }
         } finally pool.shutdownNow()
       }
@@ -2742,15 +2759,18 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
   /** The persisted bucket layout of sub-table `sub`, None when the sub is
     * plain (or never committed). Written once on the sub's first bucketed
     * commit; immutable thereafter. */
-  def bucketSpecOf(name: String, sub: String): Option[SubBucket] = {
-    val p = bucketSpecPath(name, sub)
-    if (!Files.exists(p)) None
+  def bucketSpecOf(name: String, sub: String): Option[SubBucket] =
+    if (!Files.exists(bucketSpecPath(name, sub))) None
     else {
-      val parts = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .trim.split("\t")
-      Some(SubBucket(parts(0), parts(1).toInt))
+      val f = bucketSpecFields(name, sub)
+      Some(SubBucket(f(0), f(1).toInt))
     }
-  }
+
+  /** Key, bucket count and the version that wrote the spec (empty in
+    * specs that predate the field). */
+  private def bucketSpecFields(name: String, sub: String): Array[String] =
+    new String(Files.readAllBytes(bucketSpecPath(name, sub)),
+      StandardCharsets.UTF_8).trim.split("\t").padTo(3, "")
 
   /** Bucketed subs committed to this group, sorted — what
     * [[dropCatalogTables]] sweeps. */
@@ -2800,6 +2820,21 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     }
   }
 
+  /** Persist sub `sub`'s layout on its first bucketed commit, `v`. The
+    * spec records `v`, so a failed `v` takes it along
+    * ([[deleteVersionArtifacts]]) and a retry may declare another. */
+  private def writeBucketSpec(name: String, v: Long, sub: String,
+      spec: SubBucket): Unit = {
+    Files.createDirectories(metaDir(name))
+    // tmp + ATOMIC_MOVE like every pointer file: a torn spec would
+    // wedge every later read and commit of the group unrecoverably
+    val tmp = metaDir(name).resolve(s"_bucket__$sub.tmp")
+    Files.write(tmp, s"${spec.key}\t${spec.nBuckets}\t$v\n"
+      .getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, bucketSpecPath(name, sub),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
   /** Stage one bucketed sub's batch for version `v`: one new
     * `commit_v=$v` partition of the catalog table, hash-bucketed on the
     * spec key. INVISIBLE until the pointer swap — readers select
@@ -2809,17 +2844,8 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * before rewriting. Returns the manifest entry. */
   private def stageBucketed(name: String, v: Long, sub: String,
       df: DataFrame, spec: SubBucket): String = {
-    import org.apache.spark.sql.functions.lit
-    if (!Files.exists(bucketSpecPath(name, sub))) {
-      Files.createDirectories(metaDir(name))
-      // tmp + ATOMIC_MOVE like every pointer file: a torn spec would
-      // wedge every later read and commit of the group unrecoverably
-      val tmp = metaDir(name).resolve(s"_bucket__$sub.tmp")
-      Files.write(tmp,
-        s"${spec.key}\t${spec.nBuckets}\n".getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, bucketSpecPath(name, sub),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (!Files.exists(bucketSpecPath(name, sub)))
+      writeBucketSpec(name, v, sub, spec)
     val cat = catalogTableName(name, sub)
     ensureCatalog(name, sub, spec, df.schema)
     // retry of a dead commit: clear the crashed attempt's partition
@@ -2895,16 +2921,11 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val spec = bucketSpecOf(name, sub).getOrElse(throw
       new IllegalArgumentException(s"'$sub' of '$name' is not bucketed"))
     val cur = currentVersion(name)
-    val v = commitTablesAt(name, cur, overwrites = Map(sub ->
-      readTableVersion(name, cur, sub)
-        .repartition(spec.nBuckets, col(spec.key))))
-    // content-preserving (the compacted sub rewrites identically, every
-    // other sub carries by reference) — stamp post-swap so the
-    // changelog skips this step; a crash in between only loses the
-    // optimization (see compactKeyed)
-    Files.write(sameMarkerPath(name, v),
-      "content-identical-to-previous\n".getBytes(StandardCharsets.UTF_8))
-    v
+    // content-preserving: the compacted sub rewrites identically, every
+    // other sub carries by reference
+    stampContentPreserving(name, commitTablesAt(name, cur,
+      overwrites = Map(sub -> readTableVersion(name, cur, sub)
+        .repartition(spec.nBuckets, col(spec.key)))))
   }
 
   /** Drop this group's catalog registrations (NOT data — manifests and
@@ -3054,7 +3075,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     * relative file list (what the file-granular manifest restage
     * needs). `df` is a LOCAL RELATION on the footer path and the
     * readback aggregation on the scan fallback, which the sidecar write
-    * ([[writeSidecar]]) runs once. */
+    * ([[restageWithCarriedZones]]) runs once. */
   private case class StagedZones(df: DataFrame, files: Seq[String])
 
   /** Spec seams for the footer-stats path (ZoneStatsSpec): force the
@@ -3123,17 +3144,6 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         StagedZones(full, files)
     }
   }
-
-  /** Write version `v`'s zone sidecar in ONE job: the fresh rows ∪ the
-    * optional carried rows (allowMissingColumns: a bloom sidecar
-    * declared mid-history null-fills on whichever side lacks it, which
-    * pruning treats conservatively). */
-  private def writeSidecar(name: String, v: Long, nz: StagedZones,
-      carried: Option[DataFrame]): Unit =
-    carried.fold(nz.df)(c =>
-        nz.df.unionByName(c, allowMissingColumns = true))
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(zonesDir(name, v).toString)
 
   /** Exact per-file (lo, hi, n) from parquet footers, or None when any
     * file/column cannot be served exactly (the caller then pays the
@@ -3399,23 +3409,16 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       key: String, df: DataFrame, numFiles: Int = 16): Long = {
     import org.apache.spark.sql.functions.col
     requireSingleTable(name, "commitOverwriteKeyed")
-    checkExpected(name, expectedCurrent)
-    val v = expectedCurrent + 1
-    claim(name, v)
-    // converting a previously-evolved table to the keyed layout: pin this
-    // content's schema so the older (wider) marker never misreads it
-    if (schemaAt(name, expectedCurrent).isDefined) stampSchema(name, v, df.schema)
-    stage(name, v, Some(df.repartitionByRange(numFiles, col(key))),
-      Seq(s"v$v"))
-    val nz = stagedZoneStats(name, s"v$v", Seq(key))
-    writeSidecar(name, v, nz, carried = None)
-    // re-stage the manifest at FILE granularity now the file set is known
-    // (the pointer hasn't swapped; nothing was visible in between). An
-    // EMPTY commit has no zone rows — keep the dir entry (Spark's empty
-    // write is schema-bearing) so the version stays readable.
-    stage(name, v, None, if (nz.files.isEmpty) Seq(s"v$v") else nz.files)
-    swapTo(name, v)
-    v
+    transact(name, expectedCurrent) { v =>
+      // converting a previously-evolved table to the keyed layout: pin
+      // this content's schema so the older (wider) marker never misreads
+      if (schemaAt(name, expectedCurrent).isDefined)
+        stampSchema(name, v, df.schema)
+      stage(name, v, Some(df.repartitionByRange(numFiles, col(key))),
+        Seq(s"v$v"))
+      restageWithCarriedZones(name, v, Clustering(Seq(key)), None, Nil)
+      v
+    }
   }
 
   /** Which entries of version `v` can hold a `key` value in [from, to],
@@ -3562,16 +3565,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         "use commitOverwriteKeyed")
     requireSingleTable(name, "commitOverwriteZordered")
     val cur = currentVersion(name)
-    val v = cur + 1
-    claim(name, v)
-    if (schemaAt(name, cur).isDefined) stampSchema(name, v, df.schema)
-    stage(name, v, Some(Clustering.zSorted(df, zCols, numFiles, bits)),
-      Seq(s"v$v"))
-    val nz = stagedZoneStats(name, s"v$v", zCols)
-    writeSidecar(name, v, nz, carried = None)
-    stage(name, v, None, if (nz.files.isEmpty) Seq(s"v$v") else nz.files)
-    swapTo(name, v)
-    v
+    transact(name, cur) { v =>
+      if (schemaAt(name, cur).isDefined) stampSchema(name, v, df.schema)
+      stage(name, v, Some(Clustering.zSorted(df, zCols, numFiles, bits)),
+        Seq(s"v$v"))
+      restageWithCarriedZones(name, v, Clustering(zCols), None, Nil)
+      v
+    }
   }
 
   /** True when comparing a column of `colType` to a literal of
@@ -3956,18 +3956,9 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     // pinned + CASed like commitMerge: compaction must never erase a
     // commit that landed while it was rewriting
     val cur = currentVersion(name)
-    val v = commitOverwriteKeyedAt(name, cur, key,
-      readVersion(name, cur), numFiles)
-    // content-preserving by construction (same rows, new layout): stamp
-    // the marker AFTER the swap so [[changesBetween]] skips this step
-    // instead of paying a whole-table diff that provably cancels to
-    // nothing. Post-swap is the safe side of the race: a crash between
-    // swap and stamp merely loses the optimization for this version
-    // (the changelog then computes the empty diff — correct, just
-    // slower), never the other way around.
-    Files.write(sameMarkerPath(name, v),
-      "content-identical-to-previous\n".getBytes(StandardCharsets.UTF_8))
-    v
+    // content-preserving by construction: same rows, new layout
+    stampContentPreserving(name, commitOverwriteKeyedAt(name, cur, key,
+      readVersion(name, cur), numFiles))
   }
 
   /** OPTIMIZE — bin-pack the current version's SMALL files into
@@ -4014,33 +4005,32 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val small = expanded.filter(sized(_) < smallBar)
     if (small.size < 2) return (cur, 0, 0) // nothing to pack: commit NOTHING
     val reused = expanded.filterNot(small.toSet)
-    val v = cur + 1
-    claim(name, v)
     val nOut = math.max(1,
       math.ceil(small.map(sized).sum.toDouble / targetBytes).toInt)
-    val debt = readEntries(name, small, readVersion(name, cur),
-      schemaAt(name, cur))
-    zones match {
-      case Some(z) =>
-        // the debt re-clusters in the table's own layout, so the packed
-        // files keep every clustered column pruning (fresh zone rows)
-        val layout = Clustering.of(z)
-        layout.recluster(debt, nOut)(c => stage(name, v, Some(c), Seq(s"v$v")))
-        restageWithCarriedZones(name, v, layout, z, reused)
-      case None =>
-        // coalesce (no shuffle) merges many→few; when the requested
-        // target wants MORE files than the scan's partitioning gives
-        // (small targetBytes), coalesce cannot split — repartition then,
-        // so targetBytes is honored in both directions
-        stage(name, v, Some(
-          if (nOut > debt.rdd.getNumPartitions) debt.repartition(nOut)
-          else debt.coalesce(nOut)), Seq(s"v$v"))
-        stage(name, v, None, reused :+ s"v$v")
+    val v = transact(name, cur) { v =>
+      val debt = readEntries(name, small, readVersion(name, cur),
+        schemaAt(name, cur))
+      zones match {
+        case Some(z) =>
+          // the debt re-clusters in the table's own layout, so the packed
+          // files keep every clustered column pruning (fresh zone rows)
+          val layout = Clustering.of(z)
+          layout.recluster(debt, nOut)(c =>
+            stage(name, v, Some(c), Seq(s"v$v")))
+          restageWithCarriedZones(name, v, layout, Some(z), reused)
+        case None =>
+          // coalesce (no shuffle) merges many→few; when the requested
+          // target wants MORE files than the scan's partitioning gives
+          // (small targetBytes), coalesce cannot split — repartition
+          // then, so targetBytes is honored in both directions
+          stage(name, v, Some(
+            if (nOut > debt.rdd.getNumPartitions) debt.repartition(nOut)
+            else debt.coalesce(nOut)), Seq(s"v$v"))
+          stage(name, v, None, reused :+ s"v$v")
+      }
+      v
     }
-    swapTo(name, v)
-    Files.write(sameMarkerPath(name, v),
-      "content-identical-to-previous\n".getBytes(StandardCharsets.UTF_8))
-    (v, small.size, reused.size)
+    (stampContentPreserving(name, v), small.size, reused.size)
   }
 
   /** Max OVERLAP DEPTH of version `v`'s per-file key ranges: the
@@ -4146,15 +4136,13 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       components.filter(_.size >= 2).flatten.toSeq ++ statless
     if (rewrite.size < 2) return (cur, 0, 0) // clustered: commit NOTHING
     val reused = entries.filterNot(rewrite.toSet)
-    val v = cur + 1
-    claim(name, v)
-    layout.recluster(readEntries(name, rewrite, readVersion(name, cur)),
-      math.max(1, rewrite.size))(c => stage(name, v, Some(c), Seq(s"v$v")))
-    restageWithCarriedZones(name, v, layout, zones, reused)
-    swapTo(name, v)
-    Files.write(sameMarkerPath(name, v),
-      "content-identical-to-previous\n".getBytes(StandardCharsets.UTF_8))
-    (v, rewrite.size, reused.size)
+    val v = transact(name, cur) { v =>
+      layout.recluster(readEntries(name, rewrite, readVersion(name, cur)),
+        math.max(1, rewrite.size))(c => stage(name, v, Some(c), Seq(s"v$v")))
+      restageWithCarriedZones(name, v, layout, Some(zones), reused)
+      v
+    }
+    (stampContentPreserving(name, v), rewrite.size, reused.size)
   }
 
   /** File-level copy-on-write MERGE — the 100 TB refinement
@@ -4238,25 +4226,25 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
       val statless = entries.toSet -- zoneFiles(ranges).toSet
       val rewrite = (touchedFiles ++ statless).filter(entries.contains)
       val reused = entries.filterNot(rewrite)
-      val v = cur + 1
-      claim(name, v)
-      val base0 = readEntries(name, rewrite.toSeq, readVersion(name, cur))
-      // fold the vector: its rows leave the rewrite base here, and since
-      // every vector-intersecting file is in `rewrite`, the fold is total
-      val base = dels.fold(base0)(antiByKey(base0, _))
-      layout.recluster(graft.ops.CdcOps.applyDiff(base, d, key),
-        math.max(1, rewrite.size))(c => stage(name, v, Some(c), Seq(s"v$v")))
-      // final zones = the new dir's rows ∪ the reused files' carried rows
-      // (the shared carry tail — footer stats + ONE sidecar write, r18).
-      // Ranges MAY overlap across files after a merge (an insert beyond
-      // every range lands in the new dir whose span can straddle reused
-      // files') — harmless for pruning soundness, it only widens future
-      // touch sets. A merge that deleted everything has no new files AND
-      // no reused ones — the tail keeps the (schema-bearing, empty) dir
-      // entry so the version reads.
-      restageWithCarriedZones(name, v, layout, zones, reused)
-      swapTo(name, v)
-      (v, reused.size)
+      transact(name, cur) { v =>
+        val base0 = readEntries(name, rewrite.toSeq, readVersion(name, cur))
+        // fold the vector: its rows leave the rewrite base here, and since
+        // every vector-intersecting file is in `rewrite`, the fold is total
+        val base = dels.fold(base0)(antiByKey(base0, _))
+        layout.recluster(graft.ops.CdcOps.applyDiff(base, d, key),
+          math.max(1, rewrite.size))(c =>
+            stage(name, v, Some(c), Seq(s"v$v")))
+        // final zones = the new dir's rows ∪ the reused files' carried
+        // rows (the shared carry tail — footer stats + ONE sidecar write,
+        // r18). Ranges MAY overlap across files after a merge (an insert
+        // beyond every range lands in the new dir whose span can straddle
+        // reused files') — harmless for pruning soundness, it only widens
+        // future touch sets. A merge that deleted everything has no new
+        // files AND no reused ones — the tail keeps the (schema-bearing,
+        // empty) dir entry so the version reads.
+        restageWithCarriedZones(name, v, layout, Some(zones), reused)
+        (v, reused.size)
+      }
     } finally graft.ops.RelOps.releaseCheckpoint(d)
   }
 
@@ -4467,9 +4455,7 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
     val rewriteSet = predTouched.toSet ++ vecTouched
     val rewrite = expanded.filter(rewriteSet)
     val reused = expanded.filterNot(rewriteSet)
-    val v = cur + 1
-    claim(name, v)
-    try {
+    transact(name, cur) { v =>
       if (pinned.isDefined) stampSchema(name, v, df.schema)
       val base0 = readEntries(name, rewrite, df, pinned)
       // fold the vector: its rows leave the rewrite base BEFORE the
@@ -4480,28 +4466,12 @@ final class SnapshotStore(private[sources] val spark: SparkSession,
         case (Some(l), Some(z)) =>
           l.recluster(out, math.max(1, rewrite.size))(c =>
             stage(name, v, Some(c), Seq(s"v$v")))
-          restageWithCarriedZones(name, v, l, z, reused)
+          restageWithCarriedZones(name, v, l, Some(z), reused)
         case _ =>
           stage(name, v, Some(out), Seq(s"v$v"))
           stage(name, v, None, reused :+ s"v$v")
       }
-      swapTo(name, v)
       (v, reused.size)
-    } catch { case e: Throwable =>
-      // a DETERMINISTIC pre-swap refusal (an unresolvable SET
-      // expression, a failing cast-back, a CHECK violation already
-      // cleaned by stage) must not wedge the version number until a
-      // vacuum: everything staged for v is invisible — discard it and
-      // release our own claim (the stage()-violation cleanup set),
-      // then rethrow. A crash instead of an exception still leaves
-      // the claim for vacuum/vacuumStale, unchanged.
-      val dd = dataDir(name).resolve(s"v$v")
-      if (Files.exists(dd))
-        org.apache.commons.io.FileUtils.deleteDirectory(dd.toFile)
-      deleteVersionSidecars(name, v)
-      Files.deleteIfExists(manifestPath(name, v))
-      releaseOwnClaim(name, v)
-      throw e
     }
   }
 

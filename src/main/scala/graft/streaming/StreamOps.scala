@@ -465,9 +465,11 @@ object StreamOps extends Serializable {
       .start()
 
   /** Versioned-sink commit wrapper, single-writer crash recovery: a
-    * sink crashing between its commit's claim and pointer swap would
-    * otherwise wedge on restart (the redelivered batch re-derives the
-    * same version and hits the dead claim forever). Under the sink
+    * sink whose PROCESS died between its commit's claim and pointer swap
+    * would otherwise wedge on restart (the redelivered batch re-derives
+    * the same version and hits the dead claim forever). A commit that
+    * merely throws needs none of this — it releases its own claim (the
+    * store's single commit path). Under the sink
     * contract — Structured Streaming's checkpoint lock admits ONE live
     * instance per query, so this sink is the sole writer of its table —
     * an in-sink ConcurrentCommitException can only be our own previous
