@@ -1,9 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Aggregator
-import breeze.linalg.{eigSym, DenseMatrix, DenseVector}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** M7 EXACT: Bayesian ridge regression by MacKay evidence maximization
   * (Bishop, PRML §3.5.2; Tipping 2001 — the published algorithm
@@ -12,13 +10,13 @@ import breeze.linalg.{eigSym, DenseMatrix, DenseVector}
   * fixed-penalty ridge stand-in and documented the divergence; this
   * closes it with the real iterative posterior + hyperparameter fit.
   *
-  * Spark-first shape: the data is touched ONCE — a single typed
-  * Aggregator pass reduces to sufficient statistics (n, Σx, Σy, Σyy,
-  * XᵀX, Xᵀy; buffer is p²+2p+3 doubles with map-side combine), exactly
-  * one aggregation query's cost at 100 TB — and the O(p³) evidence loop
-  * runs on the driver over the p×p centered Gram (p = feature count,
-  * e.g. 65 for the wine poly-2 expansion; microseconds). No per-iteration
-  * data pass, no collect of rows.
+  * Spark-first shape: the data is touched ONCE — a single pass reduces
+  * to sufficient statistics ([[Moments]]: n, Σx, Σy, Σyy, XᵀX, Xᵀy),
+  * exactly one aggregation query's cost at 100 TB — and the O(p³)
+  * evidence loop runs on the driver over the p×p centered Gram (p =
+  * feature count, e.g. 65 for the wine poly-2 expansion; microseconds).
+  * No per-iteration data pass, no collect of rows. The wine grid feeds
+  * the loop the Gram its linear family shares ([[WinePipelines]]).
   *
   * Update equations (evidence/"type-II" maximum likelihood; γ is the
   * effective number of well-determined parameters):
@@ -34,80 +32,16 @@ object BayesianRidge {
 
   final case class Model(coef: Array[Double], intercept: Double,
                          alpha: Double, lambda: Double, nIter: Int,
-                         converged: Boolean) {
-    /** Prediction as a codegen column over an array<double> features
-      * column — no UDF. */
-    def predictExpr(features: Column): Column =
-      coef.zipWithIndex.map { case (c, i) =>
-        element_at(features, i + 1) * lit(c)
-      }.foldLeft(lit(intercept))(_ + _)
-  }
+                         converged: Boolean)
 
-  /** One-pass sufficient statistics: buffer = [n, Σy, Σyy, Σx(p),
-    * Xᵀy(p), XᵀX(p·p row-major)]. */
-  private final class GramAgg(p: Int)
-      extends Aggregator[(Seq[Double], Double), Array[Double], Array[Double]] {
-    private val size = 3 + 2 * p + p * p
-    def zero: Array[Double] = new Array[Double](size)
-    def reduce(b: Array[Double], in: (Seq[Double], Double)): Array[Double] = {
-      val (x, y) = in
-      require(x.length == p, s"feature length ${x.length} != $p")
-      b(0) += 1.0; b(1) += y; b(2) += y * y
-      var i = 0
-      while (i < p) {
-        val xi = x(i)
-        b(3 + i) += xi
-        b(3 + p + i) += xi * y
-        var j = 0
-        while (j < p) { b(3 + 2 * p + i * p + j) += xi * x(j); j += 1 }
-        i += 1
-      }
-      b
-    }
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      var i = 0
-      while (i < size) { a(i) += b(i); i += 1 }
-      a
-    }
-    def finish(r: Array[Double]): Array[Double] = r
-    def bufferEncoder: Encoder[Array[Double]] =
-      Encoders.javaSerialization[Array[Double]]
-    def outputEncoder: Encoder[Array[Double]] =
-      Encoders.javaSerialization[Array[Double]]
-  }
-
-  /** Centered sufficient statistics of (features array<double>, label). */
-  private[graft] def centeredStats(df: DataFrame, featuresCol: String,
-      labelCol: String, p: Int):
-      (Long, DenseMatrix[Double], DenseVector[Double], Double,
-        DenseVector[Double], Double) = {
-    import df.sparkSession.implicits._
-    val raw = df.select(col(featuresCol).cast("array<double>"),
-        col(labelCol).cast("double"))
-      .as[(Seq[Double], Double)]
-      .select(new GramAgg(p).toColumn)
-      .head()
-    val n = raw(0).toLong
-    require(n > 0, "BayesianRidge: empty input")
-    val nd = n.toDouble
-    val ybar = raw(1) / nd
-    val xbar = DenseVector.tabulate(p)(i => raw(3 + i) / nd)
-    val xty = DenseVector.tabulate(p)(i =>
-      raw(3 + p + i) - nd * ybar * xbar(i))
-    val xtx = DenseMatrix.tabulate(p, p)((i, j) =>
-      raw(3 + 2 * p + i * p + j) - nd * xbar(i) * xbar(j))
-    val yty = raw(2) - nd * ybar * ybar
-    (n, xtx, xty, yty, xbar, ybar)
-  }
-
-  private[graft] def solveCoef(xtx: DenseMatrix[Double],
-      xty: DenseVector[Double], alpha: Double,
-      lambda: Double): DenseVector[Double] = {
+  /** (λI + α XᵀX) w = α Xᵀy over a p×p column-major XᵀX. */
+  private[graft] def solveCoef(xtx: Array[Double], xty: Array[Double],
+      alpha: Double, lambda: Double): Array[Double] = {
     val p = xty.length
-    val m = xtx * alpha
+    val m = xtx.map(_ * alpha)
     var i = 0
-    while (i < p) { m(i, i) += lambda; i += 1 }
-    m \ (xty * alpha)
+    while (i < p) { m(i + i * p) += lambda; i += 1 }
+    LeastSquares.solve(m, xty.map(_ * alpha))
   }
 
   /** Fit over an array<double> features column. Defaults mirror the
@@ -116,26 +50,43 @@ object BayesianRidge {
           tol: Double = 1e-6, maxIter: Int = 300, alpha1: Double = 1e-6,
           alpha2: Double = 1e-6, lambda1: Double = 1e-6,
           lambda2: Double = 1e-6): Model = {
-    val (n, xtx, xty, yty, xbar, ybar) =
-      centeredStats(df, featuresCol, labelCol, p)
-    val eig = eigSym(xtx).eigenvalues
-    val yvar = yty / n.toDouble
+    val m = df.select(col(featuresCol).cast("array<double>"),
+        col(labelCol).cast("double"))
+      .queryExecution.toRdd
+      .treeAggregate(new Moments(p))((acc, r) => {
+        require(!r.isNullAt(0) && !r.isNullAt(1),
+          "BayesianRidge: null features or label")
+        acc.add(r.getArray(0).toDoubleArray(), r.getDouble(1))
+      }, _ merge _)
+    require(m.n > 0, "BayesianRidge: empty input")
+    fitMoments(m, tol, maxIter, alpha1, alpha2, lambda1, lambda2)
+  }
+
+  /** Fit from the sufficient statistics of (features, label) rows. */
+  def fitMoments(m: Moments, tol: Double = 1e-6, maxIter: Int = 300,
+                 alpha1: Double = 1e-6, alpha2: Double = 1e-6,
+                 lambda1: Double = 1e-6, lambda2: Double = 1e-6): Model = {
+    val (xbar, ybar) = (m.tbar, m.ybar)
+    val c = m.centered(xbar, ybar)
+    val (p, xtx, xty) = (c.p, c.tt, c.ty)
+    val eig = LeastSquares.eigenvalues(xtx, p)
+    val yvar = c.yy / c.n.toDouble
     var alpha = if (yvar > 0) 1.0 / yvar else 1.0
     var lambda = 1.0
-    var coef = DenseVector.zeros[Double](p)
+    var coef = new Array[Double](p)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
       val next = solveCoef(xtx, xty, alpha, lambda)
-      val rss = math.max(0.0,
-        yty - 2.0 * (next dot xty) + (next dot (xtx * next)))
-      val gamma = (0 until p).map { i =>
-        val ae = alpha * math.max(eig(i), 0.0)
+      val rss = math.max(0.0, c.sse(next))
+      val gamma = eig.map { e =>
+        val ae = alpha * math.max(e, 0.0)
         ae / (lambda + ae)
       }.sum
-      lambda = (gamma + 2.0 * lambda1) / ((next dot next) + 2.0 * lambda2)
-      alpha = (n - gamma + 2.0 * alpha1) / (rss + 2.0 * alpha2)
-      val delta = breeze.linalg.sum(breeze.numerics.abs(next - coef))
+      lambda = (gamma + 2.0 * lambda1) /
+        (LeastSquares.dot(next, next) + 2.0 * lambda2)
+      alpha = (c.n - gamma + 2.0 * alpha1) / (rss + 2.0 * alpha2)
+      val delta = next.indices.map(i => math.abs(next(i) - coef(i))).sum
       coef = next
       iter += 1
       // no convergence check on the FIRST iteration (the delta is against
@@ -145,73 +96,7 @@ object BayesianRidge {
     }
     // final posterior under the converged hyperparameters
     coef = solveCoef(xtx, xty, alpha, lambda)
-    Model(coef.toArray, ybar - (coef dot xbar), alpha, lambda, iter,
+    Model(coef, ybar - LeastSquares.dot(coef, xbar), alpha, lambda, iter,
       converged)
   }
-}
-
-/** Minimal spark.ml Estimator wrapper so the exact fit drops into the M8
-  * candidate Pipeline next to the assembler/scaler/poly stages. Vector
-  * features convert via vector_to_array; prediction is a codegen column
-  * chain (no UDF). */
-class BayesianRidgeRegressor(override val uid: String,
-    featuresCol: String = "features", labelCol: String = "label",
-    predictionCol: String = "prediction", tol: Double = 1e-6,
-    maxIter: Int = 300)
-    extends org.apache.spark.ml.Estimator[BayesianRidgeRegressionModel] {
-
-  def this() = this(org.apache.spark.ml.util.Identifiable
-    .randomUID("bayes_ridge"))
-
-  def setLabelCol(v: String): BayesianRidgeRegressor =
-    new BayesianRidgeRegressor(uid, featuresCol, v, predictionCol, tol,
-      maxIter)
-  def setFeaturesCol(v: String): BayesianRidgeRegressor =
-    new BayesianRidgeRegressor(uid, v, labelCol, predictionCol, tol,
-      maxIter)
-
-  override def fit(ds: Dataset[_]): BayesianRidgeRegressionModel = {
-    val df = ds.toDF()
-    val arr = df.select(org.apache.spark.ml.functions
-      .vector_to_array(col(featuresCol)).as("__f"), col(labelCol))
-    // limit-1 probe for the dimensionality (short-circuits the upstream
-    // pipeline after one row) with a clear empty-input error; the full
-    // data is then touched exactly once, by the stats aggregation
-    val first = arr.select(size(col("__f"))).limit(1).collect()
-    require(first.nonEmpty, "BayesianRidge: empty input")
-    val m = BayesianRidge.fit(arr, "__f", labelCol, first.head.getInt(0),
-      tol, maxIter)
-    new BayesianRidgeRegressionModel(uid, m, featuresCol, predictionCol)
-  }
-
-  override def copy(extra: org.apache.spark.ml.param.ParamMap)
-      : BayesianRidgeRegressor =
-    new BayesianRidgeRegressor(uid, featuresCol, labelCol, predictionCol,
-      tol, maxIter)
-
-  override def transformSchema(schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField(predictionCol,
-        org.apache.spark.sql.types.DoubleType))
-}
-
-class BayesianRidgeRegressionModel(override val uid: String,
-    val model: BayesianRidge.Model, featuresCol: String,
-    predictionCol: String)
-    extends org.apache.spark.ml.Model[BayesianRidgeRegressionModel] {
-
-  override def transform(ds: Dataset[_]): DataFrame =
-    ds.toDF().withColumn(predictionCol, model.predictExpr(
-      org.apache.spark.ml.functions.vector_to_array(col(featuresCol))))
-
-  override def copy(extra: org.apache.spark.ml.param.ParamMap)
-      : BayesianRidgeRegressionModel =
-    new BayesianRidgeRegressionModel(uid, model, featuresCol, predictionCol)
-
-  override def transformSchema(schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField(predictionCol,
-        org.apache.spark.sql.types.DoubleType))
 }

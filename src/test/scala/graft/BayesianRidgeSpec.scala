@@ -1,12 +1,13 @@
 package graft
 
-import graft.ml.{BayesianRidge, BayesianRidgeRegressor}
-import breeze.linalg.norm
+import graft.ml.BayesianRidge
+import org.apache.spark.ml.feature.VectorAssembler
+import org.apache.spark.ml.regression.LinearRegression
 
 /** M7 exact: the evidence-maximization Bayesian ridge against its own
   * defining properties — noise-free recovery, OLS agreement when the data
-  * dominate, prior-driven shrinkage, linear-algebra parity, pipeline
-  * integration. */
+  * dominate, prior-driven shrinkage, linear-algebra parity. The wine
+  * grid's ridge candidate is checked in WineLinearFitSpec. */
 class BayesianRidgeSpec extends SparkSpec {
 
   import spark.implicits._
@@ -14,6 +15,8 @@ class BayesianRidgeSpec extends SparkSpec {
   // deterministic pseudo-noise (no RNG): hash-folded unit interval
   private def jitter(i: Int): Double =
     ((i * 2654435761L % 1000 + 1000) % 1000) / 1000.0 - 0.5
+
+  private def norm(v: Array[Double]) = math.sqrt(v.map(x => x * x).sum)
 
   private def linData(n: Int, noiseScale: Double) =
     (0 until n).map { i =>
@@ -36,47 +39,29 @@ class BayesianRidgeSpec extends SparkSpec {
       "prior); a dominant lambda prior shrinks coefficients toward zero") {
     val df = linData(400, 0.2)
     val m = BayesianRidge.fit(df, "f", "y", 2)
-    val (_, xtx, xty, _, _, _) = BayesianRidge.centeredStats(df, "f", "y", 2)
-    val ols = BayesianRidge.solveCoef(xtx, xty, 1.0, 1e-12)
+    // spark.ml's OLS (normal-equation solver) as the reference
+    val ols = new LinearRegression().setLabelCol("y").setFeaturesCol("v")
+      .setSolver("normal").fit(new VectorAssembler()
+        .setInputCols(Array("x1", "x2")).setOutputCol("v")
+        .transform(df.selectExpr("f[0] AS x1", "f[1] AS x2", "y")))
+      .coefficients
     assert(math.abs(m.coef(0) - ols(0)) < 0.01 &&
       math.abs(m.coef(1) - ols(1)) < 0.01,
       s"evidence fit ${m.coef.toSeq} vs OLS $ols")
     val shrunk = BayesianRidge.fit(df, "f", "y", 2, lambda1 = 1e9)
-    assert(norm(breeze.linalg.DenseVector(shrunk.coef)) <
-      0.05 * norm(breeze.linalg.DenseVector(m.coef)),
+    assert(norm(shrunk.coef) < 0.05 * norm(m.coef),
       s"prior-dominated fit must shrink: ${shrunk.coef.toSeq}")
   }
 
   test("M7: solveCoef is the textbook penalized normal-equation solve") {
-    val xtx = breeze.linalg.DenseMatrix((4.0, 1.0), (1.0, 3.0))
-    val xty = breeze.linalg.DenseVector(1.0, 2.0)
-    val w = BayesianRidge.solveCoef(xtx, xty, alpha = 2.0, lambda = 0.5)
+    val xtx = Array(4.0, 1.0, 1.0, 3.0) // column-major [[4,1],[1,3]]
+    val w = BayesianRidge.solveCoef(xtx, Array(1.0, 2.0), alpha = 2.0,
+      lambda = 0.5)
     // (λI + α XᵀX) w = α Xᵀy, solved by hand: [[8.5,2],[2,6.5]] w = [2,4]
-    val lhs = breeze.linalg.DenseMatrix((8.5, 2.0), (2.0, 6.5))
-    val direct = lhs \ breeze.linalg.DenseVector(2.0, 4.0)
-    assert(norm(w - direct) < 1e-12)
-  }
-
-  test("M7: the spark.ml wrapper fits inside a Pipeline over VECTOR " +
-      "features and predicts through a codegen column") {
-    import org.apache.spark.ml.feature.VectorAssembler
-    import org.apache.spark.ml.Pipeline
-    val df = linData(200, 0.0)
-      .selectExpr("f[0] AS x1", "f[1] AS x2", "y")
-    val pipe = new Pipeline().setStages(Array(
-      new VectorAssembler().setInputCols(Array("x1", "x2"))
-        .setOutputCol("features"),
-      new BayesianRidgeRegressor().setLabelCol("y")
-        .setFeaturesCol("features")))
-    val out = pipe.fit(df).transform(df)
-    val rmse = new org.apache.spark.ml.evaluation.RegressionEvaluator()
-      .setLabelCol("y").setPredictionCol("prediction")
-      .setMetricName("rmse").evaluate(out)
-    assert(rmse < 1e-6, s"noise-free pipeline rmse $rmse")
-    // no UDF in the prediction plan
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.toLowerCase.contains("pythonudf") &&
-      !plan.contains("ScalaUDF"), s"prediction must be codegen:\n$plan")
+    val det = 8.5 * 6.5 - 2.0 * 2.0
+    val direct = Array((6.5 * 2.0 - 2.0 * 4.0) / det,
+      (8.5 * 4.0 - 2.0 * 2.0) / det)
+    assert(norm(Array(w(0) - direct(0), w(1) - direct(1))) < 1e-12)
   }
 
   test("M7: empty input fails loudly") {
